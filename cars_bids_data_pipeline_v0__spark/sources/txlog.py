@@ -12,16 +12,18 @@ directly — functionally the Delta log, including checkpoints:
   until committed (writers never overwrite data files, so readers need no
   locks and always see a consistent snapshot).
 * A commit is one JSON file ``_txlog/<version 20 digits>.json`` listing the
-  files it adds/removes, created with ``O_CREAT|O_EXCL`` — atomic
-  create-if-absent.  Exactly one of N racing writers wins a version; the
-  rest see the conflict, re-read the new snapshot, recompute, retry
-  (optimistic concurrency, serializable because every retry recomputes
-  from the latest snapshot).
+  files it adds/removes.  Its body is written to a temp file and fsynced,
+  then published with ``link`` — an atomic create-if-absent of a COMPLETE
+  file, so a crashed writer never leaves a torn commit.  Exactly one of N
+  racing writers wins a version; the rest see the conflict, re-read the
+  new snapshot, recompute, retry (optimistic concurrency, serializable
+  because every retry recomputes from the latest snapshot).  Every writer
+  runs that loop through `TransactionLog.run_optimistic`.
 * Readers replay the log: live files = ∪adds − ∪removes up to the chosen
   version — which is also free time travel (``tx_read(version=N)``).
 
-POSIX/HDFS ``create(overwrite=false)`` is atomic, which is all the protocol
-needs; an object store deployment swaps in its conditional-PUT
+POSIX ``link`` / HDFS ``create(overwrite=false)`` is atomic, which is all
+the protocol needs; an object store deployment swaps in its conditional-PUT
 (If-None-Match) for the same guarantee — the protocol is unchanged.
 Orphaned data files from failed/crashed commits are invisible (never
 referenced) and reaped by `vacuum`.
@@ -33,11 +35,14 @@ single-writer use; `tx_merge_partitioned` keeps its exact merge semantics
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
 import urllib.parse
 import uuid
+from dataclasses import dataclass
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,7 +91,12 @@ def _load_json_cached(path: str, cache: dict[tuple, dict]) -> dict:
     body = cache.get(key) if key is not None else None
     if body is None:
         with open(path) as f:
-            body = json.load(f)
+            try:
+                body = json.load(f)
+            except ValueError as exc:
+                raise ValueError(
+                    f"torn or corrupt commit file {path}: {exc}"
+                ) from None
         if key is not None:
             if len(cache) > 65536:
                 cache.clear()
@@ -971,6 +981,31 @@ def _has_map_type(dt) -> bool:
     if isinstance(dt, T.StructType):
         return any(_has_map_type(f.dataType) for f in dt.fields)
     return False
+
+
+#: commit conflicts any writer survives before `run_optimistic` gives up
+_COMMIT_RETRIES = 20
+
+
+@dataclass
+class CommitProposal:
+    """What one optimistic attempt asks `TransactionLog.run_optimistic`
+    to publish: the file actions, optional commit metadata, and the
+    ``result`` the writer returns once the commit lands.  ``staged``
+    lists the relative paths this attempt wrote (default: the ``add``
+    paths) — the files discarded if the attempt loses its race and the
+    next attempt does not propose them again."""
+
+    add: list[dict]
+    remove: list[str]
+    result: Any = None
+    meta: dict | None = None
+    staged: list[str] | None = None
+
+    def staged_paths(self) -> list[str]:
+        if self.staged is not None:
+            return self.staged
+        return [a["path"] for a in self.add]
 
 
 class TransactionLog:
@@ -1957,7 +1992,15 @@ class TransactionLog:
         (the Structured Streaming guarantee; Delta's SetTransaction rule)
         — out-of-order reprocessing must use a DISTINCT app id (e.g.
         ``backfill-2024-06``), or `txn_seen` will treat the old batch as
-        already durable and skip it."""
+        already durable and skip it.
+
+        Crash-safe publish: the body is written and fsynced under a temp
+        name `versions()` never matches, then hard-linked to the commit
+        name.  ``link`` fails with EEXIST when the version is taken and
+        otherwise creates the name pointing at a COMPLETE file, so a
+        writer dying at any point leaves no commit or a whole one — never
+        a torn ``NNN.json``.  The temp name is unlinked on every path and
+        the log directory is fsynced after a successful link."""
         os.makedirs(self.log_dir, exist_ok=True)
         import time as _time
 
@@ -1969,16 +2012,75 @@ class TransactionLog:
                 **({"meta": meta} if meta else {}),
             }
         )
+        path = self._commit_path(version)
+        tmp = f"{path}.tmp-{uuid.uuid4().hex}"
         try:
-            fd = os.open(
-                self._commit_path(version),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-            )
-        except FileExistsError:
-            return False
-        with os.fdopen(fd, "w") as f:
-            f.write(body)
+            with open(tmp, "x") as f:
+                f.write(body)
+                f.flush()
+                os.fsync(f.fileno())
+            try:
+                os.link(tmp, path)
+            except FileExistsError:
+                return False
+        finally:
+            try:
+                os.unlink(tmp)
+            except OSError:
+                pass
+        dfd = os.open(self.log_dir, os.O_RDONLY)
+        try:
+            os.fsync(dfd)
+        finally:
+            os.close(dfd)
         return True
+
+    def run_optimistic(
+        self,
+        op: str,
+        build: Callable[[int], Any],
+        txn: dict | None = None,
+        fenced: Any = None,
+    ) -> Any:
+        """The optimistic-commit loop every writer shares.
+
+        Pins the latest version ``v`` and calls ``build(v)``.  A
+        `CommitProposal` is published as ``v + 1`` (with ``txn``) and its
+        ``result`` returned; any other value is returned as is, with
+        nothing committed.  A lost race re-pins and rebuilds; the losing
+        attempt's staged files are discarded unless the next attempt
+        proposes them again (a writer may stage once and reuse the files
+        across retries).  With ``txn``, a batch that already committed
+        (`txn_seen` — checked on entry and after every conflict, since
+        the winner may be this batch's own replay) returns ``fenced``.
+        Gives up with a RuntimeError naming ``op`` after
+        ``_COMMIT_RETRIES`` conflicts."""
+        lost: list[str] = []  # staged by the last losing attempt
+        try:
+            if txn is not None and self.txn_seen(txn["app"], txn["batch"]):
+                return fenced
+            for _ in range(_COMMIT_RETRIES):
+                v = self.version()
+                got = build(v)
+                if not isinstance(got, CommitProposal):
+                    return got
+                staged = got.staged_paths()
+                self._discard_paths(set(lost) - set(staged))
+                lost = []
+                if self.try_commit(
+                    v + 1, got.add, got.remove, op, txn=txn, meta=got.meta
+                ):
+                    return got.result
+                lost = staged
+                if txn is not None and self.txn_seen(
+                    txn["app"], txn["batch"]
+                ):
+                    return fenced
+            raise RuntimeError(
+                f"{op} gave up after {_COMMIT_RETRIES} commit conflicts"
+            )
+        finally:
+            self._discard_paths(lost)
 
     def txn_seen(self, app: str, batch: int) -> bool:
         """True if this batch — or a LATER batch of the same app — already
@@ -2011,9 +2113,12 @@ class TransactionLog:
 
     def discard(self, adds: list[dict]) -> None:
         """Best-effort removal of staged-but-not-committed files."""
-        for a in adds:
+        self._discard_paths([a["path"] for a in adds])
+
+    def _discard_paths(self, paths) -> None:
+        for rel in paths:
             try:
-                os.remove(os.path.join(self.path, a["path"]))
+                os.remove(os.path.join(self.path, rel))
             except OSError:
                 pass
 
@@ -2563,7 +2668,6 @@ def tx_merge_partitioned(
     key: str = "auction_id",
     order_by: str = "auction_date",
     partition_src: str = "auction_date",
-    max_retries: int = 20,
     txn: dict | None = None,
     stats_cols: list[str] | None = None,
 ) -> list[str]:
@@ -2591,8 +2695,56 @@ def tx_merge_partitioned(
     from ..session import size_coalesced_shuffle
 
     log = TransactionLog(table_path)
-    if txn is not None and log.txn_seen(txn["app"], txn["batch"]):
-        return []
+    # the batch is prepared by the FIRST attempt, after the entry fence:
+    # a fenced replay runs no Spark job at all
+    prepared: list = []  # [persisted batch, touched partition values]
+
+    def build(v: int):
+        if not prepared:
+            batch = new_df.withColumn(
+                PARTITION_COL, F.to_date(F.col(partition_src))
+            )
+            batch = tx_apply_generated(batch, table_path)
+            tx_check_constraints(batch, table_path)  # reject pre-stage
+            batch = keep_latest(batch, key, order_by=order_by).persist()
+            prepared[:] = [batch, [
+                str(r[0])
+                for r in batch.select(PARTITION_COL).distinct().collect()
+            ]]
+        batch, touched = prepared
+        if not touched:
+            return []
+        # pin the file set to snapshot v — a commit landing between the
+        # two reads must fail OUR commit, not leak into our remove list
+        live = log.live_files(upto=v)
+        overlap_files = sorted(
+            f for f, part in live.items() if part in touched
+        )
+        if overlap_files:
+            existing = _read_with_dvs(
+                spark, table_path, overlap_files,
+                {
+                    f: dv for f, dv in log.dvs(upto=v).items()
+                    if f in set(overlap_files)
+                },
+            )
+            merged = keep_latest(
+                existing.withColumn("__src", F.lit(0)).unionByName(
+                    batch.withColumn("__src", F.lit(1)),
+                    allowMissingColumns=True,
+                ),
+                key,
+                order_by=order_by,
+                tiebreakers=[F.col("__src").asc()],
+            ).drop("__src")
+        else:
+            merged = batch
+        adds = log.stage_dataframe(
+            merged, partition_by=PARTITION_COL,
+            stats_cols=stats_cols or [order_by],
+        )
+        return CommitProposal(adds, overlap_files, sorted(touched))
+
     # size-first AQE coalescing for the whole merge, same rationale as
     # sinks.merge_write_partitioned (the single-writer twin): the dedup /
     # merge windows and the partition-clustering exchange are byte-light
@@ -2600,67 +2752,11 @@ def tx_merge_partitioned(
     # scheduled (cores) no-op tasks per stage (round-13 optimization pass
     # — measurement in session.size_coalesced_shuffle's docstring)
     with size_coalesced_shuffle(spark):
-        return _tx_merge_partitioned_inner(
-            spark, new_df, table_path, key, order_by, partition_src,
-            max_retries, txn, stats_cols, log,
-        )
-
-
-def _tx_merge_partitioned_inner(
-    spark, new_df, table_path, key, order_by, partition_src,
-    max_retries, txn, stats_cols, log,
-):
-    batch = new_df.withColumn(PARTITION_COL, F.to_date(F.col(partition_src)))
-    batch = tx_apply_generated(batch, table_path)
-    tx_check_constraints(batch, table_path)  # reject bad data pre-stage
-    batch = keep_latest(batch, key, order_by=order_by).persist()
-    try:
-        touched = [
-            str(r[0]) for r in batch.select(PARTITION_COL).distinct().collect()
-        ]
-        if not touched:
-            return []
-        for _ in range(max_retries):
-            v = log.version()
-            # pin the file set to snapshot v — a commit landing between the
-            # two reads must fail OUR commit, not leak into our remove list
-            live = log.live_files(upto=v)
-            overlap_files = sorted(
-                f for f, part in live.items() if part in touched
-            )
-            if overlap_files:
-                existing = _read_with_dvs(
-                    spark, table_path, overlap_files,
-                    {
-                        f: dv for f, dv in log.dvs(upto=v).items()
-                        if f in set(overlap_files)
-                    },
-                )
-                merged = keep_latest(
-                    existing.withColumn("__src", F.lit(0)).unionByName(
-                        batch.withColumn("__src", F.lit(1)),
-                        allowMissingColumns=True,
-                    ),
-                    key,
-                    order_by=order_by,
-                    tiebreakers=[F.col("__src").asc()],
-                ).drop("__src")
-            else:
-                merged = batch
-            adds = log.stage_dataframe(
-                merged, partition_by=PARTITION_COL,
-                stats_cols=stats_cols or [order_by],
-            )
-            if log.try_commit(v + 1, adds, overlap_files, op="merge", txn=txn):
-                return sorted(touched)
-            log.discard(adds)  # lost the race: clean up, recompute
-            if txn is not None and log.txn_seen(txn["app"], txn["batch"]):
-                return []  # the conflicting commit WAS this batch's replay
-        raise RuntimeError(
-            f"merge gave up after {max_retries} commit conflicts"
-        )
-    finally:
-        batch.unpersist()
+        try:
+            return log.run_optimistic("merge", build, txn=txn, fenced=[])
+        finally:
+            if prepared:
+                prepared[0].unpersist()
 
 
 def tx_insert_if_absent(
@@ -2675,21 +2771,19 @@ def tx_insert_if_absent(
     from ..operators.merge import insert_if_absent
 
     log = TransactionLog(table_path)
-    for _ in range(20):
-        v = log.version()
+
+    def build(v: int):
         existing = tx_read(spark, table_path)
         fresh = insert_if_absent(existing, new_rows, key).persist()
         try:
             n = fresh.count()
             if n == 0:
                 return 0
-            adds = log.stage_dataframe(fresh)
-            if log.try_commit(v + 1, adds, [], op="insert_if_absent"):
-                return n
-            log.discard(adds)
+            return CommitProposal(log.stage_dataframe(fresh), [], n)
         finally:
             fresh.unpersist()
-    raise RuntimeError("insert_if_absent gave up after 20 commit conflicts")
+
+    return log.run_optimistic("insert_if_absent", build)
 
 
 def tx_upsert(
@@ -2706,23 +2800,20 @@ def tx_upsert(
     log = TransactionLog(table_path)
     new_rows = tx_apply_generated(new_rows, table_path)
     tx_check_constraints(new_rows, table_path)
-    for _ in range(20):
-        v = log.version()
+
+    def build(v: int):
         existing = tx_read(spark, table_path)
         merged = upsert_overwrite(existing, new_rows, key)
-        adds = log.stage_dataframe(merged)
-        if log.try_commit(
-            v + 1, adds, sorted(log.live_files(upto=v)), op="upsert"
-        ):
-            return
-        log.discard(adds)
-    raise RuntimeError("upsert gave up after 20 commit conflicts")
+        return CommitProposal(
+            log.stage_dataframe(merged), sorted(log.live_files(upto=v))
+        )
+
+    log.run_optimistic("upsert", build)
 
 
 def tx_compact(
     spark: SparkSession,
     table_path: str,
-    max_retries: int = 5,
     partition_by: str | None = None,
     partitions: list[str] | None = None,
 ) -> int:
@@ -2752,8 +2843,8 @@ def tx_compact(
     Returns the number of files removed (0 = nothing to do).
     """
     log = TransactionLog(table_path)
-    for _ in range(max_retries):
-        v = log.version()
+
+    def build(v: int):
         if v < 0:
             return 0
         live = log.live_files(upto=v)
@@ -2816,10 +2907,9 @@ def tx_compact(
             )
         else:
             adds = log.stage_dataframe(df.coalesce(1))
-        if log.try_commit(v + 1, adds, sorted(live), op="compact"):
-            return len(live)
-        log.discard(adds)
-    raise RuntimeError(f"compaction gave up after {max_retries} conflicts")
+        return CommitProposal(adds, sorted(live), len(live))
+
+    return log.run_optimistic("compact", build)
 
 
 def tx_optimize_auto(
@@ -2887,7 +2977,6 @@ def tx_optimize_zorder(
     zorder_by: list[str],
     num_files: int = 16,
     bits: int = 12,
-    max_retries: int = 5,
     partitions: list[str] | None = None,
 ) -> int:
     """OPTIMIZE ... ZORDER BY for a commit-log table: rewrite the live
@@ -2906,8 +2995,8 @@ def tx_optimize_zorder(
     from ..operators.zorder import zorder_cluster
 
     log = TransactionLog(table_path)
-    for _ in range(max_retries):
-        v = log.version()
+
+    def build(v: int):
         if v < 0:
             return 0
         live = log.live_files(upto=v)
@@ -2966,10 +3055,9 @@ def tx_optimize_zorder(
                 for a in part_adds:
                     a["partition"] = part
                 adds.extend(part_adds)
-        if log.try_commit(v + 1, adds, sorted(live), op="zorder"):
-            return len(live)
-        log.discard(adds)
-    raise RuntimeError(f"z-order optimize gave up after {max_retries} conflicts")
+        return CommitProposal(adds, sorted(live), len(live))
+
+    return log.run_optimistic("zorder", build)
 
 
 def checkpoint_epoch_app_id(stream_id: str, checkpoint_dir: str) -> str:
@@ -3212,6 +3300,60 @@ def tx_stream_cdc_apply_sink(
     return process
 
 
+@contextlib.contextmanager
+def _owner_lock(path: str, timeout: float, stale_after: float):
+    """Exclusive ``O_CREAT|O_EXCL`` file lock; yields whether it was
+    acquired within ``timeout`` seconds.
+
+    The lock file holds an owner token: a holder stalled past
+    ``stale_after`` (its lock broken and re-acquired by another writer)
+    must NOT release the new holder's lock on its way out, so release
+    unlinks only a lock still holding our token.  A lock older than
+    ``stale_after`` is presumed leaked by a crashed holder and broken by
+    an atomic rename to a unique name — exactly ONE of N contenders wins
+    the break (a second rename of the same path fails), closing the
+    unlink race where two breakers could both think they freed it."""
+    import time as _time
+
+    token = uuid.uuid4().hex
+    deadline = _time.monotonic() + timeout
+    while True:
+        try:
+            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        except FileExistsError:
+            try:
+                stale = _time.time() - os.path.getmtime(path) > stale_after
+            except OSError:
+                continue  # holder released between the checks — retry now
+            if stale:
+                broken = f"{path}.broken-{uuid.uuid4().hex}"
+                try:
+                    os.rename(path, broken)  # atomic: one breaker wins
+                    os.unlink(broken)
+                except OSError:
+                    pass  # someone else broke/released it first
+                continue
+            if _time.monotonic() >= deadline:
+                yield False
+                return
+            _time.sleep(0.05)
+            continue
+        try:
+            os.write(fd, token.encode())
+        finally:
+            os.close(fd)
+        break
+    try:
+        yield True
+    finally:
+        try:
+            with open(path) as f:
+                if f.read() == token:  # release only what we own
+                    os.unlink(path)
+        except OSError:
+            pass
+
+
 def _advance_latest_pointer(
     export_dir: str, name: str, lock_timeout: float = 10.0,
     stale_after: float = 60.0,
@@ -3219,16 +3361,13 @@ def _advance_latest_pointer(
     """Move ``LATEST`` forward to ``name`` iff it names a NEWER version.
 
     Monotone under concurrency: the read-compare-replace runs under an
-    ``O_CREAT|O_EXCL`` lock (two streams exporting one table out of
-    order must never regress the pointer — a bare check-then-replace is
-    a TOCTOU).  Versions compare NUMERICALLY (``v%05d`` names overflow
-    five digits at version 100000; a string compare would freeze the
-    pointer there forever).  A lock older than ``stale_after`` is broken
-    via atomic rename (crashed exporter); on lock timeout the update is
-    skipped — the next batch's export retries, so the pointer lags one
-    batch at worst.
+    `_owner_lock` (two streams exporting one table out of order must
+    never regress the pointer — a bare check-then-replace is a TOCTOU).
+    Versions compare NUMERICALLY (``v%05d`` names overflow five digits
+    at version 100000; a string compare would freeze the pointer there
+    forever).  On lock timeout the update is skipped — the next batch's
+    export retries, so the pointer lags one batch at worst.
     """
-    import time as _time
 
     def _v(n: str) -> int:
         try:
@@ -3237,40 +3376,9 @@ def _advance_latest_pointer(
             return -1
 
     pointer = os.path.join(export_dir, "LATEST")
-    lock = pointer + ".lock"
-    # owner token: a holder that was stalled past ``stale_after`` (its
-    # lock broken and re-acquired by another writer) must NOT release the
-    # NEW holder's lock on its way out — an unconditional unlink would
-    # let a third writer into the critical section and the interleaved
-    # read-compare-replace could regress LATEST.  Only the token's owner
-    # unlinks.
-    token = uuid.uuid4().hex
-    deadline = _time.monotonic() + lock_timeout
-    while True:
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            try:
-                os.write(fd, token.encode())
-            finally:
-                os.close(fd)
-            break
-        except FileExistsError:
-            try:
-                stale = _time.time() - os.path.getmtime(lock) > stale_after
-            except OSError:
-                continue  # holder released between checks — retry now
-            if stale:
-                broken = lock + f".broken-{uuid.uuid4().hex}"
-                try:
-                    os.rename(lock, broken)  # atomic: one breaker wins
-                    os.unlink(broken)
-                except OSError:
-                    pass
-                continue
-            if _time.monotonic() >= deadline:
-                return  # skip: the next export advances the pointer
-            _time.sleep(0.05)
-    try:
+    with _owner_lock(pointer + ".lock", lock_timeout, stale_after) as held:
+        if not held:
+            return  # skip: the next export advances the pointer
         try:
             cur = open(pointer).read().strip()
         except OSError:
@@ -3280,12 +3388,6 @@ def _advance_latest_pointer(
             with open(tmp, "w") as f:
                 f.write(name + "\n")
             os.replace(tmp, pointer)
-    finally:
-        try:
-            if open(lock).read() == token:  # still ours — not stolen
-                os.unlink(lock)
-        except OSError:
-            pass
 
 
 def _bloom_positions(value_str: str, n_bits: int, num_hashes: int):
@@ -3745,7 +3847,6 @@ def tx_delete_where(
     spark: SparkSession,
     table_path: str,
     predicate: str,
-    max_retries: int = 5,
     partition_by: str | None = None,
     mode: str = "cow",
 ) -> int:
@@ -3780,8 +3881,8 @@ def tx_delete_where(
     if mode not in ("cow", "dv"):
         raise ValueError(f"mode must be 'cow' or 'dv', got {mode!r}")
     log = TransactionLog(table_path)
-    for _ in range(max_retries):
-        v = log.version()
+
+    def build(v: int):
         if v < 0:
             return 0
         live = log.live_files(upto=v)
@@ -3796,13 +3897,13 @@ def tx_delete_where(
         affected = sorted(rel_by_base[r["__dv_base"]] for r in hits)
 
         if mode == "dv":
-            committed = _commit_dv_delete(
+            meta, staged = _stage_dv_delete(
                 spark, log, table_path, live, dvmap, predicate,
                 affected, v,
             )
-            if committed:
-                return n_deleted
-            continue
+            return CommitProposal(
+                [], [], n_deleted, meta=meta, staged=staged
+            )
 
         keep = _read_with_dvs(
             spark, table_path, affected,
@@ -3823,13 +3924,12 @@ def tx_delete_where(
             adds = log.stage_dataframe(keep, partition_by=pcol)
         else:
             adds = log.stage_dataframe(keep)
-        if log.try_commit(v + 1, adds, sorted(affected), op="delete"):
-            return n_deleted
-        log.discard(adds)
-    raise RuntimeError(f"delete gave up after {max_retries} conflicts")
+        return CommitProposal(adds, sorted(affected), n_deleted)
+
+    return log.run_optimistic("delete_dv" if mode == "dv" else "delete", build)
 
 
-def _commit_dv_delete(
+def _stage_dv_delete(
     spark: SparkSession,
     log: TransactionLog,
     table_path: str,
@@ -3838,13 +3938,12 @@ def _commit_dv_delete(
     predicate: str,
     affected: list[str],
     v: int,
-) -> bool:
-    """Stage and commit one deletion-vector delete: per affected data
-    file, write a NEW DV parquet holding the FULL deleted row-index set
-    (old DV rows ∪ new matches — full-state per file, so readers open
-    exactly one DV per data file) and commit the updated mapping as
-    metadata.  False = commit conflict; staged DVs are removed and the
-    caller retries."""
+) -> tuple[dict, list[str]]:
+    """Stage one deletion-vector delete: per affected data file, write a
+    NEW DV parquet holding the FULL deleted row-index set (old DV rows ∪
+    new matches — full-state per file, so readers open exactly one DV
+    per data file).  Returns the commit metadata carrying the updated
+    mapping, and the staged DV paths."""
     raw = _raw_files_scan_logical(spark, table_path, affected)
     matches = raw.filter(F.expr(predicate)).select("__dv_base", "__dv_ri")
     old_sub = {f: dvmap[f] for f in affected if f in dvmap}
@@ -3904,17 +4003,7 @@ def _commit_dv_delete(
             if f in live_set and f not in delta
         }
         new_state.update(delta)
-        if log.try_commit(
-            v + 1, [], [], op="delete_dv",
-            meta={"dv_state": new_state, "dv_delta": delta},
-        ):
-            return True
-        for rel in staged:
-            try:
-                os.remove(os.path.join(log.path, rel))
-            except OSError:
-                pass
-        return False
+        return {"dv_state": new_state, "dv_delta": delta}, staged
     finally:
         shutil.rmtree(stage, ignore_errors=True)
 
@@ -3922,7 +4011,6 @@ def _commit_dv_delete(
 def tx_purge_dvs(
     spark: SparkSession,
     table_path: str,
-    max_retries: int = 5,
     partition_by: str | None = None,
 ) -> int:
     """Materialize every deletion vector: rewrite ONLY the DV-carrying
@@ -3933,8 +4021,8 @@ def tx_purge_dvs(
     for compliance.  Untouched files keep their bytes and stats.
     Returns the number of data files rewritten (0 = no DVs in force)."""
     log = TransactionLog(table_path)
-    for _ in range(max_retries):
-        v = log.version()
+
+    def build(v: int):
         if v < 0:
             return 0
         dvmap = log.dvs(upto=v)
@@ -3953,10 +4041,9 @@ def tx_purge_dvs(
             adds = log.stage_dataframe(kept, partition_by=pcol)
         else:
             adds = log.stage_dataframe(kept)
-        if log.try_commit(v + 1, adds, files, op="purge_dv"):
-            return len(files)
-        log.discard(adds)
-    raise RuntimeError(f"purge_dvs gave up after {max_retries} conflicts")
+        return CommitProposal(adds, files, len(files))
+
+    return log.run_optimistic("purge_dv", build)
 
 
 def tx_update_where(
@@ -3964,7 +4051,6 @@ def tx_update_where(
     table_path: str,
     set_exprs: dict[str, str],
     predicate: str,
-    max_retries: int = 5,
     partition_by: str | None = None,
 ) -> int:
     """Row-level UPDATE, copy-on-write — ``UPDATE t SET col = expr, ...
@@ -4000,8 +4086,8 @@ def tx_update_where(
         )
     log = TransactionLog(table_path)
     pred = F.coalesce(F.expr(predicate).cast("boolean"), F.lit(False))
-    for _ in range(max_retries):
-        v = log.version()
+
+    def build(v: int):
         if v < 0:
             return 0
         live = log.live_files(upto=v)
@@ -4084,10 +4170,9 @@ def tx_update_where(
                     f"batch violates CHECK constraint(s) on "
                     f"{table_path}: {detail}"
                 )
-        if log.try_commit(v + 1, adds, sorted(affected), op="update"):
-            return n_updated
-        log.discard(adds)
-    raise RuntimeError(f"update gave up after {max_retries} conflicts")
+        return CommitProposal(adds, sorted(affected), n_updated)
+
+    return log.run_optimistic("update", build)
 
 
 def tx_merge_into(
@@ -4100,7 +4185,6 @@ def tx_merge_into(
     when_not_matched_insert: bool | dict[str, str] = True,
     matched_condition: str | None = None,
     insert_condition: str | None = None,
-    max_retries: int = 5,
     partition_by: str | None = None,
     txn: dict | None = None,
     broadcast_source: bool | None = None,
@@ -4162,49 +4246,54 @@ def tx_merge_into(
             raise ValueError(
                 f"{ROW_ID_COL} is table-assigned and cannot be updated"
             )
-    log = TransactionLog(table_path)
-    if txn is not None and log.txn_seen(txn["app"], txn["batch"]):
-        return {
-            "updated": 0, "deleted": 0, "inserted": 0,
-            "files_rewritten": 0, "version": log.version(),
-        }
     missing_keys = [k for k in on if k not in source.columns]
     if missing_keys:
         raise ValueError(f"source lacks ON key column(s): {missing_keys}")
+    log = TransactionLog(table_path)
     source = source.persist()
+    stats: list = []  # the source aggregate, run by the first attempt
+
+    def build(v: int):
+        nonlocal broadcast_source
+        if not stats:
+            # ONE delta-sized aggregate yields both the broadcast
+            # decision (row count) and whether the cardinality probe is
+            # even needed: count(*) > count_distinct(keys) iff some key
+            # tuple repeats (NULL-keyed rows inflate the left side,
+            # which only sends us down the probe path — where they can
+            # never match a target row, exactly as before).  Was two
+            # separate jobs over the persisted source — the count and a
+            # groupBy/filter/limit probe — each paying the full job
+            # floor (round-13 optimization pass).
+            stats.append(source.agg(
+                F.count(F.lit(1)).alias("__n"),
+                F.count_distinct(*[F.col(k) for k in on]).alias("__nd"),
+            ).collect()[0])
+            if broadcast_source is None:
+                broadcast_source = int(stats[0]["__n"]) <= 2_000_000
+        return _merge_into_once(
+            spark, log, table_path, source, on,
+            when_matched_update, when_matched_delete,
+            when_not_matched_insert, matched_condition,
+            insert_condition, v, log.live_files(upto=v) if v >= 0 else {},
+            partition_by, txn is not None, broadcast_source,
+            int(stats[0]["__n"]) > int(stats[0]["__nd"]),
+        )
+
     try:
-        # ONE delta-sized aggregate yields both the broadcast decision
-        # (row count) and whether the cardinality probe is even needed:
-        # count(*) > count_distinct(keys) iff some key tuple repeats
-        # (NULL-keyed rows inflate the left side, which only sends us
-        # down the probe path — where they can never match a target row,
-        # exactly as before).  Was two separate jobs over the persisted
-        # source — the count and a groupBy/filter/limit probe — each
-        # paying the full job floor (round-13 optimization pass).
-        stats = source.agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.count_distinct(*[F.col(k) for k in on]).alias("__nd"),
-        ).collect()[0]
-        if broadcast_source is None:
-            broadcast_source = int(stats["__n"]) <= 2_000_000
-        may_have_dup_keys = int(stats["__n"]) > int(stats["__nd"])
-        for attempt in range(max_retries):
-            v = log.version()
-            live = log.live_files(upto=v) if v >= 0 else {}
-            result = _merge_into_once(
-                spark, log, table_path, source, on,
-                when_matched_update, when_matched_delete,
-                when_not_matched_insert, matched_condition,
-                insert_condition, v, live, partition_by, txn,
-                broadcast_source, may_have_dup_keys,
-            )
-            if result is not None:
-                return result
-        raise RuntimeError(
-            f"merge_into gave up after {max_retries} commit conflicts"
+        return log.run_optimistic(
+            "merge_into", build, txn=txn,
+            fenced=_merge_counts(0, 0, 0, 0, log.version()),
         )
     finally:
         source.unpersist()
+
+
+def _merge_counts(updated, deleted, inserted, files_rewritten, version):
+    return {
+        "updated": updated, "deleted": deleted, "inserted": inserted,
+        "files_rewritten": files_rewritten, "version": version,
+    }
 
 
 def _visible_row_count(
@@ -4232,18 +4321,16 @@ def _visible_row_count(
 def _merge_into_once(
     spark, log, table_path, source, on,
     when_matched_update, when_matched_delete, when_not_matched_insert,
-    matched_condition, insert_condition, v, live, partition_by, txn,
+    matched_condition, insert_condition, v, live, partition_by, has_txn,
     broadcast_source=False, may_have_dup_keys=True,
 ):
-    """One optimistic attempt of `tx_merge_into`; None = commit conflict,
-    caller retries against the fresh snapshot."""
+    """One optimistic attempt of `tx_merge_into` against snapshot ``v``:
+    the `CommitProposal` to publish as ``v + 1``, or the counts of a
+    no-op merge that commits nothing."""
     if v < 0 or not live:
         # empty target: MERGE degenerates to the insert clause
         if when_not_matched_insert is False:
-            return {
-                "updated": 0, "deleted": 0, "inserted": 0,
-                "files_rewritten": 0, "version": v,
-            }
+            return _merge_counts(0, 0, 0, 0, v)
         s = source.alias("s")
         if insert_condition is not None:
             s = s.filter(F.expr(insert_condition)).alias("s")
@@ -4260,16 +4347,9 @@ def _merge_into_once(
         adds = log.stage_dataframe(
             ins, partition_by=partition_by
         ) if partition_by else log.stage_dataframe(ins)
-        n_ins = ins.count()
-        if log.try_commit(
-            (v if v >= 0 else -1) + 1, adds, [], op="merge_into", txn=txn
-        ):
-            return {
-                "updated": 0, "deleted": 0, "inserted": n_ins,
-                "files_rewritten": 0, "version": v + 1,
-            }
-        log.discard(adds)
-        return None
+        return CommitProposal(
+            adds, [], _merge_counts(0, 0, ins.count(), 0, v + 1)
+        )
 
     rel_by_base = {os.path.basename(rel): rel for rel in sorted(live)}
     dvmap = log.dvs(upto=v)
@@ -4519,89 +4599,81 @@ def _merge_into_once(
 
     try:
         if not affected and not n_ins:
-            # nothing matched, nothing to insert; commit only to record
-            # txn fencing, otherwise a clean no-op
-            if txn is None or log.try_commit(
-                v + 1, [], [], op="merge_into", txn=txn
-            ):
-                return {
-                    "updated": 0, "deleted": 0, "inserted": 0,
-                    "files_rewritten": 0,
-                    "version": v if txn is None else v + 1,
-                }
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        partitioned = any(live[rel] is not None for rel in affected)
-        pcol = partition_by or (
-            PARTITION_COL if PARTITION_COL in out.columns else None
-        )
-        # stage unconditionally (isEmpty() would fire the rewrite
-        # observation with a partial limit-1 pass); an all-delete
-        # rewrite surfaces as zero-row footers, discarded here
-        if (partitioned or not affected) and pcol is not None:
-            # metadata-exact upper bound on the staged row count
-            # (affected files' visible rows + inserts) lets the staging
-            # write sub-split large partitions into parallel encode
-            # tasks — see stage_dataframe (round-13 optimization pass)
-            exp = (
-                _visible_row_count(log, table_path, affected, dvmap, v)
-                + n_ins
-                if affected
-                else n_ins
-            )
-            staged = log.stage_dataframe(
-                out, partition_by=pcol, expected_rows=exp
-            )
+            # nothing matched, nothing to insert: a clean no-op, or —
+            # under a txn — an empty commit that records the fence
+            if not has_txn:
+                return _merge_counts(0, 0, 0, 0, v)
+            adds = []
         else:
-            staged = log.stage_dataframe(out)
-        adds = [a for a in staged if a.get("rows")]
-        if len(adds) != len(staged):
-            log.discard([a for a in staged if not a.get("rows")])
-        if rewrite_obs is not None and sum(
-            int(a["rows"]) for a in adds
-        ) - n_ins <= 0:
-            # the rewrite branch wrote ZERO rows: every visible row of
-            # every affected file was tagged delete (updates and keeps
-            # both survive the filter, so an empty rewrite has none).
-            # Spark never materializes the CollectMetrics row for a
-            # branch whose write produced no output (Observation.get
-            # dies in toPyRow), but the counts are fully determined by
-            # metadata: n_upd = 0, n_del = the affected files' visible
-            # row count (footer rows minus DV positions), and there are
-            # no update rows to constraint-check.
-            n_upd = 0
-            n_del = _visible_row_count(log, table_path, affected, dvmap, v)
-        elif rewrite_obs is not None:
-            vals = rewrite_obs.get  # staging was the plan's one action
-            n_upd = int(vals["__n_upd"])
-            n_del = int(vals["__n_del"])
-            bad = {
-                name: int(vals[f"__c_{name}"])
-                for name in sorted(rewrite_cons)
-                if int(vals[f"__c_{name}"]) > 0
-            }
-            if bad:
-                log.discard(adds)
-                detail = ", ".join(
-                    f"{n} [{rewrite_cons[n]}]: {c} row(s)"
-                    for n, c in bad.items()
+            out = parts[0]
+            for p in parts[1:]:
+                out = out.unionByName(p)
+            partitioned = any(live[rel] is not None for rel in affected)
+            pcol = partition_by or (
+                PARTITION_COL if PARTITION_COL in out.columns else None
+            )
+            # stage unconditionally (isEmpty() would fire the rewrite
+            # observation with a partial limit-1 pass); an all-delete
+            # rewrite surfaces as zero-row footers, discarded here
+            if (partitioned or not affected) and pcol is not None:
+                # metadata-exact upper bound on the staged row count
+                # (affected files' visible rows + inserts) lets the staging
+                # write sub-split large partitions into parallel encode
+                # tasks — see stage_dataframe (round-13 optimization pass)
+                exp = (
+                    _visible_row_count(log, table_path, affected, dvmap, v)
+                    + n_ins
+                    if affected
+                    else n_ins
                 )
-                raise ConstraintViolation(
-                    f"batch violates CHECK constraint(s) on "
-                    f"{table_path}: {detail}"
+                staged = log.stage_dataframe(
+                    out, partition_by=pcol, expected_rows=exp
                 )
-        if log.try_commit(
-            v + 1, adds, affected, op="merge_into", txn=txn,
+            else:
+                staged = log.stage_dataframe(out)
+            adds = [a for a in staged if a.get("rows")]
+            if len(adds) != len(staged):
+                log.discard([a for a in staged if not a.get("rows")])
+            if rewrite_obs is not None and sum(
+                int(a["rows"]) for a in adds
+            ) - n_ins <= 0:
+                # the rewrite branch wrote ZERO rows: every visible row of
+                # every affected file was tagged delete (updates and keeps
+                # both survive the filter, so an empty rewrite has none).
+                # Spark never materializes the CollectMetrics row for a
+                # branch whose write produced no output (Observation.get
+                # dies in toPyRow), but the counts are fully determined by
+                # metadata: n_upd = 0, n_del = the affected files' visible
+                # row count (footer rows minus DV positions), and there are
+                # no update rows to constraint-check.
+                n_upd = 0
+                n_del = _visible_row_count(
+                    log, table_path, affected, dvmap, v
+                )
+            elif rewrite_obs is not None:
+                vals = rewrite_obs.get  # staging was the plan's one action
+                n_upd = int(vals["__n_upd"])
+                n_del = int(vals["__n_del"])
+                bad = {
+                    name: int(vals[f"__c_{name}"])
+                    for name in sorted(rewrite_cons)
+                    if int(vals[f"__c_{name}"]) > 0
+                }
+                if bad:
+                    log.discard(adds)
+                    detail = ", ".join(
+                        f"{n} [{rewrite_cons[n]}]: {c} row(s)"
+                        for n, c in bad.items()
+                    )
+                    raise ConstraintViolation(
+                        f"batch violates CHECK constraint(s) on "
+                        f"{table_path}: {detail}"
+                    )
+        return CommitProposal(
+            adds, affected,
+            _merge_counts(n_upd, n_del, n_ins, len(affected), v + 1),
             meta=row_id_meta,
-        ):
-            return {
-                "updated": n_upd, "deleted": n_del, "inserted": n_ins,
-                "files_rewritten": len(affected), "version": v + 1,
-            }
-        log.discard(adds)
-        return None
+        )
     finally:
         for p in persisted:
             p.unpersist()
@@ -4635,22 +4707,15 @@ def tx_export_symlink_manifest(
     manifest root directory.
 
     CONCURRENT exporters (two stream sinks with ``export_manifest``, or a
-    manual export racing one) are serialized with the same
-    ``O_CREAT|O_EXCL`` primitive the commit log uses: one exporter holds
-    ``.export.lock`` (containing its owner token) while rewriting and
-    pruning; a contender waits up to ``lock_timeout`` seconds.  A lock
-    older than ``stale_after`` seconds is presumed leaked by a crashed
-    exporter and is broken via an atomic ``os.rename`` to a unique name —
-    rename-to-claim means exactly ONE of N contenders wins the break (a
-    second rename of the same path fails), closing the unlink-race where
-    two breakers could both think they freed the lock.  Release checks
-    the owner token, so an exporter that somehow lost its lock never
-    removes a successor's.  ``stale_after`` defaults to 300 s — the
-    export body is driver-side file metadata work (no Spark jobs), so a
-    live export holding the lock that long indicates a crash, not load.
+    manual export racing one) are serialized by an `_owner_lock` on
+    ``.export.lock``: one exporter holds it while rewriting and pruning;
+    a contender waits up to ``lock_timeout`` seconds, then raises
+    TimeoutError.  A lock older than ``stale_after`` seconds is presumed
+    leaked by a crashed exporter and broken.  ``stale_after`` defaults
+    to 300 s — the export body is driver-side file metadata work (no
+    Spark jobs), so a live export holding the lock that long indicates
+    a crash, not load.
     """
-    import time as _time
-
     log = TransactionLog(table_path)
     v = log.version() if version is None else version
     if v < 0:
@@ -4676,35 +4741,9 @@ def tx_export_symlink_manifest(
     root = out_dir or os.path.join(table_path, "_symlink_format_manifest")
     os.makedirs(root, exist_ok=True)
     lock = os.path.join(root, ".export.lock")
-    token = uuid.uuid4().hex
-    deadline = _time.monotonic() + lock_timeout
-    while True:
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            try:
-                os.write(fd, token.encode())
-            finally:
-                os.close(fd)
-            break
-        except FileExistsError:
-            try:
-                stale = _time.time() - os.path.getmtime(lock) > stale_after
-            except OSError:
-                continue  # holder released between the checks — retry now
-            if stale:
-                broken = lock + f".broken-{uuid.uuid4().hex}"
-                try:
-                    os.rename(lock, broken)  # atomic: one breaker wins
-                    os.unlink(broken)
-                except OSError:
-                    pass  # someone else broke/released it first
-                continue
-            if _time.monotonic() >= deadline:
-                raise TimeoutError(
-                    f"manifest export lock busy at {lock}"
-                ) from None
-            _time.sleep(0.05)
-    try:
+    with _owner_lock(lock, lock_timeout, stale_after) as held:
+        if not held:
+            raise TimeoutError(f"manifest export lock busy at {lock}")
         if version is None:
             # re-resolve AFTER acquiring the lock: a queued exporter that
             # pinned the version before waiting could otherwise overwrite
@@ -4757,13 +4796,6 @@ def tx_export_symlink_manifest(
                 f,
             )
         os.replace(tmp, os.path.join(root, "manifest.json"))
-    finally:
-        try:
-            with open(lock) as f:
-                if f.read() == token:  # release only what we own
-                    os.unlink(lock)
-        except OSError:
-            pass
     return root
 
 
@@ -5484,8 +5516,10 @@ def _scan_exact_rows(df: DataFrame) -> int | None:
             return None
         if not any("parquet" in n for n in nodes if n.startswith("Relation")):
             return None
+        # inputFiles() are URIs: a space or '%' in the table path
+        # arrives percent-encoded
         files = [
-            f[len("file:"):] if f.startswith("file:") else f
+            urllib.parse.unquote(urllib.parse.urlparse(f).path)
             for f in df.inputFiles()
         ]
         if not files or len(files) > 4096:
@@ -5501,7 +5535,6 @@ def tx_append_partitioned(
     table_path: str,
     partition_by: str | None = None,
     txn: dict | None = None,
-    max_retries: int = 20,
     stats_cols: list[str] | None = None,
     assign_row_ids: bool = False,
     schema_mode: str = "none",
@@ -5559,22 +5592,15 @@ def tx_append_partitioned(
             )
         # col=None (declared-unpartitioned) stages one unkeyed file set
         partition_by = spec.get("col")
-    if txn is not None and log.txn_seen(txn["app"], txn["batch"]):
-        return 0
-    new_df = tx_apply_generated(new_df, table_path)
-    _check_schema(new_df, table_path, schema_mode)
-    tx_check_constraints(new_df, table_path)
-    if expected_rows is None:
-        expected_rows = _scan_exact_rows(new_df)
-    hwm = log.row_id_hwm()
-    tracking = assign_row_ids or hwm > 0
-    if tracking and ROW_ID_COL in new_df.columns:
-        raise ValueError(
-            f"batch already carries {ROW_ID_COL}; row ids are assigned "
-            "by the table, not the writer"
-        )
+    # an append never depends on the snapshot it lands on: the first
+    # attempt (after the entry fence) stages ONCE and later attempts
+    # propose the same files again — the one exception is a concurrent
+    # tracked append consuming the row ids this batch was staged with
+    tracking = False
+    hwm = 0
+    adds: list[dict] | None = None
 
-    def stage(mark: int):
+    def stage(mark: int) -> list[dict]:
         df = new_df
         if tracking:
             # order only by range-partitionable atomic columns — array/
@@ -5598,30 +5624,35 @@ def tx_append_partitioned(
             expected_rows=expected_rows,
         )
 
-    adds = stage(hwm)
-    if not adds:
-        return 0
-    n_rows = _staged_row_count(log, adds) if tracking else 0
-    for _ in range(max_retries):
-        v = log.version()
+    def build(v: int):
+        nonlocal new_df, expected_rows, tracking, hwm, adds
+        if adds is None:
+            new_df = tx_apply_generated(new_df, table_path)
+            _check_schema(new_df, table_path, schema_mode)
+            tx_check_constraints(new_df, table_path)
+            if expected_rows is None:
+                expected_rows = _scan_exact_rows(new_df)
+            hwm = log.row_id_hwm(upto=v)
+            tracking = assign_row_ids or hwm > 0
+            if tracking and ROW_ID_COL in new_df.columns:
+                raise ValueError(
+                    f"batch already carries {ROW_ID_COL}; row ids are "
+                    "assigned by the table, not the writer"
+                )
+            adds = stage(hwm)
+        elif tracking and log.row_id_hwm(upto=v) != hwm:
+            # a concurrent tracked append won the ids we used: restage
+            # with the fresh mark (the primitive discards the old files)
+            hwm = log.row_id_hwm(upto=v)
+            adds = stage(hwm)
+        if not adds:
+            return 0
         meta = None
         if tracking:
-            cur = log.row_id_hwm(upto=v)
-            if cur != hwm:
-                # a concurrent tracked append won the ids we used:
-                # restage with the fresh mark
-                log.discard(adds)
-                hwm = cur
-                adds = stage(hwm)
-                n_rows = _staged_row_count(log, adds)
-            meta = {"row_id_hwm": hwm + n_rows}
-        if log.try_commit(v + 1, adds, [], op="append", txn=txn, meta=meta):
-            return len(adds)
-        if txn is not None and log.txn_seen(txn["app"], txn["batch"]):
-            log.discard(adds)  # the conflicting commit WAS this replay
-            return 0
-    log.discard(adds)
-    raise RuntimeError(f"append gave up after {max_retries} commit conflicts")
+            meta = {"row_id_hwm": hwm + _staged_row_count(log, adds)}
+        return CommitProposal(adds, [], len(adds), meta=meta)
+
+    return log.run_optimistic("append", build, txn=txn, fenced=0)
 
 
 def _fork_pool_map(worker, items, timeout_s: float) -> list:
@@ -5666,25 +5697,33 @@ _FSCK_SCAN_PATHS: list | None = None  # fork-shared (COW) isfile input
 _FSCK_SCAN_ROOT: str | None = None
 
 
+def _fsck_parse_commit(v: int, path: str) -> tuple:
+    """One commit file in fsck's compact replay shape ``(version,
+    [(add path, partition)], [removes], txn)``; ``(version, None, None,
+    None)`` for a torn commit — empty or not parseable JSON."""
+    try:
+        with open(path) as f:
+            act = json.load(f)
+    except ValueError:
+        return v, None, None, None
+    return (
+        v,
+        [(a["path"], a.get("partition")) for a in act.get("add", [])],
+        list(act.get("remove", [])),
+        act.get("txn"),
+    )
+
+
 def _fsck_parse_worker(items: list[tuple[int, str]]) -> bytes:
-    """Parse one chunk of commit files to the compact replay shape
-    ``(version, [(add path, partition)], [removes], txn)`` — the
+    """Parse one chunk of commit files (`_fsck_parse_commit`) — the
     expensive json.load happens here, in parallel; the order-dependent
     replay stays serial in the parent.  Returns pickle bytes (C-speed
     both ways)."""
     import pickle
 
-    out = []
-    for v, p in items:
-        with open(p) as f:
-            act = json.load(f)
-        out.append((
-            v,
-            [(a["path"], a.get("partition")) for a in act.get("add", [])],
-            list(act.get("remove", [])),
-            act.get("txn"),
-        ))
-    return pickle.dumps(out, protocol=5)
+    return pickle.dumps(
+        [_fsck_parse_commit(v, p) for v, p in items], protocol=5
+    )
 
 
 def _fsck_scan_worker(bounds: tuple[int, int]) -> tuple[int, list]:
@@ -5741,17 +5780,7 @@ def _fsck_parsed_commits(
                 f"serial ({type(ex).__name__}: {ex})",
                 file=sys.stderr,
             )
-    out = []
-    for v, p in todo:
-        with open(p) as f:
-            act = json.load(f)
-        out.append((
-            v,
-            [(a["path"], a.get("partition")) for a in act.get("add", [])],
-            list(act.get("remove", [])),
-            act.get("txn"),
-        ))
-    return out
+    return [_fsck_parse_commit(v, p) for v, p in todo]
 
 
 def _fsck_missing_files(
@@ -5822,7 +5851,9 @@ def tx_fsck(table_path: str) -> dict:
       gone (reads would resurrect deleted rows — data corruption);
     * ``dv_dead_files`` — in-force DV entries pointing at non-live data
       files (harmless to readers, which intersect with liveness, but a
-      sign of a writer that skipped the dv_state snapshot discipline).
+      sign of a writer that skipped the dv_state snapshot discipline);
+    * ``torn_commits`` — commit files that are empty or do not parse
+      (readers refuse the table; the snapshot checks are skipped).
 
     ``ok`` is True iff everything except ``orphan_files`` and
     ``dv_dead_files`` is clean.
@@ -5845,6 +5876,9 @@ def tx_fsck(table_path: str) -> dict:
         "checkpoint_divergence": False,
         "orphan_files": [],
         "txn_regressions": [],
+        "torn_commits": [],
+        "missing_dv_files": [],
+        "dv_dead_files": [],
     }
     versions = log.versions()
     cks = log._checkpoint_versions()
@@ -5889,6 +5923,11 @@ def tx_fsck(table_path: str) -> dict:
     for v, adds, removes, txn in _fsck_parsed_commits(
         log, versions, start
     ):
+        if adds is None:
+            report["torn_commits"].append(
+                os.path.basename(log._commit_path(v))
+            )
+            continue
         for p, part in adds:
             if p in live:
                 n_double += 1
@@ -5910,13 +5949,19 @@ def tx_fsck(table_path: str) -> dict:
                 )
             last_batch[txn["app"]] = txn["batch"]
 
-    try:
-        if dict(log.live_files()) != live:
+    if not report["torn_commits"]:  # else no snapshot can be assembled
+        try:
+            if dict(log.live_files()) != live:
+                report["checkpoint_divergence"] = True
+        except ValueError:
+            # snapshot assembly itself refuses (truncated below any
+            # checkpoint): the strongest possible divergence signal
             report["checkpoint_divergence"] = True
-    except ValueError:
-        # snapshot assembly itself refuses (truncated below any
-        # checkpoint): the strongest possible divergence signal
-        report["checkpoint_divergence"] = True
+        report["missing_dv_files"] = sorted(
+            dv for dv in log.dvs().values()
+            if not os.path.isfile(os.path.join(table_path, dv))
+        )
+        report["dv_dead_files"] = sorted(set(log.dv_state_raw()) - set(live))
 
     n_missing, report["missing_files"] = _fsck_missing_files(
         table_path, sorted(live)
@@ -5932,14 +5977,6 @@ def tx_fsck(table_path: str) -> dict:
         orphans = sorted(on_disk - ever_added)
         n_orphans = len(orphans)
         report["orphan_files"] = orphans[:_FSCK_REPORT_CAP]
-
-    raw_dv = log.dv_state_raw()
-    in_force = log.dvs()
-    report["missing_dv_files"] = sorted(
-        dv for dv in in_force.values()
-        if not os.path.isfile(os.path.join(table_path, dv))
-    )
-    report["dv_dead_files"] = sorted(set(raw_dv) - set(live))
 
     # exact totals (lists above are capped at _FSCK_REPORT_CAP entries
     # so a 10M-missing-file report is not a 10M-element list); the
@@ -5961,6 +5998,7 @@ def tx_fsck(table_path: str) -> dict:
         and not report["checkpoint_divergence"]
         and not report["txn_regressions"]
         and not report["missing_dv_files"]
+        and not report["torn_commits"]
     )
     return report
 
@@ -5969,7 +6007,6 @@ def tx_restore(
     spark: SparkSession,
     table_path: str,
     version: int,
-    max_retries: int = 5,
 ) -> dict:
     """RESTORE TABLE ... TO VERSION AS OF — roll the table back to an
     earlier snapshot as ONE NEW COMMIT (Delta's RESTORE semantics; the
@@ -6021,8 +6058,8 @@ def tx_restore(
             f"away: {missing[:5]}{'...' if len(missing) > 5 else ''} — "
             "historical restores require vacuum(keep_history=True)"
         )
-    for _ in range(max_retries):
-        v = log.version()
+
+    def build(v: int):
         current = set(log.live_files(upto=v))
         adds = [act for rel, act in sorted(target.items()) if rel not in current]
         removes = sorted(current - set(target))
@@ -6060,17 +6097,20 @@ def tx_restore(
         tw_target = log.type_widening(upto=version)
         if tw_target != log.type_widening(upto=v):
             meta["type_widening"] = tw_target
-        if log.try_commit(
-            v + 1, adds, removes, op="restore",
-            meta=meta,
-        ):
-            return {
+        return CommitProposal(
+            adds, removes,
+            {
                 "version": v + 1,
                 "restored_to": version,
                 "files_added": len(adds),
                 "files_removed": len(removes),
-            }
-    raise RuntimeError(f"restore gave up after {max_retries} commit conflicts")
+            },
+            # re-referenced historical files are not this attempt's to
+            # discard
+            meta=meta, staged=[],
+        )
+
+    return log.run_optimistic("restore", build)
 
 
 #: metadata columns tx_changes appends to the table's own schema
@@ -6374,7 +6414,6 @@ def tx_set_generated_column(
     col: str,
     expr: str,
     validate_existing: bool = True,
-    max_retries: int = 5,
 ) -> int:
     """Declare ``col`` as GENERATED ALWAYS AS (expr): recorded in the
     commit log; every subsequent append/merge batch either computes it
@@ -6398,18 +6437,13 @@ def tx_set_generated_column(
                     f"cannot declare {col!r} GENERATED AS [{expr}]: "
                     "existing row(s) disagree"
                 )
-    for _ in range(max_retries):
-        v = log.version()
+
+    def build(v: int):
         gc = log.generated_cols(upto=v if v >= 0 else None)
         gc[col] = expr
-        if log.try_commit(
-            v + 1, [], [], op="set_generated",
-            meta={"generated_cols": gc},
-        ):
-            return v + 1
-    raise RuntimeError(
-        f"set_generated_column gave up after {max_retries} conflicts"
-    )
+        return CommitProposal([], [], v + 1, meta={"generated_cols": gc})
+
+    return log.run_optimistic("set_generated", build)
 
 
 def tx_set_constraint(
@@ -6418,7 +6452,6 @@ def tx_set_constraint(
     name: str,
     predicate: str,
     validate_existing: bool = True,
-    max_retries: int = 5,
 ) -> int:
     """ADD CONSTRAINT ... CHECK (predicate) — recorded in the commit log,
     enforced on every subsequent `tx_append_partitioned` /
@@ -6455,31 +6488,25 @@ def tx_set_constraint(
                     f"cannot add constraint {name!r}: {int(row[name])} "
                     f"existing row(s) violate [{predicate}]"
                 )
-    for _ in range(max_retries):
-        v = log.version()
+
+    def build(v: int):
         cons = log.constraints(upto=v if v >= 0 else None)
         cons[name] = predicate
-        if log.try_commit(
-            v + 1, [], [], op="set_constraint",
-            meta={"constraints": cons},
-        ):
-            return v + 1
-    raise RuntimeError(
-        f"set_constraint gave up after {max_retries} commit conflicts"
-    )
+        return CommitProposal([], [], v + 1, meta={"constraints": cons})
+
+    return log.run_optimistic("set_constraint", build)
 
 
 def tx_drop_constraint(
     spark: SparkSession,
     table_path: str,
     name: str,
-    max_retries: int = 5,
 ) -> int:
     """DROP CONSTRAINT — a metadata commit recording the shrunken set.
     Unknown names raise (a typo must not silently 'succeed')."""
     log = TransactionLog(table_path)
-    for _ in range(max_retries):
-        v = log.version()
+
+    def build(v: int):
         cons = log.constraints(upto=v if v >= 0 else None)
         if name not in cons:
             raise ValueError(
@@ -6487,21 +6514,15 @@ def tx_drop_constraint(
                 f"{sorted(cons)}"
             )
         del cons[name]
-        if log.try_commit(
-            v + 1, [], [], op="drop_constraint",
-            meta={"constraints": cons},
-        ):
-            return v + 1
-    raise RuntimeError(
-        f"drop_constraint gave up after {max_retries} commit conflicts"
-    )
+        return CommitProposal([], [], v + 1, meta={"constraints": cons})
+
+    return log.run_optimistic("drop_constraint", build)
 
 
 def tx_set_partition_spec(
     spark: SparkSession,
     table_path: str,
     col: str | None,
-    max_retries: int = 5,
 ) -> int:
     """ALTER TABLE ... PARTITIONED BY (col) as ONE metadata commit —
     Iceberg-style partition evolution.
@@ -6531,16 +6552,13 @@ def tx_set_partition_spec(
                 f"cannot set partition spec: column {col!r} not in table "
                 f"schema {sorted(schema)}"
             )
-    for _ in range(max_retries):
-        v = log.version()
-        if log.try_commit(
-            v + 1, [], [], op="set_partition_spec",
-            meta={"partition_spec": {"col": col}},
-        ):
-            return v + 1
-    raise RuntimeError(
-        f"set_partition_spec gave up after {max_retries} commit conflicts"
-    )
+
+    def build(v: int):
+        return CommitProposal(
+            [], [], v + 1, meta={"partition_spec": {"col": col}}
+        )
+
+    return log.run_optimistic("set_partition_spec", build)
 
 
 def _column_mapping_guard(log: TransactionLog, col: str, verb: str) -> None:
@@ -6585,7 +6603,6 @@ def tx_rename_column(
     table_path: str,
     old: str,
     new: str,
-    max_retries: int = 5,
 ) -> int:
     """``ALTER TABLE ... RENAME COLUMN old TO new`` as ONE metadata
     commit — Delta-style column mapping.  Physical parquet footers keep
@@ -6615,8 +6632,8 @@ def tx_rename_column(
     if new == ROW_ID_COL:
         raise ValueError(f"{ROW_ID_COL} is reserved for row tracking")
     _column_mapping_guard(log, old, "be renamed")
-    for _ in range(max_retries):
-        v = log.version()
+
+    def build(v: int):
         renames, dropped = log.column_mapping(upto=v)
         physical = {l: p for p, l in renames.items()}.get(old, old)
         # colliding with a name still physically present in files is
@@ -6633,16 +6650,11 @@ def tx_rename_column(
             )
         renames = {p: l for p, l in renames.items() if l != old}
         renames[physical] = new
-        if log.try_commit(
-            v + 1, [], [], op="rename_column",
-            meta={"column_mapping": {
-                "renames": renames, "dropped": sorted(dropped),
-            }},
-        ):
-            return v + 1
-    raise RuntimeError(
-        f"rename_column gave up after {max_retries} commit conflicts"
-    )
+        return CommitProposal([], [], v + 1, meta={"column_mapping": {
+            "renames": renames, "dropped": sorted(dropped),
+        }})
+
+    return log.run_optimistic("rename_column", build)
 
 
 #: lossless widening ladder (Delta's type-widening matrix, conservative
@@ -6664,7 +6676,6 @@ def tx_widen_column(
     table_path: str,
     col: str,
     new_type: str,
-    max_retries: int = 5,
 ) -> int:
     """``ALTER TABLE ... ALTER COLUMN col TYPE new_type`` for LOSSLESS
     widenings (integral upward, float→double, integral→double) as ONE
@@ -6693,8 +6704,8 @@ def tx_widen_column(
             f"lossless widenings are allowed "
             f"({ {k: list(v) for k, v in _WIDEN_LADDER.items()} })"
         )
-    for _ in range(max_retries):
-        v = log.version()
+
+    def build(v: int):
         renames, _dropped = log.column_mapping(upto=v)
         physical = {l: p for p, l in renames.items()}.get(col, col)
         tw = log.type_widening(upto=v)
@@ -6705,13 +6716,9 @@ def tx_widen_column(
             # widening a declared-added column updates its fill rule too
             sa = {**sa, physical: {**sa[physical], "type": new_type}}
             meta["schema_addenda"] = sa
-        if log.try_commit(
-            v + 1, [], [], op="widen_column", meta=meta,
-        ):
-            return v + 1
-    raise RuntimeError(
-        f"widen_column gave up after {max_retries} commit conflicts"
-    )
+        return CommitProposal([], [], v + 1, meta=meta)
+
+    return log.run_optimistic("widen_column", build)
 
 
 def tx_add_column(
@@ -6720,7 +6727,6 @@ def tx_add_column(
     col: str,
     dtype: str,
     default: str | None = None,
-    max_retries: int = 5,
 ) -> int:
     """``ALTER TABLE ... ADD COLUMN col dtype [DEFAULT expr]`` as ONE
     metadata commit.  No file is rewritten: readers fill the column
@@ -6750,8 +6756,8 @@ def tx_add_column(
         .alias(col)
     )
     probe.collect()
-    for _ in range(max_retries):
-        v = log.version()
+
+    def build(v: int):
         renames, dropped = log.column_mapping(upto=v)
         if col in dropped or (col in renames and renames[col] != col):
             raise ValueError(
@@ -6760,21 +6766,15 @@ def tx_add_column(
             )
         addenda = log.schema_addenda(upto=v)
         addenda[col] = {"type": dtype, "default": default}
-        if log.try_commit(
-            v + 1, [], [], op="add_column",
-            meta={"schema_addenda": addenda},
-        ):
-            return v + 1
-    raise RuntimeError(
-        f"add_column gave up after {max_retries} commit conflicts"
-    )
+        return CommitProposal([], [], v + 1, meta={"schema_addenda": addenda})
+
+    return log.run_optimistic("add_column", build)
 
 
 def tx_drop_column(
     spark: SparkSession,
     table_path: str,
     col: str,
-    max_retries: int = 5,
 ) -> int:
     """``ALTER TABLE ... DROP COLUMN col`` as ONE metadata commit.  No
     file is touched: readers project the column out, writers stop
@@ -6794,8 +6794,8 @@ def tx_drop_column(
     if len(schema) <= 1:
         raise ValueError("cannot drop the table's last column")
     _column_mapping_guard(log, col, "be dropped")
-    for _ in range(max_retries):
-        v = log.version()
+
+    def build(v: int):
         renames, dropped = log.column_mapping(upto=v)
         physical = {l: p for p, l in renames.items()}.get(col, col)
         renames = {p: l for p, l in renames.items() if p != physical}
@@ -6809,14 +6809,9 @@ def tx_drop_column(
             # (files that materialized it are handled by `dropped`)
             addenda = {p: s for p, s in addenda.items() if p != physical}
             meta["schema_addenda"] = addenda
-        if log.try_commit(
-            v + 1, [], [], op="drop_column",
-            meta=meta,
-        ):
-            return v + 1
-    raise RuntimeError(
-        f"drop_column gave up after {max_retries} commit conflicts"
-    )
+        return CommitProposal([], [], v + 1, meta=meta)
+
+    return log.run_optimistic("drop_column", build)
 
 
 def tx_clone(

@@ -35,6 +35,7 @@ from ..operators.similarity import (
     nearest_centroid_ids,
 )
 from ..sources.txlog import (
+    CommitProposal,
     TransactionLog,
     checkpoint_epoch_app_id,
     tx_append_partitioned,
@@ -330,7 +331,6 @@ def ivf_reindex(
     index_path: str,
     new_centroids: list[list[float]],
     vec_col: str = "embedding",
-    max_retries: int = 5,
 ) -> int:
     """Atomically re-cluster the (raw-vector) index under a new codebook.
 
@@ -349,8 +349,8 @@ def ivf_reindex(
     import os
 
     log = TransactionLog(index_path)
-    for _ in range(max_retries):
-        v = log.version()
+
+    def build(v: int):
         if v < 0:
             return 0
         live = log.live_files(upto=v)
@@ -363,7 +363,6 @@ def ivf_reindex(
             assign_cells(df, new_centroids, vec_col),
             partition_by=CELL_COL,
         )
-        if log.try_commit(v + 1, adds, sorted(live), op="reindex"):
-            return len(live)
-        log.discard(adds)
-    raise RuntimeError(f"reindex gave up after {max_retries} conflicts")
+        return CommitProposal(adds, sorted(live), len(live))
+
+    return log.run_optimistic("reindex", build)

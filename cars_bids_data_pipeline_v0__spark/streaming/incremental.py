@@ -794,6 +794,7 @@ def corpus_ingest_stream(
     from ..operators.dedup_docs import dedup_incoming
     from ..plans.corpus import preprocess_corpus
     from ..sources.txlog import (
+        CommitProposal,
         TransactionLog,
         checkpoint_epoch_app_id,
         tx_export_symlink_manifest,
@@ -834,24 +835,11 @@ def corpus_ingest_stream(
             try:
                 if fresh.isEmpty():
                     return  # nothing new (e.g. an all-dup re-delivery)
-                for _ in range(20):
-                    v = log.version()
-                    adds = log.stage_dataframe(fresh)
-                    if log.try_commit(
-                        v + 1,
-                        adds,
-                        [],
-                        op="append",
-                        txn={"app": app_id, "batch": int(batch_id)},
-                    ):
-                        break
-                    log.discard(adds)  # lost a race: clean up, retry
-                    if log.txn_seen(app_id, int(batch_id)):
-                        break  # the conflicting commit WAS this batch
-                else:
-                    raise RuntimeError(
-                        "corpus ingest gave up after 20 conflicts"
-                    )
+                log.run_optimistic(
+                    "append",
+                    lambda v: CommitProposal(log.stage_dataframe(fresh), []),
+                    txn={"app": app_id, "batch": int(batch_id)},
+                )
             finally:
                 fresh.unpersist()
             # Delta's cadence: compact the log every 10th commit so the

@@ -134,3 +134,27 @@ def write_raw_files(dirpath: str) -> dict:
     with open(os.path.join(dirpath, "late.json"), "w") as f:
         json.dump([a1b, a4], f)
     return {"urls": [u1, u2, u3, u4], "rescrape_expected": [u3]}
+
+
+def arrow_append(log, ids: list[int]):
+    """Append ``ids`` (one ``id bigint`` column) to a commit-log table
+    without Spark: one pyarrow-written data file committed through
+    `TransactionLog.run_optimistic`.  Returns the committed version."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cars_bids_data_pipeline_v0__spark.sources.txlog import CommitProposal
+
+    def build(v: int):
+        os.makedirs(log.data_dir, exist_ok=True)
+        rel = f"data/{uuid.uuid4().hex}.parquet"
+        pq.write_table(
+            pa.table({"id": pa.array(ids, pa.int64())}),
+            os.path.join(log.path, rel),
+        )
+        add = {"path": rel, "partition": None, "rows": len(ids)}
+        return CommitProposal([add], [], v + 1)
+
+    return log.run_optimistic("append", build)

@@ -2249,15 +2249,14 @@ def test_tx_dml_writers_race_serializes(spark, tmp_path):
             )
             tx_merge_into(
                 spark, t, src, on=["id"],
-                when_matched_update={"s": "s.s"}, max_retries=20,
+                when_matched_update={"s": "s.s"},
             )
         except Exception as e:  # pragma: no cover
             errs.append(e)
 
     def do_delete():
         try:
-            tx_delete_where(spark, t, "id IN (7, 8)", mode="dv",
-                            max_retries=20)
+            tx_delete_where(spark, t, "id IN (7, 8)", mode="dv")
         except Exception as e:  # pragma: no cover
             errs.append(e)
 
@@ -2611,3 +2610,355 @@ def test_tx_append_schema_modes(spark, tmp_path):
         tx_append_partitioned(
             spark, bad, t, partition_by="p", schema_mode="merge"
         )
+
+
+# -- the optimistic-commit primitive and its crash-safe publish ----------
+
+
+def _ids(spark, t):
+    return sorted(r["id"] for r in tx_read(spark, t).collect())
+
+
+def test_torn_commit_reported_not_raised(tmp_path):
+    """A zero-byte commit — what an ``O_EXCL``-create-then-write publish
+    left behind when its writer died in between — is a torn commit:
+    fsck reports it (and is not ok) and readers name the file instead
+    of raising a bare JSONDecodeError."""
+    import json
+
+    from cars_bids_data_pipeline_v0__spark.sources.txlog import tx_fsck
+
+    t = str(tmp_path / "tbl")
+    log = TransactionLog(t)
+    assert log.try_commit(0, [], [], op="noop")
+    assert log.try_commit(1, [], [], op="noop")
+    torn = "00000000000000000002.json"
+    open(os.path.join(log.log_dir, torn), "w").close()
+
+    rep = tx_fsck(t)
+    assert rep["version"] == 2
+    assert rep["torn_commits"] == [torn]
+    assert rep["ok"] is False
+    with pytest.raises(ValueError, match=torn) as exc:
+        log.live_files()
+    assert not isinstance(exc.value, json.JSONDecodeError)
+
+
+_CRASH_CHILD = """
+import os, sys
+import pyarrow.parquet as pq
+from cars_bids_data_pipeline_v0__spark.sources.txlog import TransactionLog
+from tests.fixtures import arrow_append
+
+table, point = sys.argv[1:]
+log = TransactionLog(table)
+write, replace = pq.write_table, os.replace
+
+
+def die(*args):
+    os._exit(3)
+
+
+def write_then_die(*args, **kwargs):
+    write(*args, **kwargs)
+    die()
+
+
+def replace_or_die(src, dst):
+    if dst.endswith(".checkpoint.json"):
+        die()
+    replace(src, dst)
+
+
+if point == "staged":
+    pq.write_table = write_then_die
+elif point == "link":
+    os.link = die
+elif point == "checkpoint":
+    os.replace = replace_or_die
+    log.checkpoint()
+arrow_append(log, [99])
+"""
+
+
+@pytest.mark.parametrize("point", ["staged", "link", "checkpoint"])
+def test_writer_crash_leaves_table_readable(spark, tmp_path, point):
+    """A writer process killed after staging its files, between the
+    commit body's temp write and its link, or in the middle of a
+    checkpoint leaves a readable table: fsck ok (orphans allowed), the
+    version unmoved, the next append commits, and the change feed still
+    folds to the snapshot.  The child never starts Spark."""
+    import collections
+    import subprocess
+    import sys
+
+    from cars_bids_data_pipeline_v0__spark.sources.txlog import (
+        tx_changes,
+        tx_fsck,
+    )
+    from tests.fixtures import arrow_append
+
+    t = str(tmp_path / "tbl")
+    log = TransactionLog(t)
+    arrow_append(log, [0, 1])
+    arrow_append(log, [2])
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = subprocess.run(
+        [sys.executable, "-c", _CRASH_CHILD, t, point],
+        cwd=repo, capture_output=True, text=True, timeout=120,
+    )
+    assert child.returncode == 3, child.stderr  # died at the crash point
+
+    assert log.version() == 1
+    assert log._checkpoint_versions() == []
+    assert all(
+        os.path.getsize(os.path.join(log.log_dir, n)) > 0
+        for n in os.listdir(log.log_dir)
+    )
+    rep = tx_fsck(t)
+    assert rep["ok"], rep
+    if point == "staged":
+        assert len(rep["orphan_files"]) == 1
+    assert _ids(spark, t) == [0, 1, 2]
+
+    assert arrow_append(log, [3]) == 2
+    assert _ids(spark, t) == [0, 1, 2, 3]
+    ch = tx_changes(spark, t).collect()
+    folded = collections.Counter(
+        r["id"] for r in ch if r["_change_type"] == "insert"
+    ) - collections.Counter(
+        r["id"] for r in ch if r["_change_type"] == "delete"
+    )
+    assert sorted(folded.elements()) == [0, 1, 2, 3]
+
+
+def test_run_optimistic_retry_budget_fence_and_cleanup(tmp_path):
+    """The primitive alone, without Spark: a writer that always loses
+    gives up after the module's constant retry budget with an error
+    naming its op and leaves no staged file behind; a writer whose rival
+    turns out to be its own txn replay returns the fenced value; a
+    proposal that reuses its staged files across a lost race keeps
+    them."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cars_bids_data_pipeline_v0__spark.sources import txlog
+
+    t = str(tmp_path / "tbl")
+    log = TransactionLog(t)
+    os.makedirs(log.data_dir)
+
+    def stage() -> dict:
+        rel = f"data/{uuid.uuid4().hex}.parquet"
+        pq.write_table(pa.table({"id": [1]}), os.path.join(t, rel))
+        return {"path": rel, "partition": None, "rows": 1}
+
+    calls = []
+
+    def always_loses(v):
+        calls.append(v)
+        add = stage()
+        assert log.try_commit(v + 1, [], [], op="rival")
+        return txlog.CommitProposal([add], [], "never")
+
+    with pytest.raises(RuntimeError, match="doomed gave up after 20 "):
+        log.run_optimistic("doomed", always_loses)
+    assert len(calls) == txlog._COMMIT_RETRIES == 20
+    assert os.listdir(log.data_dir) == []
+
+    txn = {"app": "stream", "batch": 7}
+
+    def replay_wins(v):
+        add = stage()
+        assert log.try_commit(v + 1, [], [], op="append", txn=txn)
+        return txlog.CommitProposal([add], [], "committed")
+
+    assert log.run_optimistic(
+        "append", replay_wins, txn=txn, fenced="fenced"
+    ) == "fenced"
+    assert os.listdir(log.data_dir) == []
+    assert log.run_optimistic(
+        "append", replay_wins, txn=txn, fenced="fenced"
+    ) == "fenced"  # the entry fence: build never ran
+
+    staged_once = stage()
+    tries = []
+
+    def reuses(v):
+        tries.append(v)
+        if len(tries) == 1:
+            assert log.try_commit(v + 1, [], [], op="rival")
+        return txlog.CommitProposal([staged_once], [], v + 1)
+
+    assert log.run_optimistic("append", reuses) == tries[-1] + 1
+    assert len(tries) == 2
+    assert os.listdir(log.data_dir) == [
+        os.path.basename(staged_once["path"])
+    ]
+    assert staged_once["path"] in log.live_files()
+
+
+def _race_inside_build(monkeypatch, compete):
+    """Make ``compete(log, v)`` publish version v + 1 right after a
+    writer's first ``build(v)`` returns — its files already staged — so
+    the writer loses exactly one race.  Returns the pinned versions."""
+    real = TransactionLog.run_optimistic
+    pins: list[int] = []
+
+    def patched(self, op, build, txn=None, fenced=None):
+        def racing(v):
+            got = build(v)
+            pins.append(v)
+            if len(pins) == 1:
+                compete(self, v)
+            return got
+
+        return real(self, op, racing, txn=txn, fenced=fenced)
+
+    monkeypatch.setattr(TransactionLog, "run_optimistic", patched)
+    return pins
+
+
+def _conflict_case(spark, name):
+    """(setup, compete, verb, fenced no-op value or None) per verb
+    family; ``compete`` commits a plain append of rows the verb's retry
+    must take into account."""
+    from cars_bids_data_pipeline_v0__spark.sources.sinks import PARTITION_COL
+    from cars_bids_data_pipeline_v0__spark.sources.txlog import (
+        tx_add_column,
+        tx_append_partitioned,
+        tx_compact,
+        tx_delete_where,
+        tx_merge_into,
+    )
+
+    if name == "merge_partitioned":
+        def mk(rows):
+            return spark.createDataFrame(
+                rows, "auction_id string, auction_date string, price long"
+            ).withColumn("auction_date", F.to_timestamp("auction_date"))
+
+        def setup(t):
+            tx_merge_partitioned(spark, mk([("a1", "2024-03-02 08:00:00", 1)]), t)
+
+        def compete(log, v):
+            rival = mk([("a1", "2024-03-02 10:00:00", 999)]).withColumn(
+                PARTITION_COL, F.to_date("auction_date")
+            )
+            adds = log.stage_dataframe(rival, partition_by=PARTITION_COL)
+            assert log.try_commit(v + 1, adds, [], op="append")
+
+        def verb(t):
+            return tx_merge_partitioned(
+                spark,
+                mk([("a1", "2024-03-02 09:00:00", 5),
+                    ("b2", "2024-03-03 09:00:00", 6)]),
+                t, txn={"app": "merge", "batch": 0},
+            )
+
+        return setup, compete, verb, []
+
+    def setup(t):  # two files per partition: something to compact
+        for lo in (0, 3):
+            tx_append_partitioned(
+                spark, _cdf_mk(spark, lo, lo + 3), t, partition_by="p"
+            )
+
+    def compete(log, v):
+        adds = log.stage_dataframe(_cdf_mk(spark, 100, 102), partition_by="p")
+        assert log.try_commit(v + 1, adds, [], op="append")
+
+    if name == "append":
+        return setup, compete, lambda t: tx_append_partitioned(
+            spark, _cdf_mk(spark, 50, 53), t, partition_by="p",
+            txn={"app": "append", "batch": 0},
+        ), 0
+    if name == "merge_into":
+        src = spark.createDataFrame(
+            [(100, "M", 1), (2, "M", 2), (60, "N", 0)],
+            "id long, s string, p int",
+        )
+        return setup, compete, lambda t: tx_merge_into(
+            spark, t, src, on=["id"], when_matched_update={"s": "s.s"},
+            txn={"app": "merge_into", "batch": 0},
+        ), {
+            "updated": 0, "deleted": 0, "inserted": 0,
+            "files_rewritten": 0, "version": 3,
+        }
+    if name == "delete_dv":
+        return setup, compete, lambda t: tx_delete_where(
+            spark, t, "id IN (1, 100)", mode="dv"
+        ), None
+    if name == "compact":
+        return setup, compete, lambda t: tx_compact(
+            spark, t, partition_by="p"
+        ), None
+    assert name == "add_column"
+    return setup, compete, lambda t: tx_add_column(
+        spark, t, "extra", "int", default="7"
+    ), None
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["append", "merge_partitioned", "merge_into", "delete_dv", "compact",
+     "add_column"],
+)
+def test_verb_retries_a_conflict_inside_build(
+    spark, tmp_path, monkeypatch, name
+):
+    """Every verb family runs on `run_optimistic`: a rival commit landing
+    while the verb builds makes it lose once, rebuild on the rival's
+    snapshot and commit — the same table and result as the serial order
+    (rival, then verb) — leaving no staged file unreferenced; a
+    txn-fenced replay is the no-op."""
+    from cars_bids_data_pipeline_v0__spark.sources.txlog import tx_fsck
+
+    setup, compete, verb, fenced = _conflict_case(spark, name)
+
+    def state(t):
+        df = tx_read(spark, t)
+        cols = sorted(df.columns)
+        return sorted(
+            (tuple(str(r[c]) for c in cols) for r in df.collect())
+        )
+
+    serial = str(tmp_path / "serial")
+    setup(serial)
+    compete(TransactionLog(serial), TransactionLog(serial).version())
+    want = verb(serial)
+
+    raced = str(tmp_path / "raced")
+    setup(raced)
+    v0 = TransactionLog(raced).version()
+    pins = _race_inside_build(monkeypatch, compete)
+    got = verb(raced)
+    assert pins == [v0, v0 + 1]
+    assert got == want
+    assert state(raced) == state(serial)
+
+    log = TransactionLog(raced)
+    rep = tx_fsck(raced)
+    assert rep["ok"] and rep["orphan_files"] == [], rep
+    dv_dir = os.path.join(raced, "_dv")
+    on_disk = {
+        f"_dv/{n}" for n in (os.listdir(dv_dir) if os.path.isdir(dv_dir) else [])
+    }
+    assert on_disk == set(log.dvs().values())
+
+    if fenced is not None:
+        v = log.version()
+        assert verb(raced) == fenced
+        assert log.version() == v
+
+
+def test_scan_exact_rows_decodes_uri_paths(spark, tmp_path):
+    """A table path with a space reaches `inputFiles()` percent-encoded;
+    the footer row estimate must still find the files."""
+    from cars_bids_data_pipeline_v0__spark.sources.txlog import _scan_exact_rows
+
+    src = str(tmp_path / "with space" / "src")
+    spark.range(37).write.parquet(src)
+    assert _scan_exact_rows(spark.read.parquet(src)) == 37
