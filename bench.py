@@ -727,9 +727,9 @@ def bench_ann_index(spark) -> dict:
     50-query probed-cells top-k.  Min-of-2 with a fresh index per
     sample (the scale-leg contention discipline — these were the last
     single-sample legs, and their r9→r10 ±27% swing read as a
-    regression until the round-11 A/B (tools/bench_ann_ab.py) showed
-    the file-list path costs <0.3 ms at this scale: the swing was box
-    noise single samples can't reject)."""
+    regression until a round-11 A/B (recorded in ARCHITECTURE.md)
+    showed the file-list path costs <0.3 ms at this scale: the swing
+    was box noise single samples can't reject)."""
     import shutil
     import tempfile
 
@@ -775,6 +775,15 @@ def bench_ann_index(spark) -> dict:
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
     return out
+
+
+def _session_cpus(spark) -> int:
+    """Cores the session runs on: ``N`` of a ``local[N]`` master, else
+    the session's default parallelism."""
+    import re
+
+    m = re.fullmatch(r"local\[(\d+)(?:,\d+)?\]", spark.sparkContext.master)
+    return int(m.group(1)) if m else spark.sparkContext.defaultParallelism
 
 
 def main() -> None:
@@ -921,10 +930,10 @@ def main() -> None:
         "stat": "median",
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         # self-evidencing scaling runs (round-13 VERDICT item 2): the
-        # session honors $SPARK_GRAFT_CPUS, and the payload now proves
-        # the effective parallelism instead of leaving the driver to
-        # infer it from (job-floor-bound) ratios
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        # payload proves the effective parallelism instead of leaving
+        # the driver to infer it from (job-floor-bound) ratios — both
+        # read off the running session, never the environment
+        "cpus": _session_cpus(spark),
         "parallelism": spark.sparkContext.defaultParallelism,
         "full": "BENCH_full_latest.json",
     }

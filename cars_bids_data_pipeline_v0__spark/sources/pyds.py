@@ -235,7 +235,9 @@ class TxLogBatchReader(DataSourceReader):
             "partitionColumn"
         )
         log = TransactionLog(self.path)
-        self._live = log.live_actions(upto=self.version)
+        # a plain dict: the reader is pickled to the Python workers, and
+        # the snapshot keeps its checkpoint sidecar open
+        self._live = dict(log.live_actions(upto=self.version).items())
         if log.dvs(upto=self.version):
             raise ValueError(
                 f"txlog table at {self.path} has deletion vectors in "

@@ -36,6 +36,7 @@ single-writer use; `tx_merge_partitioned` keeps its exact merge semantics
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import shutil
@@ -63,20 +64,16 @@ _ALTER_STATE_CACHE: dict[tuple, tuple] = {}
 #: (commit path, mtime_ns, size) -> parsed commit body (shared, read-only)
 _COMMIT_BODY_CACHE: dict[tuple, dict] = {}
 
-#: (checkpoint path, mtime_ns, size) -> parsed checkpoint body (shared,
-#: read-only — checkpoints are written once via atomic rename)
+#: (checkpoint path, mtime_ns, size) -> parsed checkpoint JSON body
+#: (shared, read-only — checkpoints are written once via atomic rename).
+#: Bodies only: a snapshot opens the sidecar's live list itself
+#: (`_read_live_sidecar`), so no entry holds a file handle
 _CHECKPOINT_BODY_CACHE: dict[tuple, dict] = {}
-
-#: (checkpoint path, mtime_ns, size) -> checkpoint body WITHOUT the
-#: sidecar-externalized live list resolved — the metadata-only view
-#: (constraints/txns/dvs/hwm/mappings) that never pays the 1M-row
-#: sidecar read (see _load_checkpoint_meta)
-_CHECKPOINT_META_CACHE: dict[tuple, dict] = {}
 
 #: abspath(table) -> (version, commit-file sig, shared live snapshot) —
 #: Delta's in-memory Snapshot: later versions extend it by replaying
 #: only the delta commits (see _live_actions_shared)
-_SNAPSHOT_CACHE: dict[str, tuple[int, tuple, dict[str, dict]]] = {}
+_SNAPSHOT_CACHE: dict[str, tuple[int, tuple, "_LazyLive"]] = {}
 
 
 def _load_json_cached(path: str, cache: dict[tuple, dict]) -> dict:
@@ -104,33 +101,20 @@ def _load_json_cached(path: str, cache: dict[tuple, dict]) -> dict:
     return body
 
 
-#: live-action count at or above which `checkpoint()` moves the live
-#: list out of the JSON body into a parquet sidecar (Delta's own
-#: checkpoint format choice): the 22 MB JSON body at 100k files costs
-#: ~1.4 s to parse cold, the sidecar ~0.4 s — and the JSON body stays
-#: KB-sized at any table size.  Small tables keep the inline list
-#: (one file, human-greppable, zero extra I/O).
-_PARQUET_CKPT_MIN = 10_000
-
-
 def _read_live_sidecar(path: str) -> "_SidecarBase":
-    """Open a checkpoint's parquet live-list sidecar as a LAZY columnar
-    base (`_SidecarBase`) — round-13: the eager arrow→list[dict]
-    conversion this used to do was the metadata plane's last O(n)
-    driver cost (10M live files: ~60 s of json parse + ~80 s of
-    `_copy_tree` per cold `live_actions`, 194–248 s measured), and
-    most verbs never need the full dict list (count/prune/scan
-    planning read the typed sidecar columns; MERGE touches only its
-    candidate files).  The parquet READ stays eager so a torn/missing
-    sidecar still surfaces here, normalized to ValueError for
-    `_latest_checkpoint_body`'s torn-checkpoint fallback; the
-    arrow→dict materialization happens per-row (point lookups) or in
-    chunked batches (full iteration), only when a verb asks."""
-    import pyarrow.parquet as _pq
+    """Open a checkpoint's parquet live-list sidecar as a lazy columnar
+    base (`_SidecarBase`): the footer is parsed now and the file handle
+    kept, so each column is read on first use — a cold count reads
+    ``zrows``, a cold prune ``path`` plus two zone columns, never the
+    ``rest_json`` bulk — and a snapshot keeps serving after a log
+    truncation unlinks the file.  The handle closes when the base is
+    garbage-collected.  Any failure to open is normalized to ValueError
+    (a torn checkpoint)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     try:
-        t = _pq.read_table(path)
-        return _SidecarBase(t)
+        return _SidecarBase(pq.ParquetFile(pa.OSFile(path)))
     except Exception as exc:  # torn/missing sidecar = torn checkpoint
         raise ValueError(f"unreadable checkpoint sidecar {path}") from exc
 
@@ -142,16 +126,62 @@ def _read_live_sidecar(path: str) -> "_SidecarBase":
 _SIDECAR_PARSE_CHUNK = 65536
 
 
+def _sidecar_type(name: str, flags: dict | None = None):
+    """Arrow type of one sidecar column: strings for path/rest_json/
+    zpartition, int64 for zrows/zbytes, and for a zone column float64
+    iff its stats ever held a float (``flags[c][1]``), else int64 — one
+    rule for the serial, forked and incremental builds."""
+    import pyarrow as pa
+
+    if name in ("path", "rest_json", "zpartition"):
+        return pa.string()
+    if name in ("zrows", "zbytes"):
+        return pa.int64()
+    return pa.float64() if flags[name.split(":", 1)[1]][1] else pa.int64()
+
+
+def _numeric_bound(x) -> bool:
+    """True when a pruning bound compares exactly against the typed zone
+    columns: None or a non-bool number, and no int beyond 2^53 (it would
+    round against a float64 column; the python comparison is exact)."""
+    return x is None or (
+        isinstance(x, (int, float))
+        and not isinstance(x, bool)
+        and not (isinstance(x, int) and abs(x) > 2**53)
+    )
+
+
+@functools.lru_cache(maxsize=None)
+def _empty_base() -> "_SidecarBase":
+    """The shared zero-row base of a table without a checkpoint."""
+    import pyarrow as pa
+
+    return _SidecarBase(
+        pa.table(
+            {
+                # chunked_array, not array: converting a python list
+                # imports pyarrow's pandas shim (~5 ms) on first use
+                n: pa.chunked_array([], _sidecar_type(n))
+                for n in _sidecar_keep_cols({})
+            }
+        )
+    )
+
+
 class _SidecarBase:
-    """Columnar view of one checkpoint sidecar's live add-actions.
+    """Columnar view of one checkpoint sidecar's live add-actions (zero
+    rows for a table without a checkpoint).
 
-    Holds the arrow columns (``path``, ``rest_json``, ``zpartition``)
-    and materializes python objects lazily, each cached after first
-    use:
+    Columns come from an in-memory arrow table or, for a checkpoint,
+    from an open ``pyarrow.parquet.ParquetFile`` — read on first use,
+    then resident.  Python objects materialize lazily, each cached
+    after first use:
 
-    * ``paths()`` / ``partitions()`` — pylist of one column (C-speed).
+    * ``columns(*names)`` — arrow columns, the missing ones read from
+      the sidecar in one call (parquet decodes them in parallel).
+    * ``pylist(name)`` / ``paths()`` — one column as a python list.
     * ``find(p)`` — row index by binary search (the sidecar is written
-      path-sorted by both build paths; verified C-side once, with a
+      path-sorted by every build path; verified C-side once, with a
       dict-index fallback if an external writer broke the order).
     * ``action_at(i, fresh=True)`` — ONE row parsed to a dict.  Fresh
       dicts are private to the caller by construction (parsed from the
@@ -159,34 +189,38 @@ class _SidecarBase:
       `live_actions` hand out safe copies without `_copy_tree`.
     * ``iter_parsed(fresh=...)`` — all rows, chunk-batched json parse.
       With ``fresh=False`` the parsed list is built once and cached
-      (today's shared-snapshot regime: verbs that genuinely iterate
-      every action — optimize policy, zorder stats, clone, export —
-      pay the parse once per checkpoint, then dict-speed), and the
-      CONTRACT is the `_live_actions_shared` one: treat the dicts as
-      immutable, they are shared.
+      (verbs that genuinely iterate every action — optimize policy,
+      zorder stats, clone, export — pay the parse once per checkpoint,
+      then dict-speed), and the CONTRACT is the `_live_actions_shared`
+      one: treat the dicts as immutable, they are shared.
 
     Field-exact by construction: each ``rest_json`` row is the action
-    minus ``path``, so reconstruction is byte-faithful to what the
-    inline checkpoint list would have carried."""
+    minus ``path``."""
 
     __slots__ = (
-        "_table", "_path_col", "_rest_col", "_part_col", "_n",
-        "_paths", "_parts", "_sorted", "_index", "_acts",
+        "_file", "_lock", "_names", "_n", "_cols",
+        "_pylists", "_sorted", "_index", "_acts",
     )
 
-    def __init__(self, table):
-        names = table.column_names
-        if "path" not in names or "rest_json" not in names:
+    def __init__(self, source):
+        import threading
+
+        import pyarrow as pa
+
+        if isinstance(source, pa.Table):  # every column resident
+            self._file = None
+            self._names = set(source.column_names)
+            self._n = source.num_rows
+            self._cols = {n: source.column(n) for n in source.column_names}
+        else:  # an open ParquetFile: columns read on first use
+            self._file = source
+            self._names = set(source.schema_arrow.names)
+            self._n = source.metadata.num_rows
+            self._cols = {}
+        if "path" not in self._names or "rest_json" not in self._names:
             raise ValueError("checkpoint sidecar missing required columns")
-        self._table = table
-        self._path_col = table.column("path")
-        self._rest_col = table.column("rest_json")
-        self._part_col = (
-            table.column("zpartition") if "zpartition" in names else None
-        )
-        self._n = table.num_rows
-        self._paths: list | None = None
-        self._parts: list | None = None
+        self._lock = threading.Lock()
+        self._pylists: dict[str, list] = {}
         self._sorted: bool | None = None
         self._index: dict | None = None
         self._acts: list | None = None
@@ -194,33 +228,41 @@ class _SidecarBase:
     def __len__(self) -> int:
         return self._n
 
-    def table(self):
-        """The full sidecar arrow table (typed zone/size columns
-        included) — for verbs that can answer columnarly."""
-        return self._table
+    def columns(self, *names: str) -> list:
+        """Chunked arrays for ``names``, reading the ones not yet resident
+        from the sidecar in ONE call; None for a name the sidecar lacks
+        (a zone column of a stats column that did not qualify)."""
+        missing = [
+            n for n in dict.fromkeys(names)
+            if n not in self._cols and n in self._names
+        ]
+        if missing and self._file is not None:
+            with self._lock:
+                missing = [n for n in missing if n not in self._cols]
+                if missing:
+                    t = self._file.read(columns=missing)
+                    for n in missing:
+                        self._cols[n] = t.column(n)
+        return [self._cols.get(n) for n in names]
+
+    def column(self, name: str):
+        return self.columns(name)[0]
+
+    def pylist(self, name: str) -> list:
+        """One column as a python list, cached."""
+        out = self._pylists.get(name)
+        if out is None:
+            out = self._pylists[name] = self.column(name).to_pylist()
+        return out
 
     def paths(self) -> list:
-        if self._paths is None:
-            self._paths = self._path_col.to_pylist()
-        return self._paths
-
-    def partitions(self) -> list:
-        if self._parts is None:
-            if self._part_col is None:
-                # pre-zpartition sidecar (never written by this engine,
-                # defensive): fall back to the parsed actions
-                self._parts = [
-                    a.get("partition") for a in self.iter_actions()
-                ]
-            else:
-                self._parts = self._part_col.to_pylist()
-        return self._parts
+        return self.pylist("path")
 
     def _check_sorted(self) -> bool:
         if self._sorted is None:
             import pyarrow.compute as _pc
 
-            ca = self._path_col.combine_chunks()
+            ca = self.column("path").combine_chunks()
             if len(ca) <= 1:
                 self._sorted = True
             else:
@@ -250,42 +292,15 @@ class _SidecarBase:
     def action_at(self, i: int, fresh: bool = True) -> dict:
         if not fresh and self._acts is not None:
             return self._acts[i]
-        a = json.loads(self._rest_col[i].as_py())
+        a = json.loads(self.column("rest_json")[i].as_py())
         a["path"] = self.paths()[i]
         return a
 
-    def _ensure_acts(self) -> list:
-        """Parse EVERY row once and cache the list (shared-immutable
-        contract) — the old eager-snapshot regime, now paid only by the
-        first verb that iterates the full action set."""
-        if self._acts is None:
-            acts: list = []
-            paths = self.paths()
-            rest = self._rest_col
-            for lo in range(0, self._n, _SIDECAR_PARSE_CHUNK):
-                chunk = rest.slice(lo, _SIDECAR_PARSE_CHUNK).to_pylist()
-                try:
-                    parsed = json.loads("[" + ",".join(chunk) + "]")
-                except (TypeError, json.JSONDecodeError) as exc:
-                    raise ValueError(
-                        "corrupt checkpoint sidecar rest_json"
-                    ) from exc
-                for k, a in enumerate(parsed):
-                    a["path"] = paths[lo + k]
-                acts.extend(parsed)
-            self._acts = acts
-        return self._acts
-
-    def iter_parsed(self, fresh: bool = True):
-        """Yield ``(path, action dict)`` in row order.  ``fresh=True``
-        parses private dicts per call; ``fresh=False`` serves the
-        shared cached list (building it on first use)."""
-        if not fresh:
-            acts = self._ensure_acts()
-            yield from zip(self.paths(), acts)
-            return
+    def _parse_rows(self):
+        """Yield ``(path, private action dict)`` in row order — one
+        json.loads per ``_SIDECAR_PARSE_CHUNK`` rows."""
         paths = self.paths()
-        rest = self._rest_col
+        rest = self.column("rest_json")
         for lo in range(0, self._n, _SIDECAR_PARSE_CHUNK):
             chunk = rest.slice(lo, _SIDECAR_PARSE_CHUNK).to_pylist()
             try:
@@ -299,14 +314,16 @@ class _SidecarBase:
                 a["path"] = p
                 yield p, a
 
-    def iter_actions(self):
-        """Iterate the SHARED action dicts (``body["live"]``-compat for
-        the sites that still consume the checkpoint live list as an
-        iterable of dicts)."""
-        for _p, a in self.iter_parsed(fresh=False):
-            yield a
-
-    __iter__ = iter_actions
+    def iter_parsed(self, fresh: bool = True):
+        """Yield ``(path, action dict)`` in row order.  ``fresh=True``
+        parses private dicts per call; ``fresh=False`` serves the
+        shared cached list (building it on first use)."""
+        if fresh:
+            yield from self._parse_rows()
+            return
+        if self._acts is None:
+            self._acts = [a for _p, a in self._parse_rows()]
+        yield from zip(self.paths(), self._acts)
 
 
 class _LazyLiveView:
@@ -330,18 +347,22 @@ class _LazyLiveView:
 
 
 class _LazyLive:
-    """The live snapshot ``{path: add-action dict}`` of a
-    sidecar-checkpointed table, materialized lazily — `_SidecarBase`
-    rows plus a small mutable overlay for the post-checkpoint commit
-    tail (adds/removes/re-adds), which is exactly the shape
-    `_live_actions_shared`'s replay produces.
+    """The live snapshot ``{path: add-action dict}`` at a version — the
+    one snapshot type: a `_SidecarBase` (the newest checkpoint at or
+    below the version, or the empty base) plus a python overlay for the
+    commit tail replayed on top of it.
 
     Mapping-compatible for every snapshot consumer in this module
     (read-only: items()/values()/get()/``in``/len/iteration/sorted);
-    the replay mutations go through __setitem__/discard.  Invariants:
-    ``_removed`` ⊆ base paths, disjoint from ``_overlay``; ``_shadow``
-    = overlay keys that also exist in base (their base row is
-    superseded).  len = base − removed + overlay − shadow.
+    the replay mutations go through `replay`/__setitem__/discard.
+    State: ``_overlay`` = the tail's live adds, ``_touched`` = every
+    path a tail action added or removed.  A base row is live iff its
+    path is not touched, so live = (base − touched) + overlay.
+
+    The metadata verbs are methods — `count`, `prunable`,
+    `files_in_partitions`, `small_file_counts`, `files`, `rows_map` —
+    each columnar over the base (typed sidecar columns, one mask for
+    the touched rows) and python over the overlay.
 
     ``fresh`` selects the materialization contract: the INTERNAL
     shared snapshot (fresh=False) serves base dicts from the base's
@@ -350,36 +371,54 @@ class _LazyLive:
     handout (fresh=True) always parses private dicts so caller
     mutations can never reach the module caches."""
 
-    __slots__ = ("_base", "_overlay", "_removed", "_shadow", "_fresh")
+    __slots__ = ("_base", "_overlay", "_touched", "_fresh", "_mask")
 
     def __init__(
         self,
         base: _SidecarBase,
         overlay: dict | None = None,
-        removed: set | None = None,
-        shadow: set | None = None,
+        touched: set | None = None,
         fresh: bool = False,
     ):
         self._base = base
         self._overlay = overlay if overlay is not None else {}
-        self._removed = removed if removed is not None else set()
-        self._shadow = shadow if shadow is not None else set()
+        self._touched = touched if touched is not None else set()
         self._fresh = fresh
+        self._mask = None
 
     # -- size / membership -------------------------------------------------
 
+    def _live_mask(self):
+        """Arrow mask of the base rows still live, or None when every
+        base row is (cached until the next mutation)."""
+        if not self._touched or not len(self._base):
+            return None
+        if self._mask is None:
+            import pyarrow as pa
+            import pyarrow.compute as pc
+
+            self._mask = pc.invert(
+                pc.is_in(
+                    self._base.column("path"),
+                    value_set=pa.array(list(self._touched), pa.string()),
+                )
+            )
+        return self._mask
+
     def __len__(self) -> int:
-        return (
-            len(self._base)
-            - len(self._removed)
-            + len(self._overlay)
-            - len(self._shadow)
-        )
+        mask = self._live_mask()
+        if mask is None:
+            n = len(self._base)
+        else:
+            import pyarrow.compute as pc
+
+            n = pc.sum(mask).as_py() or 0
+        return n + len(self._overlay)
 
     def __contains__(self, p) -> bool:
         if p in self._overlay:
             return True
-        if p in self._removed:
+        if p in self._touched:
             return False
         return self._base.find(p) >= 0
 
@@ -389,7 +428,7 @@ class _LazyLive:
         a = self._overlay.get(p)
         if a is not None:
             return a
-        if p in self._removed:
+        if p in self._touched:
             raise KeyError(p)
         i = self._base.find(p)
         if i < 0:
@@ -403,17 +442,11 @@ class _LazyLive:
             return default
 
     def __iter__(self):
-        removed, shadow = self._removed, self._shadow
-        if removed or shadow:
-            for p in self._base.paths():
-                if p not in removed:
-                    yield p
-            for p in self._overlay:
-                if p not in shadow:
-                    yield p
-        else:
-            yield from self._base.paths()
-            yield from self._overlay
+        touched = self._touched
+        for p in self._base.paths():
+            if p not in touched:
+                yield p
+        yield from self._overlay
 
     def keys(self):
         return iter(self)
@@ -421,19 +454,11 @@ class _LazyLive:
     def _iter_items(self, fresh: bool | None = None):
         if fresh is None:
             fresh = self._fresh
-        overlay, removed, shadow = (
-            self._overlay, self._removed, self._shadow,
-        )
+        touched = self._touched
         for p, a in self._base.iter_parsed(fresh=fresh):
-            if p in removed:
-                continue
-            if p in shadow:
-                yield p, overlay[p]
-                continue
-            yield p, a
-        for p, a in overlay.items():
-            if p not in shadow:
+            if p not in touched:
                 yield p, a
+        yield from self._overlay.items()
 
     def items(self):
         return _LazyLiveView(self, values=False)
@@ -441,55 +466,118 @@ class _LazyLive:
     def values(self):
         return _LazyLiveView(self, values=True)
 
-    def small_file_counts(self, small_file_bytes: int) -> dict | None:
-        """``{partition: count of live files under small_file_bytes}``
-        (unrecorded size counts as small, matching the dict path) —
-        computed arrow-side off the sidecar's ``zbytes``/``zpartition``
-        columns plus the python overlay.  Returns None when the sidecar
-        predates the zbytes column (pre-r13 format, or an incremental
-        extension of one): the dict path decides."""
-        t = self._base.table()
-        if "zbytes" not in t.column_names:
-            return None
+    # -- metadata verbs ----------------------------------------------------
+
+    def _base_cols(self, *names: str) -> list:
+        """Base columns restricted to the live rows — read together with
+        ``path`` when the touched-row mask needs it."""
+        import pyarrow.compute as pc
+
+        masked = bool(self._touched) and len(self._base) > 0
+        cols = self._base.columns(*names, *(["path"] if masked else []))
+        mask = self._live_mask()
+        cols = cols[: len(names)]
+        return cols if mask is None else [pc.filter(c, mask) for c in cols]
+
+    def count(self, footer_rows, dv_state: dict[str, str]) -> int:
+        """Live rows: Σ recorded row counts (``footer_rows(path)`` for an
+        action without one) minus the deletion-vector cardinality of
+        every live file ``dv_state`` maps to a DV."""
+        import pyarrow.compute as pc
+
+        (zrows,) = self._base_cols("zrows")
+        total = pc.sum(zrows).as_py() or 0
+        if zrows.null_count:
+            (paths,) = self._base_cols("path")
+            total += sum(
+                footer_rows(p)
+                for p in pc.filter(paths, pc.is_null(zrows)).to_pylist()
+            )
+        for p, a in self._overlay.items():
+            r = a.get("rows")
+            total += footer_rows(p) if r is None else r
+        deleted = sum(
+            footer_rows(dv) for f, dv in dv_state.items() if f in self
+        )
+        return int(total - deleted)
+
+    def prunable(self, col: str, lo=None, hi=None) -> tuple[list[str], int]:
+        """Zone-map pruning: ``(sorted files whose recorded [min, max]
+        for ``col`` overlaps [lo, hi], number pruned)``; a file with no
+        stats for ``col`` is always kept.  Base rows compare in arrow
+        when the sidecar carries typed zone columns for ``col`` and both
+        bounds are float64-exact numbers; otherwise every action
+        compares in python — the same rule either way."""
+        import pyarrow.compute as pc
+
+        keep: list[str] = []
+        pruned = 0
+        rest = self._iter_items()  # every action, unless zones answer
+        path, zmin, zmax = self._base.columns(
+            "path", f"zmin:{col}", f"zmax:{col}"
+        )
+        if zmin is not None and _numeric_bound(lo) and _numeric_bound(hi):
+            prune = None
+            if lo is not None:
+                prune = pc.fill_null(pc.less(zmax, lo), False)
+            if hi is not None:
+                over = pc.fill_null(pc.greater(zmin, hi), False)
+                prune = over if prune is None else pc.or_(prune, over)
+            if prune is None:
+                keep = self._base_cols("path")[0].to_pylist()
+            else:
+                keep_mask = pc.invert(prune)
+                live = self._live_mask()
+                if live is not None:
+                    prune = pc.and_(prune, live)
+                    keep_mask = pc.and_(keep_mask, live)
+                keep = pc.filter(path, keep_mask).to_pylist()
+                pruned = pc.sum(prune).as_py() or 0
+            rest = self._overlay.items()
+        for f, a in rest:
+            mm = (a.get("stats") or {}).get(col)
+            if mm is not None and (
+                (lo is not None and mm[1] < lo)
+                or (hi is not None and mm[0] > hi)
+            ):
+                pruned += 1
+                continue
+            keep.append(f)
+        keep.sort()
+        return keep, pruned
+
+    def files_in_partitions(self, parts: set[str]) -> dict[str, str]:
+        """``{path: partition}`` for the live files whose partition is in
+        ``parts``."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        zb = t.column("zbytes")
-        zp = t.column("zpartition")
-        if pa.types.is_null(zb.type):
-            mask = pa.chunked_array([[True] * len(t)], pa.bool_())
-        else:
-            mask = pc.or_kleene(
-                pc.is_null(zb), pc.less(zb, small_file_bytes)
+        paths, zpart = self._base_cols("path", "zpartition")
+        hit = pc.fill_null(
+            pc.is_in(zpart, value_set=pa.array(sorted(parts), pa.string())),
+            False,
+        )
+        out = dict(
+            zip(
+                pc.filter(paths, hit).to_pylist(),
+                pc.filter(zpart, hit).to_pylist(),
             )
-        excl = self._removed | self._shadow
-        if excl:
-            mask = pc.and_(
-                mask,
-                pc.invert(
-                    pc.is_in(
-                        t.column("path"),
-                        value_set=pa.array(sorted(excl), pa.string()),
-                    )
-                ),
-            )
+        )
+        for p, a in self._overlay.items():
+            if a.get("partition") in parts:
+                out[p] = a.get("partition")
+        return out
+
+    def small_file_counts(self, small_file_bytes: int) -> dict:
+        """``{partition: count of live files under small_file_bytes}``
+        (an unrecorded size counts as small)."""
+        import pyarrow.compute as pc
+
+        zbytes, zpart = self._base_cols("zbytes", "zpartition")
+        small = pc.fill_null(pc.less(zbytes, small_file_bytes), True)
         by_part: dict = {}
-        if pa.types.is_null(zp.type):
-            n = pc.sum(mask).as_py() or 0
-            if n:
-                by_part[None] = n
-        else:
-            kept = pc.filter(zp, mask)
-            for row in pc.value_counts(
-                kept.combine_chunks()
-            ).to_pylist():
-                if row["values"] is not None and row["counts"]:
-                    by_part[row["values"]] = row["counts"]
-            n_null = (
-                pc.sum(pc.and_(mask, pc.is_null(zp))).as_py() or 0
-            )
-            if n_null:
-                by_part[None] = by_part.get(None, 0) + n_null
+        for row in pc.value_counts(pc.filter(zpart, small)).to_pylist():
+            by_part[row["values"]] = row["counts"]
         for a in self._overlay.values():
             size = a.get("bytes")
             if size is None or size < small_file_bytes:
@@ -501,47 +589,50 @@ class _LazyLive:
         """``{path: partition or None}`` — the `live_files` projection,
         built from the cached path/zpartition pylists (never parses
         rest_json)."""
-        d = dict(zip(self._base.paths(), self._base.partitions()))
-        for p in self._removed:
-            d.pop(p, None)
-        for p, a in self._overlay.items():
-            d[p] = a.get("partition")
-        return d
+        return self._project("zpartition", "partition")
 
     def rows_map(self) -> dict:
         """``{path: recorded row count or None}`` — columnar off the
         sidecar's ``zrows`` + the overlay (the Delta export's stats
         input; never parses rest_json)."""
-        t = self._base.table()
-        if "zrows" in t.column_names:
-            zr = t.column("zrows").to_pylist()
-        else:  # pre-zrows sidecar (never written by this engine)
-            zr = [a.get("rows") for a in self._base.iter_actions()]
-        d = dict(zip(self._base.paths(), zr))
-        for p in self._removed:
-            d.pop(p, None)
+        return self._project("zrows", "rows")
+
+    def _project(self, col: str, field: str) -> dict:
+        self._base.columns("path", col)  # one read for both
+        d = dict(zip(self._base.paths(), self._base.pylist(col)))
+        if d:
+            for p in self._touched:
+                d.pop(p, None)
         for p, a in self._overlay.items():
-            d[p] = a.get("rows")
+            d[p] = a.get(field)
         return d
 
     # -- replay mutations (internal) ---------------------------------------
 
+    def replay(self, acts) -> None:
+        """Apply commit bodies in order — last writer wins, adds before
+        removes within a commit."""
+        overlay, touched = self._overlay, self._touched
+        for act in acts:
+            for a in act.get("add", []):
+                p = a["path"]
+                overlay[p] = a
+                touched.add(p)
+            for r in act.get("remove", []):
+                overlay.pop(r, None)
+                touched.add(r)
+        self._mask = None
+
     def __setitem__(self, p, a) -> None:
-        self._removed.discard(p)
         self._overlay[p] = a
-        if self._base.find(p) >= 0:
-            self._shadow.add(p)
+        self._touched.add(p)
+        self._mask = None
 
     def discard(self, p) -> None:
-        """Remove ``p`` if present, never parsing its value (the replay
-        loop's ``pop(r, None)`` without the wasted materialization)."""
-        if p in self._overlay:
-            del self._overlay[p]
-            if p in self._shadow:
-                self._shadow.discard(p)
-                self._removed.add(p)
-        elif p not in self._removed and self._base.find(p) >= 0:
-            self._removed.add(p)
+        """Remove ``p`` if present, never parsing its value."""
+        self._overlay.pop(p, None)
+        self._touched.add(p)
+        self._mask = None
 
     def pop(self, p, *default):
         try:
@@ -557,13 +648,11 @@ class _LazyLive:
 
     def copy_shallow(self) -> "_LazyLive":
         """Independent overlay state over the shared base — what the
-        incremental snapshot extension mutates (the `dict(snap)` of the
-        plain path, minus the 10M-entry copy)."""
+        incremental snapshot extension mutates."""
         return _LazyLive(
             self._base,
             dict(self._overlay),
-            set(self._removed),
-            set(self._shadow),
+            set(self._touched),
             fresh=self._fresh,
         )
 
@@ -576,39 +665,30 @@ class _LazyLive:
         return _LazyLive(
             self._base,
             {p: _copy_tree(a) for p, a in self._overlay.items()},
-            set(self._removed),
-            set(self._shadow),
+            set(self._touched),
             fresh=True,
         )
 
     def __eq__(self, other):
-        if isinstance(other, _LazyLive):
-            if (
-                self._base is other._base
-                and self._overlay == other._overlay
-                and self._removed == other._removed
-            ):
-                return True
-            other = dict(other._iter_items())
-        if not isinstance(other, dict):
+        """Mapping equality against a dict or another snapshot."""
+        get = getattr(other, "get", None)
+        if get is None:
             return NotImplemented
-        if len(self) != len(other):
-            return False
-        for p, a in self._iter_items():
-            if other.get(p) != a:
-                return False
-        return True
-
-    def __ne__(self, other):
-        eq = self.__eq__(other)
-        return eq if eq is NotImplemented else not eq
+        return len(self) == len(other) and all(
+            get(p) == a for p, a in self._iter_items()
+        )
 
 
 def _load_checkpoint_cached(path: str) -> dict:
-    """Checkpoint-body loader: like `_load_json_cached`, plus sidecar
-    resolution — a body whose live list was externalized to parquet
-    (``live_parquet``) is reconstructed ONCE and the merged body cached
-    under the JSON file's identity.  CONTRACT: immutable, shared."""
+    """The checkpoint loader every reader goes through: the JSON body,
+    memoized per file identity, after parsing the FOOTER of the parquet
+    sidecar it names — a missing or torn sidecar raises ValueError, so
+    the caller demotes the whole checkpoint and every consumer (the
+    snapshot and the txns/dvs/constraints/mappings readers alike) agrees
+    on which checkpoint is in force.  The live list itself stays on
+    disk until a snapshot opens it.  CONTRACT: immutable, shared."""
+    import pyarrow.parquet as pq
+
     try:
         st = os.stat(path)
         key = (path, st.st_mtime_ns, st.st_size)
@@ -619,10 +699,14 @@ def _load_checkpoint_cached(path: str) -> dict:
         with open(path) as f:
             body = json.load(f)
         side = body.get("live_parquet")
-        if side:
-            body["live"] = _read_live_sidecar(
-                os.path.join(os.path.dirname(path), side)
-            )
+        if not side:
+            raise ValueError(f"checkpoint {path} names no live sidecar")
+        try:
+            pq.read_metadata(os.path.join(os.path.dirname(path), side))
+        except Exception as exc:
+            raise ValueError(
+                f"unreadable checkpoint sidecar for {path}"
+            ) from exc
         if key is not None:
             if len(_CHECKPOINT_BODY_CACHE) > 65536:
                 _CHECKPOINT_BODY_CACHE.clear()
@@ -774,7 +858,12 @@ def _build_live_table(
         ordered = sorted(live, key=lambda a: a["path"])
         cols, flags = _build_live_cols(ordered)
         keep = _sidecar_keep_cols(flags)
-        return _pa.table({k: cols[k] for k in keep}), flags
+        return _pa.table(
+            {
+                k: _pa.array(cols[k]).cast(_sidecar_type(k, flags))
+                for k in keep
+            }
+        ), flags
 
     if len(live) < _SIDECAR_PARALLEL_MIN:
         return _serial()
@@ -842,13 +931,7 @@ def _build_live_table(
     for t in tables:
         arrays = []
         for name in keep:
-            if name in ("path", "rest_json", "zpartition"):
-                ztype = _pa.string()
-            elif name in ("zrows", "zbytes"):
-                ztype = _pa.int64()
-            else:
-                c = name.split(":", 1)[1]
-                ztype = _pa.float64() if flags[c][1] else _pa.int64()
+            ztype = _sidecar_type(name, flags)
             if name in t.column_names:
                 col = t.column(name)
                 arrays.append(
@@ -886,56 +969,6 @@ def _qualified_zone_cols(
         for c in sorted(flags)
         if flags[c][0] and not (flags[c][1] and flags[c][2])
     ]
-
-
-def _load_checkpoint_meta(path: str) -> dict:
-    """Checkpoint body WITHOUT resolving a sidecar-externalized live
-    list — the metadata-only view.  Every checkpoint field except
-    ``live`` (txns, dvs, constraints, row_id_hwm, mappings, specs) is in
-    the JSON itself, which the sidecar format keeps SMALL by
-    construction; consumers of those fields must not pay the
-    1M-action sidecar read (measured 19.5 s cold at 1M live files).
-
-    Sidecar validity: the JSON is renamed into place only AFTER the
-    sidecar it names is fully written, so a published checkpoint's
-    sidecar exists and is complete barring external corruption — this
-    loader stats it (existence) and leaves content verification to the
-    readers that actually open it (`_read_live_sidecar` normalizes any
-    tear to the torn-checkpoint fallback)."""
-    try:
-        st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = None
-    body = _CHECKPOINT_META_CACHE.get(key) if key is not None else None
-    if body is None:
-        with open(path) as f:
-            body = json.load(f)
-        side = body.get("live_parquet")
-        if side:
-            # a missing sidecar = torn checkpoint, same as a torn body
-            os.stat(os.path.join(os.path.dirname(path), side))
-        if key is not None:
-            if len(_CHECKPOINT_META_CACHE) > 65536:
-                _CHECKPOINT_META_CACHE.clear()
-            _CHECKPOINT_META_CACHE[key] = body
-    return body
-
-
-def _replay_into(live, acts) -> None:
-    """Apply commit bodies to a snapshot under assembly — identical
-    last-writer-wins semantics for the plain-dict and `_LazyLive`
-    shapes (the lazy path's `discard` skips the value materialization
-    `pop(r, None)` would force)."""
-    lazy = isinstance(live, _LazyLive)
-    for act in acts:
-        for a in act.get("add", []):
-            live[a["path"]] = a
-        for r in act.get("remove", []):
-            if lazy:
-                live.discard(r)
-            else:
-                live.pop(r, None)
 
 
 def _copy_tree(v):
@@ -1058,14 +1091,9 @@ class TransactionLog:
 
     def live_files(self, upto: int | None = None) -> dict[str, str | None]:
         """``{relative file path: partition value or None}`` at a version
-        — a cheap projection of the shared snapshot (see
+        — a columnar projection of the shared snapshot (see
         `_live_actions_shared` for the replay/caching contract)."""
-        snap = self._live_actions_shared(upto)
-        if isinstance(snap, _LazyLive):
-            # columnar projection: path/zpartition pylists + overlay —
-            # never parses a rest_json row
-            return snap.files()
-        return {f: a.get("partition") for f, a in snap.items()}
+        return self._live_actions_shared(upto).files()
 
     def _commit_sig(self, v: int) -> tuple | None:
         """File identity of one commit — the staleness key snapshots
@@ -1077,9 +1105,7 @@ class TransactionLog:
         except OSError:
             return None
 
-    def _live_actions_shared(
-        self, upto: int | None = None
-    ) -> dict[str, dict]:
+    def _live_actions_shared(self, upto: int | None = None) -> _LazyLive:
         """The live snapshot ``{relative file path: add-action dict}`` at
         a version, SHARED — Delta's in-memory Snapshot: computed once,
         then INCREMENTALLY extended by replaying only the commits after
@@ -1087,30 +1113,26 @@ class TransactionLog:
         version eternally valid; the cache key carries the commit file's
         identity so a recreated table can never alias a stale one).
 
-        CONTRACT: callers must treat the mapping and the action dicts as
-        immutable — they are shared with the commit-body/checkpoint
-        caches and with every other caller.  All internal metadata verbs
+        Always a `_LazyLive`: the newest checkpoint's sidecar (columns
+        read on first use) or the empty base, plus the replayed commit
+        tail.  CONTRACT: callers must treat the mapping and the action
+        dicts as immutable — they are shared with the commit-body cache
+        and with every other caller.  All internal metadata verbs
         (count, pruning, OPTIMIZE policy, checkpoint, restore, clone,
         export, read planning) consume this; the public `live_actions`
-        deep-copies on handout.  For a sidecar-checkpointed table the
-        returned mapping is a `_LazyLive` (round-13): same Mapping
-        surface, but action dicts materialize per-verb instead of all
-        at cold-snapshot time.  Measured at 100k live files this turns
+        copies on handout.  Measured at 100k live files this turns
         every verb after the first from ~1.2 s of JSON replay + copy
         into a dict lookup (tools/bench_metadata_plane.py)."""
         v = self.version() if upto is None else upto
         if v < 0:
-            if upto is not None:
-                return {}
-            # fully truncated log (no commit files left): the newest
-            # checkpoint IS the snapshot — the pre-cache code path
-            ckpt = self._latest_checkpoint_body(None)
-            if ckpt is None:
-                return {}
-            base = ckpt[1].get("live", [])
-            if isinstance(base, _SidecarBase):
-                return _LazyLive(base)
-            return {a["path"]: a for a in base}
+            # a fully truncated log (no commit files left) has only its
+            # newest checkpoint, which IS the snapshot
+            return _LazyLive(
+                self._checkpoint_base(
+                    None if upto is not None
+                    else self._latest_checkpoint_body()
+                )
+            )
         key = os.path.abspath(self.path)
         ent = _SNAPSHOT_CACHE.get(key)
         if ent is not None:
@@ -1118,26 +1140,12 @@ class TransactionLog:
             if cv <= v and self._commit_sig(cv) == sig:
                 if cv == v:
                     return snap
-                live = (
-                    snap.copy_shallow()
-                    if isinstance(snap, _LazyLive)
-                    else dict(snap)
-                )
-                _replay_into(live, self.actions(v, since=cv))
+                live = snap.copy_shallow()
+                live.replay(self.actions(v, since=cv))
                 self._snapshot_store(key, v, live)
                 return live
-        start = -1
-        live = {}
         ckpt = self._latest_checkpoint_body(v)
-        if ckpt is not None:
-            start = ckpt[0]
-            base = ckpt[1].get("live", [])
-            live = (
-                _LazyLive(base)
-                if isinstance(base, _SidecarBase)
-                else {a["path"]: a for a in base}
-            )
-        else:
+        if ckpt is None:
             # fail-loud time travel below a truncated log's horizon: no
             # checkpoint at or below v AND the retained commits do not
             # start at 0 means version v cannot be faithfully rebuilt —
@@ -1154,13 +1162,21 @@ class TransactionLog:
                     f"{vs[0] if vs else 'all retained commits'} and no "
                     f"checkpoint exists at or below {v}"
                 )
-        _replay_into(live, self.actions(v, since=start))
+        live = _LazyLive(self._checkpoint_base(ckpt))
+        live.replay(self.actions(v, since=ckpt[0] if ckpt else -1))
         self._snapshot_store(key, v, live)
         return live
 
-    def _snapshot_store(
-        self, key: str, v: int, live: dict[str, dict]
-    ) -> None:
+    def _checkpoint_base(self, ckpt: tuple[int, dict] | None) -> _SidecarBase:
+        """The snapshot base of a loaded checkpoint (its sidecar, opened
+        lazily), or the empty base without one."""
+        if ckpt is None:
+            return _empty_base()
+        return _read_live_sidecar(
+            os.path.join(self.log_dir, ckpt[1]["live_parquet"])
+        )
+
+    def _snapshot_store(self, key: str, v: int, live: _LazyLive) -> None:
         """Cache a computed snapshot, keeping only the NEWEST version per
         table (time-travel reads must never evict the hot head)."""
         ent = _SNAPSHOT_CACHE.get(key)
@@ -1173,21 +1189,14 @@ class TransactionLog:
             _SNAPSHOT_CACHE.clear()
         _SNAPSHOT_CACHE[key] = (v, sig, live)
 
-    def live_actions(self, upto: int | None = None) -> dict[str, dict]:
+    def live_actions(self, upto: int | None = None) -> _LazyLive:
         """``{relative file path: full add-action dict}`` at a version —
         the metadata face of `live_files` (stats, bloom, partition ride
-        along).  DEEP copies: the snapshot's action dicts are shared via
-        the module caches, so handing out the cached dict (or its nested
-        cols/stats/bloom sub-dicts) would let any caller mutation
-        silently corrupt every later snapshot.  A sidecar-backed
-        snapshot hands out a `_LazyLive` copy instead: base rows parse
-        FRESH per access (private by construction — no `_copy_tree`
-        needed, the round-13 cold-read fix), overlay dicts are
-        deep-copied."""
-        snap = self._live_actions_shared(upto)
-        if isinstance(snap, _LazyLive):
-            return snap.copy_out()
-        return {f: _copy_tree(a) for f, a in snap.items()}
+        along).  A private copy of the shared snapshot: base rows parse
+        FRESH per access (private by construction, no `_copy_tree`
+        needed) and overlay dicts are deep-copied, so no caller mutation
+        can corrupt a later snapshot."""
+        return self._live_actions_shared(upto).copy_out()
 
     def constraints(self, upto: int | None = None) -> dict[str, str]:
         """``{constraint name: SQL boolean predicate}`` in force at a
@@ -1198,7 +1207,7 @@ class TransactionLog:
         pruning metadata does."""
         out: dict[str, str] = {}
         start = -1
-        ckpt = self._latest_checkpoint_meta(upto)
+        ckpt = self._latest_checkpoint_body(upto)
         if ckpt is not None:
             start = ckpt[0]
             out = dict(ckpt[1].get("constraints", {}))
@@ -1260,7 +1269,7 @@ class TransactionLog:
         ps: dict | None = None
         tw: dict = {}
         start = -1
-        ckpt = self._latest_checkpoint_meta(v)
+        ckpt = self._latest_checkpoint_body(v)
         if ckpt is not None:
             start = ckpt[0]
             cm = ckpt[1].get("column_mapping")
@@ -1408,7 +1417,7 @@ class TransactionLog:
         checkpoint-carried (the constraints pattern)."""
         out: dict[str, str] = {}
         start = -1
-        ckpt = self._latest_checkpoint_meta(upto)
+        ckpt = self._latest_checkpoint_body(upto)
         if ckpt is not None:
             start = ckpt[0]
             out = dict(ckpt[1].get("generated_cols", {}))
@@ -1426,7 +1435,7 @@ class TransactionLog:
         log truncation."""
         hwm = 0
         start = -1
-        ckpt = self._latest_checkpoint_meta(upto)
+        ckpt = self._latest_checkpoint_body(upto)
         if ckpt is not None:
             start = ckpt[0]
             hwm = int(ckpt[1].get("row_id_hwm", 0))
@@ -1445,7 +1454,7 @@ class TransactionLog:
         pre-checkpoint log truncation."""
         out: dict[str, str] = {}
         start = -1
-        ckpt = self._latest_checkpoint_meta(upto)
+        ckpt = self._latest_checkpoint_body(upto)
         if ckpt is not None:
             start = ckpt[0]
             out = dict(ckpt[1].get("dvs", {}))
@@ -1487,49 +1496,21 @@ class TransactionLog:
     def _latest_checkpoint_body(
         self, upto: int | None = None
     ) -> tuple[int, dict] | None:
-        """Newest readable checkpoint body at or below ``upto`` —
-        parsed bodies memoized per file identity (checkpoints are
-        write-once via atomic rename), so replay-start lookups on the
-        hot read path cost a stat + dict hit, not a JSON parse of the
-        full live-file list.  CONTRACT: treat the body as immutable."""
+        """``(version, body)`` of the newest readable checkpoint at or
+        below ``upto`` — the one checkpoint lookup (snapshot base, txns,
+        dvs, constraints, hwm, mappings).  Bodies are memoized per file
+        identity, so replay-start lookups on the hot read path cost a
+        stat + dict hit; a torn body or sidecar demotes the checkpoint
+        to the next older one (or to plain replay).  CONTRACT: treat
+        the body as immutable."""
         for v in self._checkpoint_versions():
             if upto is not None and v > upto:
                 continue
             try:
                 return v, _load_checkpoint_cached(self._checkpoint_path(v))
-            except (OSError, json.JSONDecodeError, ValueError):
+            except (OSError, ValueError):
                 continue  # torn checkpoint: fall back to older one / replay
         return None
-
-    def _latest_checkpoint_meta(
-        self, upto: int | None = None
-    ) -> tuple[int, dict] | None:
-        """Newest readable checkpoint's METADATA body at or below
-        ``upto`` — same selection rule as `_latest_checkpoint_body`,
-        but a sidecar-externalized live list stays unresolved (only
-        ``live_parquet`` names it).  For consumers of txns / dvs /
-        constraints / hwm / mappings only.  CONTRACT: immutable; never
-        read ``live`` from this body."""
-        for v in self._checkpoint_versions():
-            if upto is not None and v > upto:
-                continue
-            try:
-                return v, _load_checkpoint_meta(self._checkpoint_path(v))
-            except (OSError, json.JSONDecodeError, ValueError):
-                continue  # torn checkpoint: fall back to older one
-        return None
-
-    def _latest_checkpoint(
-        self, upto: int | None = None
-    ) -> tuple[int, dict[str, str | None]] | None:
-        found = self._latest_checkpoint_body(upto)
-        if found is None:
-            return None
-        v, body = found
-        base = body.get("live", [])
-        if isinstance(base, _SidecarBase):
-            return v, dict(zip(base.paths(), base.partitions()))
-        return v, {a["path"]: a.get("partition") for a in base}
 
     def _extend_live_sidecar(
         self, prev_ck: tuple[int, dict], acts: dict[str, dict], v: int
@@ -1551,8 +1532,8 @@ class TransactionLog:
         in the delta upcasts the reused int rows exactly (no >2^53
         ints by qualification).  Flags accumulate monotonically — a
         disqualified column stays disqualified until a full rebuild —
-        which is conservative, never wrong (readers fall back to the
-        dict path for non-zone columns)."""
+        which is conservative, never wrong (pruning on a non-zone
+        column compares in python)."""
         import pyarrow as _pa
         import pyarrow.compute as _pc
         import pyarrow.parquet as _pq
@@ -1600,45 +1581,25 @@ class TransactionLog:
                 flags[c] = (p0[0] and f[0], p0[1] or f[1], p0[2] or f[2])
             else:
                 flags[c] = f
-        zone_cols = _qualified_zone_cols(flags)
         n_r, n_d = reused.num_rows, len(delta)
         prev_names = set(prev_t.column_names)
-
-        def typed(name: str, ztype) -> tuple:
-            """(reused_array, delta_array) for one output column."""
-            if name in prev_names:
-                ra = _pc.cast(reused.column(name), ztype)
-            else:
-                ra = _pa.nulls(n_r, ztype)
+        r_arrays, d_arrays = [], []
+        names = _sidecar_keep_cols(flags)
+        for name in names:
+            ztype = _sidecar_type(name, flags)
+            # a zone column the previous sidecar lacks (first seen in the
+            # delta) is null for every reused row
+            r_arrays.append(
+                _pc.cast(reused.column(name), ztype)
+                if name in prev_names
+                else _pa.nulls(n_r, ztype)
+            )
             vals = dcols.get(name)
-            da = (
+            d_arrays.append(
                 _pa.array(vals, type=ztype)
                 if vals is not None
                 else _pa.nulls(n_d, ztype)
             )
-            return ra, da
-
-        # zbytes only when the PREVIOUS sidecar carries it: fabricating
-        # nulls for reused rows would make the small-file policy read
-        # every pre-r13 file as "size unrecorded" = small.  Omitting
-        # the column keeps the policy on the exact dict path instead.
-        names = ["path", "rest_json", "zrows", "zpartition"] + (
-            ["zbytes"] if "zbytes" in prev_names else []
-        ) + [
-            f"z{m}:{c}" for c in zone_cols for m in ("min", "max")
-        ]
-        r_arrays, d_arrays = [], []
-        for name in names:
-            if name in ("path", "rest_json", "zpartition"):
-                ztype = _pa.string()
-            elif name in ("zrows", "zbytes"):
-                ztype = _pa.int64()
-            else:
-                c = name.split(":", 1)[1]
-                ztype = _pa.float64() if flags[c][1] else _pa.int64()
-            ra, da = typed(name, ztype)
-            r_arrays.append(ra)
-            d_arrays.append(da)
         schema = _pa.schema(
             [(n, a.type) for n, a in zip(names, r_arrays)]
         )
@@ -1664,20 +1625,6 @@ class TransactionLog:
         # metadata survives log truncation and pruners can start replay
         # from the checkpoint like live_files does
         acts = self._live_actions_shared(upto=v)
-
-        # full action list, materialized ONLY by the branches that need
-        # every action (the inline-JSON body and the full sidecar
-        # rebuild) — the O(delta) sidecar extension reads just the
-        # touched paths, which keeps re-checkpointing a lazy
-        # (sidecar-backed) snapshot free of the 10M-row parse.
-        # ALLOCATION order, not path order: the parquet path sorts the
-        # finished arrow table (C-speed), and path-ordered slices would
-        # scatter the fork workers' COW faults over the whole heap (see
-        # _build_live_table); the JSON path sorts its small list below.
-        def _full_live() -> list[dict]:
-            if isinstance(acts, _LazyLive):
-                return [a for _f, a in acts._iter_items(fresh=False)]
-            return list(acts.values())
         # SetTransaction-style compaction of idempotence tokens: the
         # per-app LATEST batch id (batch ids per app are monotone — the
         # Structured Streaming per-checkpoint guarantee), so txn_seen
@@ -1686,8 +1633,8 @@ class TransactionLog:
         # is O(commits since last checkpoint), not O(table age).
         txns: dict[str, int] = {}
         start = -1
-        prev = self._latest_checkpoint_meta(upto=v)
-        if prev is not None and "txns" in prev[1]:
+        prev = self._latest_checkpoint_body(upto=v)
+        if prev is not None:
             start = prev[0]
             txns = {a: int(b) for a, b in prev[1]["txns"].items()}
         for act in self.actions(upto=v, since=start):
@@ -1696,62 +1643,54 @@ class TransactionLog:
                 txns[t["app"]] = max(
                     txns.get(t["app"], -1), int(t["batch"])
                 )
-        tmp = self._checkpoint_path(v) + f".tmp-{uuid.uuid4().hex}"
-        body = {"version": v, "txns": txns}
-        if len(acts) >= _PARQUET_CKPT_MIN:
-            # Delta's checkpoint format choice: the live list (the only
-            # table-sized part of the body) goes to a parquet sidecar,
-            # written BEFORE the JSON rename — readers only consult a
-            # sidecar the (atomically published) JSON names, and a torn
-            # sidecar makes the whole checkpoint fall back like any
-            # torn checkpoint
-            import pyarrow.parquet as _pqw
-
-            side = f"{v:020d}.checkpoint.live.parquet"
-            side_tmp = os.path.join(
-                self.log_dir, side + f".tmp-{uuid.uuid4().hex}"
+        # Delta's checkpoint format: the live list (the only table-sized
+        # part) goes to a parquet sidecar, written BEFORE the JSON
+        # rename — readers only consult a sidecar the (atomically
+        # published) JSON names, and a torn sidecar makes the whole
+        # checkpoint fall back like any torn checkpoint.  O(delta)
+        # extension of the previous sidecar (round-10b: rebuilding 1M
+        # rows of rest_json + zone columns already sitting in the
+        # previous checkpoint cost 13–16 s); any tear falls back to the
+        # full build
+        table = flags = None
+        if prev is not None and prev[0] < v:
+            try:
+                table, flags = self._extend_live_sidecar(prev, acts, v)
+            except Exception:
+                table = flags = None
+        if table is None:
+            # full build: forks past _SIDECAR_PARALLEL_MIN rows (the
+            # 10M-file constant was ~190 s of GIL-serialized json.dumps
+            # + list→arrow; the write is ~6 s).  ALLOCATION order, not
+            # path order: path-ordered slices would scatter the fork
+            # workers' COW faults over the whole heap (see
+            # _build_live_table), which sorts the finished arrow table
+            table, flags = _build_live_table(
+                [a for _f, a in acts._iter_items(fresh=False)]
             )
-            # O(delta) extension of the previous sidecar when one with
-            # persisted zone flags exists (round-10b: the sidecar WRITE
-            # was the last O(n) driver cost on the metadata plane —
-            # 13–16 s rebuilding 1M rows of rest_json + zone columns
-            # that were already sitting in the previous checkpoint);
-            # any shape drift or tear falls back to the full build
-            table = flags = None
-            prev_ck = self._latest_checkpoint_meta(upto=v)
-            if (
-                prev_ck is not None
-                and prev_ck[0] < v
-                and prev_ck[1].get("live_parquet")
-                and isinstance(prev_ck[1].get("zone_flags"), dict)
-            ):
-                try:
-                    table, flags = self._extend_live_sidecar(
-                        prev_ck, acts, v
-                    )
-                except Exception:
-                    table = flags = None
-            if table is None:
-                # full build: forks past _SIDECAR_PARALLEL_MIN rows
-                # (the 10M-file constant was ~190 s of GIL-serialized
-                # json.dumps + list→arrow; the write is ~6 s)
-                table, flags = _build_live_table(_full_live())
-            zone_cols = _qualified_zone_cols(flags)
-            _pqw.write_table(table, side_tmp)
-            os.replace(side_tmp, os.path.join(self.log_dir, side))
-            body["live_parquet"] = side
-            body["zone_cols"] = zone_cols
+        import pyarrow.parquet as _pqw
+
+        side = f"{v:020d}.checkpoint.live.parquet"
+        side_tmp = os.path.join(
+            self.log_dir, side + f".tmp-{uuid.uuid4().hex}"
+        )
+        _pqw.write_table(table, side_tmp)
+        os.replace(side_tmp, os.path.join(self.log_dir, side))
+        body = {
+            "version": v,
+            "txns": txns,
+            "live_parquet": side,
+            "zone_cols": _qualified_zone_cols(flags),
             # the qualification INPUTS, persisted so the next checkpoint
             # can extend this sidecar incrementally.  Flags only
             # accumulate across increments: a column a removed file
             # disqualified stays disqualified until a full rebuild —
-            # conservative (pruning falls back to the dict path for
-            # non-zone columns), never wrong.
-            body["zone_flags"] = {
+            # conservative (pruning on it compares in python), never
+            # wrong.
+            "zone_flags": {
                 c: [bool(x) for x in f] for c, f in flags.items()
-            }
-        else:
-            body["live"] = sorted(_full_live(), key=lambda a: a["path"])
+            },
+        }
         cons = self.constraints(upto=v)
         if cons:
             body["constraints"] = cons
@@ -1776,6 +1715,7 @@ class TransactionLog:
         tw = self.type_widening(upto=v)
         if tw:
             body["type_widening"] = tw
+        tmp = self._checkpoint_path(v) + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump(body, f)
         os.replace(tmp, self._checkpoint_path(v))
@@ -2092,13 +2032,11 @@ class TransactionLog:
         batch is read from the newest checkpoint (recorded at
         compaction) and only post-checkpoint commits are replayed — a
         forever-running ingest stream stays O(commits since checkpoint)
-        per fence check, not O(table age).  Checkpoints written before
-        tokens were compacted lack the ``txns`` key; those fall back to
-        a full-log scan for correctness."""
+        per fence check, not O(table age)."""
         start = -1
         latest: dict[str, int] = {}
-        found = self._latest_checkpoint_meta()
-        if found is not None and "txns" in found[1]:
+        found = self._latest_checkpoint_body()
+        if found is not None:
             start = found[0]
             latest = {
                 a: int(b) for a, b in found[1]["txns"].items()
@@ -2130,8 +2068,9 @@ class TransactionLog:
         now: float | None = None,
     ) -> int | list[str]:
         """Delete unreferenced data files: always the orphans of failed
-        commits; with ``keep_history=False`` also files removed as of the
-        current version (forfeits time travel below it).  Returns the
+        commits (and the temp files a writer that died mid-publish left
+        in ``_txlog/``); with ``keep_history=False`` also files removed
+        as of the current version (forfeits time travel below it).  Returns the
         number of files deleted — or, with ``dry_run=True``, the
         would-be-deleted relative paths WITHOUT touching anything (the
         operational safety valve every retention runbook starts with).
@@ -2171,13 +2110,10 @@ class TransactionLog:
         for cv in self._checkpoint_versions():
             try:
                 cbody = _load_checkpoint_cached(self._checkpoint_path(cv))
-            except (OSError, json.JSONDecodeError, ValueError):
+                # the path column only, never an action parse
+                ever.update(self._checkpoint_base((cv, cbody)).paths())
+            except (OSError, ValueError):
                 continue
-            cbase = cbody.get("live", [])
-            if isinstance(cbase, _SidecarBase):
-                ever |= set(cbase.paths())  # columnar, no action parse
-            else:
-                ever |= {a["path"] for a in cbase}
             ever_dv |= set(cbody.get("dvs", {}).values())
         retained = retention_hours is not None
         for act in self.actions():
@@ -2236,44 +2172,41 @@ class TransactionLog:
             except OSError:
                 return False
 
-        deleted = 0
-        victims: list[str] = []
-        if os.path.isdir(self.data_dir):
-            for name in os.listdir(self.data_dir):
-                rel = f"{_DATA_DIR}/{name}"
-                ap = os.path.join(self.data_dir, name)
-                if (
-                    name.endswith(".parquet")
-                    and rel not in keep
-                    and _old_enough(ap)
-                ):
-                    if dry_run:
-                        victims.append(rel)
-                        continue
-                    os.remove(ap)
-                    deleted += 1
         # deletion-vector files follow the same retention rule: every DV
         # ever referenced (any commit's dv_state snapshot or a surviving
         # checkpoint) with history, only the in-force set without
-        ckpt = self._latest_checkpoint_meta()
-        if ckpt is not None:
-            ever_dv |= set(ckpt[1].get("dvs", {}).values())
         if retained:
             keep_dv = ever_dv - {
                 dv for dv, t in dv_removed_at.items() if t < cutoff
             }
         else:
             keep_dv = ever_dv if keep_history else set(self.dvs().values())
-        dv_dir = os.path.join(self.path, _DV_DIR)
-        if os.path.isdir(dv_dir):
-            for name in os.listdir(dv_dir):
-                rel = f"{_DV_DIR}/{name}"
-                ap = os.path.join(dv_dir, name)
-                if (
-                    name.endswith(".parquet")
-                    and rel not in keep_dv
-                    and _old_enough(ap)
-                ):
+        import re as _re
+
+        def _parquet(name: str) -> bool:
+            return name.endswith(".parquet")
+
+        # temp names a writer that died mid-publish leaves in the log
+        # (a commit body between its link and unlink, an interrupted
+        # checkpoint's body or sidecar); no published name matches
+        log_tmp = _re.compile(
+            r"\d+\.(?:json|checkpoint\.json|checkpoint\.live\.parquet)"
+            r"\.tmp-[0-9a-f]+"
+        ).fullmatch
+        deleted = 0
+        victims: list[str] = []
+        for sub, kept, eligible in (
+            (_DATA_DIR, keep, _parquet),
+            (_DV_DIR, keep_dv, _parquet),
+            (_LOG_DIR, set(), log_tmp),
+        ):
+            d = os.path.join(self.path, sub)
+            if not os.path.isdir(d):
+                continue
+            for name in os.listdir(d):
+                rel = f"{sub}/{name}"
+                ap = os.path.join(d, name)
+                if eligible(name) and rel not in kept and _old_enough(ap):
                     if dry_run:
                         victims.append(rel)
                         continue
@@ -2941,19 +2874,11 @@ def tx_optimize_auto(
     v = log.version()
     if v < 0:
         return []
-    snap = log._live_actions_shared(upto=v)
-    by_part: dict[str | None, int] | None = None
-    if isinstance(snap, _LazyLive):
-        # columnar policy read (round-13): zbytes/zpartition off the
-        # sidecar + the overlay tail — never parses an action dict
-        by_part = snap.small_file_counts(small_file_bytes)
-    if by_part is None:
-        by_part = {}
-        for act in snap.values():
-            size = act.get("bytes")
-            if size is None or size < small_file_bytes:
-                p = act.get("partition")
-                by_part[p] = by_part.get(p, 0) + 1
+    # columnar policy read: zbytes/zpartition off the sidecar + the
+    # overlay tail — never parses an action dict
+    by_part = log._live_actions_shared(upto=v).small_file_counts(
+        small_file_bytes
+    )
     picked = sorted(
         (p for p, n in by_part.items() if p is not None
          and n >= min_small_files),
@@ -3530,218 +3455,17 @@ def _footer_stats(parquet_path: str, cols: list[str]) -> dict:
     return out
 
 
-def _numeric_bound(x) -> bool:
-    return (
-        x is None
-        or (
-            isinstance(x, (int, float))
-            and not isinstance(x, bool)
-            # a >2^53 int bound against a float64 zone column would
-            # round in the comparison — dict path compares exactly
-            and not (isinstance(x, int) and abs(x) > 2**53)
-        )
-    )
-
-
-def _sidecar_prunable(
-    log: TransactionLog, col: str, lo, hi, upto: int | None
-) -> tuple[list[str], int] | None:
-    """Zone-map pruning COLUMNARLY off a checkpoint's parquet sidecar —
-    scan planning without snapshot materialization.
-
-    The round-10 1M-live-file measurement: assembling the dict snapshot
-    costs 19.5 s cold (parquet → python dicts on the driver) while the
-    pruning decision itself needs three columns of it.  When the newest
-    checkpoint at/below the target version externalized its live list
-    AND recorded typed zone columns for ``col`` (``zone_cols``), read
-    (path, zmin:col, zmax:col), evaluate the range overlap in Arrow,
-    and reconcile the post-checkpoint commit TAIL (O(delta) dicts).
-    Exactness: zone columns are written only when every stat value is
-    numeric (float64-exact), and non-numeric bounds fall back.
-
-    Returns None when the fast path doesn't apply — warm snapshot
-    already cached (dict lookup beats file IO), inline checkpoint,
-    unqualified column, non-numeric bounds — and the caller runs the
-    dict path unchanged."""
-    if not (_numeric_bound(lo) and _numeric_bound(hi)):
-        return None
-    v = log.version() if upto is None else upto
-    if v < 0:
-        return None
-    ent = _SNAPSHOT_CACHE.get(os.path.abspath(log.path))
-    if (
-        ent is not None
-        and not isinstance(ent[2], _LazyLive)
-        and ent[0] <= v
-        and log._commit_sig(ent[0]) == ent[1]
-    ):
-        # warm PLAIN-DICT snapshot: the dict path is a lookup + tail.
-        # A warm _LazyLive stays columnar — its dict path would parse
-        # rest_json rows this fast path never needs (round-13).
-        return None
-    found = log._latest_checkpoint_meta(v)
-    if found is None:
-        return None
-    cv, body = found
-    side = body.get("live_parquet")
-    if not side or col not in (body.get("zone_cols") or []):
-        return None
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    try:
-        t = pq.read_table(
-            os.path.join(log.log_dir, side),
-            columns=["path", f"zmin:{col}", f"zmax:{col}"],
-        )
-    except Exception:
-        return None  # torn/old-format sidecar: dict path decides
-    paths = t.column("path")
-    zmin = t.column(f"zmin:{col}")
-    zmax = t.column(f"zmax:{col}")
-    # post-checkpoint tail: last action per path wins (replay order)
-    delta: dict[str, dict | None] = {}
-    for act in log.actions(v, since=cv):
-        for a in act.get("add", []):
-            delta[a["path"]] = a
-        for r in act.get("remove", []):
-            delta[r] = None
-    parts = []
-    if lo is not None:
-        parts.append(pc.fill_null(pc.less(zmax, lo), False))
-    if hi is not None:
-        parts.append(pc.fill_null(pc.greater(zmin, hi), False))
-    if parts:
-        prune = parts[0]
-        for p in parts[1:]:
-            prune = pc.or_(prune, p)
-    else:
-        prune = pa.array([False] * len(paths), type=pa.bool_())
-    keep_mask = pc.invert(prune)
-    if delta:
-        outside = pc.invert(
-            pc.is_in(paths, value_set=pa.array(list(delta), pa.string()))
-        )
-        keep_mask = pc.and_(keep_mask, outside)
-        prune = pc.and_(prune, outside)
-    keep = pc.array_filter(paths, keep_mask).to_pylist()
-    pruned = pc.sum(prune).as_py() or 0
-    for f, a in delta.items():
-        if a is None:
-            continue
-        mm = (a.get("stats") or {}).get(col)
-        if mm is not None and (
-            (lo is not None and mm[1] < lo)
-            or (hi is not None and mm[0] > hi)
-        ):
-            pruned += 1
-            continue
-        keep.append(f)
-    keep.sort()
-    return keep, pruned
-
-
-def _sidecar_files_in_partitions(
-    log: TransactionLog, parts: set[str], upto: int | None
-) -> dict[str, str] | None:
-    """Partition-restricted live-file map columnarly off the checkpoint
-    sidecar — the probe-side sibling of `_sidecar_prunable`.  A
-    cell-partitioned ANN index probe needs the files of nprobe cells,
-    not the 1M-dict snapshot; the sidecar's `zpartition` column answers
-    with one filtered column read plus the O(delta) commit tail.
-    Returns None when it doesn't apply (warm snapshot, inline or
-    old-format checkpoint)."""
-    v = log.version() if upto is None else upto
-    if v < 0:
-        return None
-    ent = _SNAPSHOT_CACHE.get(os.path.abspath(log.path))
-    if (
-        ent is not None
-        and not isinstance(ent[2], _LazyLive)
-        and ent[0] <= v
-        and log._commit_sig(ent[0]) == ent[1]
-    ):
-        return None  # warm plain-dict snapshot; a _LazyLive stays columnar
-    found = log._latest_checkpoint_meta(v)
-    if found is None:
-        return None
-    cv, body = found
-    side = body.get("live_parquet")
-    if not side:
-        return None
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    try:
-        t = pq.read_table(
-            os.path.join(log.log_dir, side), columns=["path", "zpartition"]
-        )
-    except Exception:
-        return None  # old-format sidecar (no zpartition): dict path
-    if "zpartition" not in t.schema.names:
-        return None
-    paths = t.column("path")
-    zpart = t.column("zpartition")
-    delta: dict[str, dict | None] = {}
-    for act in log.actions(v, since=cv):
-        for a in act.get("add", []):
-            delta[a["path"]] = a
-        for r in act.get("remove", []):
-            delta[r] = None
-    if pa.types.is_null(zpart.type):
-        # fully unpartitioned table: no sidecar file can match a
-        # partition value — only the tail can contribute
-        mask = pa.chunked_array([[False] * len(paths)], pa.bool_())
-    else:
-        mask = pc.fill_null(
-            pc.is_in(
-                zpart, value_set=pa.array(sorted(parts), pa.string())
-            ),
-            False,
-        )
-    if delta:
-        mask = pc.and_(
-            mask,
-            pc.invert(
-                pc.is_in(
-                    paths, value_set=pa.array(list(delta), pa.string())
-                )
-            ),
-        )
-    out = dict(
-        zip(
-            pc.array_filter(paths, mask).to_pylist(),
-            pc.array_filter(zpart, mask).to_pylist(),
-        )
-    )
-    for f, a in delta.items():
-        if a is not None and a.get("partition") in parts:
-            out[f] = a.get("partition")
-    return out
-
-
 def tx_files_in_partitions(
     table_path: str, partitions, version: int | None = None
 ) -> dict[str, str]:
     """``{relative file path: partition value}`` restricted to live
     files whose partition is in ``partitions`` — the probe-side
-    projection of `live_files`.  Cold reads against a
-    sidecar-checkpointed table answer columnarly (so an ANN index probe
-    touches nprobe/nlist of the METADATA too, never the full-snapshot
-    dict); otherwise the snapshot filter."""
-    parts = {str(p) for p in partitions}
-    log = TransactionLog(table_path)
-    fast = _sidecar_files_in_partitions(log, parts, version)
-    if fast is not None:
-        return fast
-    live = log._live_actions_shared(upto=version)
-    return {
-        f: a.get("partition")
-        for f, a in live.items()
-        if a.get("partition") in parts
-    }
+    projection of `live_files`, answered columnarly off the snapshot's
+    checkpoint sidecar (so an ANN index probe touches nprobe/nlist of
+    the METADATA too) plus the commit tail."""
+    return TransactionLog(table_path)._live_actions_shared(
+        upto=version
+    ).files_in_partitions({str(p) for p in partitions})
 
 
 def tx_prunable_files(
@@ -3754,26 +3478,12 @@ def tx_prunable_files(
     """Zone-map file pruning: live files whose recorded [min, max] for
     ``col`` overlaps [lo, hi] (files with no recorded stats for the
     column are always kept — pruning must never be lossy).  Returns
-    (files to read, number pruned).  Cold reads against a
-    sidecar-checkpointed table plan columnarly without materializing
-    the snapshot (see `_sidecar_prunable`)."""
-    log = TransactionLog(table_path)
-    fast = _sidecar_prunable(log, col, lo, hi, version)
-    if fast is not None:
-        return fast
-    live = log._live_actions_shared(upto=version)
-    keep, pruned = [], 0
-    for f, act in sorted(live.items()):
-        mm = (act.get("stats") or {}).get(col)
-        if mm is None:
-            keep.append(f)
-            continue
-        fmin, fmax = mm
-        if (lo is not None and fmax < lo) or (hi is not None and fmin > hi):
-            pruned += 1
-            continue
-        keep.append(f)
-    return keep, pruned
+    (files to read, number pruned).  Plans columnarly off the
+    snapshot's checkpoint sidecar without parsing an action (round-10:
+    19.5 s → ~0.3 s cold at 1M live files; see `_LazyLive.prunable`)."""
+    return TransactionLog(table_path)._live_actions_shared(
+        upto=version
+    ).prunable(col, lo, hi)
 
 
 def tx_scan(
@@ -5056,13 +4766,9 @@ def tx_export_delta_log(
     # numRecords from the stage-time row count the action carries
     # (memoized footer fallback for pre-field actions); real Delta
     # readers use it for metadata-only COUNT(*) exactly like tx_count
-    # does.  Row counts resolve COLUMNARLY for a lazy (sidecar-backed)
-    # snapshot — zrows + overlay, never an action parse.
-    acts = log._live_actions_shared(upto=v)
-    if isinstance(acts, _LazyLive):
-        rows_by = acts.rows_map()
-    else:
-        rows_by = {f: a.get("rows") for f, a in acts.items()}
+    # does.  Row counts resolve COLUMNARLY — zrows + overlay, never an
+    # action parse.
+    rows_by = log._live_actions_shared(upto=v).rows_map()
     items = [(rel, rows_by.get(rel)) for rel in live]
 
     blobs: list[bytes] | None = None
@@ -5906,14 +5612,9 @@ def tx_fsck(table_path: str) -> dict:
         found = log._latest_checkpoint_body()
         if found is not None:
             start = found[0]
-            fbase = found[1].get("live", [])
-            if isinstance(fbase, _SidecarBase):
-                live.update(zip(fbase.paths(), fbase.partitions()))
-                ever_added.update(fbase.paths())
-            else:
-                for a in fbase:
-                    live[a["path"]] = a.get("partition")
-                    ever_added.add(a["path"])
+            fbase = log._checkpoint_base(found)
+            live.update(zip(fbase.paths(), fbase.pylist("zpartition")))
+            ever_added.update(fbase.paths())
             for app, b in (found[1].get("txns") or {}).items():
                 last_batch[app] = int(b)
     # commit parse forks past _FSCK_PARALLEL_MIN_BYTES (round-13: the
@@ -6976,9 +6677,10 @@ def tx_count(
     cardinalities, resolved entirely from the commit log plus (at most)
     the DV parquets' FOOTERS (a DV file's num_rows IS its deleted-row
     count; DV volume is proportional to rows deleted, never table size).
-    Add actions staged before the ``rows`` field fall back to one
-    memoized data-footer read each.  At 100 TB a snapshot count is a log
-    replay and a handful of stat calls — zero executor work, no scan.
+    Add actions without a ``rows`` field fall back to one memoized
+    data-footer read each.  At 100 TB a snapshot count is one column of
+    the checkpoint sidecar plus the commit tail — zero executor work, no
+    scan (round-10: 8.7 s → ~0.1 s cold at 1M live files).
     Supports the same time travel as `tx_read` (version= / timestamp=);
     returns 0 for an empty or absent table."""
     if timestamp is not None and version is not None:
@@ -6999,100 +6701,9 @@ def tx_count(
                 "vacuum(keep_history=True) or a rows-carrying log"
             )
 
-    fast = _sidecar_count(log, version, footer_rows)
-    if fast is not None:
-        return fast
-    acts = log._live_actions_shared(upto=version)
-    total = sum(
-        a["rows"] if "rows" in a else footer_rows(a["path"])
-        for a in acts.values()
+    return log._live_actions_shared(upto=version).count(
+        footer_rows, log.dv_state_raw(upto=version)
     )
-    deleted = sum(
-        footer_rows(dv)
-        for f, dv in log.dvs(upto=version).items()
-        if f in acts
-    )
-    return int(total - deleted)
-
-
-def _sidecar_count(log: TransactionLog, upto: int | None, footer_rows):
-    """Metadata-only COUNT columnarly off the checkpoint sidecar — the
-    tx_count sibling of `_sidecar_prunable` (round-10: 8.7 s → ~0.1 s
-    cold at 1M live files).  Σ zrows over sidecar rows still live,
-    adjusted by the post-checkpoint commit tail, minus DV cardinalities
-    (DV state comes from the checkpoint's METADATA body + tail — never
-    the live list).  Returns None when it doesn't apply: warm snapshot,
-    inline checkpoint, any action without a recorded row count (the
-    footer-fallback class needs the dict path)."""
-    v = log.version() if upto is None else upto
-    if v < 0:
-        return None
-    ent = _SNAPSHOT_CACHE.get(os.path.abspath(log.path))
-    if (
-        ent is not None
-        and not isinstance(ent[2], _LazyLive)
-        and ent[0] <= v
-        and log._commit_sig(ent[0]) == ent[1]
-    ):
-        return None  # warm plain-dict snapshot; a _LazyLive stays columnar
-    found = log._latest_checkpoint_meta(v)
-    if found is None:
-        return None
-    cv, body = found
-    side = body.get("live_parquet")
-    if not side:
-        return None
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    try:
-        t = pq.read_table(
-            os.path.join(log.log_dir, side), columns=["path", "zrows"]
-        )
-    except Exception:
-        return None  # old-format sidecar (no zrows) or torn: dict path
-    if "zrows" not in t.schema.names:
-        return None
-    paths = t.column("path")
-    zrows = t.column("zrows")
-    if zrows.null_count:
-        return None  # pre-rows actions need memoized footer reads
-    delta: dict[str, dict | None] = {}
-    for act in log.actions(v, since=cv):
-        for a in act.get("add", []):
-            delta[a["path"]] = a
-        for r in act.get("remove", []):
-            delta[r] = None
-    if any(a is not None and "rows" not in a for a in delta.values()):
-        return None
-    keep_mask = None
-    if delta:
-        keep_mask = pc.invert(
-            pc.is_in(paths, value_set=pa.array(list(delta), pa.string()))
-        )
-    total = pc.sum(
-        pc.array_filter(zrows, keep_mask) if keep_mask is not None else zrows
-    ).as_py() or 0
-    total += sum(a["rows"] for a in delta.values() if a is not None)
-    raw_dvs = log.dv_state_raw(upto=v)
-    deleted = 0
-    if raw_dvs:
-        sidecar_live = None
-        for f, dv in raw_dvs.items():
-            if f in delta:
-                live = delta[f] is not None
-            else:
-                if sidecar_live is None:
-                    sidecar_live = set(
-                        pc.array_filter(paths, keep_mask).to_pylist()
-                        if keep_mask is not None
-                        else paths.to_pylist()
-                    )
-                live = f in sidecar_live
-            if live:
-                deleted += footer_rows(dv)
-    return int(total - deleted)
 
 
 def tx_truncate_log(

@@ -2732,6 +2732,41 @@ def test_writer_crash_leaves_table_readable(spark, tmp_path, point):
     assert sorted(folded.elements()) == [0, 1, 2, 3]
 
 
+@pytest.mark.parametrize("point", ["link", "checkpoint"])
+def test_vacuum_reaps_temp_files_of_a_crashed_writer(tmp_path, point):
+    """A writer that died between its commit body's link and unlink, or
+    inside a checkpoint, leaves a temp file in ``_txlog/``: vacuum lists
+    it in a dry run, deletes it, and touches no published name; the
+    snapshot is unchanged."""
+    import subprocess
+    import sys
+
+    from tests.fixtures import arrow_append
+
+    t = str(tmp_path / "tbl")
+    log = TransactionLog(t)
+    arrow_append(log, [0, 1])
+    arrow_append(log, [2])
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = subprocess.run(
+        [sys.executable, "-c", _CRASH_CHILD, t, point],
+        cwd=repo, capture_output=True, text=True, timeout=120,
+    )
+    assert child.returncode == 3, child.stderr
+    names = set(os.listdir(log.log_dir))
+    temps = {n for n in names if ".tmp-" in n}
+    assert len(temps) == 1, names
+    before = log.live_files()
+
+    victims = log.vacuum(dry_run=True)
+    assert {f"_txlog/{n}" for n in temps} <= set(victims)
+    assert os.listdir(log.log_dir) and set(os.listdir(log.log_dir)) == names
+    log.vacuum()
+    assert set(os.listdir(log.log_dir)) == names - temps
+    assert TransactionLog(t).live_files() == before
+    assert log.vacuum(dry_run=True) == []
+
+
 def test_run_optimistic_retry_budget_fence_and_cleanup(tmp_path):
     """The primitive alone, without Spark: a writer that always loses
     gives up after the module's constant retry budget with an error

@@ -22,7 +22,6 @@ from cars_bids_data_pipeline_v0__spark.sources import txlog as TX
 def _clear():
     TX._COMMIT_BODY_CACHE.clear()
     TX._CHECKPOINT_BODY_CACHE.clear()
-    TX._CHECKPOINT_META_CACHE.clear()
     TX._SNAPSHOT_CACHE.clear()
 
 
@@ -49,6 +48,23 @@ def _sidecar_rows(log):
     return body, t.to_pydict()
 
 
+def _ref_prune(live, col, lo, hi):
+    """The reference pruning semantics, computed independently."""
+    keep, pruned = [], 0
+    for f in sorted(live):
+        mm = (live[f].get("stats") or {}).get(col)
+        if mm is None:
+            keep.append(f)
+            continue
+        if (lo is not None and mm[1] < lo) or (
+            hi is not None and mm[0] > hi
+        ):
+            pruned += 1
+            continue
+        keep.append(f)
+    return keep, pruned
+
+
 def _force_full_rebuild(monkeypatch, log):
     """Re-run checkpoint() with the incremental path disabled — the
     checkpoint file names are version-keyed, so this overwrites the
@@ -63,8 +79,7 @@ def _force_full_rebuild(monkeypatch, log):
 
 
 @pytest.fixture()
-def base_table(tmp_path, monkeypatch):
-    monkeypatch.setattr(TX, "_PARQUET_CKPT_MIN", 5)
+def base_table(tmp_path):
     t = str(tmp_path / "tbl")
     log = TX.TransactionLog(t)
     adds = [_add(i, {"id": [i * 10, i * 10 + 9]}) for i in range(7)]
@@ -135,14 +150,13 @@ def test_delta_disqualifies_column_conservatively(base_table, monkeypatch):
     assert body["zone_cols"] == []
     assert body["zone_flags"]["id"] == [True, True, True]
     assert "zmin:id" not in rows
-    # scan planning still EXACT: the fast path refuses and the public
-    # API falls back to the dict path
+    # scan planning still EXACT: without zone columns every action
+    # compares in python
     _clear()
-    assert TX._sidecar_prunable(TX.TransactionLog(t), "id", 0, 25, None) \
-        is None
     live = TX.TransactionLog(t)._live_actions_shared()
-    keep, _pruned = TX.tx_prunable_files(t, "id", 0, 25)
-    assert set(keep) <= set(live)
+    assert TX.tx_prunable_files(t, "id", 0, 25) == _ref_prune(
+        live, "id", 0, 25
+    )
 
 
 def test_new_column_appears_with_null_backfill(base_table, monkeypatch):
@@ -183,11 +197,12 @@ def test_old_format_checkpoint_falls_back_to_full_build(
     base_table, monkeypatch
 ):
     t, log, adds = base_table
-    # strip zone_flags from the v0 checkpoint (pre-round-10b format)
+    # tear the v0 sidecar: the checkpoint is demoted, and the next one
+    # is a full build from the commit log
     p = os.path.join(log.log_dir, "00000000000000000000.checkpoint.json")
     body = json.load(open(p))
-    body.pop("zone_flags", None)
-    json.dump(body, open(p, "w"))
+    with open(os.path.join(log.log_dir, body["live_parquet"]), "w") as fh:
+        fh.write("not parquet")
     assert log.try_commit(1, [_add(50, {"id": [1, 2]})], [], op="append")
     _clear()
     log.checkpoint()  # must not raise; full build path
@@ -220,27 +235,12 @@ def test_pruning_exact_after_incremental_checkpoint(base_table):
     )
     _clear()
     log.checkpoint()
-    # dict-path reference, computed independently
-    live = TX.TransactionLog(t)._live_actions_shared()
+    live = dict(TX.TransactionLog(t)._live_actions_shared().items())
     for lo, hi in [(0, 25), (700, 715), (None, None), (5000, 6000)]:
         _clear()
-        fast = TX._sidecar_prunable(
-            TX.TransactionLog(t), "id", lo, hi, None
-        )
-        assert fast is not None
-        keep, pruned = [], 0
-        for f in sorted(live):
-            mm = (live[f].get("stats") or {}).get("id")
-            if mm is None:
-                keep.append(f)
-                continue
-            if (lo is not None and mm[1] < lo) or (
-                hi is not None and mm[0] > hi
-            ):
-                pruned += 1
-                continue
-            keep.append(f)
-        assert fast == (keep, pruned), (lo, hi)
+        assert TX.tx_prunable_files(t, "id", lo, hi) == _ref_prune(
+            live, "id", lo, hi
+        ), (lo, hi)
 
 
 def test_incremental_after_log_truncation(base_table, monkeypatch):
@@ -278,7 +278,6 @@ def test_random_delta_rounds_equal_full_rebuild(tmp_path, monkeypatch):
     import random
 
     rng = random.Random(20260816)
-    monkeypatch.setattr(TX, "_PARQUET_CKPT_MIN", 3)
     t = str(tmp_path / "tbl")
     log = TX.TransactionLog(t)
     counter = iter(range(10_000))
@@ -348,10 +347,10 @@ def test_random_delta_rounds_equal_full_rebuild(tmp_path, monkeypatch):
         full_cols = set(body_full["zone_cols"])
         # full-only columns: monotone conservatism (a since-removed
         # file disqualified it; the full rebuild re-qualifies) —
-        # allowed, pruning on it just falls back to the dict path.
+        # allowed, pruning on it just compares in python.
         # inc-only columns must be GHOSTS: every carrier was removed,
         # so the retained column is all-null — and an all-null zone
-        # column prunes nothing, exactly like the dict path.
+        # column prunes nothing, exactly like the python rule.
         for c in inc_cols - full_cols:
             assert all(x is None for x in rows_inc[f"zmin:{c}"]), (tag, c)
         for c in inc_cols & full_cols:

@@ -1,11 +1,12 @@
 """Round-10 txlog surfaces: typed zone columns in the checkpoint
-sidecar, the metadata-only checkpoint loader, and columnar scan
-planning (`_sidecar_prunable`) — the 1M-live-file crossover fix.
+sidecar, the checkpoint loader, and columnar scan planning
+(`_LazyLive.prunable`) — the 1M-live-file crossover fix.
 
 The round-10 curve measured the driver-side dict snapshot at 19.5 s
 cold for 1M live files; scan planning needs three columns of it.  The
-fast path must be EXACT vs the dict path (pruning is a correctness
-surface: a lost file is wrong results, an extra prune is lost data).
+columnar answer must be EXACT vs the reference semantics (pruning is a
+correctness surface: a lost file is wrong results, an extra prune is
+lost data).
 """
 
 from __future__ import annotations
@@ -22,7 +23,6 @@ from cars_bids_data_pipeline_v0__spark.sources import txlog as TX
 def _clear():
     TX._COMMIT_BODY_CACHE.clear()
     TX._CHECKPOINT_BODY_CACHE.clear()
-    TX._CHECKPOINT_META_CACHE.clear()
     TX._SNAPSHOT_CACHE.clear()
 
 
@@ -39,7 +39,7 @@ def _add(i, stats):
 
 
 def _dict_prune(table, col, lo, hi, upto=None):
-    """The reference dict-path semantics, computed independently."""
+    """The reference pruning semantics, computed independently."""
     live = TX.TransactionLog(table)._live_actions_shared(upto=upto)
     keep, pruned = [], 0
     for f in sorted(live):
@@ -57,8 +57,7 @@ def _dict_prune(table, col, lo, hi, upto=None):
 
 
 @pytest.fixture()
-def sidecar_table(tmp_path, monkeypatch):
-    monkeypatch.setattr(TX, "_PARQUET_CKPT_MIN", 5)
+def sidecar_table(tmp_path):
     t = str(tmp_path / "tbl")
     log = TX.TransactionLog(t)
     adds = [_add(i, {"id": [i * 10, i * 10 + 9]}) for i in range(7)]
@@ -98,13 +97,10 @@ def test_fastpath_engages_cold_and_equals_dict_path(sidecar_table):
     t, log, _adds = sidecar_table
     for lo, hi in [(0, 25), (None, 25), (30, None), (None, None), (1000, 2000)]:
         _clear()
-        fast = TX._sidecar_prunable(TX.TransactionLog(t), "id", lo, hi, None)
-        assert fast is not None, (lo, hi)
-        assert fast == _dict_prune(t, "id", lo, hi), (lo, hi)
-        # public API cold = fast path, warm = dict path; both agree
-        _clear()
-        assert TX.tx_prunable_files(t, "id", lo, hi) == fast
-        assert TX.tx_prunable_files(t, "id", lo, hi) == fast  # warm
+        cold = TX.tx_prunable_files(t, "id", lo, hi)
+        assert cold == _dict_prune(t, "id", lo, hi), (lo, hi)
+        # warm (columns resident) answers the same
+        assert TX.tx_prunable_files(t, "id", lo, hi) == cold
 
 
 def test_fastpath_tail_adds_removes_and_readds(sidecar_table):
@@ -118,8 +114,7 @@ def test_fastpath_tail_adds_removes_and_readds(sidecar_table):
     ]
     assert log.try_commit(1, tail, [victim], op="replace")
     _clear()
-    fast = TX._sidecar_prunable(TX.TransactionLog(t), "id", 0, 25, None)
-    assert fast is not None
+    fast = TX.tx_prunable_files(t, "id", 0, 25)
     assert fast == _dict_prune(t, "id", 0, 25)
     assert victim not in fast[0]
     assert readd in fast[0]
@@ -129,44 +124,41 @@ def test_fastpath_time_travel_version(sidecar_table):
     t, log, adds = sidecar_table
     assert log.try_commit(1, [_add(200, {"id": [0, 1]})], [], op="append")
     _clear()
-    fast = TX._sidecar_prunable(TX.TransactionLog(t), "id", 0, 25, 0)
-    assert fast is not None
+    fast = TX.tx_prunable_files(t, "id", 0, 25, version=0)
     assert fast == _dict_prune(t, "id", 0, 25, upto=0)
 
 
-def test_fastpath_declines_when_it_must(sidecar_table, tmp_path):
+def test_fastpath_declines_when_it_must(sidecar_table):
+    """Where the zone columns cannot answer exactly — an unqualified
+    (string-stats) column, string bounds, a >2^53 int bound that would
+    round in float64 — every action compares in python, exactly like
+    the reference, warm or cold."""
     t, log, _adds = sidecar_table
-    # warm snapshot: dict lookup beats file IO
-    TX.TransactionLog(t)._live_actions_shared()
-    assert TX._sidecar_prunable(TX.TransactionLog(t), "id", 0, 25, None) is None
-    # unqualified column (string stats) and string bounds
+    for col, lo, hi in [
+        ("id", 0, 25),  # qualified, warm below
+        ("name", None, "m"),
+        ("name", None, "a"),  # prunes the one file with name stats
+        ("id", 2**53 + 1, None),
+    ]:
+        _clear()
+        assert TX.tx_prunable_files(t, col, lo, hi) == _dict_prune(
+            t, col, lo, hi
+        ), (col, lo, hi)
+        TX.TransactionLog(t)._live_actions_shared()
+        assert TX.tx_prunable_files(t, col, lo, hi) == _dict_prune(
+            t, col, lo, hi
+        ), (col, lo, hi)
+    assert TX.tx_prunable_files(t, "name", None, "a")[1] == 1
+    assert TX.tx_prunable_files(t, "id", 2**53 + 1, None)[1] == 8
+    # a string bound against numeric stats fails like the reference
+    with pytest.raises(TypeError):
+        _dict_prune(t, "id", "0", None)
     _clear()
-    assert TX._sidecar_prunable(TX.TransactionLog(t), "name", None, "m", None) is None
-    _clear()
-    assert TX._sidecar_prunable(TX.TransactionLog(t), "id", "0", None, None) is None
-    # >2^53 int bound would round in float64 comparison space
-    _clear()
-    assert (
-        TX._sidecar_prunable(TX.TransactionLog(t), "id", 2**53 + 1, None, None)
-        is None
-    )
-    # inline checkpoint (below the sidecar threshold)
-    t2 = str(tmp_path / "small")
-    log2 = TX.TransactionLog(t2)
-    assert log2.try_commit(
-        0, [_add(0, {"id": [0, 9]})], [], op="append"
-    )
-    # _PARQUET_CKPT_MIN restored by the fixture's monkeypatch teardown?
-    # no — same test, still 5; one action stays inline regardless
-    log2.checkpoint()
-    _clear()
-    assert TX._sidecar_prunable(TX.TransactionLog(t2), "id", 0, 5, None) is None
-    # ... and the public API still answers via the dict path
-    assert TX.tx_prunable_files(t2, "id", 0, 5) == _dict_prune(t2, "id", 0, 5)
+    with pytest.raises(TypeError):
+        TX.tx_prunable_files(t, "id", "0", None)
 
 
-def test_zone_column_disqualifiers(tmp_path, monkeypatch):
-    monkeypatch.setattr(TX, "_PARQUET_CKPT_MIN", 3)
+def test_zone_column_disqualifiers(tmp_path):
     t = str(tmp_path / "tbl")
     log = TX.TransactionLog(t)
     adds = [
@@ -221,10 +213,8 @@ def test_files_in_partitions_fastpath_equals_dict(sidecar_table):
         }
 
     _clear()
-    fast = TX._sidecar_files_in_partitions(
-        TX.TransactionLog(t), parts, None
-    )
-    assert fast is not None and fast == dict_path()
+    fast = TX.tx_files_in_partitions(t, parts)
+    assert fast == dict_path()
     # tail: add into partition 0, add into an unprobed partition,
     # remove a probed file, re-add a probed file under a new partition
     victim = next(
@@ -238,23 +228,20 @@ def test_files_in_partitions_fastpath_equals_dict(sidecar_table):
     ]
     assert log.try_commit(1, tail, [victim], op="replace")
     _clear()
-    fast = TX._sidecar_files_in_partitions(
-        TX.TransactionLog(t), parts, None
-    )
-    assert fast is not None and fast == dict_path()
+    fast = TX.tx_files_in_partitions(t, parts)
+    assert fast == dict_path()
     assert victim not in fast and moved not in fast
-    # public API: cold (fast) == warm (dict)
+    # cold == warm
     _clear()
     cold = TX.tx_files_in_partitions(t, [0, 2])
     TX.TransactionLog(t)._live_actions_shared()
     assert TX.tx_files_in_partitions(t, [0, 2]) == cold == dict_path()
 
 
-def test_files_in_partitions_unpartitioned_table(tmp_path, monkeypatch):
-    # fully unpartitioned table -> all-null zpartition column (null
-    # Arrow type): the fast path must return {} plus any tail adds that
-    # DO carry a matching partition, not crash on the type
-    monkeypatch.setattr(TX, "_PARQUET_CKPT_MIN", 2)
+def test_files_in_partitions_unpartitioned_table(tmp_path):
+    # fully unpartitioned table -> all-null zpartition column: the
+    # answer is {} plus any tail adds that DO carry a matching
+    # partition
     t = str(tmp_path / "tbl")
     log = TX.TransactionLog(t)
     adds = [
@@ -272,8 +259,9 @@ def test_files_in_partitions_unpartitioned_table(tmp_path, monkeypatch):
 
 
 def test_meta_loader_never_touches_the_sidecar(sidecar_table, monkeypatch):
-    """dv_state_raw/constraints/hwm consumers must not pay the sidecar
-    read: poison the sidecar reader and drive them cold."""
+    """dv_state_raw/constraints/hwm consumers must not open the
+    sidecar's live list: poison the sidecar reader and drive them
+    cold."""
     t, log, _adds = sidecar_table
 
     def boom(path):
@@ -294,7 +282,7 @@ def test_meta_loader_never_touches_the_sidecar(sidecar_table, monkeypatch):
 
 def test_sidecar_count_equals_dict_path(sidecar_table, spark, tmp_path):
     t, log, adds = sidecar_table
-    # cold fast path == warm dict path, through the public API
+    # cold == warm, through the public API
     _clear()
     fast = TX.tx_count(t)
     TX.TransactionLog(t)._live_actions_shared()
@@ -311,11 +299,10 @@ def test_sidecar_count_equals_dict_path(sidecar_table, spark, tmp_path):
     assert TX.tx_count(t, version=0) == sum(a["rows"] for a in adds)
 
 
-def test_sidecar_count_subtracts_dvs(spark, tmp_path, monkeypatch):
+def test_sidecar_count_subtracts_dvs(spark, tmp_path):
     """A real table with a DV delete: the cold sidecar count must equal
     the visible row count (DV cardinality subtracted, liveness via the
-    sidecar path set, never the dict snapshot)."""
-    monkeypatch.setattr(TX, "_PARQUET_CKPT_MIN", 1)
+    sidecar path set)."""
     t = str(tmp_path / "tbl")
     df = spark.range(0, 100).selectExpr("id", "id % 5 AS k")
     TX.tx_append_partitioned(spark, df, t, partition_by="k")
@@ -338,6 +325,6 @@ def test_meta_loader_missing_sidecar_demotes_checkpoint(sidecar_table):
     )
     os.remove(os.path.join(log.log_dir, body["live_parquet"]))
     _clear()
-    # no older checkpoint exists -> meta resolution yields nothing,
-    # exactly like the torn-checkpoint fallback of the body loader
-    assert TX.TransactionLog(t)._latest_checkpoint_meta() is None
+    # no older checkpoint exists -> resolution yields nothing, exactly
+    # like the torn-checkpoint fallback
+    assert TX.TransactionLog(t)._latest_checkpoint_body() is None

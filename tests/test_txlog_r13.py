@@ -5,8 +5,9 @@ Round 12 fixed the checkpoint WRITE side (fork-parallel sidecar
 build); the cold READ remained the metadata plane's last O(n) driver
 cost — 194–248 s at 10M live files, ~60 s of json parse plus ~80 s of
 `_copy_tree` per cold `live_actions`.  Round 13 keeps the live set
-columnar: the sidecar parquet is read eagerly (torn-checkpoint
-semantics unchanged) but action dicts materialize per-verb —
+columnar: the sidecar's columns are read on first use (its footer at
+load, so torn-checkpoint semantics are unchanged) and action dicts
+materialize per-verb —
 point lookups bisect the path-sorted sidecar, full iterations
 batch-parse in chunks, and the public `live_actions` hands out
 fresh-parsed (therefore private) dicts instead of `_copy_tree` copies.
@@ -30,7 +31,6 @@ from cars_bids_data_pipeline_v0__spark.sources import txlog as TX
 def _clear():
     TX._COMMIT_BODY_CACHE.clear()
     TX._CHECKPOINT_BODY_CACHE.clear()
-    TX._CHECKPOINT_META_CACHE.clear()
     TX._SNAPSHOT_CACHE.clear()
 
 
@@ -62,11 +62,10 @@ def _replay_expect(log, upto=None):
 
 
 @pytest.fixture()
-def lazy_table(tmp_path, monkeypatch):
+def lazy_table(tmp_path):
     """A sidecar-checkpointed table WITH a post-checkpoint tail that
     exercises every overlay transition: plain add, remove of a base
     path, re-add (shadow) of a base path, add-then-remove in the tail."""
-    monkeypatch.setattr(TX, "_PARQUET_CKPT_MIN", 5)
     t = str(tmp_path / "tbl")
     log = TX.TransactionLog(t)
     adds = [_add(i, partition=str(i % 3)) for i in range(8)]
@@ -159,7 +158,7 @@ def test_live_files_matches_dict_projection(lazy_table):
 
 def test_warm_lazy_snapshot_keeps_columnar_fast_paths(lazy_table):
     t, log, adds, readd, new = lazy_table
-    # dict-path ground truth, computed independently of the fast paths
+    # ground truth, computed independently of the snapshot methods
     expect_live = _replay_expect(log)
     keep_e, pruned_e = [], 0
     for f, a in sorted(expect_live.items()):
@@ -171,8 +170,7 @@ def test_warm_lazy_snapshot_keeps_columnar_fast_paths(lazy_table):
         else:
             keep_e.append(f)
     _clear()
-    # WARM the lazy snapshot first: the round-13 guard must still pick
-    # the columnar path (a warm _LazyLive's dict path would parse)
+    # WARM the lazy snapshot first: the methods answer the same warm
     TX.TransactionLog(t)._live_actions_shared()
     keep, pruned = TX.tx_prunable_files(t, "id", 0, 45)
     assert (keep, pruned) == (sorted(keep_e), pruned_e)
@@ -187,7 +185,6 @@ def test_warm_lazy_snapshot_keeps_columnar_fast_paths(lazy_table):
 
 
 def test_optimize_policy_columnar_matches_dict_path(tmp_path, monkeypatch):
-    monkeypatch.setattr(TX, "_PARQUET_CKPT_MIN", 5)
     t = str(tmp_path / "tbl")
     log = TX.TransactionLog(t)
     adds = (
@@ -218,40 +215,6 @@ def test_optimize_policy_columnar_matches_dict_path(tmp_path, monkeypatch):
     )
     picked = TX.tx_optimize_auto(None, t)
     assert picked == ["a"] and compacted == [["a"]]
-
-
-def test_pre_zbytes_sidecar_extension_omits_zbytes(tmp_path, monkeypatch):
-    """An incremental extension of a sidecar that predates zbytes must
-    NOT fabricate the column (nulls would read as 'every old file is
-    small'); the policy then falls back to the exact dict path."""
-    import pyarrow.parquet as pq
-
-    monkeypatch.setattr(TX, "_PARQUET_CKPT_MIN", 5)
-    t = str(tmp_path / "tbl")
-    log = TX.TransactionLog(t)
-    adds = [_add(i, partition="a", nbytes=256 * 1024 * 1024) for i in range(6)]
-    assert log.try_commit(0, adds, [], op="append")
-    log.checkpoint()
-    # strip zbytes from the sidecar on disk = a pre-r13 checkpoint
-    body = json.load(open(log._checkpoint_path(0)))
-    side = os.path.join(log.log_dir, body["live_parquet"])
-    tbl = pq.read_table(side)
-    assert "zbytes" in tbl.column_names
-    pq.write_table(tbl.drop_columns(["zbytes"]), side)
-    assert log.try_commit(1, [_add(10, partition="a", nbytes=1024)], [], op="append")
-    _clear()
-    log2 = TX.TransactionLog(t)
-    log2.checkpoint()  # O(delta) extension of the stripped sidecar
-    body1 = json.load(open(log2._checkpoint_path(1)))
-    ext = pq.read_table(os.path.join(log2.log_dir, body1["live_parquet"]))
-    assert "zbytes" not in ext.column_names
-    _clear()
-    snap = TX.TransactionLog(t)._live_actions_shared()
-    assert isinstance(snap, TX._LazyLive)
-    assert snap.small_file_counts(32 * 1024 * 1024) is None
-    # ...and the policy still answers correctly through the dict path
-    # (1 small file in 'a' < min_small_files -> nothing compacts)
-    assert TX.tx_optimize_auto(None, t) == []
 
 
 def test_unsorted_sidecar_falls_back_to_index(tmp_path):
@@ -285,21 +248,31 @@ def test_unsorted_sidecar_falls_back_to_index(tmp_path):
 
 
 def test_checkpoint_full_rebuild_from_lazy_snapshot(lazy_table, monkeypatch):
-    """When the O(delta) extension cannot run (zone_flags stripped),
-    checkpoint() must materialize the lazy snapshot and produce a
-    byte-faithful full sidecar."""
+    """When the O(delta) extension cannot run (the previous sidecar was
+    torn after the snapshot read it), checkpoint() must materialize the
+    lazy snapshot and produce a byte-faithful full sidecar."""
     t, log, adds, readd, new = lazy_table
-    body = json.load(open(log._checkpoint_path(0)))
-    del body["zone_flags"]  # extension precondition gone
-    json.dump(body, open(log._checkpoint_path(0), "w"))
+    expect = _replay_expect(log)
     _clear()
     log2 = TX.TransactionLog(t)
     snap = log2._live_actions_shared()
-    assert isinstance(snap, TX._LazyLive)
+    assert dict(snap.items()) == expect  # base columns now resident
+    body = json.load(open(log._checkpoint_path(0)))
+    with open(os.path.join(log.log_dir, body["live_parquet"]), "w") as fh:
+        fh.write("not parquet")
+    built = []
+    full_build = TX._build_live_table
+
+    def spy(live):
+        built.append(len(live))
+        return full_build(live)
+
+    monkeypatch.setattr(TX, "_build_live_table", spy)
     log2.checkpoint()
+    assert built == [len(expect)]
     _clear()
     got = TX.TransactionLog(t)._live_actions_shared()
-    assert dict(got.items()) == _replay_expect(log)
+    assert dict(got.items()) == expect
 
 
 def test_fsck_forked_parse_and_scan_match_serial(tmp_path, monkeypatch):
@@ -425,12 +398,11 @@ def test_lazy_snapshot_survives_log_truncation(lazy_table):
     assert dict(got.items()) == expect
 
 
-def test_dml_rewrites_over_lazy_snapshot(spark, tmp_path, monkeypatch):
+def test_dml_rewrites_over_lazy_snapshot(spark, tmp_path):
     """Rewrite verbs (DELETE/UPDATE/MERGE) and compaction must work
     unchanged when the snapshot is a _LazyLive (sidecar-backed) — the
     round-13 lazy read path feeds the same action dicts the eager path
     did."""
-    monkeypatch.setattr(TX, "_PARQUET_CKPT_MIN", 3)
     t = str(tmp_path / "tbl")
     df = spark.range(0, 100).selectExpr(
         "id", "CAST(id % 4 AS STRING) AS p", "id * 2 AS v"

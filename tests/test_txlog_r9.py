@@ -289,7 +289,6 @@ def test_snapshot_cache_equals_pure_replay(tmp_path_factory, ops):
         elif op[0] == "clear":
             TX._COMMIT_BODY_CACHE.clear()
             TX._CHECKPOINT_BODY_CACHE.clear()
-            TX._CHECKPOINT_META_CACHE.clear()
             TX._SNAPSHOT_CACHE.clear()
             check()
         elif op[0] == "read_at":
@@ -308,14 +307,13 @@ def test_snapshot_cache_equals_pure_replay(tmp_path_factory, ops):
 def test_parquet_checkpoint_sidecar_roundtrip_and_torn_fallback(
     spark, tmp_path, monkeypatch
 ):
-    """Delta-format checkpoints: at >= _PARQUET_CKPT_MIN live actions
-    the live list moves to a parquet sidecar.  The reconstructed
+    """Delta-format checkpoints: the live list lives in a parquet
+    sidecar.  The reconstructed
     snapshot must be FIELD-EXACT vs pure replay, survive log
     truncation, and a torn sidecar must demote the whole checkpoint
     (fall back to replay) instead of half-reading."""
     import uuid as _uuid
 
-    monkeypatch.setattr(TX, "_PARQUET_CKPT_MIN", 5)
     t = str(tmp_path / "tbl")
     log = TX.TransactionLog(t)
     adds = [
@@ -337,7 +335,7 @@ def test_parquet_checkpoint_sidecar_roundtrip_and_torn_fallback(
     side = [
         n for n in os.listdir(log.log_dir) if n.endswith(".live.parquet")
     ]
-    assert side, "sidecar must exist above the threshold"
+    assert side, "every checkpoint writes a sidecar"
     body = json.loads(
         open(
             os.path.join(log.log_dir, "00000000000000000001.checkpoint.json")
@@ -347,7 +345,6 @@ def test_parquet_checkpoint_sidecar_roundtrip_and_torn_fallback(
     # cold read: reconstructed snapshot == pure replay, field-exact
     TX._COMMIT_BODY_CACHE.clear()
     TX._CHECKPOINT_BODY_CACHE.clear()
-    TX._CHECKPOINT_META_CACHE.clear()
     TX._SNAPSHOT_CACHE.clear()
     got = TX.TransactionLog(t)._live_actions_shared()
     assert got == expect
@@ -356,7 +353,6 @@ def test_parquet_checkpoint_sidecar_roundtrip_and_torn_fallback(
         os.remove(log._commit_path(v))
     TX._COMMIT_BODY_CACHE.clear()
     TX._CHECKPOINT_BODY_CACHE.clear()
-    TX._CHECKPOINT_META_CACHE.clear()
     TX._SNAPSHOT_CACHE.clear()
     truncated = TX.TransactionLog(t)._live_actions_shared()
     assert truncated == expect
@@ -372,7 +368,6 @@ def test_parquet_checkpoint_torn_sidecar_demotes_checkpoint(
 ):
     import uuid as _uuid
 
-    monkeypatch.setattr(TX, "_PARQUET_CKPT_MIN", 5)
     t = str(tmp_path / "tbl")
     log = TX.TransactionLog(t)
     adds = [
@@ -391,7 +386,6 @@ def test_parquet_checkpoint_torn_sidecar_demotes_checkpoint(
         fh.write("not parquet")
     TX._COMMIT_BODY_CACHE.clear()
     TX._CHECKPOINT_BODY_CACHE.clear()
-    TX._CHECKPOINT_META_CACHE.clear()
     TX._SNAPSHOT_CACHE.clear()
     fresh = TX.TransactionLog(t)
     assert fresh._latest_checkpoint_body() is None
