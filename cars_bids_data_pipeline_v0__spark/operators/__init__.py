@@ -17,7 +17,7 @@ from .matview import (
     matview_merge,
     matview_partials,
 )
-from .merge import insert_if_absent, merge_into, upsert_overwrite
+from .merge import insert_if_absent, merge_into
 from .multimodal import (
     audio_frame_energy,
     byte_histogram_features,
@@ -77,7 +77,6 @@ __all__ = [
     "with_surrogate_key",
     "insert_if_absent",
     "merge_into",
-    "upsert_overwrite",
     "scd2_apply",
     "scd2_snapshot",
     "approx_quantiles",

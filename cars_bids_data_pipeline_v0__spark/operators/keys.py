@@ -4,8 +4,10 @@ Reference: Postgres ``SERIAL`` ids referenced as ``sd.id``, ``vmd.id``, etc.
 (update_dims.sql:80,108,128-130).
 
 Spark-first: dense ids from a deterministic total order of the *new* rows,
-offset by the existing max — NOT ``monotonically_increasing_id`` (partition-
-dependent, non-reproducible; SURVEY §7 risk 8).
+offset by the existing max (the caller's ``start_at``; the gold tables
+read it from their commit log's zone maps) — NOT
+``monotonically_increasing_id`` (partition-dependent, non-reproducible;
+SURVEY §7 risk 8).
 
 Scale design: a naive ``row_number() OVER (ORDER BY ...)`` is a single-
 reducer stage — every row through one task.  Instead ids are assigned in
@@ -51,6 +53,13 @@ def with_surrogate_key(
     whole assignment is one exchange + one in-partition sort, while the
     default (``spark.sql.shuffle.partitions``) keeps fact-scale inputs
     fully parallel.
+
+    PRECONDITION for ``num_partitions=1``: an exchange must sit directly
+    below ``new_rows`` (a ``distinct``, aggregate, window or shuffled
+    join output, with only narrow operators above it).  The path is a
+    ``coalesce(1)``, which adds no exchange of its own, so it collapses
+    everything down to the nearest exchange into ONE task — with a scan
+    directly below, that is the whole upstream read.
     """
     sort_cols = [F.col(c).asc_nulls_last() for c in order_by]
     cols = new_rows.columns
@@ -116,10 +125,3 @@ def with_surrogate_key(
         .select(*cols, id_col)
     )
 
-
-def next_id_start(existing: DataFrame | None, id_col: str = "id") -> int:
-    """max(id)+1 over the existing dimension (1 when empty/absent)."""
-    if existing is None:
-        return 1
-    row = existing.agg(F.max(id_col).alias("m")).collect()[0]
-    return int(row["m"] or 0) + 1

@@ -1,21 +1,20 @@
-"""M1-M3 — warehouse merge operators (insert-if-absent, upsert).
+"""M1-M3 — warehouse merge operators (insert-if-absent, MERGE INTO).
 
 Reference: Postgres ``INSERT … ON CONFLICT DO NOTHING`` for 8 dims + the
 fact (update_dims.sql:8-114, 185-223) and ``DO UPDATE SET`` for vehicle_dim
 (update_dims.sql:122-177).
 
-Spark-first: this container has no Delta, so merges are expressed as
-DataFrame set algebra with the same idempotence guarantees under the
-single-writer assumption the reference already makes
-(transform_lambda/main.py:373-392):
+Spark-first: each statement is DataFrame set algebra, and the commit log
+(`sources.txlog`) makes it atomic — the gold star schema commits
+``insert_if_absent``'s rows adds-only and runs the vehicle upsert on
+`tx_merge_into`'s core, so no single-writer assumption remains:
 
 * M1/M3 insert-if-absent  →  ``new ⟕anti existing``  then append.
-* M2 upsert               →  keep-latest union (existing ∪ new, new wins).
+* ``merge_into``          →  ``MERGE INTO`` over plain DataFrames, one
+  full-outer join on the key.
 
 At cluster scale both sides shuffle on the merge key once; dims are tiny so
-Catalyst broadcasts the existing side of the anti-join automatically.  With
-Delta/Iceberg available these become real ``MERGE INTO`` statements with
-partition pruning; the operator signatures are sink-agnostic on purpose.
+Catalyst broadcasts the existing side of the anti-join automatically.
 """
 
 from __future__ import annotations
@@ -39,32 +38,6 @@ def insert_if_absent(
     if existing is None:
         return fresh
     return fresh.join(existing.select(*key).distinct(), on=key, how="left_anti")
-
-
-def upsert_overwrite(
-    existing: DataFrame | None,
-    new_rows: DataFrame,
-    key: list[str],
-    prefer_new: bool = True,
-) -> DataFrame:
-    """M2 — full-table upsert: ``ON CONFLICT (key) DO UPDATE SET *``.
-
-    Returns the merged table: unmatched existing rows + all new rows (new
-    payload wins on key collision).  Column sets must match; extra/missing
-    columns are aligned by name (union-by-name with nulls).  A batch
-    carrying one key twice with different payloads keeps a deterministic
-    survivor (``_dedup_source`` — first by sorted payload), matching
-    ``merge_into``.
-    """
-    new_rows = _dedup_source(new_rows, key)
-    if existing is None:
-        return new_rows
-    new_marked = new_rows.withColumn("__is_new", F.lit(1 if prefer_new else 0))
-    old_marked = existing.withColumn("__is_new", F.lit(0 if prefer_new else 1))
-    unioned = old_marked.unionByName(new_marked, allowMissingColumns=True)
-    from .dedup import keep_latest
-
-    return keep_latest(unioned, key, order_by=F.col("__is_new")).drop("__is_new")
 
 
 def _dedup_source(source: DataFrame, on: list[str]) -> DataFrame:

@@ -4,12 +4,19 @@ The reference runs 11 SQL statements in fixed dependency order against
 Postgres (update_dims.sql:1-223; order list load_lambda/main.py:16-28):
 8 insert-if-absent dimension loads, 1 vehicle upsert, 1 fact insert-ignore.
 
-Spark-first: each statement becomes a DataFrame merge (operators.merge) over
-parquet-backed tables held in a `GoldStore`; surrogate keys come from
-``row_number`` over the new-rows slice offset by the existing max (M4).
-All dimension joins are broadcast (dims are tiny relative to the fact);
-the OR-predicate state join (J1) stays a broadcast nested-loop join —
-correct and cheap at 51 rows — mirroring Postgres' plan.
+Spark-first: every gold table is a commit-log table (`sources.txlog`) — the
+paper's "Delta tables + MERGE INTO".  The 8 dimension loads, the model
+dimension and the fact share one insert-if-absent writer (`_insert_new`)
+that commits adds only; the vehicle upsert is a MERGE that rewrites only
+the files holding the batch's keys.  Surrogate keys come from
+``row_number`` over the new-rows slice offset by the largest id the pinned
+snapshot's zone maps record (M4) — a metadata read, no Spark job — and a
+commit conflict rebuilds from the new snapshot, so no id is minted twice.
+Every statement is idempotent, so re-running a batch after a crash
+converges on the uninterrupted result.  All dimension joins are broadcast
+(dims are tiny relative to the fact); the OR-predicate state join (J1)
+stays a broadcast nested-loop join — correct and cheap at 51 rows —
+mirroring Postgres' plan.
 """
 
 from __future__ import annotations
@@ -20,98 +27,119 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalar import norm_key_lower, norm_key_upper
-from ..operators.keys import next_id_start, with_surrogate_key
-from ..operators.merge import insert_if_absent, upsert_overwrite
+from ..operators.keys import with_surrogate_key
+from ..operators.merge import insert_if_absent
+
+# sources.txlog is imported inside each function: loading the query
+# registry imports this package, and compiling txlog costs ~0.1 s there
 
 
 class GoldStore:
-    """Parquet-backed gold tables (Delta-ready interface: swap read/write
-    for ``MERGE INTO`` when a transactional format is available).
-
-    SINGLE-WRITER-INSTANCE invariant: ``read`` memoizes reader frames and
-    only this instance's ``append``/``overwrite`` invalidate them — a
-    second GoldStore over the same root, or any external writer, can
-    leave this instance serving a stale file index.  One store instance
-    owns a root for the duration of a build (the engine's pipelines
-    already work this way); call ``invalidate()`` after any out-of-band
-    write."""
+    """The gold tables under one root; each ``path(name)`` is a
+    commit-log table, so readers see committed snapshots and concurrent
+    writers serialize through the log."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
-        self._cache: dict[str, DataFrame] = {}
-
-    def invalidate(self, name: str | None = None) -> None:
-        """Drop memoized reader frames (all of them, or one table's)
-        after an out-of-band write to this root — see the class
-        docstring's single-writer-instance invariant."""
-        if name is None:
-            self._cache.clear()
-        else:
-            self._cache.pop(name, None)
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
     def read(self, name: str) -> DataFrame | None:
-        if name in self._cache:
-            return self._cache[name]
-        p = self.path(name)
-        if not os.path.exists(p):
-            return None
-        # memoize the reader frame: every spark.read.parquet builds a fresh
-        # file index + footer schema read on the driver (~0.2 s each, and
-        # the star build re-reads several dims 2-3x); append/overwrite
-        # already invalidate via _cache.pop (round-13 optimization pass)
-        df = self.spark.read.parquet(p)
-        self._cache[name] = df
-        return df
+        from ..sources.txlog import tx_read
 
-    def append(self, name: str, df: DataFrame) -> None:
-        df.write.mode("append").parquet(self.path(name))
-        self._cache.pop(name, None)
-
-    def overwrite(self, name: str, df: DataFrame) -> None:
-        """Overwrite a table whose current files may feed ``df``'s plan:
-        write distributed to a temp path first, then swap directories —
-        never a driver-side collect, so table size is unbounded."""
-        import shutil
-
-        final = self.path(name)
-        tmp = final + ".__tmp__"
-        df.write.mode("overwrite").parquet(tmp)
-        self._cache.pop(name, None)
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
+        return tx_read(self.spark, self.path(name))
 
 
-def _merge_dim(
+def _insert_new(
     store: GoldStore, name: str, new_rows: DataFrame, key: list[str],
-    order_by: list[str] | None = None,
+    id_col: str | None = "id",
 ) -> DataFrame:
-    """M1 + M4 — insert-if-absent with surrogate ids; returns the full dim."""
-    existing = store.read(name)
-    existing_keys = existing.drop("id") if existing is not None else None
-    fresh = insert_if_absent(existing_keys, new_rows, key)
-    fresh = with_surrogate_key(
-        fresh,
-        order_by=order_by or key,
-        start_at=next_id_start(existing),
-        num_partitions=1,  # dims are bounded-cardinality (SURVEY §2.3)
-    ).select("id", *new_rows.columns)
-    if existing is None:
-        store.overwrite(name, fresh)
-    else:
-        store.append(name, fresh)
-    return store.read(name)
+    """M1/M3 (+ M4 with ``id_col``) — ``INSERT … ON CONFLICT (key) DO
+    NOTHING`` as one commit that adds files and removes none; returns
+    the table as committed.
+
+    Each attempt anti-joins against the snapshot it pins and mints ids
+    from that snapshot's largest ``id_col`` zone max.  The table's first
+    commit keeps an empty file (it fixes the schema); a later batch with
+    nothing new commits nothing and returns the snapshot it read."""
+    from ..sources.txlog import CommitProposal, TransactionLog, tx_read
+
+    log = TransactionLog(store.path(name))
+
+    def build(v: int):
+        existing = None
+        if v >= 0:
+            existing = tx_read(store.spark, log.path, version=v)
+        fresh = insert_if_absent(existing, new_rows, key)
+        if id_col is not None:
+            top = log.live_actions(upto=v).zone_max(id_col)
+            fresh = with_surrogate_key(
+                fresh,
+                order_by=key,
+                id_col=id_col,
+                start_at=(top or 0) + 1,
+                # the source's distinct() shuffle sits below (dims are
+                # bounded-cardinality, SURVEY §2.3)
+                num_partitions=1,
+            ).select(id_col, *new_rows.columns)
+        adds = log.stage_dataframe(
+            fresh, stats_cols=[id_col] if id_col else None
+        )
+        if v >= 0:
+            log.discard([a for a in adds if not a["rows"]])
+            adds = [a for a in adds if a["rows"]]
+        return CommitProposal(adds, []) if adds else existing
+
+    unchanged = log.run_optimistic("insert_if_absent", build)
+    if unchanged is not None:
+        return unchanged
+    return tx_read(store.spark, log.path)
+
+
+def _upsert_vehicles(store: GoldStore, src: DataFrame) -> DataFrame:
+    """M2 — ``INSERT … ON CONFLICT (vin, auction_id) DO UPDATE`` as one
+    MERGE commit: matched rows take the batch's payload and keep their
+    ``vehicle_id``; fresh keys are inserted with ids minted from the
+    pinned snapshot's zone max.  Only files holding the batch's keys are
+    rewritten.  Returns the table as committed."""
+    from ..sources.txlog import TransactionLog, _merge_into_once, tx_read
+
+    key = ["vin", "auction_id"]
+    log = TransactionLog(store.path("vehicle_dim"))
+    # one deterministic survivor per key (a MERGE refuses to match a
+    # target row twice); persisted because the match scan, the rewrite
+    # and the insert anti-join all read it
+    batch = insert_if_absent(None, src, key).persist()
+    update = {c: f"s.{c}" for c in batch.columns if c not in key}
+
+    def build(v: int):
+        return _merge_into_once(
+            store.spark, log, log.path, batch, key, update, None, True,
+            None, None, v, log.live_files(upto=v), None, False,
+            broadcast_source=True, may_have_dup_keys=False,
+            id_col="vehicle_id",
+        )
+
+    try:
+        log.run_optimistic("merge_into", build)
+    finally:
+        batch.unpersist()
+    return tx_read(store.spark, log.path)
 
 
 def seed_state_dim(store: GoldStore, states: DataFrame) -> None:
     """The reference assumes a pre-seeded state_dim(id, state, state_abbr)
-    (update_dims.sql:82-83,216-217; not created by the repo)."""
-    store.overwrite("state_dim", states)
+    (update_dims.sql:82-83,216-217; not created by the repo) — one
+    replace-all commit."""
+    from ..sources.txlog import CommitProposal, TransactionLog
+
+    log = TransactionLog(store.path("state_dim"))
+    log.run_optimistic("overwrite", lambda v: CommitProposal(
+        log.stage_dataframe(states), sorted(log.live_files(upto=v))
+    ))
 
 
 def build_star_schema(store: GoldStore, staging: DataFrame) -> dict[str, DataFrame]:
@@ -127,8 +155,6 @@ def build_star_schema(store: GoldStore, staging: DataFrame) -> dict[str, DataFra
     before the fan-out so the parallel jobs read the cache rather than
     racing to compute it.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..session import size_coalesced_shuffle
 
     # Every statement below is window/anti-join/write-shaped with tiny
@@ -136,8 +162,12 @@ def build_star_schema(store: GoldStore, staging: DataFrame) -> dict[str, DataFra
     # collapses their no-op post-shuffle tasks (round-13 optimization pass
     # — see size_coalesced_shuffle's docstring for the measurement and the
     # scale argument).
-    with size_coalesced_shuffle(staging.sparkSession):
-        return _build_star_schema_inner(store, staging)
+    staging = staging.cache()
+    try:
+        with size_coalesced_shuffle(staging.sparkSession):
+            return _build_star_schema_inner(store, staging)
+    finally:
+        staging.unpersist()
 
 
 def _build_star_schema_inner(
@@ -145,7 +175,6 @@ def _build_star_schema_inner(
 ) -> dict[str, DataFrame]:
     from concurrent.futures import ThreadPoolExecutor
 
-    staging = staging.cache()
     staging.count()  # materialize before concurrent consumers
     dims: dict[str, DataFrame] = {}
 
@@ -212,7 +241,7 @@ def _build_star_schema_inner(
     }
     with ThreadPoolExecutor(max_workers=len(phase1)) as ex:
         futures = {
-            name: ex.submit(_merge_dim, store, name, src, key)
+            name: ex.submit(_insert_new, store, name, src, key)
             for name, (src, key) in phase1.items()
         }
         for name, fut in futures.items():
@@ -233,9 +262,8 @@ def _build_star_schema_inner(
         .select(F.trim(F.col("model")).alias("model"), "make_id")
         .distinct()
     )
-    dims["vehicle_model_dim"] = _merge_dim(
-        store, "vehicle_model_dim", model_src, ["model", "make_id"],
-        order_by=["model", "make_id"],
+    dims["vehicle_model_dim"] = _insert_new(
+        store, "vehicle_model_dim", model_src, ["model", "make_id"]
     )
 
     # -- vehicle_dim upsert (M2; update_dims.sql:122-177) -------------------
@@ -307,42 +335,9 @@ def _build_star_schema_inner(
             F.col("s.included_items_count").alias("included_items_count"),
         )
     )
-    existing_vehicle = store.read("vehicle_dim")
-    if existing_vehicle is not None:
-        merged = upsert_overwrite(
-            existing_vehicle.drop("vehicle_id"), vehicle_src, ["vin", "auction_id"]
-        )
-        # keep prior surrogate ids, mint new ones for fresh keys
-        id_map = existing_vehicle.select("vehicle_id", "vin", "auction_id")
-        merged = merged.join(id_map, ["vin", "auction_id"], "left")
-        has_id = merged.filter(F.col("vehicle_id").isNotNull())
-        needs_id = with_surrogate_key(
-            merged.filter(F.col("vehicle_id").isNull()).drop("vehicle_id"),
-            order_by=["vin", "auction_id"],
-            id_col="vehicle_id",
-            start_at=next_id_start(existing_vehicle, "vehicle_id"),
-            num_partitions=1,  # fresh keys per batch are batch-bounded
-        )
-        vehicle_dim = has_id.unionByName(needs_id)
-    else:
-        # Persist the deduped source before keying: the distributed key
-        # assignment's range-boundary sampling re-reads its input, and
-        # without this the whole 5-broadcast-join chain would run twice.
-        vehicle_keyed_src = vehicle_src.dropDuplicates(
-            ["vin", "auction_id"]
-        ).persist()
-        vehicle_dim = with_surrogate_key(
-            vehicle_keyed_src,
-            order_by=["vin", "auction_id"],
-            id_col="vehicle_id",
-        )
-    store.overwrite("vehicle_dim", vehicle_dim)
-    if existing_vehicle is None:
-        vehicle_keyed_src.unpersist()
-    dims["vehicle_dim"] = store.read("vehicle_dim")
+    dims["vehicle_dim"] = _upsert_vehicles(store, vehicle_src)
 
     # -- auction_fact (M3; update_dims.sql:185-223) --------------------------
-    sd = store.read("state_dim")
     fact_src = (
         staging.alias("s")
         .filter(F.col("s.auction_id").isNotNull())
@@ -373,7 +368,10 @@ def _build_star_schema_inner(
         )
         .join(
             F.broadcast(
-                sd.select(F.col("id").alias("auction_state"), F.col("state_abbr").alias("__sab"))
+                state_dim.select(
+                    F.col("id").alias("auction_state"),
+                    F.col("state_abbr").alias("__sab"),
+                )
             ),
             norm_key_upper(F.col("s.title_state")) == F.col("__sab"), "left",
         )
@@ -421,13 +419,8 @@ def _build_star_schema_inner(
             F.col("s.auction_url").alias("auction_url"),
         )
     )
-    existing_fact = store.read("auction_fact")
-    fresh_fact = insert_if_absent(existing_fact, fact_src, ["auction_id"])
-    if existing_fact is None:
-        store.overwrite("auction_fact", fresh_fact)
-    else:
-        store.append("auction_fact", fresh_fact)
-    dims["auction_fact"] = store.read("auction_fact")
+    dims["auction_fact"] = _insert_new(
+        store, "auction_fact", fact_src, ["auction_id"], id_col=None
+    )
 
-    staging.unpersist()
     return dims

@@ -359,7 +359,7 @@ class _LazyLive:
     path a tail action added or removed.  A base row is live iff its
     path is not touched, so live = (base − touched) + overlay.
 
-    The metadata verbs are methods — `count`, `prunable`,
+    The metadata verbs are methods — `count`, `prunable`, `zone_max`,
     `files_in_partitions`, `small_file_counts`, `files`, `rows_map` —
     each columnar over the base (typed sidecar columns, one mask for
     the touched rows) and python over the overlay.
@@ -545,6 +545,22 @@ class _LazyLive:
             keep.append(f)
         keep.sort()
         return keep, pruned
+
+    def zone_max(self, col: str):
+        """The largest recorded max of ``col`` over the live files, or
+        None when no live file records one — a metadata read."""
+        import pyarrow.compute as pc
+
+        tops = []
+        rest = self._iter_items()
+        if self._base.column(f"zmax:{col}") is not None:
+            tops.append(pc.max(self._base_cols(f"zmax:{col}")[0]).as_py())
+            rest = self._overlay.items()
+        for _, a in rest:
+            mm = (a.get("stats") or {}).get(col)
+            if mm is not None:
+                tops.append(mm[1])
+        return max((t for t in tops if t is not None), default=None)
 
     def files_in_partitions(self, parts: set[str]) -> dict[str, str]:
         """``{path: partition}`` for the live files whose partition is in
@@ -1501,8 +1517,9 @@ class TransactionLog:
         dvs, constraints, hwm, mappings).  Bodies are memoized per file
         identity, so replay-start lookups on the hot read path cost a
         stat + dict hit; a torn body or sidecar demotes the checkpoint
-        to the next older one (or to plain replay).  CONTRACT: treat
-        the body as immutable."""
+        to the next older one (or to plain replay) — `tx_fsck` lists it
+        under ``torn_checkpoints``.  CONTRACT: treat the body as
+        immutable."""
         for v in self._checkpoint_versions():
             if upto is not None and v > upto:
                 continue
@@ -2690,58 +2707,6 @@ def tx_merge_partitioned(
         finally:
             if prepared:
                 prepared[0].unpersist()
-
-
-def tx_insert_if_absent(
-    spark: SparkSession,
-    table_path: str,
-    new_rows: DataFrame,
-    key: list[str],
-) -> int:
-    """M1/M3 with atomicity: ``ON CONFLICT DO NOTHING`` that stays correct
-    under concurrent writers (the anti-join re-runs against the latest
-    snapshot on every conflict).  Returns rows actually inserted."""
-    from ..operators.merge import insert_if_absent
-
-    log = TransactionLog(table_path)
-
-    def build(v: int):
-        existing = tx_read(spark, table_path)
-        fresh = insert_if_absent(existing, new_rows, key).persist()
-        try:
-            n = fresh.count()
-            if n == 0:
-                return 0
-            return CommitProposal(log.stage_dataframe(fresh), [], n)
-        finally:
-            fresh.unpersist()
-
-    return log.run_optimistic("insert_if_absent", build)
-
-
-def tx_upsert(
-    spark: SparkSession,
-    table_path: str,
-    new_rows: DataFrame,
-    key: list[str],
-) -> None:
-    """M2 with atomicity: full-table upsert as a single replace-all commit
-    (correct at dim-table scale; fact-scale upserts use
-    `tx_merge_partitioned`'s partition-scoped path)."""
-    from ..operators.merge import upsert_overwrite
-
-    log = TransactionLog(table_path)
-    new_rows = tx_apply_generated(new_rows, table_path)
-    tx_check_constraints(new_rows, table_path)
-
-    def build(v: int):
-        existing = tx_read(spark, table_path)
-        merged = upsert_overwrite(existing, new_rows, key)
-        return CommitProposal(
-            log.stage_dataframe(merged), sorted(log.live_files(upto=v))
-        )
-
-    log.run_optimistic("upsert", build)
 
 
 def tx_compact(
@@ -4032,11 +3997,19 @@ def _merge_into_once(
     spark, log, table_path, source, on,
     when_matched_update, when_matched_delete, when_not_matched_insert,
     matched_condition, insert_condition, v, live, partition_by, has_txn,
-    broadcast_source=False, may_have_dup_keys=True,
+    broadcast_source=False, may_have_dup_keys=True, id_col=None,
 ):
     """One optimistic attempt of `tx_merge_into` against snapshot ``v``:
     the `CommitProposal` to publish as ``v + 1``, or the counts of a
-    no-op merge that commits nothing."""
+    no-op merge that commits nothing.
+
+    ``id_col`` names a surrogate-key column: inserted rows get dense ids
+    in ``on`` order from 1 + its largest zone max at ``v`` (matched rows
+    keep theirs), and every staged file records its zone map."""
+    stats = [id_col] if id_col else None
+    if id_col:
+        top = log._live_actions_shared(upto=v).zone_max(id_col)
+        next_id = (top or 0) + 1
     if v < 0 or not live:
         # empty target: MERGE degenerates to the insert clause
         if when_not_matched_insert is False:
@@ -4053,13 +4026,20 @@ def _merge_into_once(
             )
         else:
             ins = s
+        if id_col:
+            from ..operators.keys import with_surrogate_key
+
+            ins = with_surrogate_key(
+                ins.drop(id_col), order_by=on, id_col=id_col,
+                start_at=next_id,
+            )
         tx_check_constraints(ins, table_path)
         adds = log.stage_dataframe(
-            ins, partition_by=partition_by
-        ) if partition_by else log.stage_dataframe(ins)
-        return CommitProposal(
-            adds, [], _merge_counts(0, 0, ins.count(), 0, v + 1)
+            ins, partition_by=partition_by, stats_cols=stats
         )
+        return CommitProposal(adds, [], _merge_counts(
+            0, 0, sum(int(a["rows"]) for a in adds), 0, v + 1
+        ))
 
     rel_by_base = {os.path.basename(rel): rel for rel in sorted(live)}
     dvmap = log.dvs(upto=v)
@@ -4284,20 +4264,25 @@ def _merge_into_once(
                 )
         if gcols:
             ins = tx_apply_generated(ins, table_path, upto=v)
-        if ROW_ID_COL in tgt_cols and not src_has_row_id:
+        hwm = mint = None
+        if id_col:
+            mint = (id_col, next_id)
+        elif ROW_ID_COL in tgt_cols and not src_has_row_id:
             # row-tracked table: inserted rows get fresh ids continuing
             # the high-water mark (updated/kept rows keep theirs)
+            hwm = log.row_id_hwm(upto=v)
+            mint = (ROW_ID_COL, hwm)
+        if mint:
             from ..operators.keys import with_surrogate_key
 
-            hwm = log.row_id_hwm(upto=v)
             ins = with_surrogate_key(
-                ins.drop(ROW_ID_COL),
-                order_by=on,
-                id_col=ROW_ID_COL,
-                start_at=hwm,
+                ins.drop(mint[0]), order_by=on, id_col=mint[0],
+                start_at=mint[1],
+                # a dimension's fresh keys are batch-bounded and the
+                # anti-join feeding them reads the persisted source, so
+                # one task reads at most the cached batch
+                num_partitions=1 if id_col else None,
             ).select(*tgt_cols)
-        else:
-            hwm = None
         ins = ins.persist()
         persisted.append(ins)
         n_ins = ins.count()
@@ -4337,10 +4322,11 @@ def _merge_into_once(
                     else n_ins
                 )
                 staged = log.stage_dataframe(
-                    out, partition_by=pcol, expected_rows=exp
+                    out, partition_by=pcol, stats_cols=stats,
+                    expected_rows=exp,
                 )
             else:
-                staged = log.stage_dataframe(out)
+                staged = log.stage_dataframe(out, stats_cols=stats)
             adds = [a for a in staged if a.get("rows")]
             if len(adds) != len(staged):
                 log.discard([a for a in staged if not a.get("rows")])
@@ -5559,10 +5545,13 @@ def tx_fsck(table_path: str) -> dict:
       files (harmless to readers, which intersect with liveness, but a
       sign of a writer that skipped the dv_state snapshot discipline);
     * ``torn_commits`` — commit files that are empty or do not parse
-      (readers refuse the table; the snapshot checks are skipped).
+      (readers refuse the table; the snapshot checks are skipped);
+    * ``torn_checkpoints`` — checkpoint versions whose body or sidecar
+      does not load (readers demote each to an older checkpoint or to
+      plain replay, so the data stays correct).
 
-    ``ok`` is True iff everything except ``orphan_files`` and
-    ``dv_dead_files`` is clean.
+    ``ok`` is True iff everything except ``orphan_files``,
+    ``dv_dead_files`` and ``torn_checkpoints`` is clean.
 
     Scale (round-13): the raw-commit parse forks 8 workers past
     ~256 MB of commit JSON and the per-file existence scan forks past
@@ -5583,11 +5572,17 @@ def tx_fsck(table_path: str) -> dict:
         "orphan_files": [],
         "txn_regressions": [],
         "torn_commits": [],
+        "torn_checkpoints": [],
         "missing_dv_files": [],
         "dv_dead_files": [],
     }
     versions = log.versions()
     cks = log._checkpoint_versions()
+    for v in sorted(cks):
+        try:
+            _load_checkpoint_cached(log._checkpoint_path(v))
+        except (OSError, ValueError):
+            report["torn_checkpoints"].append(v)
     if versions and versions != list(range(versions[0], versions[-1] + 1)):
         report["contiguous_versions"] = False
     truncated = False
@@ -6156,7 +6151,7 @@ def tx_set_constraint(
 ) -> int:
     """ADD CONSTRAINT ... CHECK (predicate) — recorded in the commit log,
     enforced on every subsequent `tx_append_partitioned` /
-    `tx_merge_partitioned` / `tx_upsert` batch at write time (the
+    `tx_merge_partitioned` / `tx_merge_into` batch at write time (the
     Delta-style invariant: bad data is rejected BEFORE it reaches the
     table, not quarantined after).
 

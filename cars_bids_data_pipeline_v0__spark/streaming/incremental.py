@@ -504,9 +504,8 @@ def read_matview(
 def compact_matview_store(spark: SparkSession, partials_store: str) -> None:
     """Fold every per-batch partial set into a single ``batch_id=-1``
     partition, bounding merge-on-read cost; safe to run between stream
-    triggers.  Distributed write to a temp path + directory swap (the
-    GoldStore.overwrite pattern) — group cardinality is unbounded, so
-    nothing is collected to the driver.
+    triggers.  Distributed write to a temp path + directory swap — group
+    cardinality is unbounded, so nothing is collected to the driver.
 
     Replay safety: a batch whose partials landed but whose checkpoint
     commit didn't will be REPLAYED by the restarted stream after its

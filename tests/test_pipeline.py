@@ -132,7 +132,6 @@ def test_gold_star_schema_and_idempotence(spark, pipeline_out, tmp_path):
              "vehicle_model_dim", "vehicle_dim", "auction_fact")
 
     def snapshot(tables):
-        # eager copy: overwrites invalidate lazy parquet-backed frames
         return {n: sorted(str(r) for r in tables[n].collect()) for n in CHECK}
 
     gold = build_star_schema(store, silver)
@@ -165,6 +164,125 @@ def test_gold_star_schema_and_idempotence(spark, pipeline_out, tmp_path):
     assert v3["engine"] == "SWAPPED V8"
     assert v3["vehicle_id"] == v["vehicle_id"]  # surrogate id stable
     assert gold3["auction_fact"].count() == 3  # fact insert-ignore
+
+
+# -- gold on the commit log: crash + re-run, snapshot frames, raw read-back --
+
+GOLD_TABLES = (
+    "auction_status_dim", "reserve_status_dim", "body_style_dim",
+    "seller_type_dim", "drivetrain_dim", "transmission_dim", "city_dim",
+    "vehicle_make_dim", "vehicle_model_dim", "vehicle_dim", "auction_fact",
+)
+
+
+def _seeded_store(spark, root):
+    store = GoldStore(spark, root)
+    seed_state_dim(store, spark.createDataFrame(
+        [(1, "Washington", "WA"), (2, "Florida", "FL")],
+        "id long, state string, state_abbr string",
+    ))
+    return store
+
+
+def _gold_rows(store):
+    return {n: sorted(str(r) for r in store.read(n).collect())
+            for n in GOLD_TABLES}
+
+
+@pytest.fixture(scope="module")
+def gold_batches(spark, pipeline_out, tmp_path_factory):
+    """Two batches into one store — one auction first, then all three
+    with that auction's engine changed (fresh dims and vehicles plus a
+    matched vehicle upsert) — with the first build's frames and every
+    table's rows after each build."""
+    silver, _, _ = pipeline_out
+    batches = [
+        silver.filter(F.col("auction_id") == "bbb222"),
+        silver.withColumn("engine", F.when(
+            F.col("auction_id") == "bbb222", "SWAPPED V8"
+        ).otherwise(F.col("engine"))),
+    ]
+    store = _seeded_store(spark, str(tmp_path_factory.mktemp("gold2")))
+    first = build_star_schema(store, batches[0])
+    rows = [_gold_rows(store)]
+    build_star_schema(store, batches[1])
+    rows.append(_gold_rows(store))
+    return {"batches": batches, "store": store, "first": first, "rows": rows}
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def test_gold_rebuild_after_crash_matches_uninterrupted(
+    spark, gold_batches, tmp_path, monkeypatch
+):
+    """A build that dies after its k-th table commit, re-run, leaves every
+    table equal to the uninterrupted build — ids included — and
+    fsck-clean; the uninterrupted build mints no id twice and has one
+    fact row per auction."""
+    import threading
+
+    from cars_bids_data_pipeline_v0__spark.sources.txlog import (
+        TransactionLog,
+        tx_fsck,
+    )
+
+    ref = gold_batches["store"]
+    for name in GOLD_TABLES:
+        df = ref.read(name)
+        key = {"vehicle_dim": "vehicle_id",
+               "auction_fact": "auction_id"}.get(name, "id")
+        assert df.select(key).distinct().count() == df.count(), name
+    assert ref.read("auction_fact").count() == 3
+
+    real = TransactionLog.try_commit
+    for crash_batch, k in [(0, 4), (0, 10), (1, 1)]:
+        store = _seeded_store(spark, str(tmp_path / f"b{crash_batch}k{k}"))
+        for batch in gold_batches["batches"][:crash_batch]:
+            build_star_schema(store, batch)
+        left, lock = [k], threading.Lock()
+
+        def failing(self, *args, **kwargs):
+            with lock:
+                if not left[0]:
+                    raise _Crash(f"killed after {k} commits")
+                left[0] -= 1
+            return real(self, *args, **kwargs)
+
+        monkeypatch.setattr(TransactionLog, "try_commit", failing)
+        with pytest.raises(_Crash):
+            build_star_schema(store, gold_batches["batches"][crash_batch])
+        monkeypatch.setattr(TransactionLog, "try_commit", real)
+        build_star_schema(store, gold_batches["batches"][crash_batch])
+        assert _gold_rows(store) == gold_batches["rows"][crash_batch], (
+            crash_batch, k,
+        )
+        for name in GOLD_TABLES:
+            assert tx_fsck(store.path(name))["ok"], (crash_batch, k, name)
+
+
+def test_gold_frames_stay_readable_after_next_build(gold_batches):
+    """A build's returned frames read the snapshot they were built on: the
+    next build's vehicle upsert removes files from the log, not the disk."""
+    first = gold_batches["first"]
+    for name in GOLD_TABLES:
+        got = sorted(str(r) for r in first[name].collect())
+        assert got == gold_batches["rows"][0][name], name
+
+
+def test_gold_fact_reads_back_exactly_without_spark(spark, gold_batches):
+    """pyarrow over the fact table's directory sees exactly the committed
+    rows: it skips ``_txlog/`` and ``_staged-*`` (underscore prefix), and
+    the fact only ever adds files."""
+    import pyarrow.parquet as pq
+
+    from cars_bids_data_pipeline_v0__spark.sources.txlog import tx_read
+
+    path = gold_batches["store"].path("auction_fact")
+    got = pq.read_table(path, columns=["auction_id"]).column(0).to_pylist()
+    want = [r["auction_id"] for r in tx_read(spark, path).collect()]
+    assert sorted(got) == sorted(want) and len(got) == 3
 
 
 def test_malformed_and_empty_raw_files_do_not_fail(spark, tmp_path):

@@ -32,6 +32,22 @@ def registry():
     return Q.REGISTRY
 
 
+@pytest.fixture(scope="module")
+def registry_plans(spark, registry):
+    """``{name: (output schema, formatted plan)}`` for every registry
+    query, each built once for the registry-wide audits; caches are
+    cleared between builds so no build sees another's persisted frames."""
+    from cars_bids_data_pipeline_v0__spark.cache import release_build_caches
+
+    out = {}
+    for name, spec in sorted(registry.items()):
+        df = spec.builder(spark, SF)
+        out[name] = (df.schema, plan_of(df))
+        spark.catalog.clearCache()
+        release_build_caches()
+    return out
+
+
 def test_q01_pushes_filter_and_prunes_columns(spark, registry):
     plan = plan_of(registry["q01_pricing_summary"].builder(spark, SF))
     assert "PushedFilters: [" in plan and "PushedFilters: []" not in plan
@@ -185,13 +201,11 @@ def test_global_window_parser_handles_function_sort_keys(spark):
 _DOCUMENTED_GLOBAL_WINDOWS: set[str] = set()
 
 
-def test_no_undocumented_global_windows_anywhere(spark, registry):
+def test_no_undocumented_global_windows_anywhere(registry_plans):
     offenders = []
-    for name, spec in sorted(registry.items()):
-        plan = plan_of(spec.builder(spark, SF))
+    for name, (_, plan) in registry_plans.items():
         if _global_window_specs(plan) and name not in _DOCUMENTED_GLOBAL_WINDOWS:
             offenders.append(name)
-        spark.catalog.clearCache()
     assert offenders == [], f"global (single-partition) windows in: {offenders}"
 
 
@@ -307,24 +321,19 @@ def test_fused_generate_detector_on_known_shapes(spark):
     assert not _fused_generate_offenses(plan_of(ok2))
 
 
-def test_no_fused_heavy_generates_anywhere(spark, registry):
-    from cars_bids_data_pipeline_v0__spark.cache import release_build_caches
-
+def test_no_fused_heavy_generates_anywhere(registry_plans):
     offenders = []
-    for name, spec in sorted(registry.items()):
-        plan = plan_of(spec.builder(spark, SF))
+    for name, (_, plan) in registry_plans.items():
         bad = _fused_generate_offenses(plan)
         if bad and name not in _DOCUMENTED_FUSED_GENERATES:
             offenders.append((name, bad[0]))
-        spark.catalog.clearCache()
-        release_build_caches()
     assert offenders == [], (
         "generator args re-evaluate an inlined derivation per element "
         f"(persist the array, explode the attribute): {offenders}"
     )
 
 
-def test_registry_output_schemas_are_flat(spark, registry):
+def test_registry_output_schemas_are_flat(registry_plans):
     # The driver's correctness gate canonicalizes results through pandas
     # and hashes row values; array/map/struct columns are unhashable
     # there (round-4 driver errs on q83/q94).  Every registered query
@@ -333,8 +342,7 @@ def test_registry_output_schemas_are_flat(spark, registry):
     from pyspark.sql.types import ArrayType, MapType, StructType
 
     offenders = []
-    for name, spec in sorted(registry.items()):
-        schema = spec.builder(spark, SF).schema
+    for name, (schema, _) in registry_plans.items():
         bad = [
             f.name
             for f in schema.fields
@@ -342,7 +350,6 @@ def test_registry_output_schemas_are_flat(spark, registry):
         ]
         if bad:
             offenders.append((name, bad))
-        spark.catalog.clearCache()
     assert offenders == [], f"complex-typed output columns in: {offenders}"
 
 
@@ -486,19 +493,14 @@ def _shingle_joins(plan: str) -> tuple[list[str], bool]:
     return hits, has_anti
 
 
-def test_shingle_joins_capped_or_documented(spark, registry):
-    from cars_bids_data_pipeline_v0__spark.cache import release_build_caches
-
+def test_shingle_joins_capped_or_documented(registry_plans):
     offenders = []
-    for name, spec in sorted(registry.items()):
-        plan = plan_of(spec.builder(spark, SF))
+    for name, (_, plan) in registry_plans.items():
         hits, has_anti = _shingle_joins(plan)
         if hits and not has_anti and name not in (
             _DOCUMENTED_UNCAPPED_SHINGLE_JOINS
         ):
             offenders.append((name, hits[0]))
-        spark.catalog.clearCache()
-        release_build_caches()
     assert offenders == [], (
         "shingle-keyed join without a df-cap scrub (broadcast LeftAnti "
         "against the hot set) and not documented in "

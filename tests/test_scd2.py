@@ -248,7 +248,7 @@ def test_upsert_and_insert_if_absent_deterministic_dupes(spark):
     nondeterministic dropDuplicates)."""
     from cars_bids_data_pipeline_v0__spark.operators.merge import (
         insert_if_absent,
-        upsert_overwrite,
+        merge_into,
     )
 
     existing = spark.createDataFrame(
@@ -265,7 +265,7 @@ def test_upsert_and_insert_if_absent_deterministic_dupes(spark):
         assert ins[2]["name"] == "a" and ins[2]["amount"] == 5.0
         assert ins[3]["amount"] == 3.0
 
-        up = {r["k"]: r for r in upsert_overwrite(existing, batch, ["k"]).collect()}
+        up = {r["k"]: r for r in merge_into(existing, batch, ["k"]).collect()}
         assert set(up) == {1, 2, 3}
         assert up[1]["name"] == "old"
         assert up[2]["name"] == "a" and up[2]["amount"] == 5.0

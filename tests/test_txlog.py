@@ -13,11 +13,9 @@ from pyspark.sql import functions as F
 
 from cars_bids_data_pipeline_v0__spark.sources.txlog import (
     TransactionLog,
-    tx_insert_if_absent,
     tx_merge_partitioned,
     tx_read,
     tx_read_latest,
-    tx_upsert,
 )
 
 
@@ -117,21 +115,6 @@ def test_tx_concurrent_merges_no_lost_update(spark, tmp_path):
     }
     assert got == expect  # nothing lost, nothing duplicated
     assert tx_read(spark, table).count() == len(expect)
-
-
-def test_tx_insert_if_absent_and_upsert(spark, tmp_path):
-    table = str(tmp_path / "dim")
-    d1 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    assert tx_insert_if_absent(spark, table, d1, ["k"]) == 2
-    # re-insert same keys + one new → only the new row lands
-    d2 = spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string")
-    assert tx_insert_if_absent(spark, table, d2, ["k"]) == 1
-    rows = {r["k"]: r["v"] for r in tx_read(spark, table).collect()}
-    assert rows == {1: "a", 2: "b", 3: "c"}  # k=2 untouched (DO NOTHING)
-
-    tx_upsert(spark, table, d2, ["k"])
-    rows = {r["k"]: r["v"] for r in tx_read(spark, table).collect()}
-    assert rows == {1: "a", 2: "B", 3: "c"}  # k=2 updated now
 
 
 def test_tx_vacuum_reaps_orphans_keeps_history(spark, tmp_path):
@@ -1365,7 +1348,7 @@ def test_tx_changes_upsert_emits_delete_insert_pair(spark, tmp_path):
     from cars_bids_data_pipeline_v0__spark.sources.txlog import (
         TransactionLog,
         tx_changes,
-        tx_upsert,
+        tx_merge_into,
     )
 
     t = str(tmp_path / "tbl")
@@ -1375,10 +1358,10 @@ def test_tx_changes_upsert_emits_delete_insert_pair(spark, tmp_path):
     log = TransactionLog(t)
     adds = log.stage_dataframe(base)
     assert log.try_commit(0, adds, [], op="append")
-    tx_upsert(
+    tx_merge_into(
         spark, t,
         spark.createDataFrame([(1, "new")], "id long, s string"),
-        key=["id"],
+        on=["id"], when_matched_update={"s": "s.s"},
     )
     ch = tx_changes(spark, t, since=0)
     got = sorted((r["id"], r["s"], r["_change_type"]) for r in ch.collect())
@@ -1408,8 +1391,8 @@ def test_tx_constraints_enforced_on_every_write_path(spark, tmp_path):
         TransactionLog,
         tx_append_partitioned,
         tx_read,
+        tx_merge_into,
         tx_set_constraint,
-        tx_upsert,
     )
 
     t = str(tmp_path / "tbl")
@@ -1442,10 +1425,10 @@ def test_tx_constraints_enforced_on_every_write_path(spark, tmp_path):
         )
     # upsert path enforces too
     with pytest.raises(ConstraintViolation):
-        tx_upsert(
+        tx_merge_into(
             spark, t,
             spark.createDataFrame([(-5, "z", 0)], "id long, s string, p int"),
-            key=["id"],
+            on=["id"], when_matched_update={"s": "s.s"},
         )
     # compliant writes pass
     tx_append_partitioned(spark, _cdf_mk(spark, 5, 7), t, partition_by="p")
@@ -2642,6 +2625,39 @@ def test_torn_commit_reported_not_raised(tmp_path):
     with pytest.raises(ValueError, match=torn) as exc:
         log.live_files()
     assert not isinstance(exc.value, json.JSONDecodeError)
+
+
+def test_torn_checkpoint_sidecar_reported_count_unchanged(tmp_path):
+    """A checkpoint whose sidecar is torn is demoted by every reader; fsck
+    names its version under ``torn_checkpoints`` without flipping ``ok``
+    (the data stays correct), and the count does not move."""
+    from cars_bids_data_pipeline_v0__spark.sources import txlog as TX
+    from cars_bids_data_pipeline_v0__spark.sources.txlog import (
+        tx_count,
+        tx_fsck,
+    )
+
+    from .fixtures import arrow_append
+
+    t = str(tmp_path / "tbl")
+    log = TransactionLog(t)
+    arrow_append(log, [1, 2, 3])
+    arrow_append(log, [4, 5])
+    assert log.checkpoint() == 1
+    arrow_append(log, [6])
+    assert tx_count(t) == 6
+    rep = tx_fsck(t)
+    assert rep["torn_checkpoints"] == [] and rep["ok"]
+
+    body = TX._load_checkpoint_cached(log._checkpoint_path(1))
+    with open(os.path.join(log.log_dir, body["live_parquet"]), "w") as fh:
+        fh.write("not parquet")
+    TX._CHECKPOINT_BODY_CACHE.clear()
+    TX._SNAPSHOT_CACHE.clear()
+    rep = tx_fsck(t)
+    assert rep["torn_checkpoints"] == [1]
+    assert rep["ok"] is True
+    assert tx_count(t) == 6
 
 
 _CRASH_CHILD = """
