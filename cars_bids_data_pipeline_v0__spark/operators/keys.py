@@ -4,8 +4,8 @@ Reference: Postgres ``SERIAL`` ids referenced as ``sd.id``, ``vmd.id``, etc.
 (update_dims.sql:80,108,128-130).
 
 Spark-first: dense ids from a deterministic total order of the *new* rows,
-offset by the existing max (the caller's ``start_at``; the gold tables
-read it from their commit log's zone maps) — NOT
+offset by the existing max (the caller's ``start_at``; commit-log tables
+read it from their zone maps) — NOT
 ``monotonically_increasing_id`` (partition-dependent, non-reproducible;
 SURVEY §7 risk 8).
 

@@ -5,8 +5,8 @@ fact (update_dims.sql:8-114, 185-223) and ``DO UPDATE SET`` for vehicle_dim
 (update_dims.sql:122-177).
 
 Spark-first: each statement is DataFrame set algebra, and the commit log
-(`sources.txlog`) makes it atomic — the gold star schema commits
-``insert_if_absent``'s rows adds-only and runs the vehicle upsert on
+(`sources.txlog`) makes it atomic — the gold star schema commits the
+fact's ``insert_if_absent`` rows adds-only and runs the vehicle upsert on
 `tx_merge_into`'s core, so no single-writer assumption remains:
 
 * M1/M3 insert-if-absent  →  ``new ⟕anti existing``  then append.

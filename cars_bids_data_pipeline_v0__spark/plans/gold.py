@@ -5,18 +5,22 @@ Postgres (update_dims.sql:1-223; order list load_lambda/main.py:16-28):
 8 insert-if-absent dimension loads, 1 vehicle upsert, 1 fact insert-ignore.
 
 Spark-first: every gold table is a commit-log table (`sources.txlog`) — the
-paper's "Delta tables + MERGE INTO".  The 8 dimension loads, the model
-dimension and the fact share one insert-if-absent writer (`_insert_new`)
-that commits adds only; the vehicle upsert is a MERGE that rewrites only
-the files holding the batch's keys.  Surrogate keys come from
-``row_number`` over the new-rows slice offset by the largest id the pinned
-snapshot's zone maps record (M4) — a metadata read, no Spark job — and a
-commit conflict rebuilds from the new snapshot, so no id is minted twice.
-Every statement is idempotent, so re-running a batch after a crash
-converges on the uninterrupted result.  All dimension joins are broadcast
-(dims are tiny relative to the fact); the OR-predicate state join (J1)
-stays a broadcast nested-loop join — correct and cheap at 51 rows —
-mirroring Postgres' plan.
+paper's "Delta tables + MERGE INTO".  The nine small dimensions (6 enum
+dims, city, make, model) are bounded-cardinality (SURVEY §2.3), so their
+set algebra runs on the driver: ONE Spark pass over the batch collects
+every dimension's distinct normalized candidate keys, then each dimension
+is one adds-only commit whose attempt reads its pinned snapshot with
+pyarrow, keeps the absent keys, mints ids and stages one parquet file —
+no Spark job.  Surrogate keys follow ``with_surrogate_key``'s order
+(ascending, NULLs last) offset by the largest id the snapshot's zone maps
+record (M4), and a commit conflict rebuilds from the new snapshot, so no
+id is minted twice.  The vehicle upsert is a MERGE that rewrites only the
+files holding the batch's keys and the fact is an insert-if-absent
+anti-join: both scale with the batch and stay distributed.  Every
+statement is idempotent, so re-running a batch after a crash converges on
+the uninterrupted result.  All dimension joins broadcast driver-local
+relations; the OR-predicate state join (J1) resolves on the driver against
+the seeded state rows.
 """
 
 from __future__ import annotations
@@ -27,11 +31,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalar import norm_key_lower, norm_key_upper
-from ..operators.keys import with_surrogate_key
 from ..operators.merge import insert_if_absent
 
-# sources.txlog is imported inside each function: loading the query
-# registry imports this package, and compiling txlog costs ~0.1 s there
+# pyarrow and sources.txlog are imported inside each function: loading
+# the query registry imports this package, and compiling txlog costs
+# ~0.1 s there
 
 
 class GoldStore:
@@ -54,17 +58,15 @@ class GoldStore:
 
 
 def _insert_new(
-    store: GoldStore, name: str, new_rows: DataFrame, key: list[str],
-    id_col: str | None = "id",
+    store: GoldStore, name: str, new_rows: DataFrame, key: list[str]
 ) -> DataFrame:
-    """M1/M3 (+ M4 with ``id_col``) — ``INSERT … ON CONFLICT (key) DO
-    NOTHING`` as one commit that adds files and removes none; returns
-    the table as committed.
+    """M3 — ``INSERT … ON CONFLICT (key) DO NOTHING`` for a batch-scaled
+    table, as one commit that adds files and removes none; returns the
+    table as committed.
 
-    Each attempt anti-joins against the snapshot it pins and mints ids
-    from that snapshot's largest ``id_col`` zone max.  The table's first
-    commit keeps an empty file (it fixes the schema); a later batch with
-    nothing new commits nothing and returns the snapshot it read."""
+    Each attempt anti-joins against the snapshot it pins.  The table's
+    first commit keeps an empty file (it fixes the schema); a later batch
+    with nothing new commits nothing and returns the snapshot it read."""
     from ..sources.txlog import CommitProposal, TransactionLog, tx_read
 
     log = TransactionLog(store.path(name))
@@ -73,21 +75,7 @@ def _insert_new(
         existing = None
         if v >= 0:
             existing = tx_read(store.spark, log.path, version=v)
-        fresh = insert_if_absent(existing, new_rows, key)
-        if id_col is not None:
-            top = log.live_actions(upto=v).zone_max(id_col)
-            fresh = with_surrogate_key(
-                fresh,
-                order_by=key,
-                id_col=id_col,
-                start_at=(top or 0) + 1,
-                # the source's distinct() shuffle sits below (dims are
-                # bounded-cardinality, SURVEY §2.3)
-                num_partitions=1,
-            ).select(id_col, *new_rows.columns)
-        adds = log.stage_dataframe(
-            fresh, stats_cols=[id_col] if id_col else None
-        )
+        adds = log.stage_dataframe(insert_if_absent(existing, new_rows, key))
         if v >= 0:
             log.discard([a for a in adds if not a["rows"]])
             adds = [a for a in adds if a["rows"]]
@@ -97,6 +85,102 @@ def _insert_new(
     if unchanged is not None:
         return unchanged
     return tx_read(store.spark, log.path)
+
+
+def _plain(log, v: int) -> bool:
+    """True when version ``v``'s files hold its rows under their own
+    names and types: no deletion vectors, column mapping, declared
+    columns or widening — `tx_read`'s plain branch."""
+    return not (
+        any(log.column_mapping(upto=v)) or log.dvs(upto=v)
+        or log.schema_addenda(upto=v) or log.type_widening(upto=v)
+    )
+
+
+def _snapshot_arrow(spark: SparkSession, log, v: int):
+    """Version ``v`` of a small table as one Arrow table: pyarrow over
+    the live files of a plain snapshot — no Spark job — else through
+    `tx_read`, so the rows are exactly its rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ..sources.txlog import tx_read
+
+    files = sorted(log.live_files(upto=v))
+    if not files or not _plain(log, v):
+        return tx_read(spark, log.path, version=v).toArrow()
+    return pa.concat_tables(
+        pq.read_table(os.path.join(log.path, f)).replace_schema_metadata(None)
+        for f in files
+    )
+
+
+def _local_frame(spark: SparkSession, table) -> DataFrame:
+    """``table`` as a driver-local relation.  Combined into one chunk
+    first: Spark's Arrow reader stops at an empty record batch, dropping
+    the rows of every chunk after it, and a data file with no rows reads
+    as an empty chunk."""
+    return spark.createDataFrame(table.combine_chunks())
+
+
+def _nulls_last(key: tuple) -> tuple:
+    # ascending with NULLs last per column, as `with_surrogate_key`
+    # sorts; Python's str order is code-point order, which is Spark's
+    # UTF-8 byte order
+    return tuple((x is None, x) for x in key)
+
+
+def _insert_keys(
+    store: GoldStore, name: str, schema, keys: set[tuple]
+):
+    """M1 + M4 for a bounded dimension — insert the candidate ``keys``
+    (tuples over ``schema``'s non-id columns) absent from the table, as
+    one adds-only commit; returns the committed table as Arrow.
+
+    The set algebra is SQL's: a key with a NULL component matches
+    nothing, so it is inserted again, as the ``left_anti`` join would.
+    Fresh keys get ids ``1 + zone max`` upward in key order.  The first
+    commit keeps an empty file (it fixes the schema); a later batch with
+    nothing new commits nothing.  An attempt on a plain snapshot
+    (`_plain`) runs no Spark job."""
+    import pyarrow as pa
+
+    from ..sources.txlog import CommitProposal, TransactionLog
+
+    log = TransactionLog(store.path(name))
+    cols = schema.names[1:]
+
+    def build(v: int):
+        have, seen = None, set()
+        if v >= 0:
+            have = _snapshot_arrow(store.spark, log, v).select(schema.names)
+            seen = set(zip(*(have.column(c).to_pylist() for c in cols)))
+        fresh = sorted(
+            (k for k in keys if None in k or k not in seen), key=_nulls_last
+        )
+        if have is not None and not fresh:
+            return have
+        target = schema if have is None else have.schema
+        top = log.live_actions(upto=v).zone_max("id") if v >= 0 else None
+        start = (top or 0) + 1
+        new = pa.table(
+            [pa.array(range(start, start + len(fresh)), target.field(0).type)]
+            + [
+                pa.array([k[i] for k in fresh], target.field(i + 1).type)
+                for i in range(len(cols))
+            ],
+            schema=target,
+        )
+        if v < 0 or _plain(log, v):
+            adds = log._stage_arrow(new, stats_cols=["id"])
+        else:  # logical names and declared types: the general writer maps them
+            adds = log.stage_dataframe(
+                _local_frame(store.spark, new), stats_cols=["id"]
+            )
+        result = new if have is None else pa.concat_tables([have, new])
+        return CommitProposal(adds, [], result=result)
+
+    return log.run_optimistic("insert_if_absent", build)
 
 
 def _upsert_vehicles(store: GoldStore, src: DataFrame) -> DataFrame:
@@ -142,22 +226,59 @@ def seed_state_dim(store: GoldStore, states: DataFrame) -> None:
     ))
 
 
+def _dimension_keys(staging: DataFrame) -> dict[str, set[tuple]]:
+    """One Spark pass over ``staging``: the distinct normalized candidate
+    keys of the nine bounded dimensions, ``{dim: {(k1, k2), …}}``.  ``k2``
+    is None for the single-column keys, the raw ``title_state`` for
+    ``city_dim`` (resolved against the state rows on the driver) and the
+    trimmed make for ``vehicle_model_dim`` (resolved to make ids).  Rows
+    whose ``k1`` is NULL are dropped, as each statement's ``IS NOT NULL``
+    filter does; the normalizations stay Spark expressions, so the string
+    semantics are Spark's."""
+    none = F.lit(None).cast("string")
+    exprs = {
+        # 6 enum dims update_dims.sql:8-69, city :79-86, make :95-101,
+        # model :104-114
+        "auction_status_dim": (norm_key_lower("auction_status"), none),
+        "reserve_status_dim": (norm_key_lower("reserve_status"), none),
+        "body_style_dim": (norm_key_lower("body_style"), none),
+        "seller_type_dim": (norm_key_lower("seller_type"), none),
+        "drivetrain_dim": (norm_key_upper("drivetrain"), none),
+        "transmission_dim": (norm_key_lower("transmission_type"), none),
+        "vehicle_make_dim": (F.trim(F.col("make")), none),
+        "city_dim": (F.trim(F.col("city")), F.col("title_state")),
+        "vehicle_model_dim": (F.trim(F.col("model")), F.trim(F.col("make"))),
+    }
+    rows = (
+        staging.select(F.inline(F.array(*[
+            F.struct(F.lit(d).alias("d"), k1.alias("k1"), k2.alias("k2"))
+            for d, (k1, k2) in exprs.items()
+        ])))
+        .filter(F.col("k1").isNotNull())
+        .distinct()
+        .collect()
+    )
+    keys: dict[str, set[tuple]] = {d: set() for d in exprs}
+    for d, k1, k2 in rows:
+        keys[d].add((k1, k2))
+    return keys
+
+
 def build_star_schema(store: GoldStore, staging: DataFrame) -> dict[str, DataFrame]:
     """M6 — run the 11 merges respecting the reference's dependency order
     (load_lambda/main.py:16-28).  ``staging`` is a silver frame.
 
-    The reference executes all 11 statements sequentially; the only REAL
-    dependencies are make→model→vehicle→fact and {enum dims, city}→fact.
-    The 8 independent merges (6 enum dims, city, make) run as concurrent
-    Spark jobs from a thread pool — on a cluster each is a small job, and
-    concurrent submission overlaps their scheduling + IO instead of
-    serializing 8 round-trips.  The staging cache is materialized ONCE
-    before the fan-out so the parallel jobs read the cache rather than
-    racing to compute it.
+    The only REAL dependencies are make→model→vehicle→fact and {enum
+    dims, city}→fact.  One Spark pass collects the nine small
+    dimensions' candidate keys; their commits then run one after another
+    on the driver, with no Spark job each.  The returned dimension frames
+    are driver-local relations of the committed rows, so the vehicle
+    MERGE and the fact broadcast them without scanning a file; the
+    vehicle and fact frames read their committed snapshots.
     """
     from ..session import size_coalesced_shuffle
 
-    # Every statement below is window/anti-join/write-shaped with tiny
+    # The key pass, the vehicle MERGE and the fact anti-join have tiny
     # (dimension-sized) or batch-sized shuffles; size-first AQE coalescing
     # collapses their no-op post-shuffle tasks (round-13 optimization pass
     # — see size_coalesced_shuffle's docstring for the measurement and the
@@ -173,98 +294,67 @@ def build_star_schema(store: GoldStore, staging: DataFrame) -> dict[str, DataFra
 def _build_star_schema_inner(
     store: GoldStore, staging: DataFrame
 ) -> dict[str, DataFrame]:
-    from concurrent.futures import ThreadPoolExecutor
+    import pyarrow as pa
 
-    staging.count()  # materialize before concurrent consumers
-    dims: dict[str, DataFrame] = {}
+    from ..sources.txlog import TransactionLog
 
-    def distinct_notnull(expr: F.Column, alias: str) -> DataFrame:
-        return (
-            staging.filter(expr.isNotNull())
-            .select(expr.alias(alias))
-            .distinct()
-        )
-
-    # city_dim source: J1 OR-predicate state join (update_dims.sql:79-86)
-    state_dim = store.read("state_dim")
-    if state_dim is None:
+    state_log = TransactionLog(store.path("state_dim"))
+    v = state_log.version()
+    if v < 0:
         raise ValueError("state_dim must be seeded first (seed_state_dim)")
-    city_src = (
-        staging.filter(F.col("city").isNotNull())
-        .join(
-            F.broadcast(
-                state_dim.select(
-                    F.col("id").alias("state_id"),
-                    F.col("state").alias("__sd_state"),
-                    F.col("state_abbr").alias("__sd_abbr"),
-                )
-            ),
-            (F.col("title_state") == F.col("__sd_abbr"))
-            | (F.col("title_state") == F.col("__sd_state")),
-            "left",
+    states = _snapshot_arrow(store.spark, state_log, v)
+    keys = _dimension_keys(staging)
+
+    def dim_schema(*cols):
+        return pa.schema([("id", pa.int64()), *cols])
+
+    tables = {}
+    for name, col in (
+        ("auction_status_dim", "status"), ("reserve_status_dim", "status"),
+        ("body_style_dim", "body_style"), ("seller_type_dim", "seller_type"),
+        ("drivetrain_dim", "drivetrain"),
+        ("transmission_dim", "transmission"), ("vehicle_make_dim", "make"),
+    ):
+        tables[name] = _insert_keys(
+            store, name, dim_schema((col, pa.string())),
+            {(k1,) for k1, _ in keys[name]},
         )
-        .select(F.trim(F.col("city")).alias("city_name"), "state_id")
-        .distinct()
+
+    # city: J1 OR-predicate state join (update_dims.sql:79-86) — a city
+    # whose title_state matches no state keeps a NULL state_id
+    state_rows = list(zip(*(
+        states.column(c).to_pylist() for c in ("id", "state", "state_abbr")
+    )))
+    cities = set()
+    for city, ts in keys["city_dim"]:
+        ids = [i for i, st, ab in state_rows if ts is not None and ts in (ab, st)]
+        cities.update((city, i) for i in ids or [None])
+    tables["city_dim"] = _insert_keys(
+        store, "city_dim",
+        dim_schema(("city_name", pa.string()),
+                   ("state_id", states.schema.field("id").type)),
+        cities,
     )
 
-    # -- phase 1: the 8 independent merges, concurrent ---------------------
-    # (6 enum dims update_dims.sql:8-69, city :79-86, make :95-101)
-    phase1: dict[str, tuple[DataFrame, list[str]]] = {
-        "auction_status_dim": (
-            distinct_notnull(norm_key_lower("auction_status"), "status"),
-            ["status"],
-        ),
-        "reserve_status_dim": (
-            distinct_notnull(norm_key_lower("reserve_status"), "status"),
-            ["status"],
-        ),
-        "body_style_dim": (
-            distinct_notnull(norm_key_lower("body_style"), "body_style"),
-            ["body_style"],
-        ),
-        "seller_type_dim": (
-            distinct_notnull(norm_key_lower("seller_type"), "seller_type"),
-            ["seller_type"],
-        ),
-        "drivetrain_dim": (
-            distinct_notnull(norm_key_upper("drivetrain"), "drivetrain"),
-            ["drivetrain"],
-        ),
-        "transmission_dim": (
-            distinct_notnull(norm_key_lower("transmission_type"), "transmission"),
-            ["transmission"],
-        ),
-        "city_dim": (city_src, ["city_name", "state_id"]),
-        "vehicle_make_dim": (
-            distinct_notnull(F.trim(F.col("make")), "make"), ["make"],
-        ),
-    }
-    with ThreadPoolExecutor(max_workers=len(phase1)) as ex:
-        futures = {
-            name: ex.submit(_insert_new, store, name, src, key)
-            for name, (src, key) in phase1.items()
-        }
-        for name, fut in futures.items():
-            dims[name] = fut.result()
+    # model: composite key referencing the committed make ids
+    # (update_dims.sql:104-114); a NULL or unknown make keeps a NULL make_id
+    make = tables["vehicle_make_dim"]
+    make_ids: dict[str, list] = {}
+    for i, mk in zip(make.column("id").to_pylist(),
+                     make.column("make").to_pylist()):
+        if mk is not None:  # Spark's trim() strips spaces only
+            make_ids.setdefault(mk.strip(" "), []).append(i)
+    tables["vehicle_model_dim"] = _insert_keys(
+        store, "vehicle_model_dim",
+        dim_schema(("model", pa.string()),
+                   ("make_id", make.schema.field("id").type)),
+        {(m, i) for m, mk in keys["vehicle_model_dim"]
+         for i in make_ids.get(mk, [None])},
+    )
 
-    # -- model (composite key referencing make ids; update_dims.sql:104-114)
-    model_src = (
-        staging.filter(F.col("model").isNotNull())
-        .join(
-            F.broadcast(
-                dims["vehicle_make_dim"].select(
-                    F.col("id").alias("make_id"), F.trim(F.col("make")).alias("__mk")
-                )
-            ),
-            F.trim(F.col("make")) == F.col("__mk"),
-            "left",
-        )
-        .select(F.trim(F.col("model")).alias("model"), "make_id")
-        .distinct()
-    )
-    dims["vehicle_model_dim"] = _insert_new(
-        store, "vehicle_model_dim", model_src, ["model", "make_id"]
-    )
+    spark = store.spark
+    dims = {name: _local_frame(spark, t) for name, t in tables.items()}
+    state_dim = _local_frame(spark, states)
 
     # -- vehicle_dim upsert (M2; update_dims.sql:122-177) -------------------
     vehicle_src = (
@@ -420,7 +510,7 @@ def _build_star_schema_inner(
         )
     )
     dims["auction_fact"] = _insert_new(
-        store, "auction_fact", fact_src, ["auction_id"], id_col=None
+        store, "auction_fact", fact_src, ["auction_id"]
     )
 
     return dims

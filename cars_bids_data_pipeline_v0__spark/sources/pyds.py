@@ -54,7 +54,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from .txlog import TransactionLog
+from .txlog import TransactionLog, _table_schema
 
 FORMAT_NAME = "txlog"
 
@@ -62,57 +62,6 @@ FORMAT_NAME = "txlog"
 def register_txlog_source(spark) -> None:
     """Make ``format("txlog")`` resolvable in this session."""
     spark.dataSource.register(TxLogDataSource)
-
-
-def _table_schema(table_path: str, version: int | None) -> StructType:
-    """Exact Spark schema from a live file's footer — prefers the
-    row metadata Spark embeds there (`tx_export_delta_log` discipline:
-    the Arrow footer view cannot carry timestamp vs timestamp_ntz)."""
-    import json
-
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    log = TransactionLog(table_path)
-    if log.version() < 0:
-        raise ValueError(f"no committed txlog table at {table_path}")
-    files = sorted(log.live_files(upto=version))
-    if not files:
-        files = sorted(
-            a["path"]
-            for act in log.actions(version)
-            for a in act.get("add", [])
-        )
-    if not files:
-        raise ValueError(f"txlog table at {table_path} has no schema source")
-    arrow = pq.read_schema(os.path.join(table_path, files[0]))
-    meta = arrow.metadata or {}
-    key = b"org.apache.spark.sql.parquet.row.metadata"
-    if key in meta:
-        schema = StructType.fromJson(json.loads(meta[key]))
-    else:
-        schema = from_arrow_schema(arrow)
-    # relax to nullable recursively — Spark's own parquet reader always
-    # reports file-sourced schemas nullable (a REQUIRED footer field,
-    # e.g. from lit(1), must not leak non-nullability into the source)
-    return _as_nullable(schema)
-
-
-def _as_nullable(dt):
-    from pyspark.sql import types as T
-
-    if isinstance(dt, T.StructType):
-        return T.StructType(
-            [
-                T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
-                for f in dt.fields
-            ]
-        )
-    if isinstance(dt, T.ArrayType):
-        return T.ArrayType(_as_nullable(dt.elementType), True)
-    if isinstance(dt, T.MapType):
-        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
-    return dt
 
 
 def _hive_unescape(s: str) -> str | None:

@@ -1892,45 +1892,82 @@ class TransactionLog:
                 for name in files:
                     if not name.endswith(".parquet"):
                         continue
-                    unique = f"{uuid.uuid4().hex}.parquet"
-                    src = os.path.join(root, name)
-                    action = {
-                        "path": f"{_DATA_DIR}/{unique}",
-                        "partition": part,
-                        # size rides in the action so layout policy
-                        # (auto-OPTIMIZE) needs no filesystem listing
-                        "bytes": os.path.getsize(src),
-                    }
-                    if partition_by is not None:
-                        # WHICH column this file's layout keys on — the
-                        # partition-evolution contract: a later spec
-                        # change must never let a reader prune this
-                        # file against the wrong column's values
-                        action["partition_col"] = partition_by
-                    # the file's PHYSICAL schema ({footer column name:
-                    # pyarrow type string}) and row count, recorded at
-                    # stage time so ALTERed-table reads
-                    # (_group_files_by_schema_sig), DESCRIBE HISTORY,
-                    # and row-tracking id accounting all work from log
-                    # metadata alone — one local footer read per file
-                    # at WRITE time buys zero driver-side footer I/O on
-                    # every later read
-                    cols, n_rows = _footer_meta(src, memo=False)
-                    action["cols"] = cols
-                    action["rows"] = n_rows
-                    if stats_cols:
-                        stats = _footer_stats(src, stats_cols)
-                        if stats:
-                            action["stats"] = stats
+                    action = self._publish_staged(
+                        os.path.join(root, name), part, partition_by,
+                        stats_cols,
+                    )
                     if bloom_cols:
                         action["bloom"] = _file_blooms(
-                            src, bloom_cols, bloom_bits, bloom_hashes
+                            os.path.join(self.path, action["path"]),
+                            bloom_cols, bloom_bits, bloom_hashes,
                         )
-                    os.rename(src, os.path.join(self.data_dir, unique))
                     adds.append(action)
             return adds
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
+
+    def _stage_arrow(
+        self, table, stats_cols: list[str] | None = None
+    ) -> list[dict]:
+        """`stage_dataframe` for a driver-side Arrow table (physical
+        column names, no declared widening): one parquet file whose
+        footer carries Spark's row metadata, so it reads back exactly
+        like a Spark-written file — no Spark job."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        os.makedirs(self.data_dir, exist_ok=True)
+        tmp = os.path.join(self.path, f"_staged-{uuid.uuid4().hex}")
+        try:
+            os.makedirs(tmp)
+            src = os.path.join(tmp, "part-00000.parquet")
+            row_meta = _as_nullable(from_arrow_schema(table.schema)).json()
+            pq.write_table(
+                table.replace_schema_metadata({_SPARK_ROW_META: row_meta}),
+                src, store_schema=False,
+            )
+            return [self._publish_staged(src, stats_cols=stats_cols)]
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+    def _publish_staged(
+        self,
+        src: str,
+        part: str | None = None,
+        partition_by: str | None = None,
+        stats_cols: list[str] | None = None,
+    ) -> dict:
+        """Move one staged parquet file into ``data/`` under a unique name
+        and return its uncommitted add-action."""
+        unique = f"{uuid.uuid4().hex}.parquet"
+        action = {
+            "path": f"{_DATA_DIR}/{unique}",
+            "partition": part,
+            # size rides in the action so layout policy
+            # (auto-OPTIMIZE) needs no filesystem listing
+            "bytes": os.path.getsize(src),
+        }
+        if partition_by is not None:
+            # WHICH column this file's layout keys on — the
+            # partition-evolution contract: a later spec change must
+            # never let a reader prune this file against the wrong
+            # column's values
+            action["partition_col"] = partition_by
+        # the file's PHYSICAL schema ({footer column name: pyarrow type
+        # string}) and row count, recorded at stage time so ALTERed-table
+        # reads (_group_files_by_schema_sig), DESCRIBE HISTORY, and
+        # row-tracking id accounting all work from log metadata alone —
+        # one local footer read per file at WRITE time buys zero
+        # driver-side footer I/O on every later read
+        cols, n_rows = _footer_meta(src, memo=False)
+        action["cols"] = cols
+        action["rows"] = n_rows
+        if stats_cols:
+            stats = _footer_stats(src, stats_cols)
+            if stats:
+                action["stats"] = stats
+        os.rename(src, os.path.join(self.data_dir, unique))
+        return action
 
     def try_commit(
         self,
@@ -2301,6 +2338,67 @@ def _apply_widening(
                 logical, F.col(logical).cast(widening[phys])
             )
     return df
+
+
+#: the footer key Spark's parquet writer stores its row schema under
+_SPARK_ROW_META = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(arrow_schema) -> tuple[Any, bool]:
+    """``(StructType, exact)`` for one parquet footer's Arrow schema:
+    Spark's own row metadata when the footer carries it (``exact`` —
+    the Arrow view cannot tell timestamp from timestamp_ntz), else the
+    Arrow mapping."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructType
+
+    meta = arrow_schema.metadata or {}
+    if _SPARK_ROW_META in meta:
+        return StructType.fromJson(json.loads(meta[_SPARK_ROW_META])), True
+    return from_arrow_schema(arrow_schema), False
+
+
+def _as_nullable(dt):
+    """``dt`` with every field, element and value nullable — how Spark's
+    parquet reader reports any file-sourced schema."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _table_schema(table_path: str, version: int | None):
+    """Physical Spark schema of a snapshot: the footer of its sorted
+    first live file (the file Spark's own inference opens), or of its
+    first ever-added file when nothing is live."""
+    import pyarrow.parquet as pq
+
+    log = TransactionLog(table_path)
+    if log.version() < 0:
+        raise ValueError(f"no committed txlog table at {table_path}")
+    files = sorted(log.live_files(upto=version))
+    if not files:
+        files = sorted(
+            a["path"]
+            for act in log.actions(version)
+            for a in act.get("add", [])
+        )
+    if not files:
+        raise ValueError(f"txlog table at {table_path} has no schema source")
+    schema, _exact = _footer_schema(
+        pq.read_schema(os.path.join(table_path, files[0]))
+    )
+    return _as_nullable(schema)
 
 
 #: memoized parquet footer schemas, keyed (absolute path, mtime_ns,
@@ -4652,7 +4750,6 @@ def tx_export_delta_log(
 
     # schema from a live file's own footer — no SparkSession needed
     import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
 
     first = os.path.join(table_path, live[0])
     arrow_schema = pq.read_schema(first)
@@ -4673,20 +4770,9 @@ def tx_export_delta_log(
                     f"{live[0]} vs {rel} — the txlog Delta export requires "
                     "one uniform schema per snapshot (no schema evolution)"
                 )
-    # Prefer the exact Spark schema Spark itself embedded in the footer
-    # (``org.apache.spark.sql.parquet.row.metadata``): the Arrow view of
-    # the footer cannot distinguish timestamp (stored INT96/adjusted) from
-    # timestamp_ntz, so a from_arrow_schema round-trip would silently
-    # re-type NTZ columns.  Fall back to the Arrow mapping only for files
-    # not written by Spark.
-    from pyspark.sql.types import StructType
-
-    _SPARK_META = b"org.apache.spark.sql.parquet.row.metadata"
-    meta = arrow_schema.metadata or {}
-    if _SPARK_META in meta:
-        schema = StructType.fromJson(json.loads(meta[_SPARK_META]))
-    else:
-        schema = from_arrow_schema(arrow_schema)
+    # the exact Spark schema when Spark wrote the footer: a
+    # from_arrow_schema round-trip would silently re-type NTZ columns
+    schema, _exact = _footer_schema(arrow_schema)
     configuration: dict[str, str] = {}
     protocol = {"minReaderVersion": 1, "minWriterVersion": 2}
     if renames or dropped:
@@ -4695,7 +4781,7 @@ def tx_export_delta_log(
         # name readers must resolve in the parquet files; dropped
         # physical columns simply do not appear in the schema.  Name
         # mode requires reader 2 / writer 5.
-        from pyspark.sql.types import StructField
+        from pyspark.sql.types import StructField, StructType
 
         fields = []
         col_id = 0
@@ -5082,23 +5168,15 @@ def tx_table_schema(table_path: str) -> dict[str, str] | None:
     present — exact timestamp_ntz round-trip — else the Arrow view).
     None for an empty/absent table.  The schema source every writer-side
     check shares."""
-    import json as _json
-
     import pyarrow.parquet as _pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-    from pyspark.sql.types import StructType
 
     log = TransactionLog(table_path)
     files = sorted(log.live_files())
     if not files:
         return None
-    arrow = _pq.read_schema(os.path.join(table_path, files[0]))
-    meta = arrow.metadata or {}
-    key = b"org.apache.spark.sql.parquet.row.metadata"
-    if key in meta:
-        st = StructType.fromJson(_json.loads(meta[key]))
-    else:
-        st = from_arrow_schema(arrow)
+    st, _exact = _footer_schema(
+        _pq.read_schema(os.path.join(table_path, files[0]))
+    )
     out = {f.name: f.dataType.simpleString() for f in st.fields}
     renames, dropped = log.column_mapping()
     if renames or dropped:

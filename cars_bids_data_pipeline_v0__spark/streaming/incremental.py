@@ -479,6 +479,30 @@ def _compacted_through(partials_store: str) -> int:
     return -1
 
 
+def _swap_paths(partials_store: str) -> tuple[str, str]:
+    """The compacted copy and the set-aside old store of a swap."""
+    base = partials_store.rstrip("/")
+    return base + ".__compact__", base + ".__old__"
+
+
+def _recover_matview_store(partials_store: str) -> None:
+    """Finish a compaction that died mid-swap: a missing store takes the
+    compacted copy when it is complete (its fence marker is written
+    last), else the old store set aside; once the store is in place, a
+    leftover aside copy is removed."""
+    import os
+    import shutil
+
+    tmp, aside = _swap_paths(partials_store)
+    if not os.path.exists(partials_store):
+        if os.path.exists(os.path.join(tmp, _COMPACT_MARKER)):
+            os.rename(tmp, partials_store)
+        elif os.path.exists(aside):
+            os.rename(aside, partials_store)
+    if os.path.exists(partials_store):
+        shutil.rmtree(aside, ignore_errors=True)
+
+
 def read_matview(
     spark: SparkSession,
     partials_store: str,
@@ -493,6 +517,7 @@ def read_matview(
     :func:`compact_matview_store`)."""
     from ..operators.matview import matview_compact, matview_finalize
 
+    _recover_matview_store(partials_store)
     fence = _compacted_through(partials_store)
     parts = spark.read.parquet(partials_store)
     parts = parts.filter(
@@ -506,6 +531,9 @@ def compact_matview_store(spark: SparkSession, partials_store: str) -> None:
     partition, bounding merge-on-read cost; safe to run between stream
     triggers.  Distributed write to a temp path + directory swap — group
     cardinality is unbounded, so nothing is collected to the driver.
+    The swap sets the old store aside before renaming the compacted copy
+    in, so a crash at any point leaves a state that :func:`read_matview`
+    and the next compaction complete (``_recover_matview_store``).
 
     Replay safety: a batch whose partials landed but whose checkpoint
     commit didn't will be REPLAYED by the restarted stream after its
@@ -518,13 +546,15 @@ def compact_matview_store(spark: SparkSession, partials_store: str) -> None:
 
     from ..operators.matview import matview_compact
 
+    tmp, aside = _swap_paths(partials_store)
+    _recover_matview_store(partials_store)
+    shutil.rmtree(tmp, ignore_errors=True)  # a copy never swapped in
     prior_fence = _compacted_through(partials_store)
     hi = spark.read.parquet(partials_store).agg(
         F.max("batch_id").alias("hi")
     ).collect()[0]["hi"]
     fence = prior_fence if hi is None else max(prior_fence, int(hi))
 
-    tmp = partials_store.rstrip("/") + ".__compact__"
     parts = spark.read.parquet(partials_store)
     matview_compact(
         parts.filter(
@@ -533,8 +563,9 @@ def compact_matview_store(spark: SparkSession, partials_store: str) -> None:
     ).write.mode("overwrite").parquet(f"{tmp}/batch_id=-1")
     with open(os.path.join(tmp, _COMPACT_MARKER), "w") as f:
         f.write(str(fence))
-    shutil.rmtree(partials_store)
+    os.rename(partials_store, aside)
     os.rename(tmp, partials_store)
+    shutil.rmtree(aside)
 
 
 def session_windows_stream(

@@ -285,6 +285,151 @@ def test_gold_fact_reads_back_exactly_without_spark(spark, gold_batches):
     assert sorted(got) == sorted(want) and len(got) == 3
 
 
+def test_gold_null_dim_keys_reinserted_like_sql(spark, gold_batches, tmp_path):
+    """A city whose title_state matches no state and a model with a NULL
+    make carry a NULL key component, which matches nothing (SQL
+    equality): every build inserts them again, with the next ids.  The
+    expected rows are the SQL anti-join build's.  The dimension frames
+    handed to the vehicle MERGE and the fact joins are driver-local
+    relations, so broadcasting them scans no file."""
+    odd = (
+        gold_batches["batches"][1]
+        .withColumn("title_state", F.when(
+            F.col("auction_id") == "aaa111", "ZZ"
+        ).otherwise(F.col("title_state")))
+        .withColumn("make", F.when(
+            F.col("auction_id") == "ddd444", F.lit(None)
+        ).otherwise(F.col("make")))
+    )
+    store = _seeded_store(spark, str(tmp_path / "gold"))
+    build_star_schema(store, odd)
+    gold = build_star_schema(store, odd)
+
+    def rows(name):
+        return sorted(tuple(r) for r in store.read(name).collect())
+
+    assert rows("city_dim") == [
+        (1, "Seattle", 2), (2, "Seattle", None), (3, "Seattle", None),
+    ]
+    assert rows("vehicle_model_dim") == [
+        (1, "911", None), (2, "M3", 2), (3, "RS4", 1), (4, "911", None),
+    ]
+    assert sorted(
+        (r.auction_id, r.auction_city, r.auction_state)
+        for r in store.read("auction_fact").collect()
+    ) == [("aaa111", None, None), ("bbb222", 1, 2), ("ddd444", 1, 2)]
+    assert sorted(
+        (r.auction_id, r.vehicle_id, r.make_id, r.model_id)
+        for r in store.read("vehicle_dim").collect()
+    ) == [("aaa111", 1, 2, 2), ("bbb222", 2, 1, 3), ("ddd444", 3, None, None)]
+    for name in GOLD_TABLES[:-2]:
+        plan = gold[name]._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation", name
+
+
+def test_gold_local_frame_keeps_rows_after_an_empty_chunk(spark):
+    """A dimension read from its files can hold an empty chunk (a file
+    with no rows) between rows; its driver-local frame keeps every row."""
+    import pyarrow as pa
+
+    from cars_bids_data_pipeline_v0__spark.plans.gold import _local_frame
+
+    schema = pa.schema([("id", pa.int64()), ("state_abbr", pa.string())])
+    table = pa.concat_tables([
+        pa.table({"id": [2], "state_abbr": ["FL"]}, schema=schema),
+        schema.empty_table(),
+        pa.table({"id": [1], "state_abbr": ["WA"]}, schema=schema),
+    ])
+    got = _local_frame(spark, table).collect()
+    assert sorted(tuple(r) for r in got) == [(1, "WA"), (2, "FL")]
+
+
+def test_gold_dim_rival_commit_rebuilds_without_spark(spark, tmp_path, monkeypatch):
+    """A rival writer commits to a dimension while its build is staging:
+    the commit loses, the attempt rebuilds from the new snapshot, and
+    the new key takes the id after the rival's — no id is minted twice
+    and neither attempt runs a Spark job."""
+    import pyarrow as pa
+
+    from cars_bids_data_pipeline_v0__spark.plans import gold
+    from cars_bids_data_pipeline_v0__spark.sources.txlog import (
+        TransactionLog,
+        tx_read,
+    )
+
+    store = GoldStore(spark, str(tmp_path / "gold"))
+    schema = pa.schema([("id", pa.int64()), ("body_style", pa.string())])
+    gold._insert_keys(store, "body_style_dim", schema, {("coupe",)})
+
+    real = TransactionLog._stage_arrow
+    rival_won = []
+
+    def racing(self, table, stats_cols=None):
+        if not rival_won:
+            rival = TransactionLog(self.path)
+            adds = real(rival, pa.table(
+                {"id": [2], "body_style": ["wagon"]}, schema=schema
+            ), ["id"])
+            rival_won.append(rival.try_commit(
+                rival.version() + 1, adds, [], "insert_if_absent"
+            ))
+        return real(self, table, stats_cols)
+
+    monkeypatch.setattr(TransactionLog, "_stage_arrow", racing)
+    sc = spark.sparkContext
+    sc.setJobGroup("gold-rival", "gold-rival")
+    try:
+        gold._insert_keys(
+            store, "body_style_dim", schema, {("coupe",), ("sedan",)}
+        )
+        jobs = sc.statusTracker().getJobIdsForGroup("gold-rival")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rival_won == [True] and jobs == []
+    path = store.path("body_style_dim")
+    assert sorted(tuple(r) for r in tx_read(spark, path).collect()) == [
+        (1, "coupe"), (2, "wagon"), (3, "sedan"),
+    ]
+    assert TransactionLog(path).version() == 2
+
+
+def test_gold_dim_with_deletion_vector_reads_through_tx_read(
+    spark, gold_batches, tmp_path, monkeypatch
+):
+    """A make removed from its dimension by a deletion vector is read
+    through `tx_read` (the snapshot is not plain) and inserted again on
+    the next build with the next id, and the model dimension follows the
+    new make id — the rows the SQL anti-join build commits."""
+    from cars_bids_data_pipeline_v0__spark.sources import txlog
+
+    store = _seeded_store(spark, str(tmp_path / "gold"))
+    batch = gold_batches["batches"][1]
+    build_star_schema(store, batch)
+    make_path = store.path("vehicle_make_dim")
+    txlog.tx_delete_where(spark, make_path, "make = 'BMW'", mode="dv")
+
+    reads = []
+    real = txlog.tx_read
+
+    def spy(spark_, path, *args, **kwargs):
+        reads.append(path)
+        return real(spark_, path, *args, **kwargs)
+
+    monkeypatch.setattr(txlog, "tx_read", spy)
+    build_star_schema(store, batch)
+    monkeypatch.setattr(txlog, "tx_read", real)
+    assert make_path in reads
+    assert store.path("body_style_dim") not in reads
+
+    def rows(name):
+        return sorted(tuple(r) for r in store.read(name).collect())
+
+    assert rows("vehicle_make_dim") == [(1, "Audi"), (3, "Porsche"), (4, "BMW")]
+    assert rows("vehicle_model_dim") == [
+        (1, "911", 3), (2, "M3", 2), (3, "RS4", 1), (4, "M3", 4),
+    ]
+
+
 def test_malformed_and_empty_raw_files_do_not_fail(spark, tmp_path):
     """PERMISSIVE ingest (SURVEY §1.3): unparseable files drop out; the
     valid file's records survive untouched."""

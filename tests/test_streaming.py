@@ -496,6 +496,51 @@ def test_matview_compaction_fences_out_replayed_batches(spark, tmp_path):
     assert v2 == {"a": (2, 6.0), "b": (1, 2.0)}
 
 
+def test_matview_compaction_crash_mid_swap_recovers(spark, tmp_path, monkeypatch):
+    """A compaction killed between setting the old store aside and
+    renaming the compacted copy in leaves a store that reads back as
+    the uninterrupted one; the aside copy is removed and the next
+    compaction runs normally."""
+    import os
+
+    from cars_bids_data_pipeline_v0__spark.operators.matview import (
+        matview_partials,
+    )
+    from cars_bids_data_pipeline_v0__spark.streaming.incremental import (
+        compact_matview_store,
+        read_matview,
+    )
+
+    store = str(tmp_path / "partials")
+    for b, rows in enumerate([[("a", 1.0), ("b", 2.0)], [("a", 5.0)]]):
+        matview_partials(
+            spark.createDataFrame(rows, "g string, x double"),
+            ["g"], {"x": ("sum",)},
+        ).write.parquet(f"{store}/batch_id={b}")
+
+    def view():
+        return sorted(tuple(r) for r in read_matview(spark, store).collect())
+
+    want = view()
+    real = os.rename
+
+    def dies_after_aside(src, dst):
+        if src.endswith(".__compact__"):
+            raise OSError("killed between the two renames")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "rename", dies_after_aside)
+    with pytest.raises(OSError):
+        compact_matview_store(spark, store)
+    monkeypatch.setattr(os, "rename", real)
+    assert not os.path.exists(store)
+    assert view() == want
+    assert not os.path.exists(store + ".__old__")
+    compact_matview_store(spark, store)
+    assert view() == want
+    assert sorted(os.listdir(store)) == ["_compacted_through", "batch_id=-1"]
+
+
 def test_session_windows_stream_matches_batch(spark, tmp_path):
     from cars_bids_data_pipeline_v0__spark.sources.ingest import read_table
     from cars_bids_data_pipeline_v0__spark.streaming.incremental import (
