@@ -61,7 +61,6 @@ EXTRA_RUNS_QUERIES = [
 # corpus with a planted viral footer — its line next to q53's shows what
 # the boilerplate guard costs (and that it stays bounded).
 NON_COMPARABLE = {
-    "pipeline_e2e_txlog",
     "q211_jaccard_df_capped",
     "dml_lifecycle_lineitem",
     # sf1 mirrors (round 14): volume-bound legs copied from the sf1
@@ -80,58 +79,17 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def bench_pipeline(spark) -> float:
-    """End-to-end ETL (the reference's actual workload): 2000 raw auctions
-    in 20 mixed-vintage JSON files → variant ingest → silver transform +
-    validity split → partitioned merge sink → full star-schema build.
-    Generation is untimed; the timed span is ingest-to-gold."""
-    import shutil
-    import tempfile
-
-    from cars_bids_data_pipeline_v0__spark.plans.gold import (
-        GoldStore,
-        build_star_schema,
-        seed_state_dim,
-    )
-    from cars_bids_data_pipeline_v0__spark.plans.silver import transform_records
-    from cars_bids_data_pipeline_v0__spark.sources.ingest import (
-        read_raw_auctions,
-        read_silver_lake,
-    )
-    from cars_bids_data_pipeline_v0__spark.sources.sinks import (
-        merge_write_partitioned,
-        write_text_queue,
-    )
-    from tests.fixtures import write_raw_corpus
-
-    tmp = tempfile.mkdtemp(prefix="bench_e2e_")
-    try:
-        write_raw_corpus(f"{tmp}/raw", n=2000, files=20)
-        t0 = time.time()
-        records = read_raw_auctions(spark, f"{tmp}/raw")
-        silver, rescrape = transform_records(records)
-        merge_write_partitioned(spark, silver, f"{tmp}/lake")
-        write_text_queue(rescrape, f"{tmp}/rescrape")
-        store = GoldStore(spark, f"{tmp}/gold")
-        seed_state_dim(
-            store,
-            spark.createDataFrame(
-                [(1, "Washington", "WA"), (2, "Florida", "FL")],
-                "id long, state string, state_abbr string",
-            ),
-        )
-        gold = build_star_schema(store, read_silver_lake(spark, f"{tmp}/lake"))
-        gold["auction_fact"].write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 3)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def bench_pipeline_txlog(spark) -> float:
-    """The same ingest-to-gold ETL as ``bench_pipeline`` but through the
-    ACID commit-log sink (``tx_merge_partitioned`` + ``tx_read_latest``)
-    instead of the single-writer parquet merge — records what the
-    transactional guarantees cost next to the parquet path."""
+def bench_pipeline(spark, n: int = 2000, files: int = 20) -> float:
+    """End-to-end ETL (the reference's actual workload): ``n`` raw
+    auctions in ``files`` mixed-vintage JSON files → variant ingest →
+    silver transform + validity split → commit-log lake merge
+    (``tx_merge_partitioned``) → latest-only read (``tx_read_latest``) →
+    full star-schema build.  Generation is untimed; the timed span is
+    ingest-to-gold.  The headline leg runs 2k auctions / 20 files; the
+    sf1 section runs 10× that (20k / 100), which with the 2k run gives
+    the measured scaling curve of the reference-parity workload (the
+    job-count floor amortizes and the data-proportional part is
+    linear)."""
     import shutil
     import tempfile
 
@@ -149,9 +107,9 @@ def bench_pipeline_txlog(spark) -> float:
     )
     from tests.fixtures import write_raw_corpus
 
-    tmp = tempfile.mkdtemp(prefix="bench_e2e_tx_")
+    tmp = tempfile.mkdtemp(prefix="bench_e2e_")
     try:
-        write_raw_corpus(f"{tmp}/raw", n=2000, files=20)
+        write_raw_corpus(f"{tmp}/raw", n=n, files=files)
         t0 = time.time()
         records = read_raw_auctions(spark, f"{tmp}/raw")
         silver, rescrape = transform_records(records)
@@ -456,54 +414,6 @@ def sweep_sf5(spark) -> dict:
     }
 
 
-def bench_pipeline_10x(spark) -> float:
-    """The e2e ETL at 10× the headline corpus (20k auctions / 100 files)
-    — recorded in the sf1 section.  With the 2k run's ~7.5 s this gives
-    the measured scaling curve of the reference-parity workload itself
-    (observed ~3×/10× on local[32]: the job-count floor amortizes and
-    the data-proportional part is linear)."""
-    import shutil
-    import tempfile
-
-    from cars_bids_data_pipeline_v0__spark.plans.gold import (
-        GoldStore,
-        build_star_schema,
-        seed_state_dim,
-    )
-    from cars_bids_data_pipeline_v0__spark.plans.silver import transform_records
-    from cars_bids_data_pipeline_v0__spark.sources.ingest import (
-        read_raw_auctions,
-        read_silver_lake,
-    )
-    from cars_bids_data_pipeline_v0__spark.sources.sinks import (
-        merge_write_partitioned,
-        write_text_queue,
-    )
-    from tests.fixtures import write_raw_corpus
-
-    tmp = tempfile.mkdtemp(prefix="bench_e2e10x_")
-    try:
-        write_raw_corpus(f"{tmp}/raw", n=20000, files=100)
-        t0 = time.time()
-        records = read_raw_auctions(spark, f"{tmp}/raw")
-        silver, rescrape = transform_records(records)
-        merge_write_partitioned(spark, silver, f"{tmp}/lake")
-        write_text_queue(rescrape, f"{tmp}/rescrape")
-        store = GoldStore(spark, f"{tmp}/gold")
-        seed_state_dim(
-            store,
-            spark.createDataFrame(
-                [(1, "Washington", "WA"), (2, "Florida", "FL")],
-                "id long, state string, state_abbr string",
-            ),
-        )
-        gold = build_star_schema(store, read_silver_lake(spark, f"{tmp}/lake"))
-        gold["auction_fact"].write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 3)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def sweep_sf1(spark) -> dict:
     from cars_bids_data_pipeline_v0__spark.cache import release_build_caches
     from cars_bids_data_pipeline_v0__spark.plans import queries as Q
@@ -533,7 +443,7 @@ def sweep_sf1(spark) -> dict:
     # with no way to tell contention from regression (VERDICT r8
     # "what's wrong" #1)
     out["pipeline_e2e_20k_auctions"] = min(
-        bench_pipeline_10x(spark) for _ in range(2)
+        bench_pipeline(spark, n=20000, files=100) for _ in range(2)
     )
     out["dml_lifecycle_lineitem"] = bench_dml_lifecycle_10x(spark)
     out["corpus_release_50k_docs"] = bench_corpus_release(spark)
@@ -810,14 +720,12 @@ def main() -> None:
     # moves the timed samples off the cliff; the n=5 median (below)
     # handles the rest of the slope.
     bench_pipeline(spark)
-    bench_pipeline_txlog(spark)
     bench_dml_lifecycle(spark)
 
     import statistics
 
     samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
     samples["pipeline_e2e_2k_auctions"] = []
-    samples["pipeline_e2e_txlog"] = []
     samples["dml_lifecycle_lineitem"] = []
     # interleave whole passes (not per-query repeats) so a transient system
     # load spike degrades one PASS, which the median then discards
@@ -833,7 +741,6 @@ def main() -> None:
             release_build_caches()
             spark.catalog.clearCache()
         samples["pipeline_e2e_2k_auctions"].append(bench_pipeline(spark))
-        samples["pipeline_e2e_txlog"].append(bench_pipeline_txlog(spark))
         samples["dml_lifecycle_lineitem"].append(bench_dml_lifecycle(spark))
     # q53/q56 showed ±15% run-to-run spread at n=3 (round-4 creep was
     # indistinguishable from jitter); two extra samples → median over 5.
@@ -915,9 +822,7 @@ def main() -> None:
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     # headline value = the SAME query set rounds 1-3 totalled, so the
-    # cross-round/baseline ratio stays apples-to-apples; the ACID-path
-    # entry (added per round-3 directive 6) is recorded per-query above
-    # and compared against pipeline_e2e_2k_auctions, not the baseline
+    # cross-round/baseline ratio stays apples-to-apples
     comparable = sum(
         v for k, v in timings.items() if k not in NON_COMPARABLE
     )

@@ -36,8 +36,10 @@ def hll_partials(
     """Per-bucket HLL sketch of ``value_col`` plus exact row count.
 
     The output is the incremental store shape: tiny (one ~2^lgk-byte
-    sketch per bucket), mergeable, appendable batch-by-batch — pair with
-    ``streaming.rollup.merge_rollup`` for the continuous-aggregate path.
+    sketch per bucket), mergeable, appendable batch-by-batch — append
+    each batch's partials to a commit-log table
+    (``sources.txlog.tx_append_partitioned``) and fold them at read with
+    ``hll_rollup``.
     """
     return df.groupBy(*group_cols).agg(
         F.hll_sketch_agg(F.col(value_col), F.lit(lgk)).alias(SKETCH_COL),

@@ -218,12 +218,9 @@ def seed_state_dim(store: GoldStore, states: DataFrame) -> None:
     """The reference assumes a pre-seeded state_dim(id, state, state_abbr)
     (update_dims.sql:82-83,216-217; not created by the repo) — one
     replace-all commit."""
-    from ..sources.txlog import CommitProposal, TransactionLog
+    from ..sources.txlog import tx_overwrite
 
-    log = TransactionLog(store.path("state_dim"))
-    log.run_optimistic("overwrite", lambda v: CommitProposal(
-        log.stage_dataframe(states), sorted(log.live_files(upto=v))
-    ))
+    tx_overwrite(store.spark, store.path("state_dim"), lambda _old: states)
 
 
 def _dimension_keys(staging: DataFrame) -> dict[str, set[tuple]]:

@@ -170,24 +170,6 @@ def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_silver_lake(
-    spark: SparkSession, path: str, latest_only: bool = True
-) -> DataFrame:
-    """Read the partitioned silver lake; with ``latest_only`` apply D1 so a
-    key that re-arrived under a newer date shadows its stale row in the old
-    partition — the same dedup the reference's load path runs before insert
-    (load_lambda/main.py:96-97)."""
-    df = spark.read.parquet(path)
-    if latest_only:
-        from ..operators.dedup import keep_latest
-
-        df = keep_latest(
-            df, "auction_id", order_by="auction_date",
-            tiebreakers=[F.col("auction_saving_date").desc_nulls_last()],
-        )
-    return df
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet table loader for the driver's test corpus (TESTDATA.md).
 

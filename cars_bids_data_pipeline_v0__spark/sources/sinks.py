@@ -1,114 +1,17 @@
-"""Sinks (SURVEY §2.1 S5-S9).
+"""Sinks (SURVEY §2.1 S6-S9).
 
-S5 — the reference's hand-rolled per-partition merge: group rows by auction
-date, and per date-file either write fresh or read-concat-dedup-rewrite
-(load_to_s3, transform_lambda/main.py:327-399).  That is a MERGE keyed on
-``auction_id`` with update-wins-by-recency.
-
-Spark-first (no Delta in this container): a date-partitioned parquet table
-with *dynamic partition overwrite* — only the partitions present in the new
-batch are read back, unioned, window-deduped (D1), and atomically swapped.
-Partition pruning makes the read-back proportional to the batch, not the
-table.  Single-writer assumption is inherited from the reference
-(:373-392); for MULTI-writer deployments use `sources.txlog.
-tx_merge_partitioned` — the same merge semantics under a transactional
-commit log (optimistic concurrency, snapshot isolation, time travel).
+S5 — the reference's hand-rolled per-partition merge (load_to_s3,
+transform_lambda/main.py:327-399) — is the commit-log table's merge,
+`sources.txlog.tx_merge_partitioned`; this module holds the plain
+outputs: the rescrape queue, the JSON debug artifact, the JDBC staging
+load and the training shards.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..operators.dedup import keep_latest
-
-PARTITION_COL = "auction_saving_date"
-
-
-def merge_write_partitioned(
-    spark: SparkSession,
-    new_df: DataFrame,
-    table_path: str,
-    key: str = "auction_id",
-    order_by: str = "auction_date",
-    partition_src: str = "auction_date",
-) -> list[str]:
-    """S5/M5 — merge ``new_df`` into the date-partitioned parquet table at
-    ``table_path``; returns the partition values written (the reference
-    returns the list of touched S3 keys, transform_lambda/main.py:397-399).
-    """
-    from ..session import size_coalesced_shuffle
-
-    # size-first AQE coalescing for the whole merge: the dedup windows and
-    # the partition-clustering exchange are byte-light at any batch size
-    # relative to core count, and the coalesced shape also writes sanely
-    # sized files (round-13 optimization pass — measurement and scale
-    # argument in size_coalesced_shuffle's docstring)
-    with size_coalesced_shuffle(spark):
-        return _merge_write_partitioned_inner(
-            spark, new_df, table_path, key, order_by, partition_src
-        )
-
-
-def _merge_write_partitioned_inner(
-    spark: SparkSession,
-    new_df: DataFrame,
-    table_path: str,
-    key: str,
-    order_by: str,
-    partition_src: str,
-) -> list[str]:
-    batch = new_df.withColumn(PARTITION_COL, F.to_date(F.col(partition_src)))
-    batch = keep_latest(batch, key, order_by=order_by).persist()
-    try:
-        touched = [
-            str(r[0])
-            for r in batch.select(PARTITION_COL).distinct().collect()
-        ]
-        if not touched:
-            return []
-        if _table_exists(table_path):
-            existing = spark.read.parquet(table_path)
-            # partition-pruned read-back: only the dates in this batch.
-            # NOTE (parity): like the reference, the merge is per-date-
-            # partition — a key re-arriving under a NEW date leaves its old
-            # row in the old partition; consumers dedup at read
-            # (read_silver_lake) exactly as the load path does
-            # (load_lambda/main.py:96-97).
-            overlap = existing.filter(F.col(PARTITION_COL).isin(touched))
-            # date tie → existing row wins (existing_data + new_data concat
-            # order under pandas' stable sort, transform_lambda/main.py:378-386)
-            merged = keep_latest(
-                overlap.withColumn("__src", F.lit(0)).unionByName(
-                    batch.withColumn("__src", F.lit(1)),
-                    allowMissingColumns=True,
-                ),
-                key,
-                order_by=order_by,
-                tiebreakers=[F.col("__src").asc()],
-            ).drop("__src")
-        else:
-            merged = batch
-        (
-            merged.repartition(PARTITION_COL)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(PARTITION_COL)
-            .parquet(table_path)
-        )
-        return sorted(touched)
-    finally:
-        batch.unpersist()
-
-
-def _table_exists(path: str) -> bool:
-    return os.path.exists(path) and any(
-        n.startswith(PARTITION_COL + "=") or n.startswith("part-")
-        for n in os.listdir(path)
-    )
 
 
 def write_text_queue(df: DataFrame, path: str, column: str = "auction_url") -> None:

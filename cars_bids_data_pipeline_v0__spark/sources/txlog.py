@@ -1,12 +1,12 @@
 """Transactional commit-log table format — multi-writer ACID over parquet.
 
-Round-2 VERDICT's top gap: the S5 merge sink (`sinks.merge_write_partitioned`,
-reference transform_lambda/main.py:327-399) inherits the reference's
-single-writer race — two concurrent merges read-modify-write the same
-partition files and one update is silently lost.  The fix everywhere else in
-the ecosystem is a transactional table format (Delta/Iceberg); neither ships
-in this container, so this module implements the same commit PROTOCOL
-directly — functionally the Delta log, including checkpoints:
+Every incremental store in the engine is a table of this format: the
+silver lake (S5 merge sink, reference transform_lambda/main.py:327-399,
+whose read-modify-write of per-date files loses an update when two
+writers race), the gold star schema, and the streaming stores and
+rollups.  Delta/Iceberg ship in no container here, so this module
+implements the same commit PROTOCOL directly — functionally the Delta
+log, including checkpoints:
 
 * Data files are written FIRST, under unique names in ``data/`` — invisible
   until committed (writers never overwrite data files, so readers need no
@@ -28,9 +28,12 @@ the protocol needs; an object store deployment swaps in its conditional-PUT
 Orphaned data files from failed/crashed commits are invisible (never
 referenced) and reaped by `vacuum`.
 
-The parquet fallback (`sinks.merge_write_partitioned`) remains for
-single-writer use; `tx_merge_partitioned` keeps its exact merge semantics
-(per-date keep-latest, reference parity) under multi-writer safety.
+Three write shapes cover the stores: `tx_merge_partitioned` (the silver
+lake's per-date keep-latest merge, reference parity), `tx_append_partitioned`
+(fenced adds-only appends — per-batch partials, fingerprints, index cells)
+and `tx_overwrite` (replace-all from the pinned snapshot — folded rollups,
+compactions, the SCD2 dimension).  Each takes a ``txn`` token, so a
+streaming micro-batch replayed after a crash commits at most once.
 """
 
 from __future__ import annotations
@@ -49,7 +52,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import keep_latest
-from .sinks import PARTITION_COL
+
+#: the silver lake's date partition column (S5: one partition per
+#: auction date) and the layout default of the merge-shaped writers
+PARTITION_COL = "auction_saving_date"
 
 _LOG_DIR = "_txlog"
 _DATA_DIR = "data"
@@ -70,21 +76,31 @@ _COMMIT_BODY_CACHE: dict[tuple, dict] = {}
 #: (`_read_live_sidecar`), so no entry holds a file handle
 _CHECKPOINT_BODY_CACHE: dict[tuple, dict] = {}
 
+#: (sidecar path, mtime_ns, size) -> its parsed parquet footer: the
+#: checkpoint loader parses it to validate the sidecar, and the snapshot
+#: that opens the sidecar reuses it, so a cold snapshot parses one footer
+_SIDECAR_FOOTER_CACHE: dict[tuple, Any] = {}
+
 #: abspath(table) -> (version, commit-file sig, shared live snapshot) —
 #: Delta's in-memory Snapshot: later versions extend it by replaying
 #: only the delta commits (see _live_actions_shared)
 _SNAPSHOT_CACHE: dict[str, tuple[int, tuple, "_LazyLive"]] = {}
 
 
+def _file_key(path: str) -> tuple | None:
+    """(path, mtime_ns, size) — the identity write-once caches key on."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (path, st.st_mtime_ns, st.st_size)
+
+
 def _load_json_cached(path: str, cache: dict[tuple, dict]) -> dict:
     """Parse a write-once JSON file, memoized per (path, mtime, size).
     CONTRACT: callers must treat the returned body as immutable — it is
     shared process-wide (hand out copies via `_copy_tree`)."""
-    try:
-        st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = None
+    key = _file_key(path)
     body = cache.get(key) if key is not None else None
     if body is None:
         with open(path) as f:
@@ -103,8 +119,9 @@ def _load_json_cached(path: str, cache: dict[tuple, dict]) -> dict:
 
 def _read_live_sidecar(path: str) -> "_SidecarBase":
     """Open a checkpoint's parquet live-list sidecar as a lazy columnar
-    base (`_SidecarBase`): the footer is parsed now and the file handle
-    kept, so each column is read on first use — a cold count reads
+    base (`_SidecarBase`): the footer is taken from the checkpoint
+    loader's parse (`_SIDECAR_FOOTER_CACHE`) or parsed now, and the file
+    handle kept, so each column is read on first use — a cold count reads
     ``zrows``, a cold prune ``path`` plus two zone columns, never the
     ``rest_json`` bulk — and a snapshot keeps serving after a log
     truncation unlinks the file.  The handle closes when the base is
@@ -114,7 +131,9 @@ def _read_live_sidecar(path: str) -> "_SidecarBase":
     import pyarrow.parquet as pq
 
     try:
-        return _SidecarBase(pq.ParquetFile(pa.OSFile(path)))
+        key = _file_key(path)
+        md = _SIDECAR_FOOTER_CACHE.get(key) if key is not None else None
+        return _SidecarBase(pq.ParquetFile(pa.OSFile(path), metadata=md))
     except Exception as exc:  # torn/missing sidecar = torn checkpoint
         raise ValueError(f"unreadable checkpoint sidecar {path}") from exc
 
@@ -702,14 +721,11 @@ def _load_checkpoint_cached(path: str) -> dict:
     the caller demotes the whole checkpoint and every consumer (the
     snapshot and the txns/dvs/constraints/mappings readers alike) agrees
     on which checkpoint is in force.  The live list itself stays on
-    disk until a snapshot opens it.  CONTRACT: immutable, shared."""
+    disk until a snapshot opens it, with the footer parsed here
+    (`_SIDECAR_FOOTER_CACHE`).  CONTRACT: immutable, shared."""
     import pyarrow.parquet as pq
 
-    try:
-        st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = None
+    key = _file_key(path)
     body = _CHECKPOINT_BODY_CACHE.get(key) if key is not None else None
     if body is None:
         with open(path) as f:
@@ -717,16 +733,21 @@ def _load_checkpoint_cached(path: str) -> dict:
         side = body.get("live_parquet")
         if not side:
             raise ValueError(f"checkpoint {path} names no live sidecar")
+        side = os.path.join(os.path.dirname(path), side)
         try:
-            pq.read_metadata(os.path.join(os.path.dirname(path), side))
+            md = pq.read_metadata(side)
         except Exception as exc:
             raise ValueError(
                 f"unreadable checkpoint sidecar for {path}"
             ) from exc
+        side_key = _file_key(side)
         if key is not None:
             if len(_CHECKPOINT_BODY_CACHE) > 65536:
                 _CHECKPOINT_BODY_CACHE.clear()
+                _SIDECAR_FOOTER_CACHE.clear()
             _CHECKPOINT_BODY_CACHE[key] = body
+            if side_key is not None:
+                _SIDECAR_FOOTER_CACHE[side_key] = md
     return body
 
 
@@ -2702,9 +2723,11 @@ def tx_read_latest(
     key: str = "auction_id",
     order_by: str = "auction_date",
 ) -> DataFrame | None:
-    """The D1 latest-only consumer view (twin of ingest.read_silver_lake):
-    a key re-merged under a newer date leaves its stale row in the old
-    partition by design — readers dedup."""
+    """The D1 latest-only consumer view of the silver lake: a key
+    re-merged under a newer date leaves its stale row in the old
+    partition by design (reference parity), so readers dedup — the same
+    keep-latest the reference's load path runs before insert
+    (load_lambda/main.py:96-97)."""
     df = tx_read(spark, table_path)
     return None if df is None else keep_latest(df, key, order_by=order_by)
 
@@ -2719,9 +2742,13 @@ def tx_merge_partitioned(
     txn: dict | None = None,
     stats_cols: list[str] | None = None,
 ) -> list[str]:
-    """S5/M5 under multi-writer ACID: same per-date merge semantics as
-    `sinks.merge_write_partitioned` (keep-latest within each touched date,
-    date tie → existing row wins), committed atomically.
+    """S5/M5 — the silver lake's merge sink: the reference's per-date
+    read-concat-dedup-rewrite (transform_lambda/main.py:327-399) as one
+    commit.  Keep-latest within each touched date, date tie → existing
+    row wins; a key re-arriving under a NEW date leaves its old row in
+    the old partition (reference parity — `tx_read_latest` dedups at
+    read).  Returns the touched partition values, sorted (the reference
+    returns the touched S3 keys, :397-399).
 
     Optimistic loop: read the touched partitions at snapshot version v,
     merge, stage files, try to claim v+1 removing exactly the files read.
@@ -2793,9 +2820,8 @@ def tx_merge_partitioned(
         )
         return CommitProposal(adds, overlap_files, sorted(touched))
 
-    # size-first AQE coalescing for the whole merge, same rationale as
-    # sinks.merge_write_partitioned (the single-writer twin): the dedup /
-    # merge windows and the partition-clustering exchange are byte-light
+    # size-first AQE coalescing for the whole merge: the dedup / merge
+    # windows and the partition-clustering exchange are byte-light
     # relative to core count at any batch size, and parallelism-first
     # scheduled (cores) no-op tasks per stage (round-13 optimization pass
     # — measurement in session.size_coalesced_shuffle's docstring)
@@ -2805,6 +2831,39 @@ def tx_merge_partitioned(
         finally:
             if prepared:
                 prepared[0].unpersist()
+
+
+def tx_overwrite(
+    spark: SparkSession,
+    table_path: str,
+    make: Callable[[DataFrame | None], DataFrame],
+    txn: dict | None = None,
+) -> int | None:
+    """Replace the whole table with ``make(snapshot)`` in one commit —
+    ``INSERT OVERWRITE`` derived from the table itself.
+
+    Pins version ``v`` and calls ``make`` with the table read at ``v``
+    (``None`` while the table has no data), stages the result under the
+    declared layout and commits it removing every file live at ``v``.  A
+    concurrent commit fails the claim and ``make`` reruns on the new
+    snapshot, so a fold over the old contents never loses a rival's
+    rows.  Readers see the old table or the new one; a writer dying at
+    any point leaves the old one (its staged files are orphans for
+    `vacuum`).  ``txn`` fences a replayed stream batch as in
+    `tx_merge_partitioned`.  Returns the committed version, or ``None``
+    for a fenced replay."""
+    log = TransactionLog(table_path)
+
+    def build(v: int):
+        current = tx_read(spark, table_path, version=v) if v >= 0 else None
+        df = tx_apply_generated(make(current), table_path, upto=v)
+        tx_check_constraints(df, table_path, upto=v)
+        adds = log.stage_dataframe(
+            df, partition_by=log.partition_spec(upto=v)
+        )
+        return CommitProposal(adds, sorted(log.live_files(upto=v)), v + 1)
+
+    return log.run_optimistic("overwrite", build, txn=txn)
 
 
 def tx_compact(
@@ -2821,9 +2880,7 @@ def tx_compact(
 
     Content is untouched; only layout changes.  Optimistic like every
     writer here: a concurrent append/merge fails the commit and the
-    compaction recomputes over the new snapshot.  The streaming-matview
-    compaction fence (streaming/incremental.py) solves replay-vs-compact
-    ordering; THIS solves reader-vs-compact atomicity.
+    compaction recomputes over the new snapshot.
 
     ``partition_by`` names the layout column for partitioned tables
     (default: the merge sinks' date column); index/fact tables laid out
@@ -3114,11 +3171,9 @@ def tx_stream_merge_sink(
 
     The commit for batch N carries the token ``(stream_id, N)``; a
     checkpoint replay of an already-committed batch finds its token in
-    the log and becomes a no-op — the single atomic primitive the
-    parquet-partition-overwrite streaming paths approximate with
-    per-batch OVERWRITE directories (streaming/incremental.py:225-234).
-    Output table stays transactional for concurrent batch writers and
-    readers.
+    the log and becomes a no-op.  `streaming.silver_ingest_stream`
+    writes the silver lake through it.  Output table stays
+    transactional for concurrent batch writers and readers.
 
     Pass ``checkpoint_dir`` (the SAME path given to the stream's
     checkpointLocation) to scope the fence by a checkpoint EPOCH: a

@@ -13,6 +13,12 @@ Late/updated data: a re-arriving ``auction_id`` wins if its
 ``auction_date`` is newer — unbounded keyed state in pure-streaming terms,
 which the reference also accepts (transform_lambda/main.py:378-386); the
 merge sink keeps that state in the table itself instead of executor memory.
+
+Every store a stream here maintains is a commit-log table
+(`sources.txlog`), and each micro-batch commits under the token
+``(stream id scoped by the checkpoint's epoch, batch id)``: when Spark
+re-runs a batch whose checkpoint commit was lost, the replay finds its
+token in the table's log and commits nothing.
 """
 
 from __future__ import annotations
@@ -27,6 +33,35 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sources.txlog import (
+    TransactionLog,
+    checkpoint_epoch_app_id,
+    tx_append_partitioned,
+    tx_overwrite,
+    tx_read,
+    tx_set_partition_spec,
+)
+
+
+def _fenced_appender(
+    spark: SparkSession, store: str, stream_id: str, checkpoint_dir: str
+):
+    """``append(df, batch_id)`` for a ``foreachBatch``: appends ``df`` to
+    the unpartitioned commit-log table ``store``, fenced by the batch id
+    so a replayed batch commits once.  Declares the table unpartitioned
+    on first use (the appends follow the declared spec)."""
+    if TransactionLog(store).partition_spec_raw() is None:
+        tx_set_partition_spec(spark, store, None)
+    app = checkpoint_epoch_app_id(stream_id, checkpoint_dir)
+
+    def append(df: DataFrame, batch_id: int) -> None:
+        tx_append_partitioned(
+            df.sparkSession, df, store,
+            txn={"app": app, "batch": int(batch_id)},
+        )
+
+    return append
+
 
 def silver_ingest_stream(
     spark: SparkSession,
@@ -38,16 +73,23 @@ def silver_ingest_stream(
     """Raw-JSON directory → silver lake, incrementally.
 
     One ``foreachBatch`` per micro-batch runs the shared batch plan
-    (`plans.silver.transform_records`) and the S5 merge — path A and the
-    streaming path share one implementation, the engine's fix for the
-    reference's copy-paste divergence (SURVEY §3.3).
+    (`plans.silver.transform_records`) and the S5 merge into the
+    commit-log lake (`tx_stream_merge_sink`, fenced per batch) — path A
+    and the streaming path share one implementation, the engine's fix
+    for the reference's copy-paste divergence (SURVEY §3.3).  Each
+    batch's rescrape queue is overwritten under its own ``batch=N``
+    directory, so a replay rewrites it.
     Returns the started query (``availableNow`` — drains pending files then
     stops).
     """
     from ..plans.silver import transform_records
-    from ..sources.sinks import merge_write_partitioned, write_text_queue
+    from ..sources.sinks import write_text_queue
+    from ..sources.txlog import tx_stream_merge_sink
 
     raw = spark.readStream.option("wholetext", True).text(raw_dir)
+    merge = tx_stream_merge_sink(
+        lake_path, stream_id="silver-ingest", checkpoint_dir=checkpoint_dir
+    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         session = batch_df.sparkSession
@@ -61,7 +103,7 @@ def silver_ingest_stream(
             f"FROM {view}, LATERAL variant_explode(v) AS ve"
         )
         silver, rescrape = transform_records(records)
-        merge_write_partitioned(session, silver, lake_path)
+        merge(silver, batch_id)
         if rescrape_path is not None:
             write_text_queue(rescrape, f"{rescrape_path}/batch={batch_id}")
 
@@ -218,22 +260,15 @@ def corpus_dedup_stream(
     memory — the same choice the merge sink makes for D1 state.
 
     At scale the store is the big side: the anti-join shuffles only the
-    micro-batch's fingerprints (AQE broadcasts the batch side when small),
-    and a Delta/iceberg store would add compaction; parquet-append is the
-    container-friendly stand-in.
+    micro-batch's fingerprints (AQE broadcasts the batch side when small).
 
-    Exactly-once across failures: both outputs land under a
-    ``batch_id=<id>`` partition directory in OVERWRITE mode, so a
-    checkpoint replay of a half-written batch overwrites its own
-    partitions instead of appending duplicates (the two writes are not
-    atomic together, but each is idempotent per batch).  The replayed
-    batch excludes its own ``batch_id`` partition from the seen-store
-    anti-join — otherwise the first attempt's fingerprints would dedupe
-    the replay against itself and the docs overwrite would come up
-    empty.  On Delta/Iceberg this is a single transactional MERGE.
+    Exactly-once across failures: both outputs are commit-log tables and
+    each append is fenced by the batch id — documents first, then
+    fingerprints.  A batch replayed after a crash between the two
+    commits finds the store without its fingerprints, recomputes the
+    same survivors, skips the committed documents and commits the
+    fingerprints.
     """
-    import os
-
     from ..operators.dedup_docs import dedup_exact
     from ..operators.text import fingerprint_md5
 
@@ -244,33 +279,28 @@ def corpus_dedup_stream(
         ]
     )
     stream = spark.readStream.schema(schema).json(docs_dir)
+    append_docs = _fenced_appender(
+        spark, out_path, "corpus-dedup", checkpoint_dir
+    )
+    append_fps = _fenced_appender(
+        spark, fingerprint_store, "corpus-dedup", checkpoint_dir
+    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        session = batch_df.sparkSession
         batch = dedup_exact(batch_df).withColumn(
             "fingerprint", fingerprint_md5("text")
         )
-        if os.path.exists(fingerprint_store):
-            try:
-                seen = session.read.parquet(fingerprint_store)
-            except AnalysisException:  # store dir exists but holds no data
-                seen = None
-            if seen is not None:
-                if "batch_id" in seen.columns:  # partition-pruned exclusion
-                    seen = seen.filter(F.col("batch_id") != batch_id)
-                batch = batch.join(
-                    seen.select("fingerprint"),
-                    on="fingerprint",
-                    how="left_anti",
-                )
+        seen = tx_read(batch_df.sparkSession, fingerprint_store)
+        if seen is not None:
+            batch = batch.join(
+                seen.select("fingerprint"), on="fingerprint", how="left_anti"
+            )
         batch = batch.persist()
-        batch.drop("fingerprint").write.mode("overwrite").parquet(
-            f"{out_path}/batch_id={batch_id}"
-        )
-        batch.select("fingerprint").write.mode("overwrite").parquet(
-            f"{fingerprint_store}/batch_id={batch_id}"
-        )
-        batch.unpersist()
+        try:
+            append_docs(batch.drop("fingerprint"), batch_id)
+            append_fps(batch.select("fingerprint"), batch_id)
+        finally:
+            batch.unpersist()
 
     return (
         stream.writeStream.foreachBatch(process_batch)
@@ -366,38 +396,34 @@ def scd2_dim_stream(
     work per batch is proportional to the batch plus the history of the
     keys it touches, never the full dimension.
 
-    The dimension lives in a table (parquet here; MERGE-capable format in
-    production) rather than stream state, so batch jobs and ad-hoc
-    queries read the same current/history rows the stream maintains —
-    the same state-in-a-table choice as ``corpus_dedup_stream``.
+    The dimension lives in a commit-log table rather than stream state,
+    so batch jobs and ad-hoc queries read the same current/history rows
+    the stream maintains — the same state-in-a-table choice as
+    ``corpus_dedup_stream``.  Each batch replaces the dimension in one
+    `tx_overwrite` commit fenced by the batch id: readers never see it
+    missing, and a replayed batch applies once.
     """
-    import os
-
     from ..operators.scd2 import scd2_apply, scd2_snapshot
 
     events = stream_events(spark, events_dir)
+    app = checkpoint_epoch_app_id("scd2-dim", checkpoint_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        session = batch_df.sparkSession
         updates = batch_df.select(key, tracked, order_col, tie_col)
-        if os.path.exists(dim_path):
-            current = session.read.parquet(dim_path)
-            merged = scd2_apply(
+
+        def fold(current: DataFrame | None) -> DataFrame:
+            if current is None:
+                return scd2_snapshot(
+                    updates, key, tracked, order_col, tie_col, keep_tie=True
+                )
+            return scd2_apply(
                 current, updates, key, tracked, order_col, tie_col
             )
-        else:
-            merged = scd2_snapshot(
-                updates, key, tracked, order_col, tie_col, keep_tie=True
-            )
-        # parquet has no MERGE: stage the new snapshot, then swap.  On a
-        # transactional format this is a single MERGE INTO.
-        staged = merged.persist()
-        staged.count()
-        staged.write.mode("overwrite").parquet(dim_path + "._staged")
-        session.read.parquet(dim_path + "._staged").write.mode(
-            "overwrite"
-        ).parquet(dim_path)
-        staged.unpersist()
+
+        tx_overwrite(
+            batch_df.sparkSession, dim_path, fold,
+            txn={"app": app, "batch": int(batch_id)},
+        )
 
     return (
         events.writeStream.foreachBatch(process_batch)
@@ -437,26 +463,25 @@ def matview_stream(
     schema: T.StructType,
 ):
     """Streaming materialized view: each micro-batch folds into mergeable
-    count/sum/min/max partials (operators/matview.py) written under a
-    ``batch_id=<id>`` partition — delta-sized work per batch; history is
-    never re-scanned.
+    count/sum/min/max partials (operators/matview.py) appended to the
+    commit-log table ``partials_store`` — delta-sized work per batch;
+    history is never re-scanned.
 
-    Exactly-once across checkpoint replays: a replayed batch OVERWRITES
-    its own ``batch_id`` partition instead of double-counting (same
-    contract as corpus_dedup_stream).  The store accumulates one partial
-    set per batch; :func:`read_matview` merges on read, and
-    :func:`compact_matview_store` folds old batches into one when the
-    partial count grows — the parquet stand-in for what a Delta MERGE
-    would do transactionally.
+    Exactly-once across checkpoint replays: each append is fenced by the
+    batch id, so a replayed batch commits nothing.  The store accumulates
+    one partial set per batch; :func:`read_matview` merges on read, and
+    :func:`compact_matview_store` folds them into one when the partial
+    count grows.
     """
     from ..operators.matview import matview_partials
 
     stream = spark.readStream.schema(schema).json(source_dir)
+    append = _fenced_appender(
+        spark, partials_store, "matview", checkpoint_dir
+    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        matview_partials(batch_df, keys, measures).write.mode(
-            "overwrite"
-        ).parquet(f"{partials_store}/batch_id={batch_id}")
+        append(matview_partials(batch_df, keys, measures), batch_id)
 
     return (
         stream.writeStream.foreachBatch(process_batch)
@@ -466,106 +491,29 @@ def matview_stream(
     )
 
 
-_COMPACT_MARKER = "_compacted_through"
-
-
-def _compacted_through(partials_store: str) -> int:
-    import os
-
-    marker = os.path.join(partials_store, _COMPACT_MARKER)
-    if os.path.exists(marker):
-        with open(marker) as f:
-            return int(f.read().strip())
-    return -1
-
-
-def _swap_paths(partials_store: str) -> tuple[str, str]:
-    """The compacted copy and the set-aside old store of a swap."""
-    base = partials_store.rstrip("/")
-    return base + ".__compact__", base + ".__old__"
-
-
-def _recover_matview_store(partials_store: str) -> None:
-    """Finish a compaction that died mid-swap: a missing store takes the
-    compacted copy when it is complete (its fence marker is written
-    last), else the old store set aside; once the store is in place, a
-    leftover aside copy is removed."""
-    import os
-    import shutil
-
-    tmp, aside = _swap_paths(partials_store)
-    if not os.path.exists(partials_store):
-        if os.path.exists(os.path.join(tmp, _COMPACT_MARKER)):
-            os.rename(tmp, partials_store)
-        elif os.path.exists(aside):
-            os.rename(aside, partials_store)
-    if os.path.exists(partials_store):
-        shutil.rmtree(aside, ignore_errors=True)
-
-
 def read_matview(
     spark: SparkSession,
     partials_store: str,
     avg_of: list[str] | None = None,
 ) -> DataFrame:
     """Merge-on-read face of a :func:`matview_stream` store: one grouped
-    fold over |groups|·|batches| partial rows (never the raw data).
-
-    Batches at or below the compaction fence are excluded — they are
-    already folded into the ``batch_id=-1`` partition, and a checkpoint
-    replay may lawfully re-write one of them (see
-    :func:`compact_matview_store`)."""
+    fold over |groups|·|batches| partial rows (never the raw data)."""
     from ..operators.matview import matview_compact, matview_finalize
 
-    _recover_matview_store(partials_store)
-    fence = _compacted_through(partials_store)
-    parts = spark.read.parquet(partials_store)
-    parts = parts.filter(
-        (F.col("batch_id") == -1) | (F.col("batch_id") > fence)
-    ).drop("batch_id")
-    return matview_finalize(matview_compact(parts), avg_of=avg_of)
+    return matview_finalize(
+        matview_compact(tx_read(spark, partials_store)), avg_of=avg_of
+    )
 
 
 def compact_matview_store(spark: SparkSession, partials_store: str) -> None:
-    """Fold every per-batch partial set into a single ``batch_id=-1``
-    partition, bounding merge-on-read cost; safe to run between stream
-    triggers.  Distributed write to a temp path + directory swap — group
-    cardinality is unbounded, so nothing is collected to the driver.
-    The swap sets the old store aside before renaming the compacted copy
-    in, so a crash at any point leaves a state that :func:`read_matview`
-    and the next compaction complete (``_recover_matview_store``).
-
-    Replay safety: a batch whose partials landed but whose checkpoint
-    commit didn't will be REPLAYED by the restarted stream after its
-    partition was folded in here — without a fence it would then count
-    twice.  Compaction therefore records the highest real batch_id it
-    folded (``_compacted_through``); :func:`read_matview` ignores any
-    ``batch_id`` ≤ that fence, so the replayed partition is inert."""
-    import os
-    import shutil
-
+    """Fold every per-batch partial set into one row per group, bounding
+    merge-on-read cost — one `tx_overwrite` commit, safe to run while
+    the stream appends (a batch committing meanwhile makes the fold
+    rerun over it).  Distributed throughout: group cardinality is
+    unbounded, so nothing is collected to the driver."""
     from ..operators.matview import matview_compact
 
-    tmp, aside = _swap_paths(partials_store)
-    _recover_matview_store(partials_store)
-    shutil.rmtree(tmp, ignore_errors=True)  # a copy never swapped in
-    prior_fence = _compacted_through(partials_store)
-    hi = spark.read.parquet(partials_store).agg(
-        F.max("batch_id").alias("hi")
-    ).collect()[0]["hi"]
-    fence = prior_fence if hi is None else max(prior_fence, int(hi))
-
-    parts = spark.read.parquet(partials_store)
-    matview_compact(
-        parts.filter(
-            (F.col("batch_id") == -1) | (F.col("batch_id") > prior_fence)
-        ).drop("batch_id")
-    ).write.mode("overwrite").parquet(f"{tmp}/batch_id=-1")
-    with open(os.path.join(tmp, _COMPACT_MARKER), "w") as f:
-        f.write(str(fence))
-    os.rename(partials_store, aside)
-    os.rename(tmp, partials_store)
-    shutil.rmtree(aside)
+    tx_overwrite(spark, partials_store, matview_compact)
 
 
 def session_windows_stream(
@@ -823,13 +771,7 @@ def corpus_ingest_stream(
     """
     from ..operators.dedup_docs import dedup_incoming
     from ..plans.corpus import preprocess_corpus
-    from ..sources.txlog import (
-        CommitProposal,
-        TransactionLog,
-        checkpoint_epoch_app_id,
-        tx_export_symlink_manifest,
-        tx_read,
-    )
+    from ..sources.txlog import CommitProposal, tx_export_symlink_manifest
 
     app_id = checkpoint_epoch_app_id(stream_id, checkpoint_dir)
 

@@ -1,26 +1,29 @@
 """Incremental time-bucket rollup — the hypertable continuous-aggregate
-pattern over plain Spark tables.
+pattern over commit-log tables.
 
 A query like q40 (hourly counts/sums) re-scans all history every run; at
 100 TB the history never fits a per-query scan.  This maintains the
 aggregate INCREMENTALLY: each new batch aggregates to partial rows
-(bucket, key, count, sum), merges with the stored partials for ONLY the
-touched buckets, and rewrites those buckets.  Work per batch is
-O(batch + touched_buckets), independent of table history.
+(bucket, key, count, sum) and folds into the stored partials, so the raw
+history is never re-read — work per batch is O(batch + stored
+aggregate), and the aggregate has one row per (bucket, key).
 
 Correct because count/sum are mergeable (partial aggregation algebra —
 the same property AQE exploits map-side); avg derives at read time.
-``read_rollup`` exposes the finished aggregate.  The same shape under
-``foreachBatch`` gives the streaming continuous aggregate; batch callers
-invoke ``merge_rollup`` directly.
+``read_rollup`` exposes the finished aggregate.  The store is a
+commit-log table (`sources.txlog`): every fold is one `tx_overwrite`
+commit, so a reader sees the rollup before or after a batch, never a
+half-written one, and the streaming continuous aggregate
+(``rollup_stream``) fences each micro-batch so a replay folds once.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.txlog import checkpoint_epoch_app_id, tx_overwrite, tx_read
+from .incremental import _fenced_appender
 
 
 def _partials(events: DataFrame, ts_col: str, key_cols: list[str],
@@ -37,6 +40,34 @@ def _partials(events: DataFrame, ts_col: str, key_cols: list[str],
     )
 
 
+def _fold_rollup(
+    spark: SparkSession,
+    new_events: DataFrame,
+    rollup_path: str,
+    ts_col: str,
+    key_cols: list[str] | None,
+    value_col: str,
+    bucket: str,
+    txn: dict | None,
+) -> None:
+    key_cols = key_cols if key_cols is not None else ["event_type"]
+    batch = _partials(new_events, ts_col, key_cols, value_col, bucket)
+
+    def fold(stored: DataFrame | None) -> DataFrame:
+        if stored is None:
+            return batch
+        return (
+            stored.unionByName(batch)
+            .groupBy("bucket_start", *key_cols)
+            .agg(
+                F.sum("n_events").alias("n_events"),
+                F.sum("sum_value").alias("sum_value"),
+            )
+        )
+
+    tx_overwrite(spark, rollup_path, fold, txn=txn)
+
+
 def merge_rollup(
     spark: SparkSession,
     new_events: DataFrame,
@@ -46,36 +77,13 @@ def merge_rollup(
     value_col: str = "value",
     bucket: str = "hour",
 ) -> None:
-    """Fold ``new_events`` into the stored rollup: only buckets present in
-    the batch are read back, merged (sums of partials), and rewritten."""
-    key_cols = key_cols if key_cols is not None else ["event_type"]
-    batch = _partials(new_events, ts_col, key_cols, value_col, bucket).persist()
-    try:
-        if os.path.exists(rollup_path):
-            existing = spark.read.parquet(rollup_path)
-            touched = [r[0] for r in batch.select("bucket_start").distinct().collect()]
-            overlap = existing.filter(F.col("bucket_start").isin(touched))
-            untouched = existing.filter(~F.col("bucket_start").isin(touched))
-            merged = (
-                overlap.unionByName(batch)
-                .groupBy("bucket_start", *key_cols)
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("sum_value").alias("sum_value"),
-                )
-                .unionByName(untouched)
-            )
-        else:
-            merged = batch
-        tmp = rollup_path + ".__tmp__"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(rollup_path):
-            import shutil
-
-            shutil.rmtree(rollup_path)
-        os.rename(tmp, rollup_path)
-    finally:
-        batch.unpersist()
+    """Fold ``new_events`` into the stored rollup: the batch's partials
+    are summed into the stored ones and the whole (small) aggregate is
+    rewritten in one commit."""
+    _fold_rollup(
+        spark, new_events, rollup_path, ts_col, key_cols, value_col,
+        bucket, None,
+    )
 
 
 def rollup_stream(
@@ -88,12 +96,16 @@ def rollup_stream(
     value_col: str = "value",
     bucket: str = "hour",
 ):
-    """Continuous aggregate: `merge_rollup` per micro-batch."""
+    """Continuous aggregate: the `merge_rollup` fold per micro-batch,
+    fenced by the batch id so a batch replayed from the checkpoint is
+    not counted twice."""
+    app = checkpoint_epoch_app_id("rollup", checkpoint_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        merge_rollup(
+        _fold_rollup(
             batch_df.sparkSession, batch_df, rollup_path,
             ts_col, key_cols, value_col, bucket,
+            {"app": app, "batch": int(batch_id)},
         )
 
     return (
@@ -106,7 +118,7 @@ def rollup_stream(
 
 def read_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
     """The finished aggregate, with derived avg (never avg-of-avgs)."""
-    r = spark.read.parquet(rollup_path)
+    r = tx_read(spark, rollup_path)
     return r.withColumn(
         "avg_value", F.col("sum_value") / F.col("n_events")
     )
@@ -171,6 +183,18 @@ def _m4_partials(
     )
 
 
+def _merge_m4_cells(cells: DataFrame) -> DataFrame:
+    """One row per (series, bucket) from any number of partial rows:
+    every cell statistic is mergeable."""
+    return cells.groupBy("series", "bucket").agg(
+        F.sum("n_points").alias("n_points"),
+        F.min("min_value").alias("min_value"),
+        F.max("max_value").alias("max_value"),
+        F.min("first_pt").alias("first_pt"),
+        F.max("last_pt").alias("last_pt"),
+    )
+
+
 def merge_m4(
     spark: SparkSession,
     new_events: DataFrame,
@@ -180,44 +204,15 @@ def merge_m4(
     n_buckets: int = 100,
     **cols,
 ) -> None:
-    """Fold a batch into the stored M4 cells (only touched buckets are
-    rewritten — same shape as merge_rollup)."""
-    batch = _m4_partials(new_events, lo_ms, hi_ms, n_buckets, **cols).persist()
-    try:
-        if os.path.exists(store_path):
-            existing = spark.read.parquet(store_path)
-            # touched-cell split via semi/anti joins on the (tiny) batch
-            # key set — no driver-side key list, works at any cell count
-            keys = batch.select("series", "bucket").distinct()
-            overlap = existing.join(
-                F.broadcast(keys), ["series", "bucket"], "left_semi"
-            )
-            untouched = existing.join(
-                F.broadcast(keys), ["series", "bucket"], "left_anti"
-            )
-            merged = (
-                overlap.unionByName(batch)
-                .groupBy("series", "bucket")
-                .agg(
-                    F.sum("n_points").alias("n_points"),
-                    F.min("min_value").alias("min_value"),
-                    F.max("max_value").alias("max_value"),
-                    F.min("first_pt").alias("first_pt"),
-                    F.max("last_pt").alias("last_pt"),
-                )
-                .unionByName(untouched)
-            )
-        else:
-            merged = batch
-        tmp = store_path + ".__tmp__"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(store_path):
-            import shutil
-
-            shutil.rmtree(store_path)
-        os.rename(tmp, store_path)
-    finally:
-        batch.unpersist()
+    """Fold a batch into the stored M4 cells: the batch's partial cells
+    merge with the stored ones and the store is rewritten in one
+    commit."""
+    batch = _m4_partials(new_events, lo_ms, hi_ms, n_buckets, **cols)
+    tx_overwrite(
+        spark, store_path,
+        lambda stored: batch if stored is None
+        else _merge_m4_cells(stored.unionByName(batch)),
+    )
 
 
 def m4_stream(
@@ -230,23 +225,17 @@ def m4_stream(
     n_buckets: int = 100,
     **cols,
 ):
-    """Continuous M4 downsample: per-batch mergeable partials, one
-    ``batch_id=<id>`` partition each (idempotent under replay — an
-    at-least-once redelivery overwrites its own partition).  Bounds are
+    """Continuous M4 downsample: each micro-batch appends its mergeable
+    partial cells to the store, fenced by the batch id (a replayed batch
+    commits once); `read_m4` merges the partials.  Bounds are
     caller-fixed (a streaming job cannot see the global time range; in
     production they're the retention window)."""
+    append = _fenced_appender(spark, store_path, "m4", checkpoint_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # exactly-once across checkpoint replays: each micro-batch's
-        # partial cells land under their own batch_id partition with
-        # OVERWRITE, so an at-least-once redelivery rewrites the same
-        # partition instead of double-counting (the matview_stream
-        # contract).  read_m4 merges partials on read — cells are
-        # mergeable by construction, so merge-on-read is exact.
-        _m4_partials(
-            batch_df, lo_ms, hi_ms, n_buckets, **cols
-        ).write.mode("overwrite").parquet(
-            f"{store_path}/batch_id={batch_id}"
+        append(
+            _m4_partials(batch_df, lo_ms, hi_ms, n_buckets, **cols),
+            batch_id,
         )
 
     return (
@@ -258,20 +247,9 @@ def m4_stream(
 
 
 def read_m4(spark: SparkSession, store_path: str) -> DataFrame:
-    """Finished M4 cells flattened to the q193 output shape.  Works on
-    both store layouts: a merge_m4 batch store (flat cells) and an
-    m4_stream store (per-batch_id partial partitions — merged on read;
-    exact because every cell statistic is mergeable)."""
-    s = spark.read.parquet(store_path)
-    if "batch_id" in s.columns:
-        s = s.drop("batch_id")
-    s = s.groupBy("series", "bucket").agg(
-        F.sum("n_points").alias("n_points"),
-        F.min("min_value").alias("min_value"),
-        F.max("max_value").alias("max_value"),
-        F.min("first_pt").alias("first_pt"),
-        F.max("last_pt").alias("last_pt"),
-    )
+    """Finished M4 cells flattened to the q193 output shape; partial
+    cells (one set per `m4_stream` batch) merge on read, exactly."""
+    s = _merge_m4_cells(tx_read(spark, store_path))
     return s.select(
         F.col("series").alias("event_type"),
         "bucket",

@@ -55,12 +55,19 @@ def test_bucketed_join_has_no_exchange(spark):
 
 
 def test_partition_pruned_scan_on_silver_lake(spark, tmp_path):
-    """A date-filtered read of the partitioned lake must prune at the scan:
-    PartitionFilters carries the predicate and untouched dates never load."""
+    """A date-scoped read of the commit-log lake must prune at planning:
+    the partition's files come from the log's metadata
+    (`tx_files_in_partitions`), the read opens only those, and untouched
+    dates never load."""
+    import datetime
+    import os
+
     from pyspark.sql import Row
 
-    from cars_bids_data_pipeline_v0__spark.sources.sinks import (
-        merge_write_partitioned,
+    from cars_bids_data_pipeline_v0__spark.sources.txlog import (
+        TransactionLog,
+        tx_files_in_partitions,
+        tx_merge_partitioned,
     )
 
     lake = str(tmp_path / "lake")
@@ -72,12 +79,19 @@ def test_partition_pruned_scan_on_silver_lake(spark, tmp_path):
     df = spark.createDataFrame(rows).withColumn(
         "auction_date", F.to_timestamp("auction_date")
     )
-    touched = merge_write_partitioned(spark, df, lake)
+    touched = tx_merge_partitioned(spark, df, lake)
     assert touched == ["2024-03-01", "2024-03-02", "2024-03-03"]
 
-    pruned = spark.read.parquet(lake).filter(
-        F.col("auction_saving_date") == "2024-03-02"
-    )
-    plan = plan_of(pruned)
-    assert "PartitionFilters" in plan and "2024-03-02" in plan
+    live = TransactionLog(lake).live_files()
+    files = tx_files_in_partitions(lake, ["2024-03-02"])
+    assert set(files.values()) == {"2024-03-02"}
+    assert 0 < len(files) < len(live)
+
+    pruned = spark.read.parquet(*(os.path.join(lake, f) for f in files))
+    assert {os.path.basename(f) for f in pruned.inputFiles()} == {
+        os.path.basename(f) for f in files
+    }
     assert pruned.count() == 3
+    assert {r["auction_saving_date"] for r in pruned.collect()} == {
+        datetime.date(2024, 3, 2)
+    }

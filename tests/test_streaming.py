@@ -3,6 +3,7 @@ watermarked windows equal batch q40; stateful keep-latest across batches."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -10,8 +11,12 @@ from pyspark.sql import functions as F
 
 from cars_bids_data_pipeline_v0__spark.sources.ingest import (
     read_raw_auctions,
-    read_silver_lake,
     read_table,
+)
+from cars_bids_data_pipeline_v0__spark.sources.txlog import (
+    TransactionLog,
+    tx_read,
+    tx_read_latest,
 )
 from cars_bids_data_pipeline_v0__spark.plans.silver import transform_records
 from cars_bids_data_pipeline_v0__spark.streaming import (
@@ -25,26 +30,46 @@ from cars_bids_data_pipeline_v0__spark.streaming import (
 from .fixtures import write_raw_files
 
 
+def _drop_last_commit(ckpt: str) -> None:
+    """Forget a stream's last completed batch, as a crash between the
+    sink's commit and Spark's checkpoint commit does: the restarted
+    query re-runs that batch from its logged offsets."""
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+
+
 def test_streaming_silver_ingest_matches_batch(spark, tmp_path):
     rawdir = tmp_path / "raw"
     write_raw_files(str(rawdir))
     lake = str(tmp_path / "lake")
     rescrape = str(tmp_path / "rescrape")
-    q = silver_ingest_stream(
-        spark, str(rawdir), lake, str(tmp_path / "ckpt"), rescrape
-    )
+    ckpt = str(tmp_path / "ckpt")
+    q = silver_ingest_stream(spark, str(rawdir), lake, ckpt, rescrape)
     q.awaitTermination(120)
-    got = read_silver_lake(spark, lake)
+    got = tx_read_latest(spark, lake)
     batch_silver, _ = transform_records(read_raw_auctions(spark, str(rawdir)))
     s = sorted(str(r) for r in got.drop("auction_saving_date").collect())
     b = sorted(str(r) for r in batch_silver.collect())
     assert s == b and len(s) == 3
     # restart with no new files → no-op (checkpoint replays nothing)
-    q2 = silver_ingest_stream(
-        spark, str(rawdir), lake, str(tmp_path / "ckpt"), rescrape
-    )
+    q2 = silver_ingest_stream(spark, str(rawdir), lake, ckpt, rescrape)
     q2.awaitTermination(120)
-    assert read_silver_lake(spark, lake).count() == 3
+    assert tx_read_latest(spark, lake).count() == 3
+    # a re-run of the last batch commits nothing
+    version = TransactionLog(lake).version()
+    _drop_last_commit(ckpt)
+    silver_ingest_stream(
+        spark, str(rawdir), lake, ckpt, rescrape
+    ).awaitTermination(120)
+    assert TransactionLog(lake).version() == version
+    assert sorted(
+        str(r) for r in tx_read(spark, lake).drop(
+            "auction_saving_date"
+        ).collect()
+    ) == b
 
 
 def test_streaming_windows_match_batch_q40(spark, tmp_path):
@@ -140,42 +165,55 @@ def test_corpus_dedup_stream_across_arrivals(spark, tmp_path):
     ])
     corpus_dedup_stream(spark, str(docs_dir), out, store, ckpt).awaitTermination()
 
-    kept = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
+    kept = sorted(r["doc_id"] for r in tx_read(spark, out).collect())
     assert kept == [1, 2, 11]  # 3 deduped in-wave, 10 deduped cross-wave
 
 
-def test_corpus_dedup_stream_replay_is_idempotent(spark, tmp_path):
+def test_corpus_dedup_stream_replay_is_idempotent(spark, tmp_path, monkeypatch):
     import json
-    import shutil
 
     docs_dir = tmp_path / "docs"
     docs_dir.mkdir()
     out = str(tmp_path / "out")
     store = str(tmp_path / "fps")
+    ckpt = str(tmp_path / "ckpt")
 
     with open(docs_dir / "w1.json", "w") as f:
         for r in [{"doc_id": 1, "text": "alpha document"},
                   {"doc_id": 2, "text": "beta document"}]:
             f.write(json.dumps(r) + "\n")
-    corpus_dedup_stream(
-        spark, str(docs_dir), out, store, str(tmp_path / "ckpt1")
-    ).awaitTermination()
-    assert sorted(
-        r["doc_id"] for r in spark.read.parquet(out).collect()
-    ) == [1, 2]
 
-    # simulate a crash between the two writes: docs landed, fingerprints
-    # lost.  A checkpoint replay re-runs the same files as batch 0 — the
-    # overwrite-per-batch_id write must NOT duplicate the docs, and must
-    # heal the store.
-    shutil.rmtree(f"{store}/batch_id=0")
+    # a crash between the two commits: the docs land, the fingerprint
+    # commit fails once.  The restart from the same checkpoint re-runs
+    # batch 0 — it must NOT duplicate the docs, and must heal the store.
+    real = TransactionLog.try_commit
+    failed = []
+
+    def fingerprint_commit_fails_once(self, version, add, remove, op, **kw):
+        if self.path == store and op == "append" and not failed:
+            failed.append(version)
+            raise OSError("killed before the fingerprint commit")
+        return real(self, version, add, remove, op, **kw)
+
+    monkeypatch.setattr(
+        TransactionLog, "try_commit", fingerprint_commit_fails_once
+    )
+    with pytest.raises(Exception, match="fingerprint commit"):
+        corpus_dedup_stream(
+            spark, str(docs_dir), out, store, ckpt
+        ).awaitTermination()
+    monkeypatch.undo()
+    assert failed
+    assert sorted(r["doc_id"] for r in tx_read(spark, out).collect()) == [1, 2]
+    assert tx_read(spark, store) is None
+
     corpus_dedup_stream(
-        spark, str(docs_dir), out, store, str(tmp_path / "ckpt2")
+        spark, str(docs_dir), out, store, ckpt
     ).awaitTermination()
     assert sorted(
-        r["doc_id"] for r in spark.read.parquet(out).collect()
+        r["doc_id"] for r in tx_read(spark, out).collect()
     ) == [1, 2]
-    assert spark.read.parquet(store).count() == 2
+    assert tx_read(spark, store).count() == 2
 
 
 def test_stream_static_enrichment_matches_batch(spark, tmp_path):
@@ -269,6 +307,35 @@ def test_rollup_stream_availablenow(spark, tmp_path):
     assert total == read_table(spark, "/root/testdata/sf0.001", "events").count()
 
 
+def test_rollup_stream_replayed_batch_counts_once(spark, tmp_path):
+    """Spark re-runs a batch whose checkpoint commit was lost; the
+    rollup must equal the uninterrupted run, not count the batch
+    twice."""
+    from cars_bids_data_pipeline_v0__spark.streaming.rollup import (
+        read_rollup,
+        rollup_stream,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    events_dir = tmp_path / "events"
+    events_dir.mkdir()
+    shutil.copy(f"{sf}/events.parquet", events_dir / "p0.parquet")
+    rollup = str(tmp_path / "rollup")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run_and_read():
+        rollup_stream(
+            spark, stream_events(spark, str(events_dir)), rollup, ckpt
+        ).awaitTermination()
+        return sorted(tuple(r) for r in read_rollup(spark, rollup).collect())
+
+    want = run_and_read()
+    _drop_last_commit(ckpt)
+    assert run_and_read() == want
+    total = read_rollup(spark, rollup).agg(F.sum("n_events")).collect()[0][0]
+    assert total == read_table(spark, sf, "events").count()
+
+
 def test_stream_stream_join_matches_batch(spark, tmp_path):
     from cars_bids_data_pipeline_v0__spark.streaming import stream_stream_join
 
@@ -345,9 +412,10 @@ def test_scd2_dim_stream_matches_batch_snapshot(spark, tmp_path):
     srcdir.mkdir()
     shutil.copy(f"{sf}/events.parquet", srcdir / "events.parquet")
     dim = str(tmp_path / "scd2_dim")
-    q = scd2_dim_stream(spark, str(srcdir), dim, str(tmp_path / "ckpt"))
+    ckpt = str(tmp_path / "ckpt")
+    q = scd2_dim_stream(spark, str(srcdir), dim, ckpt)
     q.awaitTermination(120)
-    got = sorted(map(str, spark.read.parquet(dim).collect()))
+    got = sorted(map(str, tx_read(spark, dim).collect()))
     batch = scd2_snapshot(
         read_table(spark, sf, "events"),
         key="user_id", tracked="event_type", order_col="ts",
@@ -355,6 +423,12 @@ def test_scd2_dim_stream_matches_batch_snapshot(spark, tmp_path):
     )
     expect = sorted(map(str, batch.collect()))
     assert got == expect and len(got) > 0
+    # a re-run of the last batch applies once
+    version = TransactionLog(dim).version()
+    _drop_last_commit(ckpt)
+    scd2_dim_stream(spark, str(srcdir), dim, ckpt).awaitTermination(120)
+    assert TransactionLog(dim).version() == version
+    assert sorted(map(str, tx_read(spark, dim).collect())) == expect
 
 
 def test_dedup_stream_within_watermark(spark, tmp_path):
@@ -434,8 +508,8 @@ def test_matview_stream_incremental_and_compaction(spark, tmp_path):
 
     # compaction folds per-batch partials into one set; view unchanged
     compact_matview_store(spark, store)
-    per_batch = spark.read.parquet(store)
-    assert per_batch.count() == 3  # one row per group, single batch dir
+    per_batch = tx_read(spark, store)
+    assert per_batch.count() == 3  # one row per group
     v3 = {r["g"]: (r["n_rows"], r["sum_x"], r["min_x"], r["max_x"])
           for r in read_matview(spark, store).collect()}
     assert v3 == v2
@@ -452,9 +526,6 @@ def test_matview_compaction_fences_out_replayed_batches(spark, tmp_path):
     import json
 
     from pyspark.sql import types as T
-    from cars_bids_data_pipeline_v0__spark.operators.matview import (
-        matview_partials,
-    )
     from cars_bids_data_pipeline_v0__spark.streaming.incremental import (
         compact_matview_store,
         matview_stream,
@@ -476,12 +547,10 @@ def test_matview_compaction_fences_out_replayed_batches(spark, tmp_path):
     matview_stream(spark, str(src), store, ckpt, **kw).awaitTermination()
     compact_matview_store(spark, store)
 
-    # simulate: batch 0's partials landed, checkpoint commit was lost, the
-    # restarted stream REPLAYS batch 0 and re-writes its partition
-    replay = spark.createDataFrame([("a", 1.0), ("b", 2.0)], schema)
-    matview_partials(replay, ["g"], {"x": ("sum",)}).write.mode(
-        "overwrite"
-    ).parquet(f"{store}/batch_id=0")
+    # batch 0's partials landed and were compacted, but its checkpoint
+    # commit was lost: the restarted stream REPLAYS batch 0
+    _drop_last_commit(ckpt)
+    matview_stream(spark, str(src), store, ckpt, **kw).awaitTermination()
 
     v = {r["g"]: (r["n_rows"], r["sum_x"])
          for r in read_matview(spark, store).collect()}
@@ -496,15 +565,26 @@ def test_matview_compaction_fences_out_replayed_batches(spark, tmp_path):
     assert v2 == {"a": (2, 6.0), "b": (1, 2.0)}
 
 
-def test_matview_compaction_crash_mid_swap_recovers(spark, tmp_path, monkeypatch):
-    """A compaction killed between setting the old store aside and
-    renaming the compacted copy in leaves a store that reads back as
-    the uninterrupted one; the aside copy is removed and the next
-    compaction runs normally."""
-    import os
+class _Killed(BaseException):
+    """A writer's death: no ``except Exception`` on the way catches it."""
 
+
+@pytest.mark.parametrize("point", ["staged", "link"])
+def test_matview_compaction_crash_leaves_view_readable(
+    spark, tmp_path, monkeypatch, point
+):
+    """A compaction killed after staging its files, or between the
+    commit body's temp write and its link (the crash points of
+    tests/test_txlog.py::test_writer_crash_leaves_table_readable),
+    leaves the store at its old version, reading back as before; the
+    next compaction succeeds."""
     from cars_bids_data_pipeline_v0__spark.operators.matview import (
         matview_partials,
+    )
+    from cars_bids_data_pipeline_v0__spark.sources.txlog import (
+        tx_append_partitioned,
+        tx_fsck,
+        tx_set_partition_spec,
     )
     from cars_bids_data_pipeline_v0__spark.streaming.incremental import (
         compact_matview_store,
@@ -512,33 +592,45 @@ def test_matview_compaction_crash_mid_swap_recovers(spark, tmp_path, monkeypatch
     )
 
     store = str(tmp_path / "partials")
-    for b, rows in enumerate([[("a", 1.0), ("b", 2.0)], [("a", 5.0)]]):
-        matview_partials(
+    tx_set_partition_spec(spark, store, None)
+    for rows in ([("a", 1.0), ("b", 2.0)], [("a", 5.0)]):
+        tx_append_partitioned(spark, matview_partials(
             spark.createDataFrame(rows, "g string, x double"),
             ["g"], {"x": ("sum",)},
-        ).write.parquet(f"{store}/batch_id={b}")
+        ), store)
 
     def view():
         return sorted(tuple(r) for r in read_matview(spark, store).collect())
 
     want = view()
-    real = os.rename
+    log = TransactionLog(store)
+    version = log.version()
 
-    def dies_after_aside(src, dst):
-        if src.endswith(".__compact__"):
-            raise OSError("killed between the two renames")
-        return real(src, dst)
+    def die(*args, **kwargs):
+        raise _Killed()
 
-    monkeypatch.setattr(os, "rename", dies_after_aside)
-    with pytest.raises(OSError):
+    if point == "staged":
+        stage = TransactionLog.stage_dataframe
+
+        def stage_then_die(self, *args, **kwargs):
+            stage(self, *args, **kwargs)
+            die()
+
+        monkeypatch.setattr(TransactionLog, "stage_dataframe", stage_then_die)
+    else:
+        monkeypatch.setattr(os, "link", die)
+    with pytest.raises(_Killed):
         compact_matview_store(spark, store)
-    monkeypatch.setattr(os, "rename", real)
-    assert not os.path.exists(store)
+    monkeypatch.undo()
+
+    assert log.version() == version
+    rep = tx_fsck(store)
+    assert rep["ok"], rep
     assert view() == want
-    assert not os.path.exists(store + ".__old__")
     compact_matview_store(spark, store)
+    assert log.version() == version + 1
     assert view() == want
-    assert sorted(os.listdir(store)) == ["_compacted_through", "batch_id=-1"]
+    assert tx_read(spark, store).count() == 2  # one row per group
 
 
 def test_session_windows_stream_matches_batch(spark, tmp_path):
@@ -963,16 +1055,11 @@ def test_m4_stream_matches_batch_q193(spark, tmp_path):
     got = sorted(tuple(r) for r in read_m4(spark, store).collect())
     assert got == ref
 
-    # checkpoint-replay idempotence: redeliver an already-committed batch
-    # (same batch_id partition, same data) — merge-on-read must not
-    # double-count
-    from cars_bids_data_pipeline_v0__spark.streaming.rollup import (
-        _m4_partials,
-    )
-
-    _m4_partials(h1, int(lo), int(hi), 100).write.mode("overwrite").parquet(
-        f"{store}/batch_id=0"
-    )
+    # checkpoint-replay idempotence: Spark re-runs the last batch (its
+    # checkpoint commit lost) — the store must not double-count it
+    _drop_last_commit(ckpt)
+    stream = stream_events(spark, str(events_dir))
+    m4_stream(spark, stream, store, ckpt, int(lo), int(hi)).awaitTermination()
     replayed = sorted(tuple(r) for r in read_m4(spark, store).collect())
     assert replayed == ref
 

@@ -2876,8 +2876,8 @@ def _conflict_case(spark, name):
     """(setup, compete, verb, fenced no-op value or None) per verb
     family; ``compete`` commits a plain append of rows the verb's retry
     must take into account."""
-    from cars_bids_data_pipeline_v0__spark.sources.sinks import PARTITION_COL
     from cars_bids_data_pipeline_v0__spark.sources.txlog import (
+        PARTITION_COL,
         tx_add_column,
         tx_append_partitioned,
         tx_compact,

@@ -153,3 +153,32 @@ def test_checkpoint_at_any_version_answers_like_replay(
     assert [want[v][0] for v in range(5)] == [30, 60, 56, 51, 56]
     assert want["optimize"][0] == ["0", "1", "2"]
     assert _verbs(ckpt, monkeypatch) == want
+
+
+def test_cold_snapshot_parses_the_sidecar_footer_once(tmp_path, monkeypatch):
+    """The checkpoint loader parses the sidecar's footer to validate it;
+    the snapshot that opens the sidecar reuses that parse."""
+    t = str(tmp_path / "tbl")
+    log = TX.TransactionLog(t)
+    arrow_append(log, [1, 2, 3])
+    arrow_append(log, [4])
+    assert log.checkpoint() == 1
+    _clear()
+    TX._SIDECAR_FOOTER_CACHE.clear()
+
+    import pyarrow.parquet.core as pq_core
+
+    parses = []
+    real = pq.ParquetFile
+
+    def counting(source, *args, metadata=None, **kwargs):
+        if metadata is None:
+            parses.append(source)
+        return real(source, *args, metadata=metadata, **kwargs)
+
+    # pq.read_metadata opens its ParquetFile through the core module
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    monkeypatch.setattr(pq_core, "ParquetFile", counting)
+    snap = TX.TransactionLog(t)._live_actions_shared()
+    assert len(snap) == 2
+    assert len(parses) == 1
