@@ -176,7 +176,6 @@ def _dml_lifecycle(spark, sf_dir: str) -> float:
             spark, path, source, on=["l_orderkey", "l_linenumber"],
             when_matched_update={"l_extendedprice": "s.l_extendedprice"},
             when_not_matched_insert=True,
-            partition_by="l_returnflag",
         )
         tx_delete_where(spark, path, "l_orderkey % 10 = 3", mode="dv")
         force(tx_read(spark, path))

@@ -201,9 +201,11 @@ def _upsert_vehicles(store: GoldStore, src: DataFrame) -> DataFrame:
 
     def build(v: int):
         return _merge_into_once(
-            store.spark, log, log.path, batch, key, update, None, True,
-            None, None, v, log.live_files(upto=v), None, False,
-            broadcast_source=True, may_have_dup_keys=False,
+            store.spark, log, log.path, batch, key,
+            when_matched_update=update, when_matched_delete=None,
+            when_not_matched_insert=True, matched_condition=None,
+            insert_condition=None, v=v, live=log.live_files(upto=v),
+            has_txn=False, broadcast_source=True, may_have_dup_keys=False,
             id_col="vehicle_id",
         )
 

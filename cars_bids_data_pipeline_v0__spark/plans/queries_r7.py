@@ -119,12 +119,7 @@ def _q226_build(spark, sf_dir) -> str:
             txn={"app": "q226", "batch": 1},
         )
     if log.version() < 2:
-        tx_delete_where(
-            spark,
-            path,
-            f"o_orderkey % {_Q226_DELETE_MOD} = 3",
-            partition_by="o_orderpriority",
-        )
+        tx_delete_where(spark, path, f"o_orderkey % {_Q226_DELETE_MOD} = 3")
     return path
 
 
@@ -483,7 +478,6 @@ def q229(spark, sf_dir):
             when_matched_update={"o_totalprice": "s.o_totalprice"},
             when_matched_delete="t.o_orderpriority = '1-URGENT'",
             when_not_matched_insert=True,
-            partition_by="o_orderpriority",
         )
     return (
         tx_read(spark, path)
@@ -1383,7 +1377,6 @@ def q241(spark, sf_dir):
             spark, path, source, on=["c_custkey"],
             when_matched_update={"c_name": "s.c_name"},
             when_not_matched_insert=True,
-            partition_by="c_mktsegment",
         )
     ch = tx_changes(spark, path, pair_updates=True)
     return (

@@ -101,13 +101,10 @@ def _q261_build(spark, sf_dir) -> str:
     if log.version() < 6:
         tx_update_where(
             spark, path, {"s_acctbal": "s_acctbal + 1.0"},
-            "s_suppkey % 10 = 1", partition_by="region_bucket",
+            "s_suppkey % 10 = 1",
         )
     if log.version() < 7:
-        tx_delete_where(
-            spark, path, "s_suppkey % 10 = 6",
-            partition_by="region_bucket",
-        )
+        tx_delete_where(spark, path, "s_suppkey % 10 = 6")
     return path
 
 

@@ -100,7 +100,7 @@ def _filter_value_str(v) -> str | None:
     return None
 
 
-def _file_survives(action: dict, filters: list[Filter], part_col: str | None) -> bool:
+def _file_survives(action: dict, filters: list[Filter]) -> bool:
     """Can this live file contain rows matching every pushed filter?
 
     Uses only commit-log metadata: the file's partition value and its
@@ -112,12 +112,11 @@ def _file_survives(action: dict, filters: list[Filter], part_col: str | None) ->
     partition can never be wrongly pruned (round-6 ADVICE)."""
     part_val = action.get("partition")
     stats = action.get("stats") or {}
-    # partition evolution: an action that records WHICH column laid it
-    # out is pruned against that column only — the session-level option
-    # is just the fallback for actions staged before the field existed.
-    # A file from an older spec is never pruned by a filter on the new
-    # spec's column (conservative keep; zone maps still skip by value).
-    act_part_col = action.get("partition_col") or part_col
+    # partition evolution: a file is pruned against the column its action
+    # records as its layout only, so a file from an older spec is never
+    # pruned by a filter on the new spec's column (conservative keep;
+    # zone maps still skip by value)
+    part_col = action.get("partition_col")
 
     def col_of(f) -> str | None:
         attr = getattr(f, "attribute", None)
@@ -129,7 +128,7 @@ def _file_survives(action: dict, filters: list[Filter], part_col: str | None) ->
         col = col_of(f)
         if col is None:
             continue
-        if act_part_col is not None and col == act_part_col and part_val is not None:
+        if col == part_col and part_val is not None:
             stored = _hive_unescape(str(part_val))
             if stored is None:
                 continue  # null partition: keep (filters may be IsNull)
@@ -180,9 +179,11 @@ class TxLogBatchReader(DataSourceReader):
         self.path = options["path"]
         v = options.get("version")
         self.version = int(v) if v is not None else None
-        self.part_col = options.get("partitioncolumn") or options.get(
-            "partitionColumn"
-        )
+        if any(k.lower() == "partitioncolumn" for k in options):
+            raise ValueError(
+                "format('txlog') has no partitionColumn option: each "
+                "file's add action records the column that laid it out"
+            )
         log = TransactionLog(self.path)
         # a plain dict: the reader is pickled to the Python workers, and
         # the snapshot keeps its checkpoint sidecar open
@@ -267,7 +268,7 @@ class TxLogPruningBatchReader(TxLogBatchReader):
         self._live = {
             rel: act
             for rel, act in self._live.items()
-            if _file_survives(act, filters, self.part_col)
+            if _file_survives(act, filters)
         }
         self._pruned = before - len(self._live)
         # return EVERYTHING as unhandled: Spark re-applies the predicates
@@ -489,7 +490,6 @@ class TxLogDataSource(DataSource):
     """``format("txlog")`` — batch + streaming reads of commit-log tables.
 
     Options: ``path`` (required), ``version`` (batch time travel),
-    ``partitionColumn`` (enables partition-value file pruning),
     ``startingVersion`` (stream start, default -1 = from the beginning),
     ``maxVersionsPerBatch`` (micro-batch span bound, default 64),
     ``ignoreDeletes`` (stream past compaction rewrites),

@@ -34,11 +34,14 @@ lake's per-date keep-latest merge, reference parity), `tx_append_partitioned`
 and `tx_overwrite` (replace-all from the pinned snapshot — folded rollups,
 compactions, the SCD2 dimension).  Each takes a ``txn`` token, so a
 streaming micro-batch replayed after a crash commits at most once.
+Every rewrite keeps the layout the log records
+(`TransactionLog.layout_column`).
 """
 
 from __future__ import annotations
 
 import contextlib
+import datetime
 import functools
 import json
 import os
@@ -54,7 +57,7 @@ from pyspark.sql import functions as F
 from ..operators.dedup import keep_latest
 
 #: the silver lake's date partition column (S5: one partition per
-#: auction date) and the layout default of the merge-shaped writers
+#: auction date)
 PARTITION_COL = "auction_saving_date"
 
 _LOG_DIR = "_txlog"
@@ -167,6 +170,22 @@ def _numeric_bound(x) -> bool:
         isinstance(x, (int, float))
         and not isinstance(x, bool)
         and not (isinstance(x, int) and abs(x) > 2**53)
+    )
+
+
+def _zone_before(a, b) -> bool:
+    """``a < b`` for a zone-map value and a pruning bound: two ISO date or
+    timestamp strings compare as the instants they name (naive = UTC,
+    the engine's session zone), so a bound written
+    ``2024-03-03 10:00:00`` meets a recorded ``2024-03-03T10:00:00+00:00``
+    as Spark's string-to-timestamp cast would; anything else as is."""
+    try:
+        ia, ib = (datetime.datetime.fromisoformat(x) for x in (a, b))
+    except (TypeError, ValueError):
+        return a < b
+    utc = datetime.timezone.utc
+    return ia.replace(tzinfo=ia.tzinfo or utc) < ib.replace(
+        tzinfo=ib.tzinfo or utc
     )
 
 
@@ -526,7 +545,8 @@ class _LazyLive:
         stats for ``col`` is always kept.  Base rows compare in arrow
         when the sidecar carries typed zone columns for ``col`` and both
         bounds are float64-exact numbers; otherwise every action
-        compares in python — the same rule either way."""
+        compares in python — the same rule either way, temporal values
+        compared as instants (`_zone_before`)."""
         import pyarrow.compute as pc
 
         keep: list[str] = []
@@ -556,8 +576,8 @@ class _LazyLive:
         for f, a in rest:
             mm = (a.get("stats") or {}).get(col)
             if mm is not None and (
-                (lo is not None and mm[1] < lo)
-                or (hi is not None and mm[0] > hi)
+                (lo is not None and _zone_before(mm[1], lo))
+                or (hi is not None and _zone_before(hi, mm[0]))
             ):
                 pruned += 1
                 continue
@@ -905,33 +925,18 @@ def _build_live_table(
     if len(live) < _SIDECAR_PARALLEL_MIN:
         return _serial()
     global _SIDECAR_LIVE
-    import multiprocessing as _mp
-
-    try:
-        ctx = _mp.get_context("fork")
-    except ValueError:
-        return _serial()
     n = len(live)
     step = -(-n // _SIDECAR_WORKERS)
     bounds = [(i, min(i + step, n)) for i in range(0, n, step)]
     _SIDECAR_LIVE = live
-    # Timeout = a generous multiple of the expected whole-build time
-    # (~8 s/M rows of json.dumps+arrow per worker at the measured 10M
-    # constant), floor 120 s: forking from a driver with live JVM/py4j
-    # background threads can deadlock a child (a lock held by another
-    # thread at fork, the worker then importing pyarrow), and a plain
-    # pool.map would hang the checkpoint forever with no fallback —
-    # map_async + get(timeout) turns that into the loud serial path
-    # (round-12 ADVICE).
-    timeout_s = max(120.0, len(live) * 1e-6 * 40.0)
-    pool = None
     try:
-        pool = ctx.Pool(len(bounds), initializer=_sidecar_fork_init)
-        parts = pool.map_async(_sidecar_chunk_worker, bounds).get(
-            timeout=timeout_s
+        # timeout = a generous multiple of the expected whole-build time
+        # (~8 s/M rows of json.dumps+arrow per worker at the measured
+        # 10M constant), floor 120 s
+        parts = _fork_pool_map(
+            _sidecar_chunk_worker, bounds,
+            timeout_s=max(120.0, n * 1e-6 * 40.0),
         )
-        pool.close()
-        pool.join()
     except Exception as ex:
         # loud fallback: a silently-serialized 10M build reads as a
         # regression with no cause attached
@@ -942,9 +947,6 @@ def _build_live_table(
             f"({type(ex).__name__}: {ex})",
             file=sys.stderr,
         )
-        if pool is not None:
-            pool.terminate()
-            pool.join()
         return _serial()
     finally:
         _SIDECAR_LIVE = None
@@ -1269,6 +1271,31 @@ class TransactionLog:
         explicitly unpartitioned)."""
         raw = self.partition_spec_raw(upto)
         return raw.get("col") if raw else None
+
+    def layout_column(
+        self, upto: int, replaced: list[str] | None = None
+    ) -> str | None:
+        """The PHYSICAL column every rewrite (DML, MERGE, DV purge,
+        compact, overwrite, Z-order) pinned at ``upto`` stages its files
+        by, from log metadata alone: the declared spec in force (a spec
+        of ``col=None`` means unpartitioned), else the ``partition_col``
+        the ``replaced`` files (none given: the live files) all record,
+        else unpartitioned.  The logical spec is translated to the
+        physical name add actions record; `stage_dataframe` takes that
+        name as is (the rename guards keep the namespaces disjoint)."""
+        spec = self.partition_spec_raw(upto)
+        if spec is not None:
+            renames, _dropped = self.column_mapping(upto=upto)
+            col = spec.get("col")
+            return {l: p for p, l in renames.items()}.get(col, col)
+        acts = self._live_actions_shared(upto=upto)
+        recorded = {
+            a.get("partition_col")
+            for a in (
+                (acts[f] for f in replaced) if replaced else acts.values()
+            )
+        }
+        return recorded.pop() if len(recorded) == 1 else None
 
     def _alter_state(
         self, upto: int | None = None
@@ -1772,9 +1799,11 @@ class TransactionLog:
         expected_rows: int | None = None,
     ) -> list[dict]:
         """Write ``df``'s files into ``data/`` under unique names and return
-        uncommitted add-actions.  With ``partition_by``, one file set per
+        uncommitted add-actions.  With ``partition_by`` (a logical name,
+        or the physical name `layout_column` returns), one file set per
         partition value (the column stays IN the data via a duplicate
-        grouping column, so readers of the bare file list still see it).
+        grouping column, so readers of the bare file list still see it),
+        each action recording the physical column as ``partition_col``.
 
         ``stats_cols`` records per-file min/max for the named columns in
         the add action (read from the parquet footer the file already
@@ -2844,7 +2873,8 @@ def tx_overwrite(
 
     Pins version ``v`` and calls ``make`` with the table read at ``v``
     (``None`` while the table has no data), stages the result under the
-    declared layout and commits it removing every file live at ``v``.  A
+    table's layout (`TransactionLog.layout_column`) and commits it
+    removing every file live at ``v``.  A
     concurrent commit fails the claim and ``make`` reruns on the new
     snapshot, so a fold over the old contents never loses a rival's
     rows.  Readers see the old table or the new one; a writer dying at
@@ -2858,9 +2888,7 @@ def tx_overwrite(
         current = tx_read(spark, table_path, version=v) if v >= 0 else None
         df = tx_apply_generated(make(current), table_path, upto=v)
         tx_check_constraints(df, table_path, upto=v)
-        adds = log.stage_dataframe(
-            df, partition_by=log.partition_spec(upto=v)
-        )
+        adds = log.stage_dataframe(df, partition_by=log.layout_column(v))
         return CommitProposal(adds, sorted(log.live_files(upto=v)), v + 1)
 
     return log.run_optimistic("overwrite", build, txn=txn)
@@ -2869,7 +2897,6 @@ def tx_overwrite(
 def tx_compact(
     spark: SparkSession,
     table_path: str,
-    partition_by: str | None = None,
     partitions: list[str] | None = None,
 ) -> int:
     """OPTIMIZE: rewrite the current live file set into one file per
@@ -2882,9 +2909,9 @@ def tx_compact(
     writer here: a concurrent append/merge fails the commit and the
     compaction recomputes over the new snapshot.
 
-    ``partition_by`` names the layout column for partitioned tables
-    (default: the merge sinks' date column); index/fact tables laid out
-    by another column — e.g. the ANN index's IVF cell — pass theirs.
+    The files land under `TransactionLog.layout_column`'s layout; a file
+    laid out by another column (one that predates the declared spec) is
+    itself a reason to rewrite — compaction is how old layouts migrate.
 
     ``partitions`` scopes the rewrite to the named partition VALUES —
     ``OPTIMIZE ... WHERE`` — the only sane shape at 100 TB: the common
@@ -2908,58 +2935,22 @@ def tx_compact(
             dvmap = {f: dv for f, dv in dvmap.items() if f in live}
             if not live:
                 return 0
-        spec = partition_by or log.partition_spec(upto=v)
-        # the spec is a LOGICAL column name; add actions record the
-        # PHYSICAL layout column (stage_dataframe inverse-renames
-        # before recording), so translate before comparing — otherwise
-        # a spec naming a renamed column reads permanently off-spec and
-        # every compaction rewrites the full table without converging
-        renames, _dropped = log.column_mapping(upto=v)
-        spec_phys = (
-            {l: p for p, l in renames.items()}.get(spec, spec)
-            if spec is not None
-            else None
+        scoped = sorted(live) if partitions is not None else None
+        pcol = log.layout_column(v, scoped)
+        # already one file per partition value under the layout column,
+        # and no deletion vectors to materialize: nothing to do
+        acts = log._live_actions_shared(upto=v)
+        off_layout = any(
+            a.get("partition_col") != pcol
+            for a in ((acts[f] for f in scoped) if scoped else acts.values())
         )
-        # layout decision honors the DECLARED spec, not only existing
-        # files' partition values: an all-unpartitioned table with a
-        # freshly declared spec must MIGRATE to the spec layout here,
-        # or off_spec never clears and compaction never converges
-        partitioned = (
-            any(p is not None for p in live.values()) or spec is not None
-        )
-        # already one file per partition value AND no deletion vectors to
-        # materialize AND no file laid out under an out-of-spec column
-        # (partition evolution: a declared-spec mismatch is itself a
-        # reason to rewrite — compaction is how old layouts migrate)
-        n_parts = len({p for p in live.values()}) if partitioned else 1
-        acts_v = log._live_actions_shared(upto=v)
-        if partitions is not None:
-            acts_v = {f: a for f, a in acts_v.items() if f in live}
-        off_spec = spec_phys is not None and any(
-            a.get("partition_col") != spec_phys for a in acts_v.values()
-        )
-        if len(live) <= n_parts and not dvmap and not off_spec:
+        n_parts = len(set(live.values())) if pcol is not None else 1
+        if len(live) <= n_parts and not dvmap and not off_layout:
             return 0
         df = _read_with_dvs(spark, table_path, sorted(live), dvmap)
-        if partitioned:
-            # layout priority: caller > declared spec (partition
-            # evolution: compacting MIGRATES old-spec files into the
-            # current layout) > the single recorded layout column of the
-            # live files themselves > the legacy merge-sink date column
-            recorded = {
-                a.get("partition_col")
-                for a in log._live_actions_shared(upto=v).values()
-                if a.get("partition_col") is not None
-            }
-            adds = log.stage_dataframe(
-                df,
-                partition_by=partition_by
-                or log.partition_spec(upto=v)
-                or (recorded.pop() if len(recorded) == 1 else None)
-                or PARTITION_COL,
-            )
-        else:
-            adds = log.stage_dataframe(df.coalesce(1))
+        adds = log.stage_dataframe(
+            df if pcol is not None else df.coalesce(1), partition_by=pcol
+        )
         return CommitProposal(adds, sorted(live), len(live))
 
     return log.run_optimistic("compact", build)
@@ -2970,7 +2961,6 @@ def tx_optimize_auto(
     table_path: str,
     small_file_bytes: int = 32 * 1024 * 1024,
     min_small_files: int = 4,
-    partition_by: str | None = None,
 ) -> list[str]:
     """Policy-driven OPTIMIZE: find the partitions suffering small-file
     buildup and compact ONLY those — the auto-compaction loop every
@@ -3005,13 +2995,10 @@ def tx_optimize_auto(
         key=str,
     )
     if picked:
-        tx_compact(
-            spark, table_path, partition_by=partition_by,
-            partitions=picked,
-        )
+        tx_compact(spark, table_path, partitions=picked)
         return picked
     if by_part.get(None, 0) >= min_small_files and len(by_part) == 1:
-        tx_compact(spark, table_path, partition_by=partition_by)
+        tx_compact(spark, table_path)
         return [None]
     return []
 
@@ -3031,9 +3018,11 @@ def tx_optimize_zorder(
     add actions — so `tx_prunable_files` / `tx_scan` zone-map pruning
     works on ALL the z-columns afterwards, not just one sort column.
     Content is untouched (tested); time travel to pre-optimize versions
-    still resolves.  Partitioned tables z-order WITHIN each partition
-    (the partition column keeps its pruning role; each partition's data
-    clusters into num_files / n_partitions range files).
+    still resolves.  Partitioned tables (`TransactionLog.layout_column`)
+    z-order WITHIN each partition (the partition column keeps its
+    pruning role; each partition's data clusters into num_files /
+    n_partitions range files); files predating a declared spec refuse
+    until `tx_compact` migrates them.
 
     Optimistic like every writer here; returns files removed (0 = table
     empty)."""
@@ -3067,8 +3056,9 @@ def tx_optimize_zorder(
         bloom_cols = sorted(prev_bloom) or None
 
         dvmap = log.dvs(upto=v)
-        partitioned = any(p is not None for p in live.values())
-        if not partitioned:
+        scoped = sorted(live) if partitions is not None else None
+        pcol = log.layout_column(v, scoped)
+        if pcol is None:
             df = _read_with_dvs(spark, table_path, sorted(live), dvmap)
             clustered = zorder_cluster(df, zorder_by, num_files, bits)
             adds = log.stage_dataframe(
@@ -3081,6 +3071,12 @@ def tx_optimize_zorder(
             # pruning.  Each partition's files cluster into
             # ceil(num_files / n_partitions) (>= 1) range files; one
             # commit swaps the whole layout atomically.
+            if any(meta[f].get("partition_col") != pcol for f in live):
+                raise ValueError(
+                    f"files of {table_path} predate its declared spec "
+                    f"{pcol!r} — run tx_compact to migrate them before "
+                    "Z-ordering"
+                )
             by_part: dict[str | None, list[str]] = {}
             for rel, part in live.items():
                 by_part.setdefault(part, []).append(rel)
@@ -3099,6 +3095,7 @@ def tx_optimize_zorder(
                 )
                 for a in part_adds:
                     a["partition"] = part
+                    a["partition_col"] = pcol
                 adds.extend(part_adds)
         return CommitProposal(adds, sorted(live), len(live))
 
@@ -3253,7 +3250,6 @@ def tx_stream_cdc_apply_sink(
     delete_value: str = "delete",
     stream_id: str = "cdc",
     checkpoint_dir: str | None = None,
-    partition_by: str | None = None,
     guard_sequence: bool = True,
     checkpoint_every: int | None = 20,
 ):
@@ -3279,7 +3275,9 @@ def tx_stream_cdc_apply_sink(
       defence (requires ``sequence_by`` to be a table column);
     * batch N commits with the ``(stream_id[, checkpoint epoch], N)``
       token — checkpoint replays are no-ops, same fencing contract as
-      `tx_stream_merge_sink`.
+      `tx_stream_merge_sink`;
+    * the files land under the table's layout, as `tx_merge_into`'s do
+      (declare a new table's with `tx_set_partition_spec`).
 
     Usage::
 
@@ -3334,7 +3332,6 @@ def tx_stream_cdc_apply_sink(
                 if guard_sequence else None
             ),
             insert_condition=f"s.{op_col} <> '{delete_value}'",
-            partition_by=partition_by,
             txn={"app": app_id, "batch": int(batch_id)},
         )
         if checkpoint_every is not None:
@@ -3541,19 +3538,25 @@ def _footer_stats(parquet_path: str, cols: list[str]) -> dict:
     """Per-file min/max from the parquet FOOTER (no data scan) for the
     requested columns, JSON-serializable: numbers stay numbers, temporal
     values become ISO strings (ISO order == chronological order, so
-    string comparison prunes correctly)."""
-    import datetime as _dt
+    string comparison prunes correctly).
 
+    A column whose footer carries no min/max — Spark's default INT96
+    timestamps never do — takes them from the (local, just staged)
+    file's column instead; INT96 holds UTC instants, so it encodes like
+    a footer's UTC-adjusted timestamp."""
+    import pyarrow as _pa
+    import pyarrow.compute as _pc
     import pyarrow.parquet as _pq
 
     def enc(v):
-        if isinstance(v, (_dt.datetime, _dt.date)):
+        if isinstance(v, (datetime.datetime, datetime.date)):
             return v.isoformat()
         if isinstance(v, bytes):
             return v.decode("utf-8", "replace")
         return v
 
-    md = _pq.ParquetFile(parquet_path).metadata
+    pf = _pq.ParquetFile(parquet_path)
+    md = pf.metadata
     out: dict = {}
     for rg_i in range(md.num_row_groups):
         rg = md.row_group(rg_i)
@@ -3570,6 +3573,18 @@ def _footer_stats(parquet_path: str, cols: list[str]) -> dict:
                 out[name] = [min(out[name][0], lo), max(out[name][1], hi)]
             else:
                 out[name] = [lo, hi]
+    missing = [c for c in cols if c not in out and c in pf.schema_arrow.names]
+    if missing:
+        table = pf.read(columns=missing)
+        for name in missing:
+            col = table.column(name)
+            if _pa.types.is_nested(col.type):
+                continue
+            if _pa.types.is_timestamp(col.type) and col.type.tz is None:
+                col = col.cast(_pa.timestamp("us", tz="UTC"))
+            mm = _pc.min_max(col).as_py()
+            if mm["min"] is not None:
+                out[name] = [enc(mm["min"]), enc(mm["max"])]
     return out
 
 
@@ -3620,7 +3635,8 @@ def tx_scan(
 
     At 100 TB this is the difference between 'scan the table' and 'open
     the 0.1% of files whose key range overlaps': the same reason Delta
-    writes per-file stats into its log.
+    writes per-file stats into its log.  A timestamp bound is an ISO
+    string, ``T`` or space separated, naive meaning UTC.
     """
     log = TransactionLog(table_path)
     if log.version() < 0:
@@ -3675,7 +3691,6 @@ def tx_delete_where(
     spark: SparkSession,
     table_path: str,
     predicate: str,
-    partition_by: str | None = None,
     mode: str = "cow",
 ) -> int:
     """Row-level DELETE (the GDPR / right-to-be-forgotten primitive the
@@ -3697,6 +3712,7 @@ def tx_delete_where(
     Both commit atomically (cow: one add+remove; dv: one metadata
     commit), so readers see every matching row or none — and time travel
     below the delete still resolves until ``vacuum(keep_history=False)``.
+    Rewrites keep the layout (`TransactionLog.layout_column`).
 
     ``predicate`` is a SQL boolean expression over the table's columns
     (e.g. ``"auction_id = 'x'"``).
@@ -3737,22 +3753,10 @@ def tx_delete_where(
             spark, table_path, affected,
             {f: dvmap[f] for f in affected if f in dvmap},
         ).filter(~F.coalesce(F.expr(predicate), F.lit(False)))
-        partitioned = any(live[rel] is not None for rel in affected)
-        # layout column for the rewritten files: the caller's partition_by,
-        # else the merge sinks' date column when present.  A partitioned
-        # table with neither restages unpartitioned — those files lose
-        # partition-PRUNING metadata but stay correct (pruning keeps
-        # files whose partition value is unknown).
-        pcol = partition_by or (
-            PARTITION_COL if PARTITION_COL in keep.columns else None
+        adds = [] if keep.isEmpty() else log.stage_dataframe(
+            keep, partition_by=log.layout_column(v, affected)
         )
-        if keep.isEmpty():
-            adds: list[dict] = []
-        elif partitioned and pcol is not None:
-            adds = log.stage_dataframe(keep, partition_by=pcol)
-        else:
-            adds = log.stage_dataframe(keep)
-        return CommitProposal(adds, sorted(affected), n_deleted)
+        return CommitProposal(adds, affected, n_deleted)
 
     return log.run_optimistic("delete_dv" if mode == "dv" else "delete", build)
 
@@ -3836,11 +3840,7 @@ def _stage_dv_delete(
         shutil.rmtree(stage, ignore_errors=True)
 
 
-def tx_purge_dvs(
-    spark: SparkSession,
-    table_path: str,
-    partition_by: str | None = None,
-) -> int:
+def tx_purge_dvs(spark: SparkSession, table_path: str) -> int:
     """Materialize every deletion vector: rewrite ONLY the DV-carrying
     data files without their deleted rows, as one atomic add+remove.
     The retired DV entries fall out of force automatically (a DV follows
@@ -3856,19 +3856,11 @@ def tx_purge_dvs(
         dvmap = log.dvs(upto=v)
         if not dvmap:
             return 0
-        live = log.live_files(upto=v)
         files = sorted(dvmap)
         kept = _read_with_dvs(spark, table_path, files, dvmap)
-        partitioned = any(live[rel] is not None for rel in files)
-        pcol = partition_by or (
-            PARTITION_COL if PARTITION_COL in kept.columns else None
+        adds = [] if kept.isEmpty() else log.stage_dataframe(
+            kept, partition_by=log.layout_column(v, files)
         )
-        if kept.isEmpty():
-            adds: list[dict] = []
-        elif partitioned and pcol is not None:
-            adds = log.stage_dataframe(kept, partition_by=pcol)
-        else:
-            adds = log.stage_dataframe(kept)
         return CommitProposal(adds, files, len(files))
 
     return log.run_optimistic("purge_dv", build)
@@ -3879,7 +3871,6 @@ def tx_update_where(
     table_path: str,
     set_exprs: dict[str, str],
     predicate: str,
-    partition_by: str | None = None,
 ) -> int:
     """Row-level UPDATE, copy-on-write — ``UPDATE t SET col = expr, ...
     WHERE predicate`` (the reference can only re-load whole batches;
@@ -3973,14 +3964,9 @@ def tx_update_where(
                     for name, sql in sorted(cons.items())
                 ],
             )
-        partitioned = any(live[rel] is not None for rel in affected)
-        pcol = partition_by or (
-            PARTITION_COL if PARTITION_COL in updated.columns else None
+        adds = log.stage_dataframe(
+            updated, partition_by=log.layout_column(v, affected)
         )
-        if partitioned and pcol is not None:
-            adds = log.stage_dataframe(updated, partition_by=pcol)
-        else:
-            adds = log.stage_dataframe(updated)
         if obs is not None:
             vals = obs.get  # staging was the plan's one action
             bad = {
@@ -4013,7 +3999,6 @@ def tx_merge_into(
     when_not_matched_insert: bool | dict[str, str] = True,
     matched_condition: str | None = None,
     insert_condition: str | None = None,
-    partition_by: str | None = None,
     txn: dict | None = None,
     broadcast_source: bool | None = None,
 ) -> dict:
@@ -4049,7 +4034,9 @@ def tx_merge_into(
     affected-files × source (broadcast when small, AQE otherwise), never
     table × source.  Inserts and rewrites commit as ONE atomic
     add+remove (op ``merge_into``), idempotent under ``txn``
-    (app/batch fencing, same contract as `tx_append_partitioned`).
+    (app/batch fencing, same contract as `tx_append_partitioned`), and
+    land under the table's layout (`TransactionLog.layout_column`; a
+    table MERGE creates is laid out by its `tx_set_partition_spec`).
 
     ``broadcast_source`` (default auto: source rows ≤ 2M) hints the
     source side of the match-finding and rewrite joins so the target is
@@ -4104,7 +4091,7 @@ def tx_merge_into(
             when_matched_update, when_matched_delete,
             when_not_matched_insert, matched_condition,
             insert_condition, v, log.live_files(upto=v) if v >= 0 else {},
-            partition_by, txn is not None, broadcast_source,
+            txn is not None, broadcast_source,
             int(stats[0]["__n"]) > int(stats[0]["__nd"]),
         )
 
@@ -4149,7 +4136,7 @@ def _visible_row_count(
 def _merge_into_once(
     spark, log, table_path, source, on,
     when_matched_update, when_matched_delete, when_not_matched_insert,
-    matched_condition, insert_condition, v, live, partition_by, has_txn,
+    matched_condition, insert_condition, v, live, has_txn,
     broadcast_source=False, may_have_dup_keys=True, id_col=None,
 ):
     """One optimistic attempt of `tx_merge_into` against snapshot ``v``:
@@ -4188,7 +4175,7 @@ def _merge_into_once(
             )
         tx_check_constraints(ins, table_path)
         adds = log.stage_dataframe(
-            ins, partition_by=partition_by, stats_cols=stats
+            ins, partition_by=log.layout_column(v), stats_cols=stats
         )
         return CommitProposal(adds, [], _merge_counts(
             0, 0, sum(int(a["rows"]) for a in adds), 0, v + 1
@@ -4456,30 +4443,24 @@ def _merge_into_once(
             out = parts[0]
             for p in parts[1:]:
                 out = out.unionByName(p)
-            partitioned = any(live[rel] is not None for rel in affected)
-            pcol = partition_by or (
-                PARTITION_COL if PARTITION_COL in out.columns else None
-            )
-            # stage unconditionally (isEmpty() would fire the rewrite
-            # observation with a partial limit-1 pass); an all-delete
-            # rewrite surfaces as zero-row footers, discarded here
-            if (partitioned or not affected) and pcol is not None:
+            # a merge that replaces no file lays its inserts out like the
+            # table's live files
+            pcol = log.layout_column(v, affected)
+            exp = None
+            if pcol is not None:
                 # metadata-exact upper bound on the staged row count
                 # (affected files' visible rows + inserts) lets the staging
                 # write sub-split large partitions into parallel encode
                 # tasks — see stage_dataframe (round-13 optimization pass)
-                exp = (
-                    _visible_row_count(log, table_path, affected, dvmap, v)
-                    + n_ins
-                    if affected
-                    else n_ins
+                exp = n_ins + _visible_row_count(
+                    log, table_path, affected, dvmap, v
                 )
-                staged = log.stage_dataframe(
-                    out, partition_by=pcol, stats_cols=stats,
-                    expected_rows=exp,
-                )
-            else:
-                staged = log.stage_dataframe(out, stats_cols=stats)
+            # stage unconditionally (isEmpty() would fire the rewrite
+            # observation with a partial limit-1 pass); an all-delete
+            # rewrite surfaces as zero-row footers, discarded here
+            staged = log.stage_dataframe(
+                out, partition_by=pcol, stats_cols=stats, expected_rows=exp
+            )
             adds = [a for a in staged if a.get("rows")]
             if len(adds) != len(staged):
                 log.discard([a for a in staged if not a.get("rows")])
@@ -5482,10 +5463,13 @@ def tx_append_partitioned(
 
 def _fork_pool_map(worker, items, timeout_s: float) -> list:
     """``fork``-context Pool.map with the engine's fork-safety
-    discipline (see `_build_live_table`): children run
-    `_sidecar_fork_init` (gc off, py4j send paths no-op'd), map_async +
-    timeout so a fork-with-threads deadlock cannot hang the verb
-    forever, and ANY failure raises so the caller can take its loud
+    discipline: children run `_sidecar_fork_init` (gc off, py4j send
+    paths no-op'd), and map_async + timeout stands in for a plain
+    pool.map — forking from a driver with live JVM/py4j background
+    threads can deadlock a child (a lock held by another thread at
+    fork, the worker then importing pyarrow), which would otherwise
+    hang the verb forever (round-12 ADVICE).  ANY failure, a platform
+    without ``fork`` included, raises so the caller can take its loud
     serial fallback."""
     import multiprocessing as _mp
 
@@ -6357,7 +6341,8 @@ def tx_set_partition_spec(
     Iceberg-style partition evolution.
 
     Declares the layout column FUTURE writes default to
-    (`tx_append_partitioned` may then omit ``partition_by``); existing
+    (`tx_append_partitioned` may then omit ``partition_by``, and every
+    rewrite stages by it — `TransactionLog.layout_column`); existing
     files are untouched — each add-action records the ``partition_col``
     it was actually laid out by, so readers prune every file against
     the right column's values regardless of how many spec changes the

@@ -145,7 +145,7 @@ def test_index_compaction_one_file_per_cell_probe_unchanged(spark, tmp_path):
         ).collect())
     )
 
-    removed = tx_compact(spark, index, partition_by="__ivf_cell")
+    removed = tx_compact(spark, index)
     assert removed == len(before)
     after = TransactionLog(index).live_files()
     n_cells = len({p for p in after.values()})

@@ -74,19 +74,13 @@ def test_spec_validates_column_against_schema(spark, tmp_path):
 def test_old_spec_files_never_pruned_by_new_spec_filter():
     old = {"partition": "1", "partition_col": "p"}
     new = {"partition": "1", "partition_col": "q"}
-    legacy = {"partition": "1"}  # staged before the field existed
     # filter on q: q-laid files prune, p-laid files are kept conservatively
-    assert _file_survives(old, [EqualTo(("q",), 0)], None)
-    assert not _file_survives(new, [EqualTo(("q",), 0)], None)
-    assert _file_survives(new, [EqualTo(("q",), 1)], None)
+    assert _file_survives(old, [EqualTo(("q",), 0)])
+    assert not _file_survives(new, [EqualTo(("q",), 0)])
+    assert _file_survives(new, [EqualTo(("q",), 1)])
     # filter on p: symmetric
-    assert not _file_survives(old, [EqualTo(("p",), 0)], None)
-    assert _file_survives(new, [EqualTo(("p",), 0)], None)
-    # legacy actions keep the session-option behavior
-    assert not _file_survives(legacy, [EqualTo(("p",), 0)], "p")
-    assert _file_survives(legacy, [EqualTo(("p",), 1)], "p")
-    # recorded column OUTRANKS a (stale) session option
-    assert _file_survives(old, [EqualTo(("q",), 0)], "q")
+    assert not _file_survives(old, [EqualTo(("p",), 0)])
+    assert _file_survives(new, [EqualTo(("p",), 0)])
 
 
 def test_mixed_layout_reads_prune_correctly_end_to_end(spark, tmp_path):

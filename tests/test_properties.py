@@ -511,18 +511,15 @@ def test_tx_changes_replay_reconstructs_snapshot(spark, tmp_path_factory, ops):
                     df = df.withColumn("extra", F.lit("w"))
             tx_append_partitioned(spark, df, t, partition_by="p")
         elif op == "delete" and log.version() >= 0:
-            tx_delete_where(
-                spark, t, f"{idcol()} % 5 = {arg}", partition_by="p"
-            )
+            tx_delete_where(spark, t, f"{idcol()} % 5 = {arg}")
         elif op == "delete_dv" and log.version() >= 0:
             tx_delete_where(
-                spark, t, f"{idcol()} % 7 = {arg}", partition_by="p",
-                mode="dv",
+                spark, t, f"{idcol()} % 7 = {arg}", mode="dv"
             )
         elif op == "purge_dv" and log.version() >= 0:
-            tx_purge_dvs(spark, t, partition_by="p")
+            tx_purge_dvs(spark, t)
         elif op == "compact" and log.version() >= 0:
-            tx_compact(spark, t, partition_by="p")
+            tx_compact(spark, t)
         elif op == "zorder" and log.version() >= 0:
             tx_optimize_zorder(spark, t, zorder_by=[idcol()], num_files=2)
         elif op == "restore" and log.version() >= 1:
@@ -769,6 +766,7 @@ def test_merge_into_matches_reference_model(
         tx_append_partitioned,
         tx_merge_into,
         tx_read,
+        tx_set_partition_spec,
     )
 
     tmp = tmp_path_factory.mktemp("merge_prop")
@@ -782,6 +780,8 @@ def test_merge_into_matches_reference_model(
             ),
             t, partition_by="p",
         )
+    else:
+        tx_set_partition_spec(spark, t, "p")
     src = spark.createDataFrame(
         [(k, v, k % 3) for k, v in source.items()],
         "id long, val int, p int",
@@ -792,7 +792,6 @@ def test_merge_into_matches_reference_model(
         when_matched_delete="s.val < 0" if delete_cond else None,
         when_not_matched_insert=do_insert,
         matched_condition="t.val < s.val" if matched_gate else None,
-        partition_by="p",
     )
     expect = ref_merge(
         target, source, do_update, delete_cond, do_insert, matched_gate

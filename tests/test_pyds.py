@@ -56,34 +56,29 @@ def test_batch_read_equals_tx_read_and_time_travels(spark, tmp_path):
 def test_batch_partitions_are_per_file_and_filters_correct(spark, tmp_path):
     t = str(tmp_path / "tbl")
     tx_append_partitioned(spark, _mk(spark, 0, 30), t, partition_by="p")
-    df = (
-        spark.read.format("txlog")
-        .option("path", t)
-        .option("partitionColumn", "p")
-        .load()
-    )
+    df = spark.read.format("txlog").option("path", t).load()
     got = df.filter((F.col("p") == 1) & (F.col("id") >= 10))
     expect = [(i, f"doc{i}", 1) for i in range(10, 30) if i % 3 == 1]
     assert _rows(got) == sorted(expect)
 
 
 def test_file_survives_prunes_on_partition_and_zone_maps():
-    act = {"partition": "2", "stats": {"id": [10, 19]}}
+    act = {"partition": "2", "partition_col": "p", "stats": {"id": [10, 19]}}
     # partition equality prunes
-    assert not _file_survives(act, [EqualTo(("p",), 1)], "p")
-    assert _file_survives(act, [EqualTo(("p",), 2)], "p")
-    assert not _file_survives(act, [In(("p",), (0, 1))], "p")
+    assert not _file_survives(act, [EqualTo(("p",), 1)])
+    assert _file_survives(act, [EqualTo(("p",), 2)])
+    assert not _file_survives(act, [In(("p",), (0, 1))])
     # zone maps prune ranges
-    assert not _file_survives(act, [EqualTo(("id",), 25)], "p")
-    assert _file_survives(act, [EqualTo(("id",), 12)], "p")
-    assert not _file_survives(act, [GreaterThan(("id",), 19)], "p")
-    assert _file_survives(act, [GreaterThan(("id",), 18)], "p")
-    assert not _file_survives(act, [LessThanOrEqual(("id",), 9)], "p")
+    assert not _file_survives(act, [EqualTo(("id",), 25)])
+    assert _file_survives(act, [EqualTo(("id",), 12)])
+    assert not _file_survives(act, [GreaterThan(("id",), 19)])
+    assert _file_survives(act, [GreaterThan(("id",), 18)])
+    assert not _file_survives(act, [LessThanOrEqual(("id",), 9)])
     # missing metadata keeps the file (conservative), as do unknown
     # columns and incomparable types
-    assert _file_survives({}, [EqualTo(("id",), 25)], "p")
-    assert _file_survives(act, [EqualTo(("other",), 1)], "p")
-    assert _file_survives(act, [EqualTo(("id",), "not-an-int")], "p")
+    assert _file_survives({}, [EqualTo(("id",), 25)])
+    assert _file_survives(act, [EqualTo(("other",), 1)])
+    assert _file_survives(act, [EqualTo(("id",), "not-an-int")])
 
 
 def test_pushdown_prunes_files_without_changing_results(spark, tmp_path):
@@ -96,7 +91,7 @@ def test_pushdown_prunes_files_without_changing_results(spark, tmp_path):
         )
         log.try_commit(log.version() + 1, adds, [], op="append")
 
-    reader = TxLogPruningBatchReader({"path": t, "partitioncolumn": "p"})
+    reader = TxLogPruningBatchReader({"path": t})
     n_before = len(reader._live)
     unhandled = list(reader.pushFilters([EqualTo(("p",), 1), GreaterThan(("id",), 19)]))
     assert len(unhandled) == 2  # everything handed back to Spark
@@ -109,7 +104,6 @@ def test_pushdown_prunes_files_without_changing_results(spark, tmp_path):
     df = (
         spark.read.format("txlog")
         .option("path", t)
-        .option("partitionColumn", "p")
         .load()
         .filter((F.col("p") == 1) & (F.col("id") > 19))
     )
@@ -173,7 +167,7 @@ def test_stream_refuses_compacted_history_unless_opted_in(spark, tmp_path):
     tx_append_partitioned(spark, _mk(spark, 0, 4), t, partition_by="p")
     tx_append_partitioned(spark, _mk(spark, 4, 8), t, partition_by="p")
     # rewrites history → remove actions in the log
-    tx_compact(spark, t, partition_by="p")
+    tx_compact(spark, t)
 
     def run(**opts):
         reader = (
@@ -240,23 +234,24 @@ def test_partition_pruning_normalizes_booleans_and_escaped_values(spark, tmp_pat
     assert _filter_value_str(1.5) is None  # ambiguous → caller keeps file
 
     # boolean partition: str(True) == "True" used to mismatch "true"
-    act = {"partition": "true"}
-    assert _file_survives(act, [EqualTo(("flag",), True)], "flag")
-    assert not _file_survives(act, [EqualTo(("flag",), False)], "flag")
+    act = {"partition": "true", "partition_col": "flag"}
+    assert _file_survives(act, [EqualTo(("flag",), True)])
+    assert not _file_survives(act, [EqualTo(("flag",), False)])
     # escaped timestamp partition survives an equality on the same instant
-    act = {"partition": "2024-05-01 10%3A00%3A00"}
+    act = {"partition": "2024-05-01 10%3A00%3A00", "partition_col": "ts"}
     ts = datetime.datetime(2024, 5, 1, 10, 0, 0)
-    assert _file_survives(act, [EqualTo(("ts",), ts)], "ts")
+    assert _file_survives(act, [EqualTo(("ts",), ts)])
     assert not _file_survives(
-        act, [EqualTo(("ts",), ts.replace(hour=11))], "ts"
+        act, [EqualTo(("ts",), ts.replace(hour=11))]
     )
     # null-partition sentinel and unrenderable values: keep (conservative)
     assert _file_survives(
-        {"partition": "__HIVE_DEFAULT_PARTITION__"},
+        {"partition": "__HIVE_DEFAULT_PARTITION__", "partition_col": "p"},
         [EqualTo(("p",), 1)],
-        "p",
     )
-    assert _file_survives({"partition": "1.5"}, [EqualTo(("p",), 1.5)], "p")
+    assert _file_survives(
+        {"partition": "1.5", "partition_col": "p"}, [EqualTo(("p",), 1.5)]
+    )
 
     # end-to-end: boolean partition + pushdown still returns every row
     t = str(tmp_path / "booltbl")
@@ -267,7 +262,6 @@ def test_partition_pruning_normalizes_booleans_and_escaped_values(spark, tmp_pat
     got = (
         spark.read.format("txlog")
         .option("path", t)
-        .option("partitionColumn", "flag")
         .load()
         .filter(F.col("flag") == True)  # noqa: E712
     )
@@ -361,8 +355,8 @@ def test_stream_change_feed_tags_inserts_and_deletes(spark, tmp_path):
     assert sorted(seen) == [(i, "insert", 0, "append") for i in range(6)]
 
     seen.clear()
-    tx_delete_where(spark, t, "id >= 4", partition_by="p")
-    tx_compact(spark, t, partition_by="p")  # may no-op on tiny layouts
+    tx_delete_where(spark, t, "id >= 4")
+    tx_compact(spark, t)  # may no-op on tiny layouts
     v_append = TransactionLog(t).version() + 1
     tx_append_partitioned(spark, _mk(spark, 6, 8), t, partition_by="p")
     run()

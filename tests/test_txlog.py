@@ -1227,7 +1227,7 @@ def _cdf_table(spark, tmp_path):
     t = str(tmp_path / "tbl")
     tx_append_partitioned(spark, _cdf_mk(spark, 0, 6), t, partition_by="p")
     tx_append_partitioned(spark, _cdf_mk(spark, 6, 10), t, partition_by="p")
-    n = tx_delete_where(spark, t, "id % 2 = 1", partition_by="p")
+    n = tx_delete_where(spark, t, "id % 2 = 1")
     assert n == 5
     return t
 
@@ -1329,7 +1329,7 @@ def test_tx_changes_compaction_and_restore_are_arithmetically_clean(
     t = _cdf_table(spark, tmp_path)
     log = TransactionLog(t)
     v_del = log.version()
-    tx_compact(spark, t, partition_by="p")  # layout-only rewrite
+    tx_compact(spark, t)  # layout-only rewrite
     v_cmp = log.version()
     if v_cmp > v_del:  # compaction had something to do
         ch = tx_changes(spark, t, since=v_del, upto=v_cmp)
@@ -1524,9 +1524,7 @@ def test_tx_update_where_cow_semantics(spark, tmp_path):
     v_before = TransactionLog(t).version()
     live_before = set(TransactionLog(t).live_files())
 
-    n = tx_update_where(
-        spark, t, {"s": "concat(s, '!')"}, "id >= 7", partition_by="p"
-    )
+    n = tx_update_where(spark, t, {"s": "concat(s, '!')"}, "id >= 7")
     assert n == 3
     got = {r["id"]: r["s"] for r in tx_read(spark, t).collect()}
     assert got[7] == "d7!" and got[8] == "d8!" and got[9] == "d9!"
@@ -1663,20 +1661,23 @@ def test_tx_merge_into_empty_target_and_cdf(spark, tmp_path):
         tx_changes,
         tx_merge_into,
         tx_read,
+        tx_set_partition_spec,
     )
 
     t = str(tmp_path / "tbl")
+    tx_set_partition_spec(spark, t, "p")  # version 0
     src = spark.createDataFrame(
         [(1, "a", 0), (2, "b", 1)], "id long, s string, p int"
     )
-    res = tx_merge_into(spark, t, src, on=["id"], partition_by="p")
+    res = tx_merge_into(spark, t, src, on=["id"])
     assert res["inserted"] == 2
     assert tx_read(spark, t).count() == 2
 
     upd = spark.createDataFrame([(1, "A", 0)], "id long, s string, p int")
     tx_merge_into(spark, t, upd, on=["id"], when_matched_update={"s": "s.s"})
-    # CDF shows the update as its delete+insert pair
-    ch = tx_changes(spark, t, since=0).collect()
+    # CDF after the creating MERGE shows the update as its
+    # delete+insert pair
+    ch = tx_changes(spark, t, since=1).collect()
     pair = {(r["_change_type"], r["s"]) for r in ch if r["id"] == 1}
     assert pair == {("delete", "a"), ("insert", "A")}
 
@@ -1742,7 +1743,7 @@ def test_dv_purge_compact_and_vacuum(spark, tmp_path):
     log = TransactionLog(t)
     assert log.dvs()
 
-    n_files = tx_purge_dvs(spark, t, partition_by="p")
+    n_files = tx_purge_dvs(spark, t)
     assert n_files >= 1
     assert log.dvs() == {}  # retired with their data files
     assert sorted(r["id"] for r in tx_read(spark, t).collect()) == list(
@@ -1753,7 +1754,7 @@ def test_dv_purge_compact_and_vacuum(spark, tmp_path):
 
     # compact also materializes DVs
     tx_delete_where(spark, t, "id = 9", mode="dv")
-    assert tx_compact(spark, t, partition_by="p") > 0
+    assert tx_compact(spark, t) > 0
     assert log.dvs() == {}
     assert sorted(r["id"] for r in tx_read(spark, t).collect()) == list(
         range(3, 9)
@@ -1883,7 +1884,7 @@ def test_dv_guards_exports_scans_and_fsck(spark, tmp_path):
     rep = tx_fsck(t)
     assert rep["ok"] and not rep["missing_dv_files"]
 
-    tx_purge_dvs(spark, t, partition_by="p")
+    tx_purge_dvs(spark, t)
     tx_export_symlink_manifest(t)  # now fine
 
 
@@ -1902,13 +1903,13 @@ def test_tx_cdc_apply_sink_semantics(spark, tmp_path):
     from cars_bids_data_pipeline_v0__spark.sources.txlog import (
         TransactionLog,
         tx_read,
+        tx_set_partition_spec,
         tx_stream_cdc_apply_sink,
     )
 
     t = str(tmp_path / "cdc")
-    sink = tx_stream_cdc_apply_sink(
-        t, key="id", sequence_by="ts", partition_by="p"
-    )
+    tx_set_partition_spec(spark, t, "p")
+    sink = tx_stream_cdc_apply_sink(t, key="id", sequence_by="ts")
 
     # batch 0: pure inserts — op column must NOT reach the table
     sink(_cdc_mk(spark, [
@@ -1958,12 +1959,14 @@ def test_tx_cdc_apply_through_real_stream(spark, tmp_path):
 
     from cars_bids_data_pipeline_v0__spark.sources.txlog import (
         tx_read,
+        tx_set_partition_spec,
         tx_stream_cdc_apply_sink,
     )
 
     src = str(tmp_path / "in")
     ck = str(tmp_path / "ck")
     t = str(tmp_path / "cdc")
+    tx_set_partition_spec(spark, t, "p")
     _os.makedirs(src)
     with open(_os.path.join(src, "b0.json"), "w") as f:
         for row in [
@@ -1979,8 +1982,7 @@ def test_tx_cdc_apply_through_real_stream(spark, tmp_path):
     q = (
         stream.writeStream
         .foreachBatch(tx_stream_cdc_apply_sink(
-            t, key="id", sequence_by="ts", partition_by="p",
-            checkpoint_dir=ck,
+            t, key="id", sequence_by="ts", checkpoint_dir=ck,
         ))
         .option("checkpointLocation", ck)
         .trigger(availableNow=True)
@@ -2049,7 +2051,7 @@ def test_tx_compact_partition_scoped(spark, tmp_path):
     # a DV on an OUT-OF-SCOPE partition must survive the scoped compact
     tx_delete_where(spark, t, "id = 1", mode="dv")  # id 1 -> p=1
 
-    removed = tx_compact(spark, t, partition_by="p", partitions=["0"])
+    removed = tx_compact(spark, t, partitions=["0"])
     assert removed == 3
     after = log.live_files()
     assert {f for f, p in after.items() if p == "0"} != p0_before
@@ -2060,9 +2062,9 @@ def test_tx_compact_partition_scoped(spark, tmp_path):
         i for i in range(18) if i != 1
     ]
     # scoped compact of an already-compacted partition is a no-op
-    assert tx_compact(spark, t, partition_by="p", partitions=["0"]) == 0
+    assert tx_compact(spark, t, partitions=["0"]) == 0
     # unknown partition value -> nothing to do
-    assert tx_compact(spark, t, partition_by="p", partitions=["zz"]) == 0
+    assert tx_compact(spark, t, partitions=["zz"]) == 0
 
 
 def test_tx_clone_shallow_and_vacuum_dry_run(spark, tmp_path):
@@ -2136,6 +2138,7 @@ def test_tx_cdf_stream_replication_end_to_end(spark, tmp_path):
     from cars_bids_data_pipeline_v0__spark.sources.txlog import (
         tx_append_partitioned,
         tx_read,
+        tx_set_partition_spec,
         tx_stream_cdc_apply_sink,
     )
 
@@ -2143,6 +2146,7 @@ def test_tx_cdf_stream_replication_end_to_end(spark, tmp_path):
     src_t = str(tmp_path / "src")
     rep_t = str(tmp_path / "rep")
     ck = str(tmp_path / "ck")
+    tx_set_partition_spec(spark, rep_t, "p")
 
     # source history: two appends (no rewrites — the stream source's
     # append-only contract; rewriting commits are covered by the batch
@@ -2165,7 +2169,7 @@ def test_tx_cdf_stream_replication_end_to_end(spark, tmp_path):
             tx_stream_cdc_apply_sink(
                 rep_t, key="id", sequence_by="_seq",
                 op_col="_change_type", delete_value="delete",
-                partition_by="p", checkpoint_dir=ck,
+                checkpoint_dir=ck,
             )
         )
         .option("checkpointLocation", ck)
@@ -2194,7 +2198,7 @@ def test_tx_cdf_stream_replication_end_to_end(spark, tmp_path):
             tx_stream_cdc_apply_sink(
                 rep_t, key="id", sequence_by="_seq",
                 op_col="_change_type", delete_value="delete",
-                partition_by="p", checkpoint_dir=ck,
+                checkpoint_dir=ck,
             )
         )
         .option("checkpointLocation", ck)
@@ -2386,7 +2390,6 @@ def test_tx_optimize_auto_compacts_only_hot_partitions(spark, tmp_path):
 
     picked = tx_optimize_auto(
         spark, t, small_file_bytes=1 << 20, min_small_files=4,
-        partition_by="p",
     )
     assert picked == ["0"]
     live = log.live_files()
@@ -2943,9 +2946,7 @@ def _conflict_case(spark, name):
             spark, t, "id IN (1, 100)", mode="dv"
         ), None
     if name == "compact":
-        return setup, compete, lambda t: tx_compact(
-            spark, t, partition_by="p"
-        ), None
+        return setup, compete, lambda t: tx_compact(spark, t), None
     assert name == "add_column"
     return setup, compete, lambda t: tx_add_column(
         spark, t, "extra", "int", default="7"

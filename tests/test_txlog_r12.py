@@ -31,6 +31,7 @@ from cars_bids_data_pipeline_v0__spark.sources.txlog import (
     tx_delete_where,
     tx_merge_into,
     tx_read,
+    tx_set_partition_spec,
 )
 
 
@@ -65,7 +66,7 @@ def test_merge_delete_all_single_file(spark, tmp_path):
     r = tx_merge_into(
         spark, t, _src(spark, [(23, -1, 0)]), on=["id"],
         when_matched_delete="s.val < 0",
-        when_not_matched_insert=False, partition_by="p",
+        when_not_matched_insert=False,
     )
     assert r["updated"] == 0 and r["deleted"] == 1 and r["inserted"] == 0
     assert r["files_rewritten"] == 1
@@ -79,7 +80,7 @@ def test_merge_delete_all_across_partitions(spark, tmp_path):
     r = tx_merge_into(
         spark, t, _src(spark, [(1, -1, 0), (2, -1, 1), (3, -1, 2)]),
         on=["id"], when_matched_delete="s.val < 0",
-        when_not_matched_insert=False, partition_by="p",
+        when_not_matched_insert=False,
     )
     assert r["deleted"] == 3 and r["updated"] == 0
     assert r["files_rewritten"] == 3
@@ -94,7 +95,7 @@ def test_merge_delete_partial_still_counts(spark, tmp_path):
     r = tx_merge_into(
         spark, t, _src(spark, [(1, -1, 0)]), on=["id"],
         when_matched_delete="s.val < 0",
-        when_not_matched_insert=False, partition_by="p",
+        when_not_matched_insert=False,
     )
     assert r["deleted"] == 1 and r["updated"] == 0
     assert _ids(spark, t) == [2]
@@ -115,7 +116,7 @@ def test_merge_delete_all_on_dv_carrying_file(spark, tmp_path):
     r = tx_merge_into(
         spark, t, _src(spark, [(1, -1, 0), (3, -1, 0)]), on=["id"],
         when_matched_delete="s.val < 0",
-        when_not_matched_insert=False, partition_by="p",
+        when_not_matched_insert=False,
     )
     assert r["deleted"] == 2 and r["updated"] == 0
     assert _ids(spark, t) == []
@@ -130,7 +131,7 @@ def test_merge_delete_all_plus_inserts(spark, tmp_path):
     r = tx_merge_into(
         spark, t, _src(spark, [(1, -1, 0), (9, 5, 0)]), on=["id"],
         when_matched_delete="s.val < 0",
-        when_not_matched_insert=True, partition_by="p",
+        when_not_matched_insert=True,
     )
     assert r["deleted"] == 1 and r["inserted"] == 1 and r["updated"] == 0
     assert _ids(spark, t) == [9]
@@ -147,7 +148,7 @@ def test_merge_delete_all_with_update_clause_and_constraint(spark, tmp_path):
         spark, t, _src(spark, [(1, -1, 0)]), on=["id"],
         when_matched_update={"val": "s.val"},
         when_matched_delete="s.val < 0",
-        when_not_matched_insert=False, partition_by="p",
+        when_not_matched_insert=False,
     )
     assert r["deleted"] == 1 and r["updated"] == 0
     assert _ids(spark, t) == []
@@ -164,7 +165,7 @@ def test_merge_update_all_violating_constraint_still_raises(spark, tmp_path):
         tx_merge_into(
             spark, t, _src(spark, [(1, -1, 0), (2, -2, 0)]), on=["id"],
             when_matched_update={"val": "s.val"},
-            when_not_matched_insert=False, partition_by="p",
+            when_not_matched_insert=False,
         )
     # nothing committed: both rows read back untouched
     got = {r["id"]: r["val"] for r in tx_read(spark, t).collect()}
@@ -175,9 +176,10 @@ def test_merge_insert_only_into_empty_table(spark, tmp_path):
     """Insert-only merge against a never-written table takes the
     degenerate-empty-target path, not the rewrite path."""
     t = str(tmp_path / "t")
+    tx_set_partition_spec(spark, t, "p")
     r = tx_merge_into(
         spark, t, _src(spark, [(1, 4, 0), (2, 6, 1)]), on=["id"],
-        when_not_matched_insert=True, partition_by="p",
+        when_not_matched_insert=True,
     )
     assert r["inserted"] == 2 and r["deleted"] == 0 and r["updated"] == 0
     assert _ids(spark, t) == [1, 2]
@@ -225,7 +227,7 @@ def test_merge_delete_all_sweep(spark, tmp_path, clauses, shape):
     if has_ins:
         src_rows.append((99, 5, 0))
     r = tx_merge_into(
-        spark, t, _src(spark, src_rows), on=["id"], partition_by="p",
+        spark, t, _src(spark, src_rows), on=["id"],
         **_CLAUSES[clauses],
     )
     assert r["deleted"] == len(rows)
@@ -436,7 +438,7 @@ def test_merge_into_all_dv_deleted_target(spark, tmp_path):
     r = tx_merge_into(
         spark, t, _src(spark, [(1, 5, 0)]), on=["id"],
         when_matched_update={"val": "s.val"},
-        when_not_matched_insert=True, partition_by="p",
+        when_not_matched_insert=True,
     )
     assert r["inserted"] == 1 and r["updated"] == 0 and r["deleted"] == 0
     got = {(r2["id"], r2["val"]) for r2 in tx_read(spark, t).collect()}
@@ -453,7 +455,7 @@ def test_merge_gate_false_keeps_everything(spark, tmp_path):
         spark, t, _src(spark, [(1, -1, 0)]), on=["id"],
         when_matched_delete="s.val < 0",
         matched_condition="t.val > 100",
-        when_not_matched_insert=False, partition_by="p",
+        when_not_matched_insert=False,
     )
     assert r["deleted"] == 0 and r["updated"] == 0 and r["inserted"] == 0
     assert _ids(spark, t) == [1, 2, 3]

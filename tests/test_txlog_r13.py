@@ -211,7 +211,7 @@ def test_optimize_policy_columnar_matches_dict_path(tmp_path, monkeypatch):
     compacted = []
     monkeypatch.setattr(
         TX, "tx_compact",
-        lambda spark, path, partition_by=None, partitions=None: compacted.append(partitions),
+        lambda spark, path, partitions=None: compacted.append(partitions),
     )
     picked = TX.tx_optimize_auto(None, t)
     assert picked == ["a"] and compacted == [["a"]]
@@ -438,7 +438,7 @@ def test_dml_rewrites_over_lazy_snapshot(spark, tmp_path):
     assert got[89] == 89 * 2                   # untouched
     assert got[104] == 104 * 100               # inserted
     # compact over the lazy snapshot, checkpoint again, replay parity
-    TX.tx_compact(spark, t, partition_by="p")
+    TX.tx_compact(spark, t)
     log2 = TX.TransactionLog(t)
     log2.checkpoint()
     _clear()

@@ -289,7 +289,7 @@ def test_tx_count_is_metadata_only_and_tracks_lifecycle(
         if p.startswith(t)
     }
     assert not (opened & data_files)  # only DV footers were opened
-    tx_purge_dvs(spark, t, partition_by="p")
+    tx_purge_dvs(spark, t)
     assert tx_count(t) == tx_read(spark, t).count()
     with pytest.raises(ValueError, match="version OR timestamp"):
         tx_count(t, version=0, timestamp=1.0)

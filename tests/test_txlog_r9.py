@@ -76,7 +76,7 @@ def test_retention_vacuum_expires_implicitly_retired_dvs(spark, tmp_path):
     assert dv_rels
     # purge rewrites the DV-carrying files WITHOUT a dv_state commit —
     # the implicit-retirement path the old replay missed
-    assert tx_purge_dvs(spark, t, partition_by="p") >= 1
+    assert tx_purge_dvs(spark, t) >= 1
     assert log.dvs() == {}
     purge_ts = log._commit_ts(log.version())
     # inside the window: the retired DV survives

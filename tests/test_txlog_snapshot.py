@@ -98,7 +98,7 @@ def history(spark, tmp_path_factory):
         spark, batch(30, 60), t, partition_by="p", stats_cols=["id"]
     )
     TX.tx_delete_where(spark, t, "id < 4", mode="dv")
-    TX.tx_delete_where(spark, t, "id >= 55", partition_by="p")
+    TX.tx_delete_where(spark, t, "id >= 55")
     TX.tx_restore(spark, t, version=2)
     assert TX.TransactionLog(t).version() == 4
     return t
@@ -123,7 +123,7 @@ def _verbs(t, monkeypatch):
     picks = []
     monkeypatch.setattr(
         TX, "tx_compact",
-        lambda spark, path, partition_by=None, partitions=None:
+        lambda spark, path, partitions=None:
             picks.append(partitions),
     )
     _clear()
