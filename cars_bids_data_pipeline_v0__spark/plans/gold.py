@@ -87,16 +87,6 @@ def _insert_new(
     return tx_read(store.spark, log.path)
 
 
-def _plain(log, v: int) -> bool:
-    """True when version ``v``'s files hold its rows under their own
-    names and types: no deletion vectors, column mapping, declared
-    columns or widening — `tx_read`'s plain branch."""
-    return not (
-        any(log.column_mapping(upto=v)) or log.dvs(upto=v)
-        or log.schema_addenda(upto=v) or log.type_widening(upto=v)
-    )
-
-
 def _snapshot_arrow(spark: SparkSession, log, v: int):
     """Version ``v`` of a small table as one Arrow table: pyarrow over
     the live files of a plain snapshot — no Spark job — else through
@@ -107,7 +97,7 @@ def _snapshot_arrow(spark: SparkSession, log, v: int):
     from ..sources.txlog import tx_read
 
     files = sorted(log.live_files(upto=v))
-    if not files or not _plain(log, v):
+    if not files or not log.plain(v):
         return tx_read(spark, log.path, version=v).toArrow()
     return pa.concat_tables(
         pq.read_table(os.path.join(log.path, f)).replace_schema_metadata(None)
@@ -142,7 +132,7 @@ def _insert_keys(
     Fresh keys get ids ``1 + zone max`` upward in key order.  The first
     commit keeps an empty file (it fixes the schema); a later batch with
     nothing new commits nothing.  An attempt on a plain snapshot
-    (`_plain`) runs no Spark job."""
+    (`TransactionLog.plain`) runs no Spark job."""
     import pyarrow as pa
 
     from ..sources.txlog import CommitProposal, TransactionLog
@@ -171,7 +161,7 @@ def _insert_keys(
             ],
             schema=target,
         )
-        if v < 0 or _plain(log, v):
+        if v < 0 or log.plain(v):
             adds = log._stage_arrow(new, stats_cols=["id"])
         else:  # logical names and declared types: the general writer maps them
             adds = log.stage_dataframe(

@@ -521,7 +521,7 @@ def _q230_oracle() -> str:
         "merge-on-read path must equal DuckDB's filtered aggregate.  "
         "The hash covers the visible-hit discovery, DV staging/union, "
         "and tx_read's broadcast _metadata.row_index anti-join "
-        "(sources/txlog.py::tx_delete_where mode='dv', _read_with_dvs)."
+        "(sources/txlog.py::tx_delete_where mode='dv', _scan)."
         "  Scale: delete cost is KBs of DV, not a rewrite; the read "
         "overhead is a broadcast hash probe inside the scan stage"
     ),

@@ -590,8 +590,8 @@ def _q259_oracle() -> str:
         "a DML predicate over the declared column that only the filled "
         "view can resolve.  The per-(lang, tier) counts and char totals "
         "must equal DuckDB's CASE-derived end state "
-        "(sources/txlog.py::tx_add_column, _fill_addenda, "
-        "_raw_files_scan_logical).  Scale: the add costs a KB of JSON; "
+        "(sources/txlog.py::tx_add_column, _scan, _fill_addenda).  "
+        "Scale: the add costs a KB of JSON; "
         "the fill is a per-group projection behind the scan"
     ),
 )
@@ -679,7 +679,7 @@ def _q260_oracle() -> str:
         "over the mixed-era view, whose rewrite migrates the touched "
         "narrow files.  Per-brand counts and bigint sums must equal "
         "DuckDB's CASE-derived end state "
-        "(sources/txlog.py::tx_widen_column, _apply_widening, "
+        "(sources/txlog.py::tx_widen_column, _scan, _apply_widening, "
         "_group_files_by_schema_sig).  Scale: widening a 100 TB "
         "table's key column is a KB of JSON, and data skipping "
         "survives because stats and directory values are "

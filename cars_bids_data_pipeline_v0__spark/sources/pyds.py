@@ -195,9 +195,7 @@ class TxLogBatchReader(DataSourceReader):
                 "and cannot apply them; run tx_purge_dvs() first or "
                 "read via tx_read"
             )
-        if log.column_mapping_raw(upto=self.version) or \
-                log.schema_addenda(upto=self.version) or \
-                log.type_widening(upto=self.version):
+        if not log.plain(upto=self.version, dvs=False):
             raise ValueError(
                 f"txlog table at {self.path} has column mapping or "
                 "declared added columns in force — the Python data "
@@ -393,9 +391,7 @@ class TxLogStreamReader(SimpleDataSourceStreamReader):
                     "and restart the stream, or use batch tx_changes"
                 )
             prev = dict(m.get("dv_state", prev))
-        if log.column_mapping_raw(upto=upto) or \
-                log.schema_addenda(upto=upto) or \
-                log.type_widening(upto=upto):
+        if not log.plain(upto=upto, dvs=False):
             raise ValueError(
                 f"{self.path} has column mapping or declared added "
                 "columns in force — the txlog stream source yields raw "

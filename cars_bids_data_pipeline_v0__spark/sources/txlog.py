@@ -1297,6 +1297,41 @@ class TransactionLog:
         }
         return recorded.pop() if len(recorded) == 1 else None
 
+    def sketch_columns(
+        self, upto: int, replaced: list[str] | None = None
+    ) -> tuple[list[str], list[str]]:
+        """``(zone-map columns, Bloom columns)`` a rewrite pinned at
+        ``upto`` records: the union of what the ``replaced`` files (none
+        given: the live files) record, so compaction, DML and overwrite
+        never drop a sketch a reader prunes with — or one `zone_max`
+        mints ids from.  Physical names, like `layout_column`'s."""
+        acts = self._live_actions_shared(upto=upto)
+        stats: set[str] = set()
+        bloom: set[str] = set()
+        for a in (acts[f] for f in replaced) if replaced else acts.values():
+            stats.update(a.get("stats") or ())
+            bloom.update(a.get("bloom") or ())
+        return sorted(stats), sorted(bloom)
+
+    def plain(self, upto: int | None = None, dvs: bool = True) -> bool:
+        """True when the rows at ``upto`` are its live files' rows under
+        their own names and types: no column mapping, declared-added or
+        widened column and, with ``dvs``, no deletion vector — the
+        snapshots raw-file readers (pyarrow, the Python data source)
+        may serve."""
+        cm, addenda, _spec, widening = self._alter_state(upto)
+        return not (cm or addenda or widening or (dvs and self.dvs(upto)))
+
+    def _schema_file(self, upto: int | None = None) -> str | None:
+        """The file a snapshot's schema is read from: its sorted first
+        live file (the file Spark's own inference opens), else its first
+        ever-added file, else None."""
+        return min(
+            self.live_files(upto=upto)
+            or [a["path"] for act in self.actions(upto) for a in act.get("add", [])],
+            default=None,
+        )
+
     def _alter_state(
         self, upto: int | None = None
     ) -> tuple[dict | None, dict, dict | None, dict]:
@@ -2428,25 +2463,18 @@ def _as_nullable(dt):
 
 
 def _table_schema(table_path: str, version: int | None):
-    """Physical Spark schema of a snapshot: the footer of its sorted
-    first live file (the file Spark's own inference opens), or of its
-    first ever-added file when nothing is live."""
+    """Physical Spark schema of a snapshot: the footer of its
+    `TransactionLog._schema_file`."""
     import pyarrow.parquet as pq
 
     log = TransactionLog(table_path)
     if log.version() < 0:
         raise ValueError(f"no committed txlog table at {table_path}")
-    files = sorted(log.live_files(upto=version))
-    if not files:
-        files = sorted(
-            a["path"]
-            for act in log.actions(version)
-            for a in act.get("add", [])
-        )
-    if not files:
+    src = log._schema_file(version)
+    if src is None:
         raise ValueError(f"txlog table at {table_path} has no schema source")
     schema, _exact = _footer_schema(
-        pq.read_schema(os.path.join(table_path, files[0]))
+        pq.read_schema(os.path.join(table_path, src))
     )
     return _as_nullable(schema)
 
@@ -2525,65 +2553,27 @@ def _group_files_by_schema_sig(
     return groups
 
 
-def _raw_files_scan_logical(
+def _dv_rows(
     spark: SparkSession,
     table_path: str,
+    dvmap: dict[str, str],
     files: list[str],
-    upto: int | None = None,
 ):
-    """Raw scan of ``files`` (NO deletion vectors applied) with
-    ``__dv_base`` / ``__dv_ri`` file-identity columns materialized and
-    the table's logical view applied — column mapping plus addenda
-    fill, heterogeneous footers handled by signature-grouped reads.
-    The shared discovery scan of every row-level writer."""
-    log = TransactionLog(table_path)
-    renames, dropped = log.column_mapping(upto=upto)
-    addenda = log.schema_addenda(upto=upto)
-    widening = log.type_widening(upto=upto)
-
-    def one(fs: list[str], present: frozenset):
-        df = (
-            spark.read.parquet(*[os.path.join(table_path, f) for f in fs])
-            .withColumn("__dv_base", _file_base_col())
-            .withColumn("__dv_ri", F.col("_metadata.row_index"))
-        )
-        df = _map_to_logical(df, renames, dropped)
-        if addenda:
-            df = _fill_addenda(df, addenda, renames, present)
-        if widening:
-            df = _apply_widening(df, widening, renames)
-        return df
-
-    if not addenda and not widening:
-        return one(list(files), frozenset())
-    groups = _group_files_by_schema_sig(
-        table_path, files, addenda, widening,
-        cols_by_file={
-            f: a.get("cols")
-            for f, a in log._live_actions_shared(upto=upto).items()
-        },
-    )
-    parts = [
-        one(groups[sig], frozenset(sig[0])) for sig in sorted(groups)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _dv_rows(spark: SparkSession, table_path: str, dvmap: dict[str, str]):
-    """All deleted ``(data-file basename, row_index)`` pairs of ``dvmap``
-    as one DataFrame — ONE read of every DV parquet (each carries only a
+    """The deleted ``(__dv_base, __dv_ri)`` pairs ``dvmap`` records for
+    ``files`` — ONE read of their DV parquets (each carries only a
     ``row_index`` column; its identity comes from ``_metadata.file_path``
-    joined to the log's mapping, a metadata-sized broadcast)."""
+    joined to the log's mapping, a metadata-sized broadcast); a typed
+    empty frame when none of ``files`` has a DV."""
+    sub = {f: dvmap[f] for f in files if f in dvmap}
+    if not sub:
+        return spark.createDataFrame([], "__dv_base string, __dv_ri long")
     pairs = [
         (os.path.basename(dv), os.path.basename(f))
-        for f, dv in sorted(dvmap.items())
+        for f, dv in sorted(sub.items())
     ]
     mapdf = spark.createDataFrame(pairs, "__dvfile string, __dv_base string")
     raw = spark.read.parquet(
-        *sorted({os.path.join(table_path, dv) for dv in dvmap.values()})
+        *sorted({os.path.join(table_path, dv) for dv in sub.values()})
     ).select(
         _file_base_col().alias("__dvfile"),
         F.col("row_index").alias("__dv_ri"),
@@ -2593,96 +2583,121 @@ def _dv_rows(spark: SparkSession, table_path: str, dvmap: dict[str, str]):
     )
 
 
-def _read_with_dvs(
+def _scan(
     spark: SparkSession,
-    table_path: str,
+    log: TransactionLog,
     files: list[str],
-    dvmap: dict[str, str],
+    upto: int,
+    dvs: dict[str, str] | None = None,
+    identity: bool = False,
     merge_schema: bool = False,
-    mapping_upto: int | None = None,
-    _grouped: bool = False,
-) -> DataFrame:
-    """Snapshot scan of ``files`` with deletion vectors applied — the
-    merge-on-read path.  Files WITHOUT a DV stream through a plain scan
-    (zero overhead); files WITH one anti-join their ``_metadata.row_index``
-    against the broadcast DV set.  At 100 TB the DV side is proportional
-    to rows DELETED, never table size, so the anti-join is a broadcast
-    hash probe inside the scan stage.
+) -> DataFrame | None:
+    """The rows of ``files`` at snapshot ``upto`` — the one scan every
+    read of a commit-log table's data files goes through.
 
-    Output columns are LOGICAL (column mapping applied as of
-    ``mapping_upto``, default latest) — every internal rewrite that
-    reads here and stages through `stage_dataframe` round-trips
-    logical->physical automatically.  Declared-but-not-materialized
-    columns (`tx_add_column`) are filled with their default: files are
-    grouped by which addenda their footer actually carries (one driver-
-    side footer read per file, metadata-sized) and each group fills
-    only what it lacks — a file that HAS the column keeps its values,
-    so the pre-add/post-add distinction is exact per file, Delta's
-    semantics."""
-    log = TransactionLog(table_path)
-    addenda = {} if _grouped else log.schema_addenda(upto=mapping_upto)
-    widening = {} if _grouped else log.type_widening(upto=mapping_upto)
+    * Columns are LOGICAL: the column mapping in force at ``upto`` is
+      applied, a declared-added column (`tx_add_column`) a file lacks
+      reads its default, and declared-widened columns cast to their
+      target type.  Only while addenda or widening are in force are the
+      files grouped by schema signature (`_group_files_by_schema_sig`),
+      one read per group.  Writers that stage what they read here
+      round-trip logical->physical through `stage_dataframe`.
+    * Rows deleted by ``dvs`` (default: the snapshot's deletion vectors;
+      entries for other files are ignored, ``{}`` reads raw rows) are
+      removed by a broadcast anti-join of ``_metadata.row_index``
+      against their DV rows — proportional to rows DELETED, never table
+      size.  Files without a DV stream through a plain scan.
+    * ``identity=True`` keeps every row's ``__dv_base`` (data-file
+      basename) and ``__dv_ri`` (row index): the row-level writers'
+      discovery scans.
+    * With no file: zero rows in the snapshot's logical schema, read
+      from `TransactionLog._schema_file`; None when the table never
+      added a file.
+
+    A plain snapshot (`TransactionLog.plain`) plans as
+    ``spark.read.parquet(*files)`` plus the no-op mapping."""
+    empty = not files
+    if empty:
+        src = log._schema_file(upto)
+        if src is None:
+            return None
+        files, dvs = [src], {}
+    dvmap = log.dvs(upto=upto) if dvs is None else dvs
+    renames, dropped = log.column_mapping(upto=upto)
+    addenda = log.schema_addenda(upto=upto)
+    widening = log.type_widening(upto=upto)
+    groups = {((), ()): list(files)}
     if addenda or widening:
-        renames, _dropped = log.column_mapping(upto=mapping_upto)
         groups = _group_files_by_schema_sig(
-            table_path, files, addenda, widening,
+            log.path, files, addenda, widening,
             cols_by_file={
                 f: a.get("cols")
-                for f, a in log._live_actions_shared(upto=mapping_upto).items()
+                for f, a in log._live_actions_shared(upto=upto).items()
             },
         )
-        parts = []
-        for sig in sorted(groups):
-            fs = groups[sig]
-            sub = _read_with_dvs(
-                spark, table_path, fs,
-                {f: dvmap[f] for f in fs if f in dvmap},
-                merge_schema=merge_schema,
-                mapping_upto=mapping_upto,
-                _grouped=True,
-            )
-            sub = _fill_addenda(sub, addenda, renames, frozenset(sig[0]))
-            sub = _apply_widening(sub, widening, renames)
-            parts.append(sub)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=merge_schema)
-        return out
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
-    plain = [f for f in files if f not in dvmap]
-    dvd = sorted(f for f in files if f in dvmap)
-    parts: list[DataFrame] = []
-    if dvd:
-        data = reader.parquet(
-            *[os.path.join(table_path, f) for f in dvd]
+
+    def union(frames: list[DataFrame]) -> DataFrame:
+        return functools.reduce(
+            lambda x, y: x.unionByName(y, allowMissingColumns=merge_schema),
+            frames,
         )
-        cols = data.columns
-        data = data.withColumn("__dv_base", _file_base_col()).withColumn(
+
+    def read(fs: list[str], with_identity: bool) -> DataFrame:
+        df = reader.parquet(*[os.path.join(log.path, f) for f in fs])
+        cols = df.columns
+        dvd = [f for f in fs if f in dvmap]
+        if not (with_identity or dvd):
+            return df
+        df = df.withColumn("__dv_base", _file_base_col()).withColumn(
             "__dv_ri", F.col("_metadata.row_index")
         )
-        dv = _dv_rows(
-            spark, table_path, {f: dvmap[f] for f in dvd}
-        )
-        parts.append(
-            data.join(
-                F.broadcast(dv), ["__dv_base", "__dv_ri"], "left_anti"
-            ).select(cols)
-        )
-    if plain:
-        parts.append(
-            reader.parquet(*[os.path.join(table_path, f) for f in plain])
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=merge_schema)
-    renames, dropped = TransactionLog(table_path).column_mapping(
-        upto=mapping_upto
-    )
-    if renames or dropped:
-        out = _map_to_logical(out, renames, dropped)
-    return out
+        if dvd:
+            df = df.join(
+                F.broadcast(_dv_rows(spark, log.path, dvmap, dvd)),
+                ["__dv_base", "__dv_ri"],
+                "left_anti",
+            )
+        return df if with_identity else df.select(cols)
+
+    parts = []
+    for (present, _types), fs in sorted(groups.items()):
+        if identity:
+            df = read(fs, True)
+        else:  # the files with a DV, then the plain scan of the rest
+            split = (
+                [f for f in fs if f in dvmap],
+                [f for f in fs if f not in dvmap],
+            )
+            df = union([read(g, False) for g in split if g])
+        df = _map_to_logical(df, renames, dropped)
+        if addenda:
+            df = _fill_addenda(df, addenda, renames, frozenset(present))
+        if widening:
+            df = _apply_widening(df, widening, renames)
+        parts.append(df)
+    out = union(parts)
+    return out.limit(0) if empty else out
+
+
+def _read_partitions(
+    spark: SparkSession,
+    table_path: str,
+    partitions,
+    version: int | None = None,
+) -> DataFrame | None:
+    """`tx_read` restricted to the live files whose partition is in
+    ``partitions`` (`tx_files_in_partitions`): the partition-pruned
+    snapshot read, zero rows when no file is in them, None for a
+    never-committed table."""
+    log = TransactionLog(table_path)
+    v = log.version() if version is None else version
+    if v < 0:
+        return None
+    files = tx_files_in_partitions(table_path, partitions, version=v)
+    return _scan(spark, log, sorted(files), v)
 
 
 def tx_read(
@@ -2703,46 +2718,17 @@ def tx_read(
     table-level schema registry.  Off by default: merging reads every
     footer up front, and a homogeneous table doesn't need it."""
     log = TransactionLog(table_path)
-    if log.version() < 0:
+    latest = log.version()
+    if latest < 0:
         return None
     if timestamp is not None:
         if version is not None:
             raise ValueError("pass version OR timestamp, not both")
         version = log.version_at_timestamp(timestamp)
-    files = sorted(log.live_files(upto=version))
-    if not files:
-        # committed empty state: derive schema from any historical file
-        ever = [a["path"] for act in log.actions(version)
-                for a in act.get("add", [])]
-        if not ever:
-            return None
-        renames, dropped = log.column_mapping(upto=version)
-        return _fill_addenda(
-            _map_to_logical(
-                spark.read.parquet(
-                    os.path.join(table_path, ever[0])
-                ).limit(0),
-                renames, dropped,
-            ),
-            log.schema_addenda(upto=version), renames, frozenset(),
-        )
-    dvmap = log.dvs(upto=version)
-    if (
-        dvmap
-        or log.schema_addenda(upto=version)
-        or log.type_widening(upto=version)
-    ):
-        return _read_with_dvs(
-            spark, table_path, files, dvmap, merge_schema=merge_schema,
-            mapping_upto=version,
-        )
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    renames, dropped = log.column_mapping(upto=version)
-    return _map_to_logical(
-        reader.parquet(*[os.path.join(table_path, f) for f in files]),
-        renames, dropped,
+    v = latest if version is None else version
+    return _scan(
+        spark, log, sorted(log.live_files(upto=v)), v,
+        merge_schema=merge_schema,
     )
 
 
@@ -2769,7 +2755,6 @@ def tx_merge_partitioned(
     order_by: str = "auction_date",
     partition_src: str = "auction_date",
     txn: dict | None = None,
-    stats_cols: list[str] | None = None,
 ) -> list[str]:
     """S5/M5 — the silver lake's merge sink: the reference's per-date
     read-concat-dedup-rewrite (transform_lambda/main.py:327-399) as one
@@ -2792,9 +2777,9 @@ def tx_merge_partitioned(
     conflict retry), and the token rides in this merge's commit — the
     streaming sink's replay fence.
 
-    Every committed file carries zone-map stats for ``stats_cols``
-    (default: the ``order_by`` column) so `tx_scan` time-range reads
-    skip files without opening them.
+    Every committed file carries a zone map of the ``order_by`` column,
+    so `tx_scan` time-range reads skip files without opening them, plus
+    every sketch the replaced files record (`TransactionLog.sketch_columns`).
     """
     from ..session import size_coalesced_shuffle
 
@@ -2825,13 +2810,7 @@ def tx_merge_partitioned(
             f for f, part in live.items() if part in touched
         )
         if overlap_files:
-            existing = _read_with_dvs(
-                spark, table_path, overlap_files,
-                {
-                    f: dv for f, dv in log.dvs(upto=v).items()
-                    if f in set(overlap_files)
-                },
-            )
+            existing = _scan(spark, log, overlap_files, v)
             merged = keep_latest(
                 existing.withColumn("__src", F.lit(0)).unionByName(
                     batch.withColumn("__src", F.lit(1)),
@@ -2843,9 +2822,10 @@ def tx_merge_partitioned(
             ).drop("__src")
         else:
             merged = batch
+        stats, bloom = log.sketch_columns(v, overlap_files)
         adds = log.stage_dataframe(
             merged, partition_by=PARTITION_COL,
-            stats_cols=stats_cols or [order_by],
+            stats_cols=sorted({order_by, *stats}), bloom_cols=bloom or None,
         )
         return CommitProposal(adds, overlap_files, sorted(touched))
 
@@ -2888,8 +2868,15 @@ def tx_overwrite(
         current = tx_read(spark, table_path, version=v) if v >= 0 else None
         df = tx_apply_generated(make(current), table_path, upto=v)
         tx_check_constraints(df, table_path, upto=v)
-        adds = log.stage_dataframe(df, partition_by=log.layout_column(v))
-        return CommitProposal(adds, sorted(log.live_files(upto=v)), v + 1)
+        live = sorted(log.live_files(upto=v))
+        # not `_stage_rewrite`: a replace-all keeps its one zero-row file,
+        # which fixes the new schema
+        stats, bloom = log.sketch_columns(v, live)
+        adds = log.stage_dataframe(
+            df, partition_by=log.layout_column(v),
+            stats_cols=stats or None, bloom_cols=bloom or None,
+        )
+        return CommitProposal(adds, live, v + 1)
 
     return log.run_optimistic("overwrite", build, txn=txn)
 
@@ -2928,11 +2915,9 @@ def tx_compact(
         if v < 0:
             return 0
         live = log.live_files(upto=v)
-        dvmap = log.dvs(upto=v)
         if partitions is not None:
             scope = set(partitions)
             live = {f: p for f, p in live.items() if p in scope}
-            dvmap = {f: dv for f, dv in dvmap.items() if f in live}
             if not live:
                 return 0
         scoped = sorted(live) if partitions is not None else None
@@ -2945,13 +2930,19 @@ def tx_compact(
             for a in ((acts[f] for f in scoped) if scoped else acts.values())
         )
         n_parts = len(set(live.values())) if pcol is not None else 1
-        if len(live) <= n_parts and not dvmap and not off_layout:
+        dvmap = log.dvs(upto=v)
+        if (
+            len(live) <= n_parts
+            and not any(f in dvmap for f in live)
+            and not off_layout
+        ):
             return 0
-        df = _read_with_dvs(spark, table_path, sorted(live), dvmap)
-        adds = log.stage_dataframe(
-            df if pcol is not None else df.coalesce(1), partition_by=pcol
+        files = sorted(live)
+        df = _scan(spark, log, files, v)
+        adds = _stage_rewrite(
+            log, df if pcol is not None else df.coalesce(1), v, scoped
         )
-        return CommitProposal(adds, sorted(live), len(live))
+        return CommitProposal(adds, files, len(live))
 
     return log.run_optimistic("compact", build)
 
@@ -3042,24 +3033,14 @@ def tx_optimize_zorder(
             live = {f: p for f, p in live.items() if p in scope}
         if not live:
             return 0
-        # preserve every previously-sketched column: rewriting with only
-        # z-column stats would silently degrade zone maps / Bloom
-        # skipping on the other columns (review finding)
-        meta = log._live_actions_shared(upto=v)
-        prev_stats = {
-            c for a in meta.values() for c in (a.get("stats") or {})
-        }
-        prev_bloom = {
-            c for a in meta.values() for c in (a.get("bloom") or {})
-        }
-        stats_cols = sorted(prev_stats | set(zorder_by))
-        bloom_cols = sorted(prev_bloom) or None
-
-        dvmap = log.dvs(upto=v)
-        scoped = sorted(live) if partitions is not None else None
+        files = sorted(live)
+        scoped = files if partitions is not None else None
+        stats, bloom = log.sketch_columns(v, scoped)
+        stats_cols = sorted(set(stats) | set(zorder_by))
+        bloom_cols = bloom or None
         pcol = log.layout_column(v, scoped)
         if pcol is None:
-            df = _read_with_dvs(spark, table_path, sorted(live), dvmap)
+            df = _scan(spark, log, files, v)
             clustered = zorder_cluster(df, zorder_by, num_files, bits)
             adds = log.stage_dataframe(
                 clustered, stats_cols=stats_cols, bloom_cols=bloom_cols
@@ -3071,6 +3052,7 @@ def tx_optimize_zorder(
             # pruning.  Each partition's files cluster into
             # ceil(num_files / n_partitions) (>= 1) range files; one
             # commit swaps the whole layout atomically.
+            meta = log._live_actions_shared(upto=v)
             if any(meta[f].get("partition_col") != pcol for f in live):
                 raise ValueError(
                     f"files of {table_path} predate its declared spec "
@@ -3083,10 +3065,7 @@ def tx_optimize_zorder(
             per_part_files = max(1, num_files // max(1, len(by_part)))
             adds = []
             for part, rels in sorted(by_part.items()):
-                df_p = _read_with_dvs(
-                    spark, table_path, sorted(rels),
-                    {f: dvmap[f] for f in rels if f in dvmap},
-                )
+                df_p = _scan(spark, log, sorted(rels), v)
                 clustered = zorder_cluster(
                     df_p, zorder_by, per_part_files, bits
                 )
@@ -3097,7 +3076,7 @@ def tx_optimize_zorder(
                     a["partition"] = part
                     a["partition_col"] = pcol
                 adds.extend(part_adds)
-        return CommitProposal(adds, sorted(live), len(live))
+        return CommitProposal(adds, files, len(live))
 
     return log.run_optimistic("zorder", build)
 
@@ -3513,20 +3492,15 @@ def tx_scan_eq(
     prune).  ``None`` for a never-committed table (the tx_scan
     contract)."""
     log = TransactionLog(table_path)
-    if log.version() < 0:
+    v = log.version() if version is None else version
+    if v < 0:
         return None  # same contract as tx_scan on a never-committed table
-    renames, _dropped = log.column_mapping(upto=version)
+    renames, _dropped = log.column_mapping(upto=v)
     phys_col = {l: p for p, l in renames.items()}.get(col, col)
-    files, _ = tx_prunable_files_bloom(table_path, phys_col, value, version)
-    if not files:
-        base = tx_read(spark, table_path, version=version)
-        return base.filter(F.lit(False)) if base is not None else None
-    dvmap = log.dvs(upto=version)
-    df = _read_with_dvs(
-        spark, table_path, files,
-        {f: dvmap[f] for f in files if f in dvmap},
-        mapping_upto=version,
-    )
+    files, _ = tx_prunable_files_bloom(table_path, phys_col, value, v)
+    df = _scan(spark, log, files, v)
+    if df is None:
+        return None
     # the residual filter matches the SKETCH's semantics — str-normalized
     # equality — so pruner and filter can never disagree: a type-mismatched
     # probe (int column, float probe) consistently matches nothing rather
@@ -3639,20 +3613,15 @@ def tx_scan(
     string, ``T`` or space separated, naive meaning UTC.
     """
     log = TransactionLog(table_path)
-    if log.version() < 0:
+    v = log.version() if version is None else version
+    if v < 0:
         return None
-    renames, _dropped = log.column_mapping(upto=version)
+    renames, _dropped = log.column_mapping(upto=v)
     phys_col = {l: p for p, l in renames.items()}.get(col, col)
-    files, _ = tx_prunable_files(table_path, phys_col, lo, hi, version)
-    if not files:
-        base = tx_read(spark, table_path, version=version)
-        return base.limit(0) if base is not None else None
-    dvmap = log.dvs(upto=version)
-    df = _read_with_dvs(
-        spark, table_path, files,
-        {f: dvmap[f] for f in files if f in dvmap},
-        mapping_upto=version,
-    )
+    files, _ = tx_prunable_files(table_path, phys_col, lo, hi, v)
+    df = _scan(spark, log, files, v)
+    if df is None:
+        return None
     if lo is not None:
         df = df.filter(F.col(col) >= lo)
     if hi is not None:
@@ -3660,31 +3629,57 @@ def tx_scan(
     return df
 
 
-def _visible_hits(
+def _affected_files(
     spark: SparkSession,
-    table_path: str,
-    live: dict,
-    dvmap: dict[str, str],
-    predicate: str,
-):
-    """``[(data-file basename, n matching VISIBLE rows)]`` for a predicate
-    over the current snapshot — one scan with the predicate pushed to
-    parquet, DV-deleted rows excluded via the broadcast anti-join.
-    Staged file basenames are uuid4 hex, so basename identifies the file
-    without URI parsing."""
-    scan = _raw_files_scan_logical(spark, table_path, sorted(live))
-    if dvmap:
-        scan = scan.join(
-            F.broadcast(_dv_rows(spark, table_path, dvmap)),
-            ["__dv_base", "__dv_ri"],
-            "left_anti",
-        )
-    return (
-        scan.filter(F.expr(predicate))
+    log: TransactionLog,
+    live,
+    v: int,
+    hit: Callable[[DataFrame], DataFrame],
+) -> list[tuple[str, int]]:
+    """``[(live file, n)]``, sorted: the files of snapshot ``v`` holding
+    visible rows that ``hit`` (a predicate filter, a semi-join against a
+    MERGE source) keeps, and how many — the discovery step of DELETE,
+    UPDATE and MERGE.  One scan of every live file with the deletion
+    vectors applied and the row identity kept; a predicate pushes down
+    to parquet, so a clean file costs a footer skip.  Staged basenames
+    are uuid4 hex, so a basename names its file."""
+    by_base = {os.path.basename(f): f for f in live}
+    rows = (
+        hit(_scan(spark, log, sorted(live), v, identity=True))
         .groupBy("__dv_base")
         .agg(F.count("*").alias("n"))
         .collect()
     )
+    return sorted((by_base[r["__dv_base"]], int(r["n"])) for r in rows)
+
+
+def _stage_rewrite(
+    log: TransactionLog,
+    df: DataFrame,
+    v: int,
+    replaced: list[str] | None,
+    stats_cols: list[str] | None = None,
+    expected_rows: int | None = None,
+) -> list[dict]:
+    """Stage ``df`` as the rewrite of ``replaced`` (none: the live files
+    — a whole-table compaction, an insert-only MERGE) pinned at ``v``: under
+    `TransactionLog.layout_column`'s layout, recording the sketches
+    `TransactionLog.sketch_columns` finds plus ``stats_cols``.  Staged
+    unconditionally — an emptiness probe first would be a second pass
+    over the input — so the zero-row files an all-deleting rewrite
+    leaves are discarded here."""
+    stats, bloom = log.sketch_columns(v, replaced)
+    staged = log.stage_dataframe(
+        df,
+        partition_by=log.layout_column(v, replaced),
+        stats_cols=sorted(set(stats) | set(stats_cols or ())) or None,
+        bloom_cols=bloom or None,
+        expected_rows=expected_rows,
+    )
+    adds = [a for a in staged if a.get("rows")]
+    if len(adds) != len(staged):
+        log.discard([a for a in staged if not a.get("rows")])
+    return adds
 
 
 def tx_delete_where(
@@ -3732,31 +3727,28 @@ def tx_delete_where(
         live = log.live_files(upto=v)
         if not live:
             return 0
-        dvmap = log.dvs(upto=v)
-        rel_by_base = {os.path.basename(rel): rel for rel in sorted(live)}
-        hits = _visible_hits(spark, table_path, live, dvmap, predicate)
+        hits = _affected_files(
+            spark, log, live, v, lambda t: t.filter(F.expr(predicate))
+        )
         if not hits:
             return 0
-        n_deleted = int(sum(r["n"] for r in hits))
-        affected = sorted(rel_by_base[r["__dv_base"]] for r in hits)
+        n_deleted = sum(n for _f, n in hits)
+        affected = [f for f, _n in hits]
 
         if mode == "dv":
             meta, staged = _stage_dv_delete(
-                spark, log, table_path, live, dvmap, predicate,
-                affected, v,
+                spark, log, live, predicate, affected, v
             )
             return CommitProposal(
                 [], [], n_deleted, meta=meta, staged=staged
             )
 
-        keep = _read_with_dvs(
-            spark, table_path, affected,
-            {f: dvmap[f] for f in affected if f in dvmap},
-        ).filter(~F.coalesce(F.expr(predicate), F.lit(False)))
-        adds = [] if keep.isEmpty() else log.stage_dataframe(
-            keep, partition_by=log.layout_column(v, affected)
+        keep = _scan(spark, log, affected, v).filter(
+            ~F.coalesce(F.expr(predicate), F.lit(False))
         )
-        return CommitProposal(adds, affected, n_deleted)
+        return CommitProposal(
+            _stage_rewrite(log, keep, v, affected), affected, n_deleted
+        )
 
     return log.run_optimistic("delete_dv" if mode == "dv" else "delete", build)
 
@@ -3764,9 +3756,7 @@ def tx_delete_where(
 def _stage_dv_delete(
     spark: SparkSession,
     log: TransactionLog,
-    table_path: str,
     live: dict,
-    dvmap: dict[str, str],
     predicate: str,
     affected: list[str],
     v: int,
@@ -3776,20 +3766,20 @@ def _stage_dv_delete(
     new matches — full-state per file, so readers open exactly one DV
     per data file).  Returns the commit metadata carrying the updated
     mapping, and the staged DV paths."""
-    raw = _raw_files_scan_logical(spark, table_path, affected)
-    matches = raw.filter(F.expr(predicate)).select("__dv_base", "__dv_ri")
-    old_sub = {f: dvmap[f] for f in affected if f in dvmap}
-    parts = [matches]
-    if old_sub:
-        # previously deleted rows: keep them deleted (and the anti-join in
-        # _visible_hits guarantees `matches` never re-counts them)
-        parts.append(_dv_rows(spark, table_path, old_sub))
-    alldv = parts[0]
-    for p in parts[1:]:
-        alldv = alldv.unionByName(p)
-    alldv = alldv.select(
-        "__dv_base", F.col("__dv_ri").alias("row_index")
-    ).distinct()
+    # raw matches plus the rows already deleted, which stay deleted
+    # (the discovery count excluded them, so none is counted twice)
+    matches = (
+        _scan(spark, log, affected, v, dvs={}, identity=True)
+        .filter(F.expr(predicate))
+        .select("__dv_base", "__dv_ri")
+    )
+    alldv = (
+        matches.unionByName(
+            _dv_rows(spark, log.path, log.dvs(upto=v), affected)
+        )
+        .select("__dv_base", F.col("__dv_ri").alias("row_index"))
+        .distinct()
+    )
 
     stage = os.path.join(log.path, f"_dv_stage-{uuid.uuid4().hex}")
     dv_dir = os.path.join(log.path, _DV_DIR)
@@ -3853,14 +3843,10 @@ def tx_purge_dvs(spark: SparkSession, table_path: str) -> int:
     def build(v: int):
         if v < 0:
             return 0
-        dvmap = log.dvs(upto=v)
-        if not dvmap:
+        files = sorted(log.dvs(upto=v))
+        if not files:
             return 0
-        files = sorted(dvmap)
-        kept = _read_with_dvs(spark, table_path, files, dvmap)
-        adds = [] if kept.isEmpty() else log.stage_dataframe(
-            kept, partition_by=log.layout_column(v, files)
-        )
+        adds = _stage_rewrite(log, _scan(spark, log, files, v), v, files)
         return CommitProposal(adds, files, len(files))
 
     return log.run_optimistic("purge_dv", build)
@@ -3912,17 +3898,14 @@ def tx_update_where(
         live = log.live_files(upto=v)
         if not live:
             return 0
-        dvmap = log.dvs(upto=v)
-        rel_by_base = {os.path.basename(rel): rel for rel in sorted(live)}
-        hits = _visible_hits(spark, table_path, live, dvmap, predicate)
+        hits = _affected_files(
+            spark, log, live, v, lambda t: t.filter(F.expr(predicate))
+        )
         if not hits:
             return 0
-        n_updated = int(sum(r["n"] for r in hits))
-        affected = sorted(rel_by_base[r["__dv_base"]] for r in hits)
-        rewrite = _read_with_dvs(
-            spark, table_path, affected,
-            {f: dvmap[f] for f in affected if f in dvmap},
-        )
+        n_updated = sum(n for _f, n in hits)
+        affected = [f for f, _n in hits]
+        rewrite = _scan(spark, log, affected, v)
         missing = sorted(set(set_exprs) - set(rewrite.columns))
         if missing:
             raise ValueError(
@@ -3964,9 +3947,7 @@ def tx_update_where(
                     for name, sql in sorted(cons.items())
                 ],
             )
-        adds = log.stage_dataframe(
-            updated, partition_by=log.layout_column(v, affected)
-        )
+        adds = _stage_rewrite(log, updated, v, affected)
         if obs is not None:
             vals = obs.get  # staging was the plan's one action
             bad = {
@@ -3984,7 +3965,7 @@ def tx_update_where(
                     f"batch violates CHECK constraint(s) on "
                     f"{table_path}: {detail}"
                 )
-        return CommitProposal(adds, sorted(affected), n_updated)
+        return CommitProposal(adds, affected, n_updated)
 
     return log.run_optimistic("update", build)
 
@@ -4111,25 +4092,23 @@ def _merge_counts(updated, deleted, inserted, files_rewritten, version):
     }
 
 
-def _visible_row_count(
-    log: "TransactionLog", table_path: str, files: list[str],
-    dvmap: dict[str, str], v: int,
-) -> int:
+def _visible_row_count(log: "TransactionLog", files: list[str], v: int) -> int:
     """Visible (post-DV) row count of ``files`` at version ``v`` from
     METADATA alone — add-action ``rows`` (footer fallback for legacy
     actions) minus each file's deletion-vector position count, zero
     Spark jobs.  Used by MERGE's empty-rewrite path, where the delete
     count cannot come from the (never-materialized) observation."""
     acts = log._live_actions_shared(upto=v)
+    dvmap = log.dvs(upto=v)
     total = 0
     for f in files:
         r = (acts.get(f) or {}).get("rows")
         if r is None:
-            r = _footer_meta(os.path.join(table_path, f))[1]
+            r = _footer_meta(os.path.join(log.path, f))[1]
         total += int(r)
         dv = dvmap.get(f)
         if dv:
-            total -= _footer_meta(os.path.join(table_path, dv))[1]
+            total -= _footer_meta(os.path.join(log.path, dv))[1]
     return total
 
 
@@ -4181,9 +4160,7 @@ def _merge_into_once(
             0, 0, sum(int(a["rows"]) for a in adds), 0, v + 1
         ))
 
-    rel_by_base = {os.path.basename(rel): rel for rel in sorted(live)}
-    dvmap = log.dvs(upto=v)
-    target = _read_with_dvs(spark, table_path, sorted(live), dvmap)
+    target = _scan(spark, log, sorted(live), v)
     tgt_cols = target.columns
     # plain equality, ANSI MERGE semantics: NULL keys never match
     key_cond = [F.col(f"t.{k}") == F.col(f"s.{k}") for k in on]
@@ -4223,19 +4200,12 @@ def _merge_into_once(
     s_src = source.hint("broadcast") if broadcast_source else source
 
     # -- which files contain matched rows? one semi-join scan ------------
-    scan = _raw_files_scan_logical(spark, table_path, sorted(live))
-    if dvmap:
-        scan = scan.join(
-            F.broadcast(_dv_rows(spark, table_path, dvmap)),
-            ["__dv_base", "__dv_ri"],
-            "left_anti",
+    affected = [
+        f for f, _n in _affected_files(
+            spark, log, live, v,
+            lambda t: t.alias("t").join(s_src.alias("s"), cond, "left_semi"),
         )
-    hits = (
-        scan.alias("t")
-        .join(s_src.alias("s"), cond, "left_semi")
-        .select("__dv_base").distinct().collect()
-    )
-    affected = sorted(rel_by_base[r["__dv_base"]] for r in hits)
+    ]
 
     gate = F.lit(True)
     if matched_condition is not None:
@@ -4249,10 +4219,7 @@ def _merge_into_once(
     rewrite_obs = None
     rewrite_cons: dict[str, str] = {}
     if affected:
-        tdf = _read_with_dvs(
-            spark, table_path, affected,
-            {f: dvmap[f] for f in affected if f in dvmap},
-        ).alias("t")
+        tdf = _scan(spark, log, affected, v).alias("t")
         sdf = s_src.withColumn("__s_hit", F.lit(1)).alias("s")
         j = tdf.join(sdf, cond, "left")
         matched = F.col("s.__s_hit").isNotNull() & gate
@@ -4334,10 +4301,7 @@ def _merge_into_once(
         # equivalent to the full target — and a sparse merge reads a
         # sliver of the table instead of all of it
         if affected:
-            anti_keys = _read_with_dvs(
-                spark, table_path, affected,
-                {f: dvmap[f] for f in affected if f in dvmap},
-            ).select(*on)
+            anti_keys = _scan(spark, log, affected, v).select(*on)
             # round 14 examined a keys-only semi-then-anti reduction
             # here (shrink affected keys to the matched set with a
             # broadcast semi-join so the anti-join broadcasts too):
@@ -4440,30 +4404,17 @@ def _merge_into_once(
                 return _merge_counts(0, 0, 0, 0, v)
             adds = []
         else:
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            # a merge that replaces no file lays its inserts out like the
-            # table's live files
-            pcol = log.layout_column(v, affected)
-            exp = None
-            if pcol is not None:
-                # metadata-exact upper bound on the staged row count
-                # (affected files' visible rows + inserts) lets the staging
-                # write sub-split large partitions into parallel encode
-                # tasks — see stage_dataframe (round-13 optimization pass)
-                exp = n_ins + _visible_row_count(
-                    log, table_path, affected, dvmap, v
-                )
-            # stage unconditionally (isEmpty() would fire the rewrite
-            # observation with a partial limit-1 pass); an all-delete
-            # rewrite surfaces as zero-row footers, discarded here
-            staged = log.stage_dataframe(
-                out, partition_by=pcol, stats_cols=stats, expected_rows=exp
+            out = functools.reduce(DataFrame.unionByName, parts)
+            # the metadata-exact upper bound on the staged row count
+            # (affected files' visible rows + inserts) lets a partitioned
+            # staging write sub-split large partitions into parallel
+            # encode tasks — see stage_dataframe (round-13 optimization
+            # pass).  Staged unconditionally: isEmpty() would fire the
+            # rewrite observation with a partial limit-1 pass
+            adds = _stage_rewrite(
+                log, out, v, affected, stats_cols=stats,
+                expected_rows=n_ins + _visible_row_count(log, affected, v),
             )
-            adds = [a for a in staged if a.get("rows")]
-            if len(adds) != len(staged):
-                log.discard([a for a in staged if not a.get("rows")])
             if rewrite_obs is not None and sum(
                 int(a["rows"]) for a in adds
             ) - n_ins <= 0:
@@ -4477,9 +4428,7 @@ def _merge_into_once(
                 # row count (footer rows minus DV positions), and there are
                 # no update rows to constraint-check.
                 n_upd = 0
-                n_del = _visible_row_count(
-                    log, table_path, affected, dvmap, v
-                )
+                n_del = _visible_row_count(log, affected, v)
             elif rewrite_obs is not None:
                 vals = rewrite_obs.get  # staging was the plan's one action
                 n_upd = int(vals["__n_upd"])
@@ -4525,8 +4474,8 @@ def tx_export_symlink_manifest(
     This is the open-format escape hatch for the bespoke commit log
     (the reference's equivalent store is plain NDJSON any tool can read —
     transform_lambda/main.py:363-366): an external engine that can read
-    parquet file lists (plain Spark, Trino/Presto+Hive, DuckDB
-    ``read_parquet([...])``) gets the exact live-file set of a committed
+    parquet file lists (plain Spark, Trino/Presto+Hive, DuckDB's
+    file-list reader) gets the exact live-file set of a committed
     version without understanding the log.  The manifest is derived from
     an already-committed prefix, so concurrent writers never produce a
     torn export; each manifest file is written temp-then-rename so
@@ -5987,14 +5936,15 @@ def tx_changes(
             )
 
     def _read(paths: list[str], version: int, dv: dict[str, str]):
-        sub = {f: dv[f] for f in paths if f in dv}
-        _check_exists(list(paths) + sorted(sub.values()), version)
+        _check_exists(
+            list(paths) + sorted(dv[f] for f in paths if f in dv), version
+        )
         # column-pruned to the declared schema so rewrites that reordered
         # columns still diff correctly; DV-deleted rows excluded at the
         # version's own DV state so a later rewrite never re-reports them
-        return _read_with_dvs(
-            spark, table_path, list(paths), sub, mapping_upto=upto
-        ).select(base.columns)
+        return _scan(spark, log, list(paths), upto, dvs=dv).select(
+            base.columns
+        )
 
     def _tag(df: DataFrame, change: str, version: int, op: str):
         return df.select(
@@ -6042,22 +5992,11 @@ def tx_changes(
                 ),
                 v,
             )
-            data = _raw_files_scan_logical(
-                spark, table_path, changed, upto=upto
+            data = _scan(
+                spark, log, changed, upto, dvs={}, identity=True
             ).select("__dv_base", "__dv_ri", *base.columns)
-            old_sub = {f: dv_cur[f] for f in changed if f in dv_cur}
-            new_sub = {f: dv_next[f] for f in changed if f in dv_next}
-            empty_pairs = spark.createDataFrame(
-                [], "__dv_base string, __dv_ri long"
-            )
-            old_rows = (
-                _dv_rows(spark, table_path, old_sub)
-                if old_sub else empty_pairs
-            )
-            new_rows = (
-                _dv_rows(spark, table_path, new_sub)
-                if new_sub else empty_pairs
-            )
+            old_rows = _dv_rows(spark, table_path, dv_cur, changed)
+            new_rows = _dv_rows(spark, table_path, dv_next, changed)
             keys = ["__dv_base", "__dv_ri"]
             newly_deleted = new_rows.join(old_rows, keys, "left_anti")
             resurrected = old_rows.join(new_rows, keys, "left_anti")

@@ -37,9 +37,10 @@ from ..operators.similarity import (
 from ..sources.txlog import (
     CommitProposal,
     TransactionLog,
+    _read_partitions,
     checkpoint_epoch_app_id,
     tx_append_partitioned,
-    tx_files_in_partitions,
+    tx_read,
 )
 
 CELL_COL = "__ivf_cell"
@@ -124,46 +125,22 @@ def ivf_index_probe(
     """Top-k over the accumulated index, reading ONLY the probed cells.
 
     The commit log's per-file partition metadata does the pruning — no
-    file of an un-probed cell is ever opened.  Re-ranking reuses the
+    file of an un-probed cell is ever opened (`_read_partitions`, which
+    also applies the index's deletion vectors).  Re-ranking reuses the
     batch ``ivf_topk`` candidate join on the same frozen codebook, so
     the result equals a batch run over the full accumulated corpus.
     """
-    import os
-
-    log = TransactionLog(index_path)
     cells = probed_cells(queries, centroids, nprobe, q_vec=q_vec)
-    # partition-restricted file list: columnar off the checkpoint
-    # sidecar when one covers the snapshot (the probe touches
-    # nprobe/nlist of the METADATA too — round-10), else the snapshot
-    live = tx_files_in_partitions(index_path, cells, version=version)
-    wanted = [os.path.join(index_path, f) for f in sorted(live)]
-    if not wanted:
-        # no committed vectors in any probed cell: keep the schema
-        # IDENTICAL to the non-empty path (id types come from the data,
-        # not an assumption) by running the normal plan over a zero-row
-        # corpus — from any live file's footer when the index has one,
-        # else from the query side's id type (empty index)
-        live_any = sorted(log.live_files(upto=version))
-        if live_any:
-            corpus = (
-                spark.read.parquet(os.path.join(index_path, live_any[0]))
-                .limit(0)
-                .drop(CELL_COL)
-            )
-        else:
-            qt = queries.schema[q_id].dataType.simpleString()
-            corpus = spark.createDataFrame(
-                [], f"{c_id} {qt}, {vec_col} array<double>"
-            )
-        return ivf_topk(
-            queries, corpus, k=k, nlist=len(centroids), nprobe=nprobe,
-            centroids=centroids, q_id=q_id, q_vec=q_vec, c_id=c_id,
-            c_vec=vec_col,
+    corpus = _read_partitions(spark, index_path, cells, version=version)
+    if corpus is None:
+        # never-committed index: the id type comes from the query side
+        qt = queries.schema[q_id].dataType.simpleString()
+        corpus = spark.createDataFrame(
+            [], f"{c_id} {qt}, {vec_col} array<double>"
         )
-    corpus = spark.read.parquet(*wanted).drop(CELL_COL)
     return ivf_topk(
         queries,
-        corpus,
+        corpus.drop(CELL_COL),
         k=k,
         nlist=len(centroids),
         nprobe=nprobe,
@@ -255,8 +232,6 @@ def ivf_pq_index_probe(
     are a pure function of the vector under the frozen pair, so
     streaming and batch encodings agree bit-for-bit).  ``residual``
     must match the sink that built the index."""
-    import os
-
     from ..operators.pq import (
         _adc_rank,
         _adc_rank_residual,
@@ -264,26 +239,14 @@ def ivf_pq_index_probe(
     )
     from ..operators.similarity import dot
 
-    log = TransactionLog(index_path)
     cells = probed_cells(queries, centroids, nprobe, q_vec=q_vec)
-    live = tx_files_in_partitions(index_path, cells, version=version)
-    wanted = [os.path.join(index_path, f) for f in sorted(live)]
-    if not wanted:
-        # schema-stable empty result: zero-row codes frame through the
-        # normal ADC plan (see ivf_index_probe's empty-cell note)
-        live_any = sorted(log.live_files(upto=version))
-        if live_any:
-            coded = spark.read.parquet(
-                os.path.join(index_path, live_any[0])
-            ).limit(0)
-        else:
-            qt = queries.schema[q_id].dataType.simpleString()
-            coded = spark.createDataFrame(
-                [], f"{c_id} {qt}, pq_codes array<int>, "
-                    f"{CELL_COL} int"
-            )
-    else:
-        coded = spark.read.parquet(*wanted)
+    coded = _read_partitions(spark, index_path, cells, version=version)
+    if coded is None:
+        # never-committed index (see ivf_index_probe)
+        qt = queries.schema[q_id].dataType.simpleString()
+        coded = spark.createDataFrame(
+            [], f"{c_id} {qt}, pq_codes array<int>, {CELL_COL} int"
+        )
     q = _query_side(queries.select(q_id, q_vec), codebooks, q_id, q_vec)
     if residual:
         cent_lit = F.array(
@@ -343,11 +306,10 @@ def ivf_reindex(
 
     Only the raw-vector index can self-reindex; the PQ variant stores
     codes without vectors, so its reindex is a re-encode from the source
-    corpus through a fresh ``ivf_pq_index_sink``.  Returns the number of
+    corpus through a fresh ``ivf_pq_index_sink``.  Deleted vectors
+    (deletion vectors included) stay deleted.  Returns the number of
     files replaced.
     """
-    import os
-
     log = TransactionLog(index_path)
 
     def build(v: int):
@@ -356,9 +318,7 @@ def ivf_reindex(
         live = log.live_files(upto=v)
         if not live:
             return 0
-        df = spark.read.parquet(
-            *[os.path.join(index_path, f) for f in sorted(live)]
-        ).drop(CELL_COL)
+        df = tx_read(spark, index_path, version=v).drop(CELL_COL)
         adds = log.stage_dataframe(
             assign_cells(df, new_centroids, vec_col),
             partition_by=CELL_COL,

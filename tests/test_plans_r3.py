@@ -85,18 +85,19 @@ def test_tx_stage_writes_are_distributed_no_collect(spark, tmp_path):
     # every .collect() in txlog must be bounded METADATA, never row data.
     # The audited sites (update this count WITH an audit when adding one):
     #   1 partition-value list (tx_merge_partitioned)
-    #   2 per-file visible-hit counts (_visible_hits: delete/update)
+    #   2 per-file visible-hit counts (_affected_files: the one discovery
+    #     step of delete, update and merge — was two collects, the
+    #     delete/update hit counts and merge's distinct file list)
     #   3 merge cardinality probe (delta-sized agg, limit(1))
-    #   4 merge affected-file basenames (distinct file list)
-    #   5 constraint-violation counts (one agg row)
-    #   6 generated-column validation counts (one agg row)
-    #   7 set_constraint born-valid probe (one agg row)
-    #   8 add-column type/default validation probe (one literal row)
-    #   9 merge fused source-stats probe (ONE count/count_distinct agg row
+    #   4 constraint-violation counts (one agg row)
+    #   5 generated-column validation counts (one agg row)
+    #   6 set_constraint born-valid probe (one agg row)
+    #   7 add-column type/default validation probe (one literal row)
+    #   8 merge fused source-stats probe (ONE count/count_distinct agg row
     #     over the persisted source — replaced the separate source.count()
     #     job + unconditional dup-key groupBy probe in round 13)
     # (round 10 removed the separate merge action-count collect: the
     # update/delete counts now ride the staging write as CollectMetrics
     # — see tx_merge's single-pass rewrite.)
-    assert src.count(".collect()") == 9
+    assert src.count(".collect()") == 8
     assert ".toPandas()" not in src and ".toLocalIterator()" not in src
